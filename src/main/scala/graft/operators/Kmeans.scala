@@ -213,7 +213,8 @@ object Kmeans {
     // an aggregate whose reduce side is tiny at any corpus scale (φ =
     // one DECIMAL per map task; the weight counts = ≤ |candidates|
     // (cid, n) pairs) — run them with AQE's per-stage barrier off and
-    // a single reduce partition (LoopSession doc; saves 2 jobs/round)
+    // a single reduce partition (LoopSession doc; saves 2 jobs/round);
+    // the keyed weight count re-bases to its own key space below
     val dataL = LoopSession.rebase(data, 1)
     // ONE seed job returning (id, vector) via the shared seeded
     // selection — the old form ran initCentroids AND a second job just
@@ -303,8 +304,10 @@ object Kmeans {
       r += 1
     }
     // per-candidate population weights: already in the running state —
-    // no extra assignment pass
-    val wRows = state.groupBy("__cid").agg(count(lit(1)).as("n"))
+    // no extra assignment pass. The key space is |cand| cids, so the
+    // exchange is sized to that, not to the φ rounds' single partition
+    val wRows = LoopSession.rebase(state, cand.length)
+      .groupBy("__cid").agg(count(lit(1)).as("n"))
       .collect().map(row => row.getInt(0) -> row.getLong(1)).toMap
     state.unpersist(blocking = false)
     reduceWeightedCandidates(cand.toIndexedSeq, j => wRows.getOrElse(j, 0L),

@@ -29,11 +29,22 @@ import org.apache.spark.sql.GraftBridge
   */
 private[graft] object LoopSession {
 
+  /** Loop child -> the shuffle-partition default of the session the
+    * loop started from. Re-basing a frame that already lives on a loop
+    * child (a keyed aggregate over a loop's running state) caps its
+    * exchange at this value, not at the loop's own setting. Weak keys:
+    * an entry goes with its child session.
+    */
+  private val callerParts = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, Integer]())
+
   /** A child session of `df`'s session with AQE off and shuffle
     * partitions = min(caller default, `keySpace`), and `df` re-bound
     * to it. `keySpace` = the number of distinct reduce keys the loop's
     * aggregate can produce (k for groupBy(cid), 1 for global
-    * aggregates).
+    * aggregates). The caller default is the one of the session the
+    * first rebase started from, also when `df` already lives on a loop
+    * child.
     */
   def rebase(df: DataFrame, keySpace: Int): DataFrame = {
     // probe hook: `-Dgraft.loopsession.off=1` disables the rebase so
@@ -46,10 +57,12 @@ private[graft] object LoopSession {
     parent.conf.getAll.foreach { case (k, v) =>
       if (child.conf.isModifiable(k)) child.conf.set(k, v)
     }
-    val defaultP = parent.conf.get("spark.sql.shuffle.partitions").toInt
+    val defaultP = Option(callerParts.get(parent)).map(_.intValue)
+      .getOrElse(parent.conf.get("spark.sql.shuffle.partitions").toInt)
     val parts = sys.props.get("graft.loopsession.parts").map(_.toInt)
       .getOrElse(math.max(1, math.min(defaultP, keySpace)))
     child.conf.set("spark.sql.shuffle.partitions", parts)
+    callerParts.put(child, defaultP)
     if (!sys.props.get("graft.loopsession.keepaqe").contains("1"))
       child.conf.set("spark.sql.adaptive.enabled", "false")
     GraftBridge.withSession(df, child)

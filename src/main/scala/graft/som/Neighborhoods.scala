@@ -380,21 +380,22 @@ object Neighborhoods {
 
   /** Per-topology registry (`xpysom.py:255-283`): triangle is unavailable
     * under hexagonal topology (and the reference warns before failing,
-    * `xpysom.py:207-209`).
+    * `xpysom.py:207-209`). Only the selected kernel is constructed, so
+    * mexican_hat's square-map check does not reject other kernels.
     */
   def apply(name: String, topo: Topology, stdCoeff: Double, compact: Boolean): Neighborhood = {
-    val available: Map[String, Neighborhood] = topo match {
+    val available: Map[String, () => Neighborhood] = topo match {
       case _: Rectangular => Map(
-        "gaussian" -> Gaussian(topo, stdCoeff, compact),
-        "mexican_hat" -> MexicanHat(topo, stdCoeff, compact),
-        "bubble" -> Bubble(topo),
-        "triangle" -> Triangle(topo, compact))
+        "gaussian" -> (() => Gaussian(topo, stdCoeff, compact)),
+        "mexican_hat" -> (() => MexicanHat(topo, stdCoeff, compact)),
+        "bubble" -> (() => Bubble(topo)),
+        "triangle" -> (() => Triangle(topo, compact)))
       case _: Hexagonal => Map(
-        "gaussian" -> Gaussian(topo, stdCoeff, compact),
-        "mexican_hat" -> MexicanHat(topo, stdCoeff, compact),
-        "bubble" -> Bubble(topo))
+        "gaussian" -> (() => Gaussian(topo, stdCoeff, compact)),
+        "mexican_hat" -> (() => MexicanHat(topo, stdCoeff, compact)),
+        "bubble" -> (() => Bubble(topo)))
     }
     available.getOrElse(name, throw new IllegalArgumentException(
-      s"$name not supported. Functions available: ${available.keys.mkString(", ")}"))
+      s"$name not supported. Functions available: ${available.keys.mkString(", ")}"))()
   }
 }

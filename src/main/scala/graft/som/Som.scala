@@ -27,8 +27,11 @@ final case class SomConfig(
     seed: Long = 0L,
     /** Rows per in-partition sub-batch — the analogue of the reference's
       * `n_parallel` mini-batch (`xpysom.py:140-144,242-251`): bounds the
-      * transient (batch x neurons) activation matrix, NOT the
-      * parallelism (partitions are the unit of parallelism here).
+      * transient (batch x neurons) activation-distance matrix, NOT the
+      * parallelism (partitions are the unit of parallelism here). The
+      * update itself keeps only per-winner sums (k x dim), whatever the
+      * batch size; the per-epoch neighbourhood spread builds its table
+      * at most `batchSize` winners at a time.
       */
     batchSize: Int = 2048,
     /** Inputs whose total value count (rows x dim) is at or under this
@@ -43,7 +46,7 @@ final case class SomConfig(
       * Execution knob only — not part of the saved model params.
       */
     localFitThreshold: Long = 2000000L,
-    /** Tree depth for the per-epoch deterministic (num, den) combine;
+    /** Tree depth for the per-epoch deterministic (sums, counts) combine;
       * 2 keeps driver fan-in bounded at cluster scale (the reference's
       * dask path does a flat single-node sum, `xpysom.py:545-558`).
       */
@@ -71,14 +74,19 @@ final case class SomConfig(
 }
 
 /** Batch-SOM trainer: one Spark job per epoch — broadcast the codebook,
-  * per-partition batched update (winners → neighborhood-weighted partial
-  * sums via gemm), deterministic elementwise tree combine of (num, den),
-  * guarded-division
-  * merge on the driver. Dataflow per `xpysom.py:458-594` re-expressed as
-  * the idiomatic MLlib broadcast+aggregate pattern; the per-partition
-  * sub-batching replaces the reference's `n_parallel` chunking
-  * (`xpysom.py:560-575`) and the tree combine replaces dask's delayed flat
-  * sum (`xpysom.py:545-558`).
+  * per-partition batched pass (distances → winners → per-winner row sums
+  * and counts), deterministic elementwise tree combine of
+  * (sums, counts), then on the driver the neighbourhood spread
+  * num = Hᵀ·sums, den = Hᵀ·counts through the k x k neighbourhood table
+  * H and the guarded-division merge. The reference applies the
+  * neighbourhood per row, as an n x k weight matrix G with num = Gᵀ·X
+  * (`xpysom.py:420-443`); since every row of G is its winner's row of H,
+  * summing rows per winner first (Kohonen's Voronoi-set batch map) gives
+  * the same sums for n·dim additions instead of an n·k·dim gemm.
+  * Dataflow per `xpysom.py:458-594` re-expressed as the idiomatic MLlib
+  * broadcast+aggregate pattern; the per-partition sub-batching replaces
+  * the reference's `n_parallel` chunking (`xpysom.py:560-575`) and the
+  * tree combine replaces dask's delayed flat sum (`xpysom.py:545-558`).
   */
 final class Som(val config: SomConfig) extends Serializable {
   config.validated
@@ -145,14 +153,6 @@ final class Som(val config: SomConfig) extends Serializable {
     } finally data.unpersist(blocking = false)
   }
 
-  /** Driver-local epoch loop over the collected partition chunks: the
-    * SAME `partitionUpdate` kernel per original partition, the SAME
-    * combine topology (`foldDeterministicLocal` replays
-    * `reduceDeterministic` exactly), the SAME guarded merge — so the
-    * trained codebook is bit-identical to what the distributed path
-    * would produce on the same RDD (`SomLocalFitSpec` pins it), with
-    * zero Spark jobs per epoch.
-    */
   /** In-core training on an already-materialized matrix — the direct
     * analogue of the reference's own API, which trains on in-memory
     * arrays (`xpysom.py:560-575` processes them in `n_parallel`
@@ -184,6 +184,14 @@ final class Som(val config: SomConfig) extends Serializable {
       fitLocalChunks(Array((0, data)), 1, cb0, numEpochs, verbose, iterBeg, end))
   }
 
+  /** Driver-local epoch loop over the collected partition chunks: the
+    * SAME `partitionUpdate` kernel per original partition, the SAME
+    * combine topology (`foldDeterministicLocal` replays
+    * `reduceDeterministic` exactly), the SAME `spread` and guarded merge
+    * — so the trained codebook is bit-identical to what the distributed
+    * path would produce on the same RDD (`SomLocalFitSpec` pins it),
+    * with zero Spark jobs per epoch.
+    */
   private def fitLocalChunks(chunks: Array[(Int, Array[Array[Float]])],
                              numPartitions: Int, init: Codebook,
                              numEpochs: Int, verbose: Boolean,
@@ -198,12 +206,11 @@ final class Som(val config: SomConfig) extends Serializable {
       val wSq = if (cfg.distanceFn.canCache) cb.rowSumSq() else null
       val w = cb.weights
       val partials = chunks.toSeq.map { case (pid, rows) =>
-        pid -> SomKernels.partitionUpdate(rows.iterator, w, wSq, cfg, eta, sig)
+        pid -> SomKernels.partitionUpdate(rows.iterator, w, wSq, cfg)
       }
-      val (num, den) = SomKernels.foldDeterministicLocal(
-        partials, numPartitions, cfg.treeDepth) { (a, b) =>
-        SomKernels.addInPlace(a._1, b._1); SomKernels.addInPlace(a._2, b._2); a
-      }
+      val (sums, counts) = SomKernels.foldDeterministicLocal(
+        partials, numPartitions, cfg.treeDepth)(SomKernels.addPartial)
+      val (num, den) = SomKernels.spread(sums, counts, cfg, eta, sig)
       cb = cb.merged(num, den)
       if (verbose) println(Som.progressLine(t - iterBeg, iterEnd - iterBeg,
         numEpochs, (System.nanoTime() - begin) / 1e9))
@@ -233,8 +240,9 @@ final class Som(val config: SomConfig) extends Serializable {
 
   /** One training epoch (one Spark job): broadcast codebook (+ wSq
     * cache), per-partition update, deterministic tree-combine of
-    * (num, den), merge. Exposed for incremental/streaming training where
-    * each micro-batch advances the decay schedule by one step.
+    * (sums, counts), neighbourhood spread and merge on the driver.
+    * Exposed for incremental/streaming training where each micro-batch
+    * advances the decay schedule by one step.
     *
     * The fan-in is a fixed-topology tree keyed by partition id (partials
     * sorted before every fold) rather than `treeReduce`, whose combine
@@ -255,12 +263,11 @@ final class Som(val config: SomConfig) extends Serializable {
     try {
       val partials = data.mapPartitionsWithIndex { (pid, it) =>
         val (w, wsq) = bc.value
-        Iterator.single(pid -> SomKernels.partitionUpdate(it, w, wsq, cfg, eta, sig))
+        Iterator.single(pid -> SomKernels.partitionUpdate(it, w, wsq, cfg))
       }
-      val (num, den) = SomKernels.reduceDeterministic(
-        partials, data.getNumPartitions, cfg.treeDepth) { (a, b) =>
-        SomKernels.addInPlace(a._1, b._1); SomKernels.addInPlace(a._2, b._2); a
-      }
+      val (sums, counts) = SomKernels.reduceDeterministic(
+        partials, data.getNumPartitions, cfg.treeDepth)(SomKernels.addPartial)
+      val (num, den) = SomKernels.spread(sums, counts, cfg, eta, sig)
       cb.merged(num, den)
     } finally bc.destroy() // don't leak the broadcast on job failure
   }
@@ -516,28 +523,27 @@ private[som] object SomKernels extends Serializable {
     fin.reduceLeft(comb)
   }
 
-  /** One partition's (num, den) contribution for one epoch: iterate the
+  /** One partition's per-winner partial for one epoch: iterate the
     * partition in `batchSize` sub-batches; per batch compute activation
-    * distances, first-index argmin winners, neighborhood weights g·eta,
-    * then accumulate den += Σ_s g and num += Gᵀ·X (`xpysom.py:420-443`).
-    * Buffers are reused across sub-batches (`xpysom.py:516-527`).
+    * distances and first-index argmin winners, then add each row into
+    * its winner's `sums` row (k x dim, row-major) and `counts` entry.
+    * This is the Voronoi-set form of the batch map: every row's
+    * neighbourhood weights depend only on its winner, so the epoch
+    * needs only per-winner sums — the neighbourhood is applied once, to
+    * the combined sums, by [[spread]]. Buffers are reused across
+    * sub-batches (`xpysom.py:516-527`).
     */
   def partitionUpdate(it: Iterator[Array[Float]], w: Array[Double],
-                      wSq: Array[Double], cfg: SomConfig, eta: Double,
-                      sig: Double): (Array[Double], Array[Double]) = {
+                      wSq: Array[Double], cfg: SomConfig): Partial = {
     val k = cfg.x * cfg.y
     val dim = w.length / k
     val dist = cfg.distanceFn
-    val neigh = cfg.neighborhoodFn
     val bs = cfg.batchSize
-    val num = new Array[Double](k * dim)
-    val den = new Array[Double](k)
+    val sums = new Array[Double](k * dim)
+    val counts = new Array[Double](k)
     val xBuf = new Array[Double](bs * dim)
     val dBuf = new Array[Double](bs * k)
-    val gBuf = new Array[Double](bs * k)
     val wins = new Array[Int](bs)
-    val winI = new Array[Int](bs)
-    val winJ = new Array[Int](bs)
     while (it.hasNext) {
       var n = 0
       while (n < bs && it.hasNext) {
@@ -553,21 +559,75 @@ private[som] object SomKernels extends Serializable {
       dist.compute(xBuf, n, w, k, dim, wSq, dBuf)
       Distances.argminRows(dBuf, n, k, wins)
       var s = 0
-      while (s < n) { winI(s) = wins(s) / cfg.y; winJ(s) = wins(s) % cfg.y; s += 1 }
-      neigh.compute(winI, winJ, n, sig, gBuf)
-      // den += column sums of g*eta; num += (g*eta)^T x
-      s = 0
-      while (s < n * k) { gBuf(s) *= eta; s += 1 }
-      s = 0
       while (s < n) {
-        val base = s * k
-        var j = 0
-        while (j < k) { den(j) += gBuf(base + j); j += 1 }
+        val win = wins(s)
+        counts(win) += 1.0
+        val src = s * dim
+        val dst = win * dim
+        var c = 0
+        while (c < dim) { sums(dst + c) += xBuf(src + c); c += 1 }
         s += 1
       }
-      // num (k x dim, row-major) += G^T (k x n) * X (n x dim):
-      // column-major view num^T (dim x k) = X^T (dim x n) * G (n x k).
-      Distances.blas.dgemm("N", "T", dim, k, n, 1.0, xBuf, dim, gBuf, k, 1.0, num, dim)
+    }
+    (sums, counts)
+  }
+
+  /** Combine for [[partitionUpdate]] partials: elementwise sum into the
+    * left operand.
+    */
+  def addPartial(a: Partial, b: Partial): Partial = {
+    addInPlace(a._1, b._1); addInPlace(a._2, b._2); a
+  }
+
+  /** The epoch's (num, den) from the combined per-winner (sums, counts):
+    * with H the k x k neighbourhood table scaled by eta (row i = the
+    * weights every neuron gets when neuron i wins), den = Hᵀ·counts and
+    * num = Hᵀ·sums. The reference builds the per-row weights G (n x k)
+    * and accumulates den = Σ_s G[s] and num = Gᵀ·X (`xpysom.py:420-443`);
+    * G[s] = H[win(s)] by construction, so both forms are the same sum
+    * regrouped by winner, for every neighbourhood, topology, distance and
+    * compact-support setting. Only occupied neurons' rows of H are
+    * built, `batchSize` winners at a time, so the spread never costs
+    * more than the per-row form would.
+    */
+  def spread(sums: Array[Double], counts: Array[Double], cfg: SomConfig,
+             eta: Double, sig: Double): Partial = {
+    val k = cfg.x * cfg.y
+    val dim = sums.length / k
+    val neigh = cfg.neighborhoodFn
+    val num = new Array[Double](k * dim)
+    val den = new Array[Double](k)
+    val occupied = (0 until k).filter(counts(_) != 0.0).toArray
+    val bs = math.min(cfg.batchSize, occupied.length)
+    val sBuf = new Array[Double](bs * dim)
+    val hBuf = new Array[Double](bs * k)
+    val winI = new Array[Int](bs)
+    val winJ = new Array[Int](bs)
+    var off = 0
+    while (off < occupied.length) {
+      val m = math.min(bs, occupied.length - off)
+      var b = 0
+      while (b < m) {
+        val win = occupied(off + b)
+        winI(b) = win / cfg.y; winJ(b) = win % cfg.y
+        System.arraycopy(sums, win * dim, sBuf, b * dim, dim)
+        b += 1
+      }
+      neigh.compute(winI, winJ, m, sig, hBuf)
+      b = 0
+      while (b < m * k) { hBuf(b) *= eta; b += 1 }
+      b = 0
+      while (b < m) {
+        val cnt = counts(occupied(off + b))
+        val base = b * k
+        var j = 0
+        while (j < k) { den(j) += hBuf(base + j) * cnt; j += 1 }
+        b += 1
+      }
+      // num (k x dim, row-major) += H_blockᵀ (k x m) * S_block (m x dim):
+      // column-major view numᵀ (dim x k) = S_blockᵀ (dim x m) * H_block (m x k).
+      Distances.blas.dgemm("N", "T", dim, k, m, 1.0, sBuf, dim, hBuf, k, 1.0, num, dim)
+      off += m
     }
     (num, den)
   }

@@ -64,6 +64,16 @@ class NeighborhoodsSpec extends AnyFunSuite {
     Neighborhoods.MexicanHat(Rectangular(4, 6), 0.5, compact = false)
   }
 
+  test("registry: mexican_hat's square-map check rejects only mexican_hat") {
+    val topo = Rectangular(4, 6)
+    intercept[IllegalArgumentException] {
+      Neighborhoods("mexican_hat", topo, 0.5, compact = true)
+    }
+    for (name <- Seq("gaussian", "bubble", "triangle"))
+      assert(Neighborhoods(name, topo, 0.5, compact = true).name == name)
+    SomConfig(4, 6, compactSupport = true).validated
+  }
+
   test("bubble uses strict inequalities and raw indices (`neighborhoods.py:99-112`)") {
     val topo = Rectangular(5, 5)
     val b = Neighborhoods.Bubble(topo)
