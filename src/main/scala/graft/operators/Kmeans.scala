@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.plans.KmeansFunctions
+import graft.plans.{KmeansFunctions, KmeansKernel}
 
 /** Distributed Lloyd's k-means over an embedding column — the standard
   * coarse quantizer / corpus-clustering primitive (IVF cells, SemDeDup
@@ -36,10 +36,16 @@ import graft.plans.KmeansFunctions
   *    accumulate exactly as scale-9 longs (the same values a
   *    DECIMAL(28,9) sum produces) — order-independent; the driver
   *    divides by the exact count at scale 9 HALF_UP;
-  *  - assignment distance is a SEQUENTIAL `(x_i - w_i)^2` loop with
-  *    ties to the lowest cid, so an independent implementation
+  *  - assignment distance accumulates `(x_i - w_i)^2` per centroid in
+  *    ascending i (at k >= 16 the kernel's loop runs across centroids,
+  *    but each centroid's sum keeps that order) with ties to the lowest
+  *    cid, so an independent implementation
   *    (`tools/gen_kmeans_oracle.py`) reproduces every argmin
-  *    bit-for-bit.
+  *    bit-for-bit;
+  *  - the k-means‖ φ terms and selection threshold round d² to 9
+  *    decimals with `VecScale9Kernel.scale9` — the DECIMAL(38,9) value
+  *    `round(d², 9)` casts to, and the one the driver-local twin and
+  *    the oracle use.
   */
 object Kmeans {
 
@@ -178,8 +184,12 @@ object Kmeans {
     *    `(int(md5('salt|sc<r>:' + id)[:13hex]) + 0.5) / 2^52` — the
     *    [[Sampling.sampleByWeight]] draw, partitioning-invariant;
     *  - d² is the assignment kernel's sequential IEEE loop, rounded to
-    *    9 decimals; φ is the EXACT DECIMAL(38,9) sum of those (order-
-    *    independent); the threshold is the double `oversample*d²9/φ`;
+    *    9 decimals HALF_UP by [[graft.plans.VecScale9Kernel.scale9]] (the
+    *    `dec_scale9` expression: the same DECIMAL(38,9) value as
+    *    `round(d², 9)` cast to decimal, without the decimal-string
+    *    route); φ is the EXACT DECIMAL(38,9) sum of those (order-
+    *    independent); the threshold is the double `oversample*d²9/φ`
+    *    with d²9 that decimal's double value;
     *  - seed = hash-init row; greedy ties break on the lowest id;
     *    if fewer than k candidates survive (degenerate corpora), the
     *    remainder pads from the hash-init order under salt + "|pad",
@@ -241,7 +251,10 @@ object Kmeans {
             .otherwise(col("__md2")).as("__md2"),
           when(col("__na.d2") < col("__md2"), col("__na.cid") + lit(baseIdx))
             .otherwise(col("__cid")).as("__cid"))
-    val md29 = round(col("__md2"), 9)
+    // round9(md2) as DECIMAL(38,9) straight from scale9: the value
+    // round(md2, 9).cast(DECIMAL(38,9)) spells through two decimal
+    // strings per row
+    val md29 = KmeansFunctions.dec_scale9(col("__md2"))
     // φ (exact order-independent sum of the scale-9 running-min grid)
     // doubles as the persist's materializing action: ONE pass both
     // caches the new state and returns the next round's threshold
@@ -249,9 +262,7 @@ object Kmeans {
     // separate φ scan at the top of every round (2 extra passes over
     // the full corpus per round at probe scale)
     def phiOf(df: DataFrame): Double = {
-      val phiRow = df.select(
-        sum(md29.cast(org.apache.spark.sql.types.DecimalType(38, 9))).as("phi"))
-        .collect()(0)
+      val phiRow = df.select(sum(md29).as("phi")).collect()(0)
       if (phiRow.isNullAt(0)) 0.0 else phiRow.getDecimal(0).doubleValue()
     }
     var state = Materialize.once(dataL, "__na",
@@ -276,7 +287,7 @@ object Kmeans {
         // a range-partitioning Exchange (plus its sampling pass) over
         // the filtered rows just to fix the ~ell-row iteration order
         val picked = state
-          .where(u < lit(ell.toDouble) * md29 / lit(phi))
+          .where(u < lit(ell.toDouble) * md29.cast("double") / lit(phi))
           .select(col("__id"), col("__v"))
           .collect()
           .sortBy(_.getLong(0))
@@ -411,10 +422,12 @@ object Kmeans {
 
   /** Driver-local twin of [[initScalableCentroids]] over collected
     * (id, vector) rows, id-ascending — BIT-IDENTICAL by construction
-    * (the [[fitLocal]] argument, applied to the init): the same
-    * sequential IEEE d² loop as the `kmeans_assign` kernel with the
-    * same strict-< argmin (ties to the lowest candidate index), the
-    * same `VecScale9Kernel.scale9` per-value rounding whose exact
+    * (the [[fitLocal]] argument, applied to the init): the seed pass
+    * and every round's merge run the `kmeans_assign` kernel itself
+    * through its array entry [[graft.plans.KmeansKernel.assignRows]]
+    * (same d² bits, same strict-< argmin with ties to the lowest
+    * candidate index), the same `VecScale9Kernel.scale9` per-value
+    * rounding (the distributed φ's `dec_scale9`) whose exact
     * long sums make φ order-independent (summing on the driver cannot
     * change a bit), the same md5-hex draw
     * (`parseLong(md5hex.take(13), 16)` == the fused
@@ -437,15 +450,11 @@ object Kmeans {
     val ell = if (oversample > 0) oversample else 2 * k
     val n = rows.length
     val dim = rows(0)._2.length
-    // the kernel's dimension guard, once per row instead of per access
+    // the kernel's dimension guard, up front so no init work runs first
     rows.foreach(r => if (r._2.length != dim)
       throw new IllegalArgumentException(
         s"Received ${r._2.length} features, expected $dim."))
-    def d2(x: Array[Double], c: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < dim) { val t = x(i) - c(i); s += t * t; i += 1 }
-      s
-    }
+    val xs = rows.map(_._2)
     // seed: the (md5(salt:id), id)-smallest row (seededInitRows' order;
     // md5 hex is ASCII so String compareTo == the UTF8String sort)
     var seedI = 0
@@ -464,10 +473,13 @@ object Kmeans {
     val seen = scala.collection.mutable.HashSet[Long]()
     cand += ((rows(seedI)._1, seedVec)); seen += rows(seedI)._1
     // running state: min d² to the candidate set + that argmin's index
+    // (the seed pass: the one-centroid table, cid 0 everywhere)
     val md2 = new Array[Double](n)
     val cid = new Array[Int](n)
-    i = 0
-    while (i < n) { md2(i) = d2(rows(i)._2, seedVec); i += 1 }
+    KmeansKernel.assignRows(xs, seedVec, dim, cid, md2)
+    // one round's merge: argmin over only its new candidates
+    val newCid = new Array[Int](n)
+    val newD2 = new Array[Double](n)
     import graft.plans.VecScale9Kernel.scale9
     // φ = Σ round9(md2) summed exactly at scale 9 (the DECIMAL(38,9)
     // sum), then the same Decimal -> double conversion
@@ -511,18 +523,12 @@ object Kmeans {
           // merge ONLY the round's new candidates: the kernel's argmin
           // (strict <, ties to lowest index), then the strict-< running
           // min — exactly the `merged` frame
-          val newVecs = cand.slice(baseIdx, cand.length).map(_._2).toArray
-          val m = newVecs.length
+          KmeansKernel.assignRows(xs,
+            Model(cand.slice(baseIdx, cand.length).map(_._2).toArray).flat,
+            dim, newCid, newD2)
           i = 0
           while (i < n) {
-            var best = 0; var bestV = Double.MaxValue
-            var j = 0
-            while (j < m) {
-              val dd = d2(rows(i)._2, newVecs(j))
-              if (dd < bestV) { bestV = dd; best = j }
-              j += 1
-            }
-            if (bestV < md2(i)) { md2(i) = bestV; cid(i) = best + baseIdx }
+            if (newD2(i) < md2(i)) { md2(i) = newD2(i); cid(i) = newCid(i) + baseIdx }
             i += 1
           }
           phi = phiOf()
@@ -548,8 +554,10 @@ object Kmeans {
     * once and runs init + iterations driver-local — the [[graft.som.Som]]
     * `localFitThreshold` pattern. A 2,000-row coarse-quantizer fit paid
     * ~1 + iters Spark jobs of pure scheduler overhead (~50 ms each);
-    * the local twin is BIT-IDENTICAL by construction: the same
-    * sequential IEEE argmin loop as [[graft.plans.KmeansKernel.assign]],
+    * the local twin is BIT-IDENTICAL by construction: its assignment
+    * passes, farthest-first included, run the distributed kernel itself
+    * ([[graft.plans.KmeansKernel.assignRows]], the array entry of
+    * [[graft.plans.KmeansKernel.assign]]),
     * the same `VecScale9Kernel.scale9` per-element rounding, exact
     * order-independent long sums, the same scale-9 HALF_UP division,
     * and the same md5-hex init ordering (`KmeansSpec` pins
@@ -588,15 +596,14 @@ object Kmeans {
       s"kmeans init needs >= $k non-null vectors, found ${rows.length}")
     val dim = rows(0)._2.length
     val n = rows.length
-    // the kernel's dimension guard, once per row instead of per access
+    // the kernel's dimension guard, up front so no init work runs first
     rows.foreach(r => if (r._2.length != dim)
       throw new IllegalArgumentException(
         s"Received ${r._2.length} features, expected $dim."))
-    def d2(x: Array[Double], c: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < dim) { val t = x(i) - c(i); s += t * t; i += 1 }
-      s
-    }
+    val xs = rows.map(_._2)
+    // per-row kernel output, reused by every pass
+    val cid = new Array[Int](n)
+    val d2 = new Array[Double](n)
     val c: Array[Array[Double]] = initMethod match {
       case "scalable" => scalableInit.get
       case "hash" =>
@@ -612,7 +619,8 @@ object Kmeans {
         val picked = scala.collection.mutable.ArrayBuffer[Array[Double]](seed.clone())
         // running min-d2 to the picked set: IEEE min via strict < — the
         // same VALUE the kernel's full-set argmin produces
-        val minD2 = rows.map(r => d2(r._2, seed))
+        val minD2 = new Array[Double](n)
+        KmeansKernel.assignRows(xs, seed, dim, cid, minD2)
         while (picked.length < k) {
           var bi = 0; var bv = minD2(0)
           var i = 1
@@ -622,10 +630,10 @@ object Kmeans {
           }
           val nxt = rows(bi)._2
           picked += nxt.clone()
+          KmeansKernel.assignRows(xs, nxt, dim, cid, d2)
           i = 0
           while (i < n) {
-            val nd = d2(rows(i)._2, nxt)
-            if (nd < minD2(i)) minD2(i) = nd
+            if (d2(i) < minD2(i)) minD2(i) = d2(i)
             i += 1
           }
         }
@@ -639,17 +647,10 @@ object Kmeans {
     while (it < iters) {
       val sums = Array.ofDim[Long](k, dim)
       val counts = new Array[Long](k)
+      KmeansKernel.assignRows(xs, Model(c).flat, dim, cid, d2)
       var r = 0
       while (r < n) {
-        val x = rows(r)._2
-        // the kernel's argmin: sequential d2, strict < ties to lowest cid
-        var best = 0; var bestV = Double.MaxValue
-        var j = 0
-        while (j < k) {
-          val dd = d2(x, c(j))
-          if (dd < bestV) { bestV = dd; best = j }
-          j += 1
-        }
+        val best = cid(r)
         counts(best) += 1
         val l = vl(r)
         var d = 0

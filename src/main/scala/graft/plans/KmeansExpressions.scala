@@ -14,12 +14,26 @@ import org.apache.spark.sql.types._
   * once per task); the argmin loop runs inside whole-stage codegen.
   *
   * Distance is squared euclidean accumulated SEQUENTIALLY over
-  * dimensions (`(x_i - w_i)^2` in index order) — not the dgemm
+  * dimensions (`(x_i - w_i)^2` in ascending i) — not the dgemm
   * `wSq - 2 dot` rearrangement the SOM BMU kernel uses — because the
   * k-means oracle is an independent implementation that must reproduce
   * the argmin bit-for-bit, and the plain loop is the form any
   * from-the-paper implementation writes down. Ties go to the LOWEST
   * centroid id (strict `<` keeps the first minimum).
+  *
+  * Loop order: at k >= [[KmeansKernel.sweepMinK]] the loop runs ACROSS
+  * centroids — `acc(j) = 0.0 + t*t` at i = 0, then `acc(j) += t*t` for
+  * every j at each i = 1 … dim-1 (four i per pass over `acc`, added in
+  * i order), over a per-dimension column table
+  * `cols(i)(j) = w(j*dim + i)`. Each centroid's d² is still the same
+  * IEEE operation sequence in ascending i (Java never contracts to FMA),
+  * so every bit is unchanged; but the inner loop is now independent
+  * across j, which the JIT vectorizes, where the per-centroid form is
+  * one serial add chain per centroid. Below `sweepMinK` the per-centroid
+  * loop stays: C2 compiles a loop from its first hot profile, and the
+  * k-means‖ first pass and farthest-first rounds run at k = 1 — a single
+  * column loop first profiled there stayed unvectorized for the k = 64
+  * passes that followed.
   *
   * Returns struct<cid int, d2 double, d2b double>: the assignment, its
   * squared distance, and the squared distance to the SECOND-nearest
@@ -28,35 +42,154 @@ import org.apache.spark.sql.types._
   * one centroid, `d2b` is NaN.
   */
 object KmeansKernel {
-  /** argmin over `w.length / dim` centroids; sequential double math. */
-  def assign(v: ArrayData, isFloat: Boolean, w: Array[Double],
-             dim: Int): InternalRow = {
-    if (v.numElements() != dim)
-      throw new IllegalArgumentException(
-        s"Received ${v.numElements()} features, expected $dim.")
-    val x = SomScratch.get(dim)
-    var i = 0
-    while (i < dim) {
-      x(i) = if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
-      i += 1
-    }
+  /** Smallest k that takes the centroid-wide sweep (see the object doc). */
+  val sweepMinK = 16
+
+  /** Per-dimension column table of a row-major `k x dim` table,
+    * `cols(i)(j) = w(j * dim + i)`; null below [[sweepMinK]], where the
+    * per-centroid loop reads `w` directly.
+    */
+  def columns(w: Array[Double], dim: Int): Array[Array[Double]] = {
     val k = w.length / dim
+    if (k < sweepMinK) null
+    else Array.tabulate(dim)(i => Array.tabulate(k)(j => w(j * dim + i)))
+  }
+
+  /** Nearest centroid of `x` (length `dim`): writes `s.best`, `s.bestV`
+    * (its d²) and `s.secondV` (the second-smallest d²) from a strict-<
+    * scan in j order over every centroid's d² in `s.acc`.
+    */
+  def nearest(x: Array[Double], w: Array[Double], cols: Array[Array[Double]],
+              dim: Int, s: KmeansScratch): Unit = {
+    val k = w.length / dim
+    val acc = s.acc
+    if (cols == null) perCentroid(x, w, dim, k, acc)
+    else sweep(x, cols, dim, k, acc)
     var best = 0
     var bestV = Double.MaxValue
     var secondV = Double.MaxValue
     var j = 0
     while (j < k) {
-      val base = j * dim
-      var d = 0.0
-      i = 0
-      while (i < dim) { val t = x(i) - w(base + i); d += t * t; i += 1 }
+      val d = acc(j)
       if (d < bestV) { secondV = bestV; bestV = d; best = j }
       else if (d < secondV) { secondV = d }
       j += 1
     }
-    new GenericInternalRow(Array[Any](best, bestV,
-      if (k < 2) Double.NaN else secondV))
+    s.best = best; s.bestV = bestV; s.secondV = secondV
   }
+
+  private def perCentroid(x: Array[Double], w: Array[Double], dim: Int,
+                          k: Int, acc: Array[Double]): Unit = {
+    var j = 0
+    while (j < k) {
+      val base = j * dim
+      var d = 0.0
+      var i = 0
+      while (i < dim) { val t = x(i) - w(base + i); d += t * t; i += 1 }
+      acc(j) = d
+      j += 1
+    }
+  }
+
+  // four dimensions per pass over acc: a quarter of the acc loads and
+  // stores, and per centroid still one add per dimension in ascending i
+  private def sweep(x: Array[Double], cols: Array[Array[Double]], dim: Int,
+                    k: Int, acc: Array[Double]): Unit = {
+    val x0 = x(0)
+    val c0 = cols(0)
+    var j = 0
+    while (j < k) { val t = x0 - c0(j); acc(j) = 0.0 + t * t; j += 1 }
+    var i = 1
+    while (i + 3 < dim) {
+      val xa = x(i); val xb = x(i + 1); val xc = x(i + 2); val xd = x(i + 3)
+      val ca = cols(i); val cb = cols(i + 1); val cc = cols(i + 2); val cd = cols(i + 3)
+      j = 0
+      while (j < k) {
+        val ta = xa - ca(j); val tb = xb - cb(j)
+        val tc = xc - cc(j); val td = xd - cd(j)
+        acc(j) = (((acc(j) + ta * ta) + tb * tb) + tc * tc) + td * td
+        j += 1
+      }
+      i += 4
+    }
+    while (i < dim) {
+      val xi = x(i)
+      val c = cols(i)
+      j = 0
+      while (j < k) { val t = xi - c(j); acc(j) += t * t; j += 1 }
+      i += 1
+    }
+  }
+
+  /** The row entry the codegen and interpreted paths call: `v` against
+    * the table (`cols` from [[columns]]), scratch from the caller.
+    */
+  def assign(v: ArrayData, isFloat: Boolean, w: Array[Double],
+             cols: Array[Array[Double]], dim: Int,
+             s: KmeansScratch): InternalRow = {
+    if (v.numElements() != dim)
+      throw new IllegalArgumentException(
+        s"Received ${v.numElements()} features, expected $dim.")
+    val x = s.x
+    var i = 0
+    while (i < dim) {
+      x(i) = if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
+      i += 1
+    }
+    nearest(x, w, cols, dim, s)
+    new GenericInternalRow(Array[Any](s.best, s.bestV,
+      if (w.length / dim < 2) Double.NaN else s.secondV))
+  }
+
+  // the columns of the last table the four-argument assign saw, keyed by
+  // reference to its `w`
+  @volatile private var lastCols: (Array[Double], Int, Array[Array[Double]]) = _
+
+  /** argmin over `w.length / dim` centroids for one row. Callers that
+    * replay one table over many rows pay the column transpose once: it
+    * is cached by reference to `w`.
+    */
+  def assign(v: ArrayData, isFloat: Boolean, w: Array[Double],
+             dim: Int): InternalRow = {
+    val last = lastCols
+    val cols =
+      if (last != null && (last._1 eq w) && last._2 == dim) last._3
+      else { val c = columns(w, dim); lastCols = (w, dim, c); c }
+    assign(v, isFloat, w, cols, dim, new KmeansScratch(dim, w.length / dim))
+  }
+
+  /** Driver-local entry of the same kernel: row r's nearest centroid and
+    * its d² into `cid(r)` and `d2(r)` — what `kmeans_assign` returns for
+    * that row, bit for bit.
+    */
+  def assignRows(rows: Array[Array[Double]], w: Array[Double], dim: Int,
+                 cid: Array[Int], d2: Array[Double]): Unit = {
+    val cols = columns(w, dim)
+    val s = new KmeansScratch(dim, w.length / dim)
+    var r = 0
+    while (r < rows.length) {
+      val x = rows(r)
+      if (x.length != dim)
+        throw new IllegalArgumentException(
+          s"Received ${x.length} features, expected $dim.")
+      nearest(x, w, cols, dim, s)
+      cid(r) = s.best
+      d2(r) = s.bestV
+      r += 1
+    }
+  }
+}
+
+/** Working memory of one [[KmeansKernel]] caller (one task, or one
+  * driver-local pass): the row as doubles, every centroid's d², and the
+  * scan result. Never shared between threads.
+  */
+final class KmeansScratch(dim: Int, k: Int) {
+  val x = new Array[Double](dim)
+  val acc = new Array[Double](k)
+  var best: Int = 0
+  var bestV: Double = 0.0
+  var secondV: Double = 0.0
 }
 
 object VecScale9Kernel {
@@ -99,6 +232,39 @@ object VecScale9Kernel {
     }
     org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
   }
+}
+
+/** `double -> DECIMAL(38,9)`: [[VecScale9Kernel.scale9]] as a decimal —
+  * the value of `round(x, 9).cast(DECIMAL(38,9))` without its two
+  * `Double.toString` trips per row. The k-means‖ φ sum and selection
+  * threshold read it; like `scale9`, it rejects non-finite values and
+  * |x| >= 9e9.
+  */
+case class DecScale9(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = DecimalType(38, 9)
+  override def nullIntolerant: Boolean = true
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case DoubleType =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case other =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"dec_scale9 expects double, got $other")
+    }
+
+  override protected def nullSafeEval(input: Any): Any =
+    new Decimal().set(VecScale9Kernel.scale9(input.asInstanceOf[Double]), 38, 9)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val kernel = VecScale9Kernel.getClass.getName.stripSuffix("$")
+    val dec = classOf[Decimal].getName
+    defineCodeGen(ctx, ev, c => s"new $dec().set($kernel.scale9($c), 38, 9)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): DecScale9 =
+    copy(child = newChild)
+  override def prettyName: String = "dec_scale9"
 }
 
 /** `array<float|double> -> array<long>`: each element as its exact
@@ -159,13 +325,25 @@ case class KmeansAssign(child: Expression, weights: Array[Double], dim: Int)
     case _ => false
   }
 
+  // the sweep's column table: built once per expression, shipped as a
+  // codegen reference next to the row-major table
+  @transient private lazy val cols: Array[Array[Double]] =
+    KmeansKernel.columns(weights, dim)
+
   override protected def nullSafeEval(input: Any): Any =
-    KmeansKernel.assign(input.asInstanceOf[ArrayData], isFloat, weights, dim)
+    KmeansKernel.assign(input.asInstanceOf[ArrayData], isFloat, weights, cols,
+      dim, new KmeansScratch(dim, weights.length / dim))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val wRef = ctx.addReferenceObj("kmWeights", weights, "double[]")
+    val cRef = ctx.addReferenceObj("kmCols", cols, "double[][]")
+    // one scratch per generated-class instance, i.e. per task
+    val scratch = classOf[KmeansScratch].getName
+    val sRef = ctx.addMutableState(scratch, "kmScratch",
+      v => s"$v = new $scratch($dim, ${weights.length / dim});")
     val kernel = KmeansKernel.getClass.getName.stripSuffix("$") // mirror-class static forwarders — Janino cannot resolve MODULE$
-    defineCodeGen(ctx, ev, c => s"$kernel.assign($c, $isFloat, $wRef, $dim)")
+    defineCodeGen(ctx, ev,
+      c => s"$kernel.assign($c, $isFloat, $wRef, $cRef, $dim, $sRef)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): KmeansAssign =
@@ -269,6 +447,8 @@ object KmeansFunctions {
     GraftBridge.column(KmeansAssign(GraftBridge.expression(v), weights, dim))
   def vec_scale9(v: Column): Column =
     GraftBridge.column(VecScale9(GraftBridge.expression(v)))
+  def dec_scale9(x: Column): Column =
+    GraftBridge.column(DecScale9(GraftBridge.expression(x)))
   def vec_sum_count(v: Column, dim: Int): Column =
     GraftBridge.column(
       VecSumCount(GraftBridge.expression(v), dim).toAggregateExpression())

@@ -19,7 +19,8 @@ class KmeansSpec extends SparkSpec {
     */
   private def naiveFit(rows: Seq[(Long, Array[Double])], k: Int,
                        iters: Int, salt: String,
-                       farthest: Boolean = false): Array[Array[Double]] = {
+                       farthest: Boolean = false,
+                       initC: Option[Array[Array[Double]]] = None): Array[Array[Double]] = {
     def h(id: Long): String = {
       val md = java.security.MessageDigest.getInstance("MD5")
       md.digest(s"$salt:$id".getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -32,7 +33,8 @@ class KmeansSpec extends SparkSpec {
       }.min
     val seeded = rows.sortBy { case (id, _) => (h(id), id) }
     val c =
-      if (!farthest) seeded.take(k).map(_._2.clone()).toArray
+      if (initC.isDefined) initC.get.map(_.clone())
+      else if (!farthest) seeded.take(k).map(_._2.clone()).toArray
       else {
         val picked = scala.collection.mutable.ArrayBuffer(seeded.head._2.clone())
         while (picked.length < k) {
@@ -133,6 +135,30 @@ class KmeansSpec extends SparkSpec {
     for (j <- 0 until 4)
       assert(got.centroids(j).sameElements(exp(j)),
         s"centroid $j diverged from the naive implementation")
+  }
+
+  test("k = 24, dim = 16 (the centroid-wide sweep): local == distributed == naive, hash and scalable") {
+    val (rows, df) = synth(480, 16, parts = 5)
+    for (init <- Seq("hash", "scalable")) {
+      val loc = Kmeans.fit(df, "embedding", "vec_id", k = 24, iters = 4,
+        salt = "sw", initMethod = init)
+      val dist = Kmeans.fit(df, "embedding", "vec_id", k = 24, iters = 4,
+        salt = "sw", initMethod = init, localMaxRows = 0L)
+      // Lloyd's from the same start, written independently; the
+      // scalable start is the distributed rounds' own
+      val start =
+        if (init == "scalable")
+          Some(Kmeans.initScalableCentroids(df, "embedding", "vec_id",
+            k = 24, salt = "sw", localMaxRows = 0L))
+        else None
+      val exp = naiveFit(rows, k = 24, iters = 4, salt = "sw", initC = start)
+      for (j <- 0 until 24) {
+        assert(loc.centroids(j).sameElements(dist.centroids(j)),
+          s"init=$init centroid $j diverges between local and distributed")
+        assert(dist.centroids(j).sameElements(exp(j)),
+          s"init=$init centroid $j diverged from the naive implementation")
+      }
+    }
   }
 
   test("farthest-first init == naive third implementation; picks the extremes") {
@@ -383,15 +409,7 @@ class KmeansSpec extends SparkSpec {
       new java.math.BigDecimal(java.lang.Double.toString(x))
         .setScale(9, java.math.RoundingMode.HALF_UP)
         .unscaledValue().longValueExact()
-    val tricky = Seq(
-      0.0, -0.0, 1.0, -1.0, 0.5e-9, -0.5e-9, 1.5e-9, -1.5e-9, // exact ties
-      2.5e-9, 0.1234567895, -0.1234567895, 0.12345678949999,
-      1e-10, -1e-10, 4.9999999999e-10, 5.0000000001e-10,
-      123.456789123456, -987.654321987654, 1.0f.toDouble, 0.1f.toDouble)
-    val rnd = new scala.util.Random(11)
-    val fuzz = Seq.fill(20000)(rnd.nextDouble() * 200 - 100) ++
-      Seq.fill(20000)((rnd.nextInt(2000001) - 1000000).toDouble / 2e9) // midpoint-dense
-    (tricky ++ fuzz).foreach { x =>
+    graft.plans.KmeansKernelSpec.scale9Corpus.foreach { x =>
       assert(graft.plans.VecScale9Kernel.scale9(x) == slow(x), s"x=$x")
     }
     intercept[IllegalArgumentException] {
