@@ -218,34 +218,6 @@ object Distances {
           "manhattan, manhattan_no_opt, cosine, norm_p, norm_p_no_opt")
   }
 
-  /** First-index argmin within one row slice [off, off + k). */
-  def argminRow(m: Array[Double], off: Int, k: Int): Int = {
-    var best = 0
-    var bestV = m(off)
-    var j = 1
-    while (j < k) {
-      if (m(off + j) < bestV) { bestV = m(off + j); best = j }
-      j += 1
-    }
-    best
-  }
-
-  /** Two smallest indices within one row slice, ascending, ties by first
-    * index.
-    */
-  def top2Row(m: Array[Double], off: Int, k: Int): (Int, Int) = {
-    var b1 = -1; var b2 = -1
-    var v1 = Double.PositiveInfinity; var v2 = Double.PositiveInfinity
-    var j = 0
-    while (j < k) {
-      val v = m(off + j)
-      if (v < v1) { v2 = v1; b2 = b1; v1 = v; b1 = j }
-      else if (v < v2) { v2 = v; b2 = j }
-      j += 1
-    }
-    (b1, b2)
-  }
-
   /** First-index argmin per row (numpy argmin tie-break, `xpysom.py:416`). */
   def argminRows(m: Array[Double], n: Int, k: Int, out: Array[Int]): Unit = {
     var i = 0

@@ -1,16 +1,25 @@
 package graft.som
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Trained SOM: inference and analytics queries over a broadcast codebook.
+/** Trained SOM: inference and analytics queries over a codebook.
   *
-  * Every distributed query is a narrow `mapPartitions` over the input
-  * (no shuffle) followed, where the reference semantics are relational
-  * (group-bys, `xpysom.py:819-865`), by stock Catalyst aggregates — so
-  * Spark's optimizer, AQE and whole-stage codegen handle the relational
-  * layer while the numeric kernels stay in batched BLAS calls.
+  * Every query that needs one best-matching unit or quantization
+  * distance per row is a Catalyst expression over one kernel
+  * (`graft.plans.SomBmuKernel`): the codebook rides in the expression,
+  * the scan runs inside whole-stage codegen, and there is no shuffle.
+  * Where the reference semantics are relational (group-bys,
+  * `xpysom.py:819-865`) stock Catalyst aggregates follow, so Spark's
+  * optimizer, AQE and codegen handle that layer too. Only `activate`,
+  * which returns every neuron's distance, is a narrow `mapPartitions`
+  * over batched BLAS distance calls.
+  *
+  * Feature columns may be array<float>, array<double>, any other
+  * numeric array (cast to array<double>) or an ml/mllib `Vector`. Rows
+  * with null features get null outputs from the per-row queries and are
+  * skipped by the aggregates, as `fit` skips them.
   */
 final class SomModel(val config: SomConfig, val codebook: Codebook)
     extends Serializable {
@@ -23,149 +32,126 @@ final class SomModel(val config: SomConfig, val codebook: Codebook)
 
   // ---------------------------------------------------------------- core
 
-  /** Batched per-partition map: for each feature vector compute a small
-    * result array via `f(distRow)` where distRow is that sample's
-    * distance vector to all neurons. Appends the produced columns.
+  /** The features column as the array<float|double> every SOM expression
+    * takes: unchanged for float and double arrays, cast to array<double>
+    * for other numeric arrays, `vector_to_array` for vectors.
     */
-  private def mapWithDistances(df: DataFrame, featuresCol: String,
-                               dist: Distance, newFields: Seq[StructField])(
-      emit: (Array[Double], Int, Int, Array[Double]) => Seq[Any]): DataFrame = {
-    val spark = df.sparkSession
-    val schema = StructType(df.schema.fields ++ newFields)
-    val fIdx = df.schema.fieldIndex(featuresCol)
-    val bc = spark.sparkContext.broadcast(codebook.weights)
-    val cfg = config
-    val k = x * y
-    val d = dim
-    val distFn = dist
-    val rdd = df.rdd.mapPartitions { it =>
-      val w = bc.value
-      val bs = cfg.batchSize
-      val xBuf = new Array[Double](bs * d)
-      val dBuf = new Array[Double](bs * k)
-      val rows = new Array[Row](bs)
-      val wSq = if (distFn.canCache) Distances.rowSumSq(w, k, d) else null
-      new Iterator[Row] {
-        private var n = 0
-        private var pos = 0
-        private def fill(): Unit = {
-          n = 0
-          while (n < bs && it.hasNext) {
-            val r = it.next()
-            rows(n) = r
-            val v = SomData.rowToVec(r, fIdx)
-            if (v.length != d)
-              throw new IllegalArgumentException(
-                s"Received ${v.length} features, expected $d.")
-            System.arraycopy(v, 0, xBuf, n * d, d)
-            n += 1
-          }
-          if (n > 0) distFn.compute(xBuf, n, w, k, d, wSq, dBuf)
-          pos = 0
-        }
-        def hasNext: Boolean = pos < n || { if (it.hasNext) { fill(); pos < n } else false }
-        def next(): Row = {
-          if (!hasNext) throw new NoSuchElementException("next on empty iterator")
-          val row = rows(pos)
-          val extra = emit(dBuf, pos * k, k, w)
-          pos += 1
-          Row.fromSeq(row.toSeq ++ extra)
-        }
-      }
+  private def features(df: DataFrame, featuresCol: String): Column = {
+    val c = col(featuresCol)
+    df.select(c).schema.head.dataType match {
+      case ArrayType(FloatType | DoubleType, _) => c
+      case _: ArrayType => c.cast(ArrayType(DoubleType))
+      // vector_to_array raises on a null vector
+      case _ => when(c.isNotNull, org.apache.spark.ml.functions.vector_to_array(c))
     }
-    spark.createDataFrame(rdd, schema)
   }
+
+  /** `withBmu` over the rows whose features are not null. */
+  private def assigned(df: DataFrame, featuresCol: String): DataFrame =
+    withBmu(df.where(col(featuresCol).isNotNull), featuresCol)
 
   // ------------------------------------------------------------- queries
 
   /** BMU assignment (`winner`/`predict`, `xpysom.py:370-417,608-617`):
     * appends bmu_id (= i*y + j, the raveled index), bmu_i, bmu_j.
     * Uses the configured activation distance; argmin ties resolve to the
-    * first flat index, like numpy.
+    * first flat index, like numpy. The same query as [[withBmu]].
     */
-  def transform(df: DataFrame, featuresCol: String = "features"): DataFrame = {
-    val yLocal = y // avoid capturing `this` (and the codebook) in the closure
-    mapWithDistances(df, featuresCol, config.distanceFn, Seq(
-      StructField("bmu_id", IntegerType, nullable = false),
-      StructField("bmu_i", IntegerType, nullable = false),
-      StructField("bmu_j", IntegerType, nullable = false))) { (dBuf, off, k, _) =>
-      val best = Distances.argminRow(dBuf, off, k)
-      Seq(best, best / yLocal, best % yLocal)
-    }
-  }
+  def transform(df: DataFrame, featuresCol: String = "features"): DataFrame =
+    withBmu(df, featuresCol)
 
-  /** Expression-based BMU transform: appends bmu_id/bmu_i/bmu_j as a pure
-    * column operation via the native `som_bmu` Catalyst expression
-    * (`graft.plans.SomBmu`) — stays inside whole-stage codegen and,
-    * unlike the mapPartitions path, composes with Structured Streaming.
-    * Identical semantics to `transform`.
+  /** BMU assignment as a pure column operation via the native `som_bmu`
+    * Catalyst expression (`graft.plans.SomBmu`): stays inside whole-stage
+    * codegen and composes with Structured Streaming.
     */
   def withBmu(df: DataFrame, featuresCol: String = "features"): DataFrame = {
     val bmu = graft.plans.SomBmuFunctions.som_bmu(
-      col(featuresCol), codebook.weights, dim, config.distance, config.normP)
+      features(df, featuresCol), codebook.weights, dim, config.distance, config.normP)
     df.withColumn("bmu_id", bmu)
       .withColumn("bmu_i", floor(col("bmu_id") / y).cast("int"))
       .withColumn("bmu_j", pmod(col("bmu_id"), lit(y)).cast("int"))
   }
 
   /** Activation map (`activate`, `xpysom.py:323-354`): appends the full
-    * per-neuron distance vector.
+    * per-neuron distance vector, from batched per-partition distance
+    * calls.
     */
-  def activate(df: DataFrame, featuresCol: String = "features"): DataFrame =
-    mapWithDistances(df, featuresCol, config.distanceFn, Seq(
-      StructField("activation", ArrayType(DoubleType, containsNull = false)))) {
-      (dBuf, off, k, _) =>
-        val arr = java.util.Arrays.copyOfRange(dBuf, off, off + k)
-        Seq(arr.toSeq)
+  def activate(df: DataFrame, featuresCol: String = "features"): DataFrame = {
+    val spark = df.sparkSession
+    val schema = df.schema.add(
+      StructField("activation", ArrayType(DoubleType, containsNull = false)))
+    val fIdx = df.schema.fieldIndex(featuresCol)
+    val bc = spark.sparkContext.broadcast(codebook.weights)
+    val bs = config.batchSize
+    val k = x * y
+    val d = dim
+    val distFn = config.distanceFn
+    val rdd = df.rdd.mapPartitions { it =>
+      val w = bc.value
+      val xBuf = new Array[Double](bs * d)
+      val dBuf = new Array[Double](bs * k)
+      val wSq = if (distFn.canCache) Distances.rowSumSq(w, k, d) else null
+      it.grouped(bs).flatMap { batch =>
+        val rows = batch.toArray
+        rows.indices.foreach { r =>
+          val v = SomData.rowToVec(rows(r), fIdx)
+          if (v.length != d)
+            throw new IllegalArgumentException(
+              s"Received ${v.length} features, expected $d.")
+          System.arraycopy(v, 0, xBuf, r * d, d)
+        }
+        distFn.compute(xBuf, rows.length, w, k, d, wSq, dBuf)
+        rows.indices.iterator.map { r =>
+          Row.fromSeq(rows(r).toSeq :+
+            java.util.Arrays.copyOfRange(dBuf, r * k, (r + 1) * k).toSeq)
+        }
+      }
     }
+    spark.createDataFrame(rdd, schema)
+  }
 
   /** Quantization (`xpysom.py:620-645`): appends the BMU's codebook
-    * vector. BMU here always uses true euclidean distance
-    * (`_distance_from_weights`, `xpysom.py:660-671`) regardless of the
-    * configured activation distance — reference behavior.
+    * vector (`quantized`) and the distance to it (`q_dist`). BMU here
+    * always uses true euclidean distance (`_distance_from_weights`,
+    * `xpysom.py:660-671`) regardless of the configured activation
+    * distance — reference behavior — and is the neuron `som_qdist`
+    * measures, so mean q_dist equals [[quantizationError]] exactly.
+    * An unselected `quantized` column is pruned by the optimizer.
     */
   def quantize(df: DataFrame, featuresCol: String = "features"): DataFrame = {
-    val dimLocal = dim
-    mapWithDistances(df, featuresCol, Distances.EuclideanTrue, Seq(
-      StructField("quantized", ArrayType(DoubleType, containsNull = false)),
-      StructField("q_dist", DoubleType, nullable = false))) { (dBuf, off, k, w) =>
-      val best = Distances.argminRow(dBuf, off, k)
-      val base = best * dimLocal
-      val q = java.util.Arrays.copyOfRange(w, base, base + dimLocal)
-      Seq(q.toSeq, dBuf(off + best))
-    }
+    import graft.plans.SomBmuFunctions.{som_codebook_row, som_nearest}
+    val near = "__som_nearest"
+    df.withColumn(near, som_nearest(features(df, featuresCol), codebook.weights, dim))
+      .withColumn("quantized", som_codebook_row(col(s"$near.bmu_id"), codebook.weights, dim))
+      .withColumn("q_dist", col(s"$near.q_dist"))
+      .drop(near)
   }
 
   /** Quantization error (`xpysom.py:673-707`): mean distance between each
-    * sample and its BMU codebook vector (euclidean, as in the reference).
-    * Distributed narrow map + scalar aggregate.
+    * sample and its BMU codebook vector (euclidean, as in the reference),
+    * one codegen scan + scalar aggregate.
     */
   def quantizationError(df: DataFrame, featuresCol: String = "features"): Double = {
     val r = df.select(avg(graft.plans.SomBmuFunctions.som_qdist(
-        col(featuresCol), codebook.weights, dim)).as("qe"))
+        features(df, featuresCol), codebook.weights, dim)).as("qe"))
       .head()
     if (r.isNullAt(0)) Double.NaN else r.getDouble(0)
   }
 
   /** Topographic error (`xpysom.py:709-746`): share of samples whose two
-    * best-matching units are not grid-adjacent. Per-row top-2 selection
-    * (partial, not a full sort) then a scalar aggregate. 1x1 maps are
-    * undefined (NaN), as in the reference (`xpysom.py:721-724`).
+    * best-matching units are not grid-adjacent — a per-row top-2
+    * selection (partial, not a full sort) in the `som_topo_error`
+    * expression, then a scalar aggregate. 1x1 maps are undefined (NaN),
+    * as in the reference (`xpysom.py:721-724`).
     */
   def topographicError(df: DataFrame, featuresCol: String = "features"): Double = {
     if (x * y == 1) {
       System.err.println("The topographic error is not defined for a 1-by-1 map.")
       return Double.NaN
     }
-    val t = topo
-    val yy = y
-    val errs = mapWithDistances(df, featuresCol, Distances.EuclideanTrue, Seq(
-      StructField("te_err", IntegerType, nullable = false))) { (dBuf, off, k, _) =>
-      val (b1, b2) = Distances.top2Row(dBuf, off, k)
-      val adj = t.adjacent(b1 / yy, b1 % yy, b2 / yy, b2 % yy)
-      Seq(if (adj) 0 else 1)
-    }
-    val r = errs.agg(avg("te_err")).head()
+    val r = df.select(avg(graft.plans.SomBmuFunctions.som_topo_error(
+        features(df, featuresCol), codebook.weights, dim, topo)))
+      .head()
     if (r.isNullAt(0)) Double.NaN else r.getDouble(0)
   }
 
@@ -175,7 +161,7 @@ final class SomModel(val config: SomConfig, val codebook: Codebook)
     * stage; no Row round-trip).
     */
   def activationResponse(df: DataFrame, featuresCol: String = "features"): DataFrame =
-    withBmu(df, featuresCol)
+    assigned(df, featuresCol)
       .groupBy("bmu_id", "bmu_i", "bmu_j")
       .agg(count(lit(1)).as("n_wins"))
 
@@ -194,7 +180,7 @@ final class SomModel(val config: SomConfig, val codebook: Codebook)
     */
   def winMap(df: DataFrame, featuresCol: String = "features",
              maxPerNeuron: Int = Int.MaxValue): DataFrame = {
-    val tagged = withBmu(df, featuresCol)
+    val tagged = assigned(df, featuresCol)
     val bounded =
       if (maxPerNeuron == Int.MaxValue) tagged
       else {
@@ -218,7 +204,7 @@ final class SomModel(val config: SomConfig, val codebook: Codebook)
     */
   def labelsMap(df: DataFrame, labelCol: String,
                 featuresCol: String = "features"): DataFrame =
-    withBmu(df, featuresCol)
+    assigned(df, featuresCol)
       .groupBy(col("bmu_id"), col("bmu_i"), col("bmu_j"), col(labelCol).as("label"))
       .agg(count(lit(1)).as("n"))
 

@@ -35,10 +35,17 @@ class SomInitSpec extends SparkSpec {
     val df = Seq.fill(64)(Seq.fill(6)(rnd.nextFloat() * 2 - 1)).zipWithIndex
       .map { case (v, i) => (i.toLong, v) }.toDF("id", "features")
     val rows = Seq.fill(12)(Array.fill(6)(rnd.nextDouble() * 2 - 1))
+    // the batched distance kernels the mapPartitions paths (`fit`,
+    // `activate`) run, argmin taken on the driver
+    val xs = df.orderBy("id").collect().flatMap(_.getSeq[Float](1).map(_.toDouble))
+    val w = rows.flatten.toArray
     for (dist <- Seq("euclidean", "cosine", "manhattan", "norm_p")) {
       val m = SomModel.fromWeights(SomConfig(3, 4, distance = dist, normP = 3.0), rows)
-      val a = m.transform(df).select("id", "bmu_id", "bmu_i", "bmu_j").collect()
-        .map(r => r.getLong(0) -> (r.getInt(1), r.getInt(2), r.getInt(3))).toMap
+      val out = new Array[Double](64 * 12)
+      m.config.distanceFn.compute(xs, 64, w, 12, 6, null, out)
+      val best = new Array[Int](64)
+      Distances.argminRows(out, 64, 12, best)
+      val a = best.zipWithIndex.map { case (b, i) => i.toLong -> ((b, b / 4, b % 4)) }.toMap
       val b = m.withBmu(df).select("id", "bmu_id", "bmu_i", "bmu_j").collect()
         .map(r => r.getLong(0) -> (r.getInt(1), r.getInt(2), r.getInt(3))).toMap
       assert(a == b, s"distance=$dist")

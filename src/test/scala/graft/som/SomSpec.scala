@@ -250,4 +250,58 @@ class SomSpec extends SparkSpec {
     val w2 = new Som(cfg).fit(data, "features", 5).codebook.weights
     assert(w1.zip(w2).forall { case (a, b) => math.abs(a - b) < 1e-9 })
   }
+
+  test("every query accepts vector and numeric-array features alike; null features are skipped") {
+    import org.apache.spark.ml.linalg.{SQLDataTypes, Vectors}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(23)
+    // integer-valued features: every element type carries the same doubles
+    val vals = Seq.fill(60)(Array.fill(3)((rnd.nextInt(21) - 10).toDouble))
+    val m = SomModel.fromWeights(SomConfig(3, 4),
+      Seq.fill(12)(Array.fill(3)(rnd.nextDouble() * 20 - 10)))
+    val types: Seq[(DataType, Array[Double] => Any)] = Seq(
+      (SQLDataTypes.VectorType, v => Vectors.dense(v)),
+      (ArrayType(FloatType), v => v.map(_.toFloat).toSeq),
+      (ArrayType(DoubleType), v => v.toSeq),
+      (ArrayType(IntegerType), v => v.map(_.toInt).toSeq))
+    def frame(t: DataType, conv: Array[Double] => Any): DataFrame = {
+      val rows = vals.zipWithIndex.map { case (v, i) => Row(i.toLong, (i % 3).toLong, conv(v)) } :+
+        Row(60L, 0L, null)
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), StructType(Seq(
+        StructField("id", LongType), StructField("label", LongType), StructField("features", t))))
+    }
+    def vec(a: Any): Seq[Double] = SomData.rowToVec(Row(a), 0).toSeq
+    def answers(df: DataFrame): Seq[Any] = {
+      val bmu = m.withBmu(df).select("id", "bmu_id", "bmu_i", "bmu_j").collect()
+        .map(r => r.getLong(0) -> (1 to 3).map(i => Option(r.get(i)))).toMap
+      val transformed = m.transform(df).select("id", "bmu_id", "bmu_i", "bmu_j").collect()
+        .map(r => r.getLong(0) -> (1 to 3).map(i => Option(r.get(i)))).toMap
+      assert(transformed == bmu)
+      assert(bmu(60L).forall(_.isEmpty), "null features: null BMU")
+      val ar = m.activationResponse(df).collect().map(r => r.getInt(0) -> r.getLong(3)).toMap
+      val lm = m.labelsMap(df, "label").collect()
+        .map(r => (r.getInt(0), r.getLong(3)) -> r.getLong(4)).toMap
+      val wm = m.winMap(df).collect()
+        .map(r => r.getInt(0) -> r.getSeq[Any](3).map(vec).sortBy(_.mkString(","))).toMap
+      val q = m.quantize(df).select("id", "quantized", "q_dist").collect()
+        .map(r => r.getLong(0) -> (Option(r.getSeq[Double](1)), Option(r.get(2)))).toMap
+      assert(q(60L) == ((None, None)), "null features: null quantization")
+      assert(ar.values.sum == 60 && lm.values.sum == 60 && wm.values.map(_.size).sum == 60,
+        "null features are not assigned")
+      val nonNull = df.where("id < 60")
+      val qe = m.quantizationError(df)
+      val te = m.topographicError(df)
+      assert(qe == m.quantizationError(nonNull) && te == m.topographicError(nonNull))
+      val meanQ = q.values.flatMap(_._2).map(_.asInstanceOf[Double]).sum / 60
+      assert(math.abs(meanQ - qe) < 1e-12)
+      Seq(bmu, ar, lm, wm, q, qe, te)
+    }
+    val all = types.map { case (t, conv) => t -> answers(frame(t, conv)) }
+    all.tail.foreach { case (t, a) =>
+      a.zip(all.head._2).zipWithIndex.foreach { case ((got, exp), i) =>
+        assert(got == exp, s"$t answer $i differs from ${all.head._1}")
+      }
+    }
+  }
 }
