@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.som._
 import java.nio.file.{Files, Paths}
 
@@ -47,11 +46,7 @@ object RefDump {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/ref_dump.jsonl")
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cores(8))
     val df = spark.read.parquet(s"$dir/embeddings.parquet")
     val initRows = df.orderBy("vec_id").limit(9).collect()
       .map(r => r.getSeq[Float](r.fieldIndex("embedding")).map(_.toDouble).toArray).toSeq

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Headroom probe: the bench workloads at ~10x their usual scale, run
   * manually per round to confirm the scaling story stays linear and
   * nothing hits a memory cliff on this machine:
@@ -39,12 +37,7 @@ object ScaleProbe {
     // all 32 "executor" threads, where a real cluster gives each
     // executor its own.)
     val parts = math.max(32L, nDocs / 250000L)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cores(32), parts.toInt)
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }

@@ -1,21 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Manual end-to-end smoke: runs the flagship entry query and prints the
   * result (mirrors the driver's rows>0 check).
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cores(8))
     val t0 = System.nanoTime()
     val df = SparkEntry.entry(spark)
     val n = df.count()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.som._
 import graft.streaming.StreamingSom
@@ -10,11 +9,7 @@ import graft.streaming.StreamingSom
   */
 object StreamSmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cores(8))
     val dir = "/root/testdata/sf0.001"
     val static = spark.read.parquet(s"$dir/embeddings.parquet")
     val model = new Som(SomConfig(4, 4, seed = 42)).fit(static, "embedding", 2)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Throughput + state-size probe for the composed streaming
@@ -28,12 +27,7 @@ object StreamThroughputProbe {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(2000000L)
     val nFiles = args.lift(1).map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cores(32))
 
     val base = java.nio.file.Files.createTempDirectory("graft_stream_probe").toString
     val landing = s"$base/landing"

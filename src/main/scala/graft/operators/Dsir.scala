@@ -44,7 +44,7 @@ object Dsir {
     * bit-identical to the `conv(substr(md5(t),1,8),16,10)` spelling
     * (spec-pinned) without the per-row hex-string/substring/conv-parse
     * allocations, which were ~70% of the bucketing scan's pair-stream
-    * cost (`DsirProbe`).
+    * cost (OPTIMIZATION_r11.md §8).
     */
   def hashBucket(token: Column, buckets: Int): Column =
     graft.plans.GraftFunctions.md5_prefix_long(token, 8) % buckets

@@ -47,11 +47,6 @@ private[graft] object LoopSession {
     * child.
     */
   def rebase(df: DataFrame, keySpace: Int): DataFrame = {
-    // probe hook: `-Dgraft.loopsession.off=1` disables the rebase so
-    // same-JVM A/B probes (AqeLoopProbe) can interleave the two arms
-    // under identical machine conditions — the only trustworthy wall
-    // comparison on a shared box
-    if (sys.props.get("graft.loopsession.off").contains("1")) return df
     val parent = df.sparkSession
     val child = parent.newSession()
     parent.conf.getAll.foreach { case (k, v) =>
@@ -59,12 +54,10 @@ private[graft] object LoopSession {
     }
     val defaultP = Option(callerParts.get(parent)).map(_.intValue)
       .getOrElse(parent.conf.get("spark.sql.shuffle.partitions").toInt)
-    val parts = sys.props.get("graft.loopsession.parts").map(_.toInt)
-      .getOrElse(math.max(1, math.min(defaultP, keySpace)))
-    child.conf.set("spark.sql.shuffle.partitions", parts)
+    child.conf.set("spark.sql.shuffle.partitions",
+      math.max(1, math.min(defaultP, keySpace)))
     callerParts.put(child, defaultP)
-    if (!sys.props.get("graft.loopsession.keepaqe").contains("1"))
-      child.conf.set("spark.sql.adaptive.enabled", "false")
+    child.conf.set("spark.sql.adaptive.enabled", "false")
     GraftBridge.withSession(df, child)
   }
 }

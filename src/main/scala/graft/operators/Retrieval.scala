@@ -161,7 +161,7 @@ object Retrieval {
     * count window over the already-shuffled postings, not a separate
     * aggregate + join: the postings cross the wire once instead of
     * three times (agg, join, re-bucket), which cut the 200k-doc build
-    * from 8.6 s to 5.2 s (`Bm25BuildProbe`). A hot token (stopword at
+    * from 8.6 s to 5.2 s (COVERAGE.md, BM25 index). A hot token (stopword at
     * 100 TB) makes one window group in one task — but the token-
     * bucketed LAYOUT already serializes that token's postings through
     * one bucket writer, so the window adds no new skew ceiling, and

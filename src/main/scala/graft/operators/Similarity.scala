@@ -393,7 +393,7 @@ object Similarity {
     * 10^7+-file index (guide §6: small files hurt twice — driver
     * listing and per-file open), and even at the 200k-row bench scale
     * measured 8.45 s / 512 files vs 1.66 s / 31 files clustered, with
-    * the pruned serve 0.85 -> 0.57 s (`IvfWriteProbe`, same JVM).
+    * the pruned serve 0.85 -> 0.57 s (same JVM; OPTIMIZATION_r11.md §5).
     * Clustering on (cell, deterministic salt) bounds the layout to
     * ≤ cells x filesPerCell files while a hot cell still spreads over
     * filesPerCell tasks — never the single-task pin a bare

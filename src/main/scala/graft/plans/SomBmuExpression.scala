@@ -217,7 +217,8 @@ object SomBmuKernel {
 
   /** The two nearest neurons by the clamped true distance
     * `sqrt(max(|x|² - 2 dot + |w|², 0))` into `s.best` and `s.second`:
-    * ascending, ties to the first index (the `Distances.top2Rows` rule).
+    * ascending, ties to the first index (`argsort(distances)[:, :2]`,
+    * `xpysom.py:734`).
     */
   def top2(v: ArrayData, isFloat: Boolean, w: Array[Double], wSq: Array[Double],
            cols: Array[Array[Double]], dim: Int, s: SomKernelScratch): Unit = {

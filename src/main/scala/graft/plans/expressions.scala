@@ -426,7 +426,7 @@ case class TokensOf(child: Expression) extends UnaryExpression {
   * ([[HashKernels.md5PrefixLong]], differential-pinned in
   * `TextKernelsSpec`); skips the per-row 32-char hex string, the
   * substring copy and conv's base-16 string parse (~70% of the
-  * per-(doc, token) stream cost in the DSIR scans — `DsirProbe`).
+  * per-(doc, token) stream cost in the DSIR scans — OPTIMIZATION_r11.md §8).
   */
 case class Md5PrefixLong(child: Expression, nHex: Int)
     extends UnaryExpression {

@@ -235,26 +235,4 @@ object Distances {
       i += 1
     }
   }
-
-  /** Two smallest indices per row in ascending-distance order, ties by
-    * first index (matches `argsort(distances)[:, :2]`, `xpysom.py:734`).
-    */
-  def top2Rows(m: Array[Double], n: Int, k: Int, out1: Array[Int], out2: Array[Int]): Unit = {
-    var i = 0
-    while (i < n) {
-      val base = i * k
-      var b1 = -1; var b2 = -1
-      var v1 = Double.PositiveInfinity; var v2 = Double.PositiveInfinity
-      var j = 0
-      while (j < k) {
-        val v = m(base + j)
-        if (v < v1) { v2 = v1; b2 = b1; v1 = v; b1 = j }
-        else if (v < v2) { v2 = v; b2 = j }
-        j += 1
-      }
-      out1(i) = b1
-      out2(i) = b2
-      i += 1
-    }
-  }
 }

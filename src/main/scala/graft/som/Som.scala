@@ -349,17 +349,23 @@ object Som {
     */
   val localFitMaxPartitions = 64
 
-  /** DataFrame-level fast-path probe: same cap-and-collect contract as
-    * [[collectIfSmall]], but reads the query's INTERNAL rows directly
-    * (`queryExecution.toRdd` over the same where+cast plan
-    * `SomData.toFloatVectors` executes) — no Dataset-encoder planning
-    * and no second plan compilation, which halves the fixed-cost floor
-    * of a tiny fit. Partitioning is the physical scan's, identical to
-    * the RDD `toFloatVectors` would produce (no exchange in between),
-    * so the collected chunks replay the same partition structure the
-    * distributed path would see — the bit-identity contract
-    * (`SomLocalFitSpec`). Array-typed feature columns only; other
-    * containers (VectorUDT, struct) return None and take the RDD path.
+  /** The fast-path probe: one job that returns every partition (with
+    * its id, empty partitions included) and the partition count when
+    * the input's total value count is at or under `threshold`, or None
+    * when it is not. Each task stops buffering the moment its own
+    * running value count exceeds the threshold — an oversized
+    * partition costs its scan, not a driver transfer.
+    *
+    * Reads the query's INTERNAL rows directly (`queryExecution.toRdd`
+    * over the same where+cast plan `SomData.toFloatVectors` executes) —
+    * no Dataset-encoder planning and no second plan compilation, which
+    * halves the fixed-cost floor of a tiny fit. Partitioning is the
+    * physical scan's, identical to the RDD `toFloatVectors` would
+    * produce (no exchange in between), so the collected chunks replay
+    * the same partition structure the distributed path would see — the
+    * bit-identity contract (`SomLocalFitSpec`). Array-typed feature
+    * columns only; other containers (VectorUDT, struct) return None and
+    * take the RDD path.
     */
   private[som] def collectIfSmallDf(df: DataFrame, featuresCol: String,
       threshold: Long): Option[(Array[(Int, Array[Array[Float]])], Int)] = {
@@ -400,35 +406,6 @@ object Som {
     val totalVals = parts.iterator.flatMap(_._2.iterator).map(_.length.toLong).sum
     require(totalVals > 0, "cannot fit a SOM on an empty dataset")
     if (totalVals <= threshold) Some((parts, rdd.getNumPartitions)) else None
-  }
-
-  /** The fast-path probe: one job that returns every partition (with
-    * its id, empty partitions included) when the input's total value
-    * count is at or under `threshold`, or None when it is not. Each
-    * task stops buffering the moment its own running value count
-    * exceeds the threshold — an oversized partition costs its scan (on
-    * the persisted cache the epoch loop was about to scan anyway), not
-    * a driver transfer.
-    */
-  private[som] def collectIfSmall(data: RDD[Array[Float]], threshold: Long)
-      : Option[Array[(Int, Array[Array[Float]])]] = {
-    if (threshold <= 0 || data.getNumPartitions > localFitMaxPartitions)
-      return None
-    val parts = data.mapPartitionsWithIndex { (pid, it) =>
-      val buf = scala.collection.mutable.ArrayBuffer[Array[Float]]()
-      var nVals = 0L
-      var overflow = false
-      while (it.hasNext && !overflow) {
-        val v = it.next()
-        nVals += v.length
-        if (nVals <= threshold) buf += v else overflow = true
-      }
-      Iterator.single((pid, if (overflow) null else buf.toArray))
-    }.collect().sortBy(_._1)
-    if (parts.exists(_._2 == null)) return None
-    val totalVals = parts.iterator.flatMap(_._2.iterator).map(_.length.toLong).sum
-    require(totalVals > 0, "cannot fit a SOM on an empty dataset")
-    if (totalVals <= threshold) Some(parts) else None
   }
 
   /** Reference-format progress line (`print_progress`, `xpysom.py:50-69`)

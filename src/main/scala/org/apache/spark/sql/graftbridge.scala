@@ -1,12 +1,12 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge into `private[sql]` column/expression conversions (the same
   * technique used by Spark-ecosystem libraries to expose custom Catalyst
-  * expressions through the public Column API). Only forwards to
-  * `org.apache.spark.sql.classic.ExpressionUtils` — no behavior of its
-  * own.
+  * expressions through the public Column API), plus the few other
+  * `private[spark]` hooks the engine and its probes need.
   */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -37,4 +37,11 @@ object GraftBridge {
   def withSession(df: DataFrame, s: SparkSession): DataFrame =
     classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession],
       df.queryExecution.logical)
+
+  /** Blocks until every event already posted to `sc`'s listener bus
+    * has been delivered. `onJobStart` arrives asynchronously, so a job
+    * counter read or reset after this sees exactly the jobs submitted
+    * before it.
+    */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -129,9 +129,6 @@ class DistancesSpec extends AnyFunSuite {
     val o = new Array[Int](1)
     Distances.argminRows(m, 1, 4, o)
     assert(o(0) == 1)
-    val t1 = new Array[Int](1); val t2 = new Array[Int](1)
-    Distances.top2Rows(m, 1, 4, t1, t2)
-    assert(t1(0) == 1 && t2(0) == 2)
   }
 
   test("registry names and validation (`distances.py:162-175`)") {

@@ -73,23 +73,24 @@ class SomLocalFitSpec extends SparkSpec {
   }
 
   test("collectIfSmall: caps per task, preserves partition ids, rejects big input") {
-    val sc = spark.sparkContext
-    val data = sc.parallelize((0 until 100).map(i => Array(i.toFloat)), 5)
-    val small = Som.collectIfSmall(data, threshold = 100L)
+    import spark.implicits._
+    // 100 one-value rows over 5 partitions, partitions 1 and 4 empty
+    val layout = Seq(0 until 30, 0 until 0, 30 until 60, 60 until 100, 0 until 0)
+    val df = spark.sparkContext.parallelize(layout, 5)
+      .flatMap(_.map(i => Seq(i.toFloat))).toDF("embedding")
+    assert(df.schema("embedding").dataType.sql == "ARRAY<FLOAT>")
+    val small = Som.collectIfSmallDf(df, "embedding", threshold = 100L)
     assert(small.isDefined)
-    val chunks = small.get
+    val (chunks, nParts) = small.get
+    assert(nParts == 5)
     assert(chunks.map(_._1).toSeq == (0 until 5))
-    assert(chunks.map(_._2.length).sum == 100)
-    // same rows, same per-partition order as the RDD itself
-    val direct = data.mapPartitionsWithIndex((pid, it) =>
-      Iterator.single(pid -> it.toArray)).collect().sortBy(_._1)
-    chunks.zip(direct).foreach { case ((p1, a), (p2, b)) =>
-      assert(p1 == p2)
-      assert(a.map(_.toSeq).toSeq == b.map(_.toSeq).toSeq)
-    }
-    assert(Som.collectIfSmall(data, threshold = 99L).isEmpty,
-      "101-value input must not pass a 99-value threshold")
-    assert(Som.collectIfSmall(data, threshold = 0L).isEmpty, "0 disables")
+    // same rows, same per-partition order as the frame itself
+    assert(chunks.map(_._2.map(_.head.toInt).toSeq).toSeq == layout.map(_.toSeq))
+    assert(Som.collectIfSmallDf(df, "embedding", threshold = 99L).isEmpty,
+      "100-value input must not pass a 99-value threshold")
+    assert(Som.collectIfSmallDf(df, "embedding", threshold = 39L).isEmpty,
+      "a 40-value partition must not pass a 39-value cap")
+    assert(Som.collectIfSmallDf(df, "embedding", threshold = 0L).isEmpty, "0 disables")
   }
 
   test("empty partitions participate exactly as in the distributed reduce") {
