@@ -574,9 +574,9 @@ object Bench {
           .count(); ()
       }
 
-      // composed IVF+PQ: codes partitioned by coarse cell on disk, each
-      // query ADC-scans only its nProbe cells' directories — cell
-      // pruning x 32x-compressed codes, the billion-scale serving layout
+      // composed IVF+PQ: codes partitioned by coarse cell on disk, the
+      // query batch ADC-scans only its probed cells' directories, once —
+      // cell pruning x 32x-compressed codes, the billion-scale layout
       val ivfPqPath = s"$idxDir/ivfpq"
       results("bench_ivfpq_build_200k") = time {
         graft.operators.Similarity.writeIvfPqIndex(big, "embedding", "id",
@@ -590,22 +590,14 @@ object Bench {
           m = 8, k = 16, qvecs, kNN = 10, nProbe = 4).count(); ()
       }
 
-      // batch-ADC head-to-head at 100 queries on the SAME codes in the
-      // SAME JVM: the per-query form plans one scan per query (100
-      // plans + 100 scans of the same file); the batch form answers
-      // all 100 with ONE codegen scan + the bounded-heap reduction.
-      // The ratio is the point — it widens with batch size, which is
-      // why serving batches route through pqTopKFromCodesBatch.
+      // batch ADC at 100 queries on the same codes: ONE codegen scan
+      // + the bounded-heap reduction answers all 100
       val q100 = big.where(col("id") < 100).collect().map { r =>
         (r.getLong(0), r.getSeq[Double](1).toArray)
       }.toSeq
-      graft.operators.Similarity.pqTopKFromCodesBatch(pqCodes, pqCb,
+      graft.operators.Similarity.pqTopKFromCodes(pqCodes, pqCb,
         m = 8, k = 16, q100.take(5), kNN = 10).count() // warmup
       results("bench_pq_batch100_200k") = time2 {
-        graft.operators.Similarity.pqTopKFromCodesBatch(pqCodes, pqCb,
-          m = 8, k = 16, q100, kNN = 10).count(); ()
-      }
-      results("bench_pq_perq100_200k") = time2 {
         graft.operators.Similarity.pqTopKFromCodes(pqCodes, pqCb,
           m = 8, k = 16, q100, kNN = 10).count(); ()
       }
@@ -613,7 +605,7 @@ object Bench {
       // --- composed IVF+SQ beside IVF+PQ on the same corpus: cell
       // pruning x int8 codes with exact decoded-grid cosine (the
       // higher-resolution serving tier; build = assign+encode+
-      // partitioned write, serve = nProbe pruned directories/query)
+      // partitioned write, serve = one scan of the probed-cell union)
       val sqM = graft.operators.Similarity.sqTrain(big, "embedding")
       val ivfSqPath = s"$idxDir/ivfsq"
       results("bench_ivfsq_build_200k") = time {

@@ -1021,9 +1021,9 @@ object Queries {
             round(coalesce(col("n_hit"), lit(0L)).cast("double") / 5.0, 6).as("recall"))
       }),
 
-      // PQ asymmetric-distance top-k: each query is one codegen scan of
-      // the m-int codes (table lookups, no float vectors in the hot
-      // path) + TakeOrderedAndProject
+      // PQ asymmetric-distance top-k: ONE codegen scan of the m-int
+      // codes scores the whole query batch (table lookups, no float
+      // vectors in the hot path) into a bounded-heap top-k aggregate
       "pq_topk" -> ((s, dir) => {
         val cb = Similarity.pqCodebookFromRows(pqRows(s, dir), m = 8)
         val qs = embQueries(s, dir)
@@ -1078,7 +1078,7 @@ object Queries {
         Similarity.writeIvfSqIndex(base, "embedding", "vec_id", model, sq, path)
         Similarity.appendToIvfSqIndex(batch, "embedding", "vec_id", model, sq, path)
         val (codes, sqBack) = Similarity.readIvfSqIndex(s, path)
-        Similarity.ivfSqTopKFromCodesBatch(codes, model, sqBack,
+        Similarity.ivfSqTopKFromCodes(codes, model, sqBack,
           embQueries(s, dir), kNN = 5, nProbe = 3)
       }),
 
@@ -1103,7 +1103,7 @@ object Queries {
           e.where(col("vec_id") % 10 === 3).select(col("vec_id")),
           "vec_id", path)
         val (live, sqB) = Similarity.readIvfSqIndexLive(s, path)
-        Similarity.ivfSqTopKFromCodesBatch(live, model, sqB,
+        Similarity.ivfSqTopKFromCodes(live, model, sqB,
           embQueries(s, dir), kNN = 5, nProbe = 3)
       }),
 

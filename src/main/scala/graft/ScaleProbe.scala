@@ -334,7 +334,7 @@ object ScaleProbe {
         }
         val tServe = time {
           println("  served rows: " + operators.Similarity
-            .ivfSqTopKFromCodesBatch(codes, som, sqB, qs, kNN = 10,
+            .ivfSqTopKFromCodes(codes, som, sqB, qs, kNN = 10,
               nProbe = 2).count())
         }
         println(f"[scale] ivfsq_serve_post_append ${nDocs / 1000000}M vecs (run $rep/$repeats): $tServe%.1f s")
@@ -521,10 +521,7 @@ object ScaleProbe {
         }
         println(f"[scale] pq_topk ${nDocs / 1000000}M vecs, 5 queries (run $rep/$repeats): $tServe%.1f s")
         // batch serving: materialize the codes once (the served
-        // artifact), then answer 100 queries in ONE scan vs the
-        // scan-per-query form at 10 queries — the probe pins that the
-        // batch form's cost is ~the single-scan cost no matter the
-        // batch size, while per-query cost is linear in queries
+        // artifact), then answer 100 queries in ONE scan
         val codes = operators.Similarity
           .pqEncode(big, "embedding", "id", cb, m = 8, k = 16)
           .select(col("id"), col("codes"))
@@ -534,16 +531,10 @@ object ScaleProbe {
           .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
         val tBatch100 = time {
           println("  batch100 rows: " + operators.Similarity
-            .pqTopKFromCodesBatch(codes, cb, m = 8, k = 16, q100, kNN = 10)
+            .pqTopKFromCodes(codes, cb, m = 8, k = 16, q100, kNN = 10)
             .count())
         }
         println(f"[scale] pq_batch100 ${nDocs / 1000000}M codes, 100 queries, one scan (run $rep/$repeats): $tBatch100%.1f s")
-        val tPerQ10 = time {
-          println("  perq10 rows: " + operators.Similarity
-            .pqTopKFromCodes(codes, cb, m = 8, k = 16, q100.take(10), kNN = 10)
-            .count())
-        }
-        println(f"[scale] pq_perq10 ${nDocs / 1000000}M codes, 10 queries, scan-per-query (run $rep/$repeats): $tPerQ10%.1f s")
         codes.unpersist(blocking = true)
         big.unpersist(blocking = true)
         settle()

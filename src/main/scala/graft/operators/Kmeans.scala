@@ -64,20 +64,6 @@ object Kmeans {
       }
       out
     }
-    /** Nearest centroid ids for one query vector — same sequential
-      * loop and lowest-cid tie-break as the distributed kernel.
-      * Driver-local: the centroid table is at most a few thousand
-      * doubles.
-      */
-    def nearest(q: Array[Double], n: Int): Seq[Int] = {
-      require(q.length == dim, s"Received ${q.length} features, expected $dim.")
-      (0 until k).map { j =>
-        var s = 0.0
-        var i = 0
-        while (i < dim) { val t = q(i) - centroids(j)(i); s += t * t; i += 1 }
-        (j, s)
-      }.sortBy(t => (t._2, t._1)).take(n).map(_._1)
-    }
   }
 
   private def slim(df: DataFrame, vecCol: String, idCol: String): DataFrame =
@@ -893,14 +879,19 @@ object Kmeans {
               kClusters: Int, iters: Int, nProbe: Int,
               salt: String = "km"): DataFrame = {
     val model = fit(df, vecCol, idCol, kClusters, iters, salt)
-    // assignment inline, ONE scan (vector kept alongside its cell) —
-    // the persisted-index deployment replaces this with a pruned read
-    val assigned = slim(df, vecCol, idCol)
+    // assignment inline, ONE scan — the persisted-index deployment
+    // replaces this with a pruned read
+    topKAssigned(withCell(df, vecCol, idCol, model), model, "vec", "vec_id",
+      queries, k, nProbe)
+  }
+
+  /** The corpus beside its cell, (vec_id, vec, cid), in one scan. */
+  private def withCell(df: DataFrame, vecCol: String, idCol: String,
+                       model: Model): DataFrame =
+    slim(df, vecCol, idCol)
       .select(col("__id").as("vec_id"), col("__v").as("vec"),
         KmeansFunctions.kmeans_assign(col("__v"), model.flat, model.dim)
           .getField("cid").cast("long").as("cid"))
-    topKAssigned(assigned, model, "vec", "vec_id", queries, k, nProbe)
-  }
 
   /** Persist the assigned corpus partitioned by cell — the build half
     * of the repeated-query IVF deployment (the k-means sibling of
@@ -911,19 +902,11 @@ object Kmeans {
   def writeAssignedIndex(df: DataFrame, vecCol: String, idCol: String,
                          model: Model, path: String,
                          filesPerCell: Int = Similarity.defaultFilesPerCell): Unit = {
-    require(filesPerCell > 0,
-      s"filesPerCell must be positive, got $filesPerCell")
     // cell-clustered shuffle before the partitioned write: bounds the
     // layout to ≤ k x filesPerCell files instead of tasks x cells (see
-    // Similarity.clusterByCell — same rationale, measured 5x on the
-    // write + fewer files for every future pruned serve); the
-    // content-derived salt keeps hot cells spread over filesPerCell
-    // tasks and task retries deterministic
-    slim(df, vecCol, idCol)
-      .select(col("__id").as("vec_id"), col("__v").as("vec"),
-        KmeansFunctions.kmeans_assign(col("__v"), model.flat, model.dim)
-          .getField("cid").cast("long").as("cid"))
-      .repartition(col("cid"), pmod(xxhash64(col("vec_id")), lit(filesPerCell)))
+    // Similarity.clusterByCell)
+    Similarity.clusterByCell(withCell(df, vecCol, idCol, model), "cid",
+      xxhash64(col("vec_id")), filesPerCell)
       .write.partitionBy("cid").parquet(path)
   }
 
@@ -936,34 +919,7 @@ object Kmeans {
     */
   def topKAssigned(assigned: DataFrame, model: Model, vecCol: String,
                    idCol: String, queries: Seq[(Long, Array[Double])],
-                   k: Int, nProbe: Int): DataFrame = {
-    require(k > 0, s"topKAssigned needs k > 0, got $k")
-    require(nProbe > 0, s"topKAssigned needs nProbe > 0, got $nProbe")
-    require(queries.nonEmpty, "topKAssigned needs at least one query")
-    val spark = assigned.sparkSession
-    val probe = queries.flatMap { case (qid, q) =>
-      model.nearest(q, nProbe).map(c => (qid, c.toLong))
-    }
-    val probeDf = spark.createDataFrame(probe).toDF("qid", "cid")
-    val qDf = spark.createDataFrame(
-      queries.map { case (qid, v) => (qid, v.toSeq) }).toDF("qid", "qv")
-    val probedCells = probe.map(_._2).distinct
-    // bounded-heap top-k on (-sim, nid): ascending heap order ==
-    // (sim desc, nid asc). A per-qid row_number window would funnel
-    // each query's ENTIRE probed-cell candidate set through one task;
-    // the aggregate reduces every partition to <= k pairs per query
-    // BEFORE the exchange (the BM25/DSIR selection shape).
-    assigned.where(col("cid").isin(probedCells: _*))
-      .join(broadcast(probeDf), "cid")
-      .join(broadcast(qDf), "qid")
-      .where(col(idCol) =!= col("qid"))
-      .select(col("qid"), col(idCol).cast("long").as("nid"),
-        graft.plans.VecFunctions.vec_cosine(col(vecCol), col("qv")).as("sim"))
-      .groupBy("qid")
-      .agg(graft.plans.TopNFunctions.topn_smallest_by_double(
-        negate(col("sim")), col("nid"), k).as("top"))
-      .select(col("qid"), posexplode(col("top")).as(Seq("r", "p")))
-      .select(col("qid"), (col("r") + 1).cast("long").as("rank"),
-        col("p.id").as("nid"), round(negate(col("p.s")), 6).as("sim"))
-  }
+                   k: Int, nProbe: Int): DataFrame =
+    Similarity.cellTopK(assigned, "cid", model.flat, model.dim, vecCol,
+      idCol, queries, k, nProbe)
 }

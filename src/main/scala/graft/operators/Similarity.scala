@@ -381,11 +381,12 @@ object Similarity {
   def writeAssignedIndex(df: DataFrame, vecCol: String,
                          model: graft.som.SomModel, path: String,
                          filesPerCell: Int = defaultFilesPerCell): Unit =
-    clusterByCell(model.withBmu(df, vecCol), xxhash64(col(vecCol)),
-      filesPerCell)
+    clusterByCell(model.withBmu(df, vecCol), "bmu_id",
+      xxhash64(col(vecCol)), filesPerCell)
       .write.partitionBy("bmu_id").parquet(path)
 
-  /** Cell-clustered shuffle before every partitionBy(bmu_id) write.
+  /** Cell-clustered shuffle before every cell-partitioned index write
+    * (`bmu_id` for the SOM quantizer, `cid` for k-means).
     *
     * A bare `df.write.partitionBy("bmu_id")` makes EVERY write task
     * open one file per cell it touches — tasks x cells files, which at
@@ -406,58 +407,81 @@ object Similarity {
     * output files land in the 128 MB-1 GB band.
     */
   val defaultFilesPerCell = 2
-  private def clusterByCell(df: DataFrame, salt: Column,
-                            filesPerCell: Int): DataFrame = {
+  private[operators] def clusterByCell(df: DataFrame, cellCol: String,
+                                       salt: Column,
+                                       filesPerCell: Int): DataFrame = {
     require(filesPerCell > 0,
       s"filesPerCell must be positive, got $filesPerCell")
-    df.repartition(col("bmu_id"), pmod(salt, lit(filesPerCell)))
+    df.repartition(col(cellCol), pmod(salt, lit(filesPerCell)))
   }
 
   /** ANN over a pre-assigned corpus (either `model.withBmu(...)` inline
     * or a partitioned index read back from [[writeAssignedIndex]] —
-    * with the latter, the `bmu_id` probe equi-join prunes partitions).
+    * with the latter, the `bmu_id` probe `isin` prunes partitions).
     */
-  /** `nProbe` nearest cells (by squared-euclidean centroid distance,
-    * ties to the lower cell id — the BMU convention) for one query
-    * vector. Driver-local: the codebook is at most a few thousand
-    * floats.
+  def somTopKAssigned(assigned: DataFrame, model: graft.som.SomModel,
+                      vecCol: String, idCol: String,
+                      queries: Seq[(Long, Array[Double])], k: Int,
+                      nProbe: Int): DataFrame =
+    cellTopK(assigned, "bmu_id", model.codebook.weights, model.codebook.dim,
+      vecCol, idCol, queries, k, nProbe)
+
+  /** `nProbe` nearest cells for one query vector over a flat row-major
+    * centroid table (`SomModel.codebook.weights` or `Kmeans.Model.flat`)
+    * of `dim`-wide rows: squared-euclidean distance summed in ascending
+    * i, ties to the lower cell id — the BMU and k-means argmin
+    * convention. Driver-local: the table is at most a few thousand
+    * doubles.
     */
-  private def nearestCells(model: graft.som.SomModel, q: Array[Double],
-                           nProbe: Int): Seq[Int] = {
-    val cb = model.codebook
-    (0 until cb.numNeurons).map { n =>
-      val base = n * cb.dim
+  private[operators] def nearestCells(table: Array[Double], dim: Int,
+                                      q: Array[Double], nProbe: Int): Seq[Int] = {
+    require(nProbe > 0, s"nProbe must be positive, got $nProbe")
+    require(q.length == dim, s"Received ${q.length} features, expected $dim.")
+    (0 until table.length / dim).map { n =>
+      val base = n * dim
       var s = 0.0
       var i = 0
-      while (i < cb.dim) { val d = q(i) - cb.weights(base + i); s += d * d; i += 1 }
+      while (i < dim) { val d = q(i) - table(base + i); s += d * d; i += 1 }
       (n, s)
     }.sortBy(t => (t._2, t._1)).take(nProbe).map(_._1)
   }
 
-  def somTopKAssigned(assigned: DataFrame, model: graft.som.SomModel,
-                      vecCol: String, idCol: String,
-                      queries: Seq[(Long, Array[Double])], k: Int,
-                      nProbe: Int): DataFrame = {
-    // nProbe nearest cells per query, by centroid distance (driver-local)
+  /** The cell-probe serve body of [[somTopKAssigned]] and
+    * [[Kmeans.topKAssigned]]: each query's `nProbe` nearest cells
+    * ([[nearestCells]] over `table`), then ONE cosine pass over the
+    * rows of the probed cells of `assigned`, whose cell id sits in
+    * `cellCol`. Returns (qid, rank, nid, sim), ties (sim desc, nid asc).
+    */
+  private[operators] def cellTopK(assigned: DataFrame, cellCol: String,
+                                  table: Array[Double], dim: Int,
+                                  vecCol: String, idCol: String,
+                                  queries: Seq[(Long, Array[Double])],
+                                  k: Int, nProbe: Int): DataFrame = {
+    require(k > 0, s"cell-probe top-k needs k > 0, got $k")
+    require(queries.nonEmpty, "cell-probe top-k needs at least one query")
     val probe = queries.flatMap { case (qid, q) =>
-      nearestCells(model, q, nProbe).map(n => (qid, n))
+      nearestCells(table, dim, q, nProbe).map(c => (qid, c))
     }
+    // probe values take the cell column's type: int bmu_id, long cid
+    // inline, int cid on a partitioned read-back
+    val cellType = assigned.schema(cellCol).dataType
     val spark = assigned.sparkSession
-    val probeDf = spark.createDataFrame(probe).toDF("qid", "bmu_id")
+    val probeDf = spark.createDataFrame(probe).toDF("qid", "__cell")
+      .select(col("qid"), col("__cell").cast(cellType).as(cellCol))
     val qDf = spark.createDataFrame(
       queries.map { case (qid, v) => (qid, v.toSeq) }).toDF("qid", "qv")
     // the probed cell set is driver-known and tiny, so pruning is an
     // EXPLICIT isin on the partition column — static partition pruning,
-    // guaranteed on a [[writeAssignedIndex]] read (PartitionFilters in
-    // the scan; only probed directories are listed), rather than
-    // relying on the optimizer's dynamic-pruning heuristics to derive
-    // it from the probe join. The top-k cut is the bounded-heap
-    // aggregate (<= k pairs per query cross the wire from every map
-    // task); a per-qid window would rank each query's whole probed-cell
-    // population in one task.
-    val probedCells = probe.map(_._2).distinct
-    assigned.where(col("bmu_id").isin(probedCells: _*))
-      .join(broadcast(probeDf), "bmu_id")
+    // guaranteed on a partitioned read-back (PartitionFilters in the
+    // scan; only probed directories are listed), rather than relying on
+    // the optimizer's dynamic-pruning heuristics to derive it from the
+    // probe join. The top-k cut is the bounded-heap aggregate (<= k
+    // pairs per query cross the wire from every map task); a per-qid
+    // window would rank each query's whole probed-cell population in
+    // one task.
+    val probedCells = probe.map(_._2).distinct.map(lit(_).cast(cellType))
+    assigned.where(col(cellCol).isin(probedCells: _*))
+      .join(broadcast(probeDf), cellCol)
       .join(broadcast(qDf), "qid")
       .where(col(idCol) =!= col("qid"))
       .select(col("qid"), col(idCol).cast("long").as("nid"),
@@ -639,37 +663,9 @@ object Similarity {
   }
 
   /** Serve ADC top-k from an already-encoded codes table (e.g. a
-    * [[writePqIndex]] read-back) — the repeated-query path: per query
-    * one codegen scan over the codes + TakeOrderedAndProject, the
-    * embeddings untouched.
-    *
-    * PLANS ONE SCAN PER QUERY: right for a handful of ad-hoc queries
-    * (each scan is a tight TakeOrderedAndProject). For serving BATCHES
-    * use [[pqTopKFromCodesBatch]] — one scan for the whole batch.
-    */
-  def pqTopKFromCodes(codes: DataFrame, cb: Array[Double], m: Int, k: Int,
-                      queries: Seq[(Long, Array[Double])], kNN: Int,
-                      excludeSelf: Boolean = true): DataFrame = {
-    require(queries.nonEmpty, "pqTopKFromCodes needs at least one query")
-    val perQuery = queries.map { case (qid, q) =>
-      val table = pqAdcTable(q, cb, m, k)
-      codes.where(if (excludeSelf) col("id") =!= qid else lit(true))
-        .select(lit(qid).as("qid"), col("id").as("nid"),
-          graft.plans.GraftFunctions.pq_adc(col("codes"), table, k).as("adc"))
-        .orderBy(col("adc").asc, col("nid").asc)
-        .limit(kNN)
-    }
-    val w = Window.partitionBy("qid").orderBy(col("adc").asc, col("nid").asc)
-    perQuery.reduce(_ unionAll _)
-      .withColumn("rank", row_number().over(w))
-      .select(col("qid"), col("rank").cast("long").as("rank"), col("nid"),
-        round(col("adc"), 6).as("adc"))
-  }
-
-  /** Batch ADC serving: ONE codegen scan of the codes table answers the
-    * WHOLE query batch — the 10k-query production regime where
-    * [[pqTopKFromCodes]]'s scan-per-query planning would be the
-    * bottleneck (10k plans over the same file).
+    * [[writePqIndex]] read-back): ONE codegen scan of the codes answers
+    * the whole query batch, the embeddings untouched. A single query is
+    * a batch of one.
     *
     * Shape: all per-query lookup tables stack into one broadcast
     * double[]; each code row is decoded once and scored against every
@@ -679,14 +675,12 @@ object Similarity {
     * emits at most kNN pairs per query BEFORE the shuffle — the
     * exchange carries queries x partitions x kNN rows, never the scored
     * corpus, and ranks fall out of the sorted heap (no window at all).
-    * Same (adc asc, nid asc) order and output schema as
-    * [[pqTopKFromCodes]]; `PqBatchSpec` pins row-for-row equality.
+    * Returns (qid, rank, nid, adc), ranked by (adc asc, nid asc).
     */
-  def pqTopKFromCodesBatch(codes: DataFrame, cb: Array[Double], m: Int,
-                           k: Int, queries: Seq[(Long, Array[Double])],
-                           kNN: Int,
-                           excludeSelf: Boolean = true): DataFrame = {
-    require(queries.nonEmpty, "pqTopKFromCodesBatch needs at least one query")
+  def pqTopKFromCodes(codes: DataFrame, cb: Array[Double], m: Int, k: Int,
+                      queries: Seq[(Long, Array[Double])], kNN: Int,
+                      excludeSelf: Boolean = true): DataFrame = {
+    require(queries.nonEmpty, "pqTopKFromCodes needs at least one query")
     val nQ = queries.size
     val tables = new Array[Double](nQ * m * k)
     queries.zipWithIndex.foreach { case ((_, q), qi) =>
@@ -708,27 +702,10 @@ object Similarity {
         col("p.id").as("nid"), round(col("p.s"), 6).as("adc"))
   }
 
-  /** Query-batch size at or above which the convenience serving entry
-    * points ([[pqTopK]], [[ivfPqTopK]]) route to the one-scan
-    * `*FromCodesBatch` forms instead of scan-per-query. The per-query
-    * form plans (and runs) one scan per query — benched at 32.8 s for a
-    * 100-query batch against 0.85 s for the batch form on the same
-    * codes (38x) — so anything beyond a handful of ad-hoc queries
-    * belongs on the batch path. Kept small rather than 1 because for
-    * 1-2 queries the per-query form's exact per-query partition pruning
-    * (IVF) and simpler plan are marginally cheaper. The two forms
-    * return identical rows (`PqBatchSpec`), so the dispatch is purely a
-    * physical-plan choice, like `joinRange(mode = "auto")`.
-    */
-  val pqBatchDispatchMinQueries = 6
-
   /** PQ approximate top-k by asymmetric distance: encode once, then
-    * serve the batch — via ONE codegen scan of the m-int codes for the
-    * whole batch ([[pqTopKFromCodesBatch]]) when it has
-    * [[pqBatchDispatchMinQueries]]+ queries, else scan-per-query with
-    * a broadcast lookup table per query ([[pqTopKFromCodes]]); both
-    * feed bounded-heap top-k reductions (no global sort) and return
-    * identical rows. Returns (qid, rank, nid, adc), ranked by
+    * serve the whole batch with ONE codegen scan of the m-int codes
+    * ([[pqTopKFromCodes]]) feeding a bounded-heap top-k reduction (no
+    * global sort). Returns (qid, rank, nid, adc), ranked by
     * (adc asc, nid asc).
     *
     * The result is materialized and the internal codes cache released
@@ -744,11 +721,8 @@ object Similarity {
     require(queries.nonEmpty, "pqTopK needs at least one query")
     val codes = pqEncode(df, vecCol, idCol, cb, m, k)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val served =
-      if (queries.size >= pqBatchDispatchMinQueries)
-        pqTopKFromCodesBatch(codes, cb, m, k, queries, kNN, excludeSelf)
-      else pqTopKFromCodes(codes, cb, m, k, queries, kNN, excludeSelf)
-    val out = served.localCheckpoint(true)
+    val out = pqTopKFromCodes(codes, cb, m, k, queries, kNN, excludeSelf)
+      .localCheckpoint(true)
     codes.unpersist(blocking = false)
     out
   }
@@ -783,7 +757,7 @@ object Similarity {
                       filesPerCell: Int = defaultFilesPerCell): Unit = {
     val spark = df.sparkSession
     clusterByCell(ivfPqAssign(df, vecCol, idCol, model, cb, m, k),
-      xxhash64(col("id")), filesPerCell)
+      "bmu_id", xxhash64(col("id")), filesPerCell)
       .write.mode("overwrite").partitionBy("bmu_id").parquet(s"$path/codes")
     val json = s"""{"m":$m,"k":$k,"subDim":${cb.length / (m * k)},""" +
       s""""cb":[${cb.mkString(",")}]}"""
@@ -792,19 +766,20 @@ object Similarity {
   }
 
   /** Serve ADC top-k from an assigned-codes table (inline
-    * [[ivfPqAssign]] output or a [[writeIvfPqIndex]] read-back — with
-    * the latter, each query's explicit `isin` on the `bmu_id` partition
-    * column statically prunes to its nProbe directories). Per query:
-    * one codegen ADC scan over the probed cells' codes feeding a
-    * TakeOrderedAndProject — no global sort, no float vectors, no
-    * unprobed-cell I/O. Returns (qid, rank, nid, adc); recall < 1 by
-    * construction from BOTH approximations (cell pruning + ADC), which
-    * is the standard IVF-PQ trade.
-    *
-    * PLANS ONE SCAN PER QUERY — here that buys exact per-query
-    * partition pruning, so it is the right form for small ad-hoc
-    * batches; for large batches use [[ivfPqTopKFromCodesBatch]], which
-    * prunes to the probed-cell UNION and scores in one scan.
+    * [[ivfPqAssign]] output or a [[writeIvfPqIndex]] read-back): ONE
+    * scan answers the whole query batch, a single query being a batch
+    * of one. The scan statically prunes to the UNION of the probed
+    * cells (`isin` on the `bmu_id` partition column — unprobed cells
+    * are never listed or read), a broadcast (cell -> probing queries)
+    * join pairs each code row with exactly the queries probing its
+    * cell, `pq_adc_at` computes only that query's distance (m adds —
+    * not the whole batch's), and the bounded-heap partial aggregate
+    * reduces to kNN per query before the shuffle, ranks falling out of
+    * the sorted heap. Join fan-out is sum over cells of |rows in cell|
+    * x |queries probing cell| — the work IVF+PQ serving inherently
+    * does; each probed cell is read once however many queries probe it.
+    * Returns (qid, rank, nid, adc); recall < 1 by construction from
+    * BOTH approximations (cell pruning + ADC), the standard IVF-PQ trade.
     */
   def ivfPqTopKFromCodes(codes: DataFrame, model: graft.som.SomModel,
                          cb: Array[Double], m: Int, k: Int,
@@ -812,42 +787,6 @@ object Similarity {
                          nProbe: Int,
                          excludeSelf: Boolean = true): DataFrame = {
     require(queries.nonEmpty, "ivfPqTopKFromCodes needs at least one query")
-    val perQuery = queries.map { case (qid, q) =>
-      val cells = nearestCells(model, q, nProbe)
-      val table = pqAdcTable(q, cb, m, k)
-      codes.where(col("bmu_id").isin(cells: _*))
-        .where(if (excludeSelf) col("id") =!= qid else lit(true))
-        .select(lit(qid).as("qid"), col("id").as("nid"),
-          graft.plans.GraftFunctions.pq_adc(col("codes"), table, k).as("adc"))
-        .orderBy(col("adc").asc, col("nid").asc)
-        .limit(kNN)
-    }
-    val w = Window.partitionBy("qid").orderBy(col("adc").asc, col("nid").asc)
-    perQuery.reduce(_ unionAll _)
-      .withColumn("rank", row_number().over(w))
-      .select(col("qid"), col("rank").cast("long").as("rank"), col("nid"),
-        round(col("adc"), 6).as("adc"))
-  }
-
-  /** Batch IVF+PQ serving: ONE scan answers the whole query batch.
-    * The scan statically prunes to the UNION of all probed cells
-    * (`isin` on the partition column — unprobed cells are never read),
-    * a broadcast (cell -> probing queries) join pairs each code row
-    * with exactly the queries probing its cell, `pq_adc_at` computes
-    * only that query's distance (m adds — not the whole batch's), and
-    * the bounded-heap partial aggregate reduces to kNN per query before
-    * the shuffle, ranks falling out of the sorted heap. Join fan-out is
-    * sum over cells of |rows in cell| x |queries probing cell| — the
-    * work IVF+PQ serving inherently does. Identical results to
-    * [[ivfPqTopKFromCodes]] (`PqBatchSpec` pins it); prefer this form
-    * once the batch is more than a handful of queries.
-    */
-  def ivfPqTopKFromCodesBatch(codes: DataFrame, model: graft.som.SomModel,
-                              cb: Array[Double], m: Int, k: Int,
-                              queries: Seq[(Long, Array[Double])], kNN: Int,
-                              nProbe: Int,
-                              excludeSelf: Boolean = true): DataFrame = {
-    require(queries.nonEmpty, "ivfPqTopKFromCodesBatch needs at least one query")
     val spark = codes.sparkSession
     import spark.implicits._
     val nQ = queries.size
@@ -856,7 +795,8 @@ object Similarity {
       System.arraycopy(pqAdcTable(q, cb, m, k), 0, tables, qi * m * k, m * k)
     }
     val probes = queries.zipWithIndex.flatMap { case ((qid, q), qi) =>
-      nearestCells(model, q, nProbe).map(c => (qi, qid, c))
+      nearestCells(model.codebook.weights, model.codebook.dim, q, nProbe)
+        .map(c => (qi, qid, c))
     }
     val probeDf = probes.toDF("qidx", "qid", "bmu_id")
     val allCells = probes.map(_._3).distinct
@@ -875,13 +815,11 @@ object Similarity {
   }
 
   /** One-shot IVF+PQ: assign + encode inline (one scan of the floats),
-    * then serve the batch — via [[ivfPqTopKFromCodesBatch]] (one scan,
-    * probed-cell union) at [[pqBatchDispatchMinQueries]]+ queries, else
-    * [[ivfPqTopKFromCodes]] (scan-per-query with exact per-query cell
-    * pruning); identical rows either way. The result is materialized
-    * and the internal codes cache released before returning; a standing
-    * deployment uses [[writeIvfPqIndex]] instead and serves every later
-    * batch from the partitioned codes.
+    * then serve the batch via [[ivfPqTopKFromCodes]] (one scan over the
+    * probed-cell union). The result is materialized and the internal
+    * codes cache released before returning; a standing deployment uses
+    * [[writeIvfPqIndex]] instead and serves every later batch from the
+    * partitioned codes.
     */
   def ivfPqTopK(df: DataFrame, vecCol: String, idCol: String,
                 model: graft.som.SomModel, cb: Array[Double],
@@ -890,13 +828,8 @@ object Similarity {
                 nProbe: Int, excludeSelf: Boolean = true): DataFrame = {
     val codes = ivfPqAssign(df, vecCol, idCol, model, cb, m, k)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val served =
-      if (queries.size >= pqBatchDispatchMinQueries)
-        ivfPqTopKFromCodesBatch(codes, model, cb, m, k, queries, kNN,
-          nProbe, excludeSelf)
-      else ivfPqTopKFromCodes(codes, model, cb, m, k, queries, kNN,
-        nProbe, excludeSelf)
-    val out = served.localCheckpoint(true)
+    val out = ivfPqTopKFromCodes(codes, model, cb, m, k, queries, kNN,
+      nProbe, excludeSelf).localCheckpoint(true)
     codes.unpersist(blocking = false)
     out
   }
@@ -1033,7 +966,7 @@ object Similarity {
                       path: String,
                       filesPerCell: Int = defaultFilesPerCell): Unit = {
     clusterByCell(ivfSqAssign(df, vecCol, idCol, model, sq),
-      xxhash64(col("id")), filesPerCell)
+      "bmu_id", xxhash64(col("id")), filesPerCell)
       .write.mode("overwrite").partitionBy("bmu_id").parquet(s"$path/codes")
     writeSqParams(df.sparkSession, sq, path)
   }
@@ -1066,7 +999,7 @@ object Similarity {
                          path: String,
                          filesPerCell: Int = defaultFilesPerCell): Unit =
     clusterByCell(ivfSqAssign(batch, vecCol, idCol, model, sq),
-      xxhash64(col("id")), filesPerCell)
+      "bmu_id", xxhash64(col("id")), filesPerCell)
       .write.mode("append").partitionBy("bmu_id").parquet(s"$path/codes")
 
   /** IVF+PQ sibling of [[appendToIvfSqIndex]]: encode the batch with
@@ -1079,7 +1012,7 @@ object Similarity {
                          m: Int, k: Int, path: String,
                          filesPerCell: Int = defaultFilesPerCell): Unit =
     clusterByCell(ivfPqAssign(batch, vecCol, idCol, model, cb, m, k),
-      xxhash64(col("id")), filesPerCell)
+      "bmu_id", xxhash64(col("id")), filesPerCell)
       .write.mode("append").partitionBy("bmu_id").parquet(s"$path/codes")
 
   /** Read a persisted IVF+SQ index back: (codes with the `bmu_id`
@@ -1205,7 +1138,7 @@ object Similarity {
           spark.read.parquet(tombFiles: _*).select("id"))
         clusterByCell(spark.read.parquet(s"$path/codes")
             .join(pending, Seq("id"), "left_anti"),
-          xxhash64(col("id")), defaultFilesPerCell)
+          "bmu_id", xxhash64(col("id")), defaultFilesPerCell)
           .write.mode("overwrite").partitionBy("bmu_id")
           .parquet(s"$outPath/codes")
         (nIn, countFiles(s"$outPath/codes"))
@@ -1229,61 +1162,32 @@ object Similarity {
       outPath, "_folded_tombstones", s"$outPath/tombstones")
 
   /** Serve cosine top-k from an assigned-codes table (inline
-    * [[ivfSqAssign]] output or a [[writeIvfSqIndex]] read-back): per
-    * query, one scan of its nProbe probed cells' int8 codes, decoded
-    * on the fly by the `SqDecode` kernel and ranked by exact cosine
-    * against the FLOAT query — cell pruning is the only approximation
-    * beyond the quantization grid (no ADC table). With the partitioned
-    * index the `isin` on `bmu_id` statically prunes to the probed
-    * directories; neither unprobed cells nor any float vector is read.
-    * Returns (qid, rank, nid, sim).
+    * [[ivfSqAssign]] output or a [[writeIvfSqIndex]] read-back): ONE
+    * scan answers the whole query batch, a single query being a batch
+    * of one. The scan prunes to the UNION of the probed cells (with the
+    * partitioned index the `isin` on `bmu_id` is a static partition
+    * filter), each row's int8 codes decode ONCE through the `SqDecode`
+    * kernel (projection below the join), a broadcast (cell -> probing
+    * queries) join pairs each decoded row with exactly the queries
+    * probing its cell, `VecCosine` scores the pair against the FLOAT
+    * query, and the bounded-heap aggregate reduces to kNN per query
+    * before the shuffle. Cell pruning is the only approximation beyond
+    * the quantization grid (no ADC table); neither unprobed cells nor
+    * any float vector is read. Returns (qid, rank, nid, sim).
     */
   def ivfSqTopKFromCodes(codes: DataFrame, model: graft.som.SomModel,
                          sq: SqModel, queries: Seq[(Long, Array[Double])],
                          kNN: Int, nProbe: Int,
                          excludeSelf: Boolean = true): DataFrame = {
     require(queries.nonEmpty, "ivfSqTopKFromCodes needs at least one query")
-    val perQuery = queries.map { case (qid, q) =>
-      val cells = nearestCells(model, q, nProbe)
-      val qLit = array(q.map(lit(_)): _*)
-      codes.where(col("bmu_id").isin(cells: _*))
-        .where(if (excludeSelf) col("id") =!= qid else lit(true))
-        .select(lit(qid).as("qid"), col("id").as("nid"),
-          cosine(sqDecodeCol(col("codes"), sq), qLit).as("sim"))
-        .orderBy(col("sim").desc, col("nid").asc)
-        .limit(kNN)
-    }
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-    perQuery.reduce(_ unionAll _)
-      .withColumn("rank", row_number().over(w))
-      .select(col("qid"), col("rank").cast("long").as("rank"), col("nid"),
-        round(col("sim"), 6).as("sim"))
-  }
-
-  /** Batch IVF+SQ serving: ONE scan answers the whole query batch.
-    * The scan prunes to the UNION of all probed cells, each row's
-    * codes decode ONCE (projection below the join), a broadcast
-    * (cell -> probing queries, query vector attached) join pairs each
-    * decoded row with exactly the queries probing its cell, `VecCosine`
-    * scores the pair, and the bounded-heap aggregate reduces to kNN
-    * per query before the shuffle. Identical rows to
-    * [[ivfSqTopKFromCodes]] (spec-pinned); prefer this form past a
-    * handful of queries — the per-query form's value is exact
-    * per-query partition pruning on a persisted index.
-    */
-  def ivfSqTopKFromCodesBatch(codes: DataFrame, model: graft.som.SomModel,
-                              sq: SqModel,
-                              queries: Seq[(Long, Array[Double])],
-                              kNN: Int, nProbe: Int,
-                              excludeSelf: Boolean = true): DataFrame = {
-    require(queries.nonEmpty, "ivfSqTopKFromCodesBatch needs at least one query")
     val spark = codes.sparkSession
     import spark.implicits._
-    // two broadcasts, the somTopKAssigned shape: the (qid, cell) probe
-    // pairs and a separate (qid -> query vector) table — inlining qv
-    // onto every probe row would ship each vector nProbe times
+    // two broadcasts, the cellTopK shape: the (qid, cell) probe pairs
+    // and a separate (qid -> query vector) table — inlining qv onto
+    // every probe row would ship each vector nProbe times
     val probes = queries.flatMap { case (qid, q) =>
-      nearestCells(model, q, nProbe).map(c => (qid, c))
+      nearestCells(model.codebook.weights, model.codebook.dim, q, nProbe)
+        .map(c => (qid, c))
     }
     val probeDf = probes.toDF("qid", "bmu_id")
     val qDf = queries.map { case (qid, v) => (qid, v.toSeq) }.toDF("qid", "qv")
@@ -1305,8 +1209,8 @@ object Similarity {
   }
 
   /** End-to-end composed IVF+SQ: assign + encode once, serve the
-    * batch — [[ivfPqTopK]]'s shape for the SQ tier, with the same
-    * [[pqBatchDispatchMinQueries]] batch/per-query dispatch.
+    * batch via [[ivfSqTopKFromCodes]] — [[ivfPqTopK]]'s shape for the
+    * SQ tier.
     */
   def ivfSqTopK(df: DataFrame, vecCol: String, idCol: String,
                 model: graft.som.SomModel, sq: SqModel,
@@ -1314,13 +1218,8 @@ object Similarity {
                 nProbe: Int, excludeSelf: Boolean = true): DataFrame = {
     val codes = ivfSqAssign(df, vecCol, idCol, model, sq)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val served =
-      if (queries.size >= pqBatchDispatchMinQueries)
-        ivfSqTopKFromCodesBatch(codes, model, sq, queries, kNN, nProbe,
-          excludeSelf)
-      else ivfSqTopKFromCodes(codes, model, sq, queries, kNN, nProbe,
-        excludeSelf)
-    val out = served.localCheckpoint(true)
+    val out = ivfSqTopKFromCodes(codes, model, sq, queries, kNN, nProbe,
+      excludeSelf).localCheckpoint(true)
     codes.unpersist(blocking = false)
     out
   }

@@ -291,7 +291,7 @@ object StreamingSom {
     * `foreachBatch`: the micro-batch's query vectors are collected to
     * the driver (bounded by contract — `maxQueriesPerBatch` enforces
     * it, the trigger sizes it) and the WHOLE batch is answered by ONE
-    * codegen scan of the codes ([[graft.operators.Similarity.pqTopKFromCodesBatch]]),
+    * codegen scan of the codes ([[graft.operators.Similarity.pqTopKFromCodes]]),
     * so per-micro-batch cost is one scan + a bounded-heap reduction
     * regardless of how many queries the trigger packed in. Queries are
     * external by default (`excludeSelf = false`: a query id is not a
@@ -328,7 +328,7 @@ object StreamingSom {
               s"($r) — filter or fix the query stream upstream")
         }
         val queries = rows.toSeq.map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-        graft.operators.Similarity.pqTopKFromCodesBatch(
+        graft.operators.Similarity.pqTopKFromCodes(
           codes, cb, m, k, queries, kNN, excludeSelf = excludeSelf)
       }
     }

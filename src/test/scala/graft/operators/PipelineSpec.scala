@@ -1067,8 +1067,6 @@ class PipelineSpec extends SparkSpec {
         m = 4, k = 8, qs, kNN = 5, nProbe = 2)
       assert(got.collect().map(_.toString).sorted
         .sameElements(inline.collect().map(_.toString).sorted))
-      // every per-query scan must be statically pruned on the bmu_id
-      // partition column: <= nProbe directories listed per query subplan
       def scansOf(p: org.apache.spark.sql.execution.SparkPlan)
           : Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
         p.collect {
@@ -1078,16 +1076,18 @@ class PipelineSpec extends SparkSpec {
           case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
             scansOf(q.plan)
         }.flatten
+      // ONE scan for the batch, statically pruned on the bmu_id
+      // partition column to exactly the union of the probed cells
       val scans = scansOf(got.queryExecution.executedPlan)
-      assert(scans.size == qs.size, s"expected one pruned scan per query: $scans")
-      scans.foreach { scan =>
-        assert(scan.partitionFilters.exists(_.references.exists(_.name == "bmu_id")),
-          s"no partition filter on bmu_id: ${scan.metadata.get("PartitionFilters")}")
-        val partsRead = scan.relation.location
-          .listFiles(scan.partitionFilters, scan.dataFilters).length
-        assert(partsRead <= 2,
-          s"IVF+PQ scan read $partsRead partitions, expected <= nProbe=2 of 9")
-      }
+      assert(scans.size == 1, s"expected one pruned scan for the batch: $scans")
+      val scan = scans.head
+      assert(scan.partitionFilters.exists(_.references.exists(_.name == "bmu_id")),
+        s"no partition filter on bmu_id: ${scan.metadata.get("PartitionFilters")}")
+      val partsRead = scan.relation.location
+        .listFiles(scan.partitionFilters, scan.dataFilters).length
+      val probed = qs.flatMap(q => IvfReference.probedCells(model, q._2, 2)).toSet
+      assert(partsRead == probed.size,
+        s"IVF+PQ scan read $partsRead partitions, probed-cell union is ${probed.size} of 9")
       // ADC within probed cells must agree with pure-PQ ADC restricted to
       // the same candidate set (the composition adds pruning, not a new
       // distance): every returned (qid, nid, adc) appears in the full PQ
@@ -1128,7 +1128,6 @@ class PipelineSpec extends SparkSpec {
         sq, qs, kNN = 5, nProbe = 2)
       assert(got.collect().map(_.toString).sorted
         .sameElements(inline.collect().map(_.toString).sorted))
-      // static pruning: <= nProbe directories listed per query subplan
       def scansOf(p: org.apache.spark.sql.execution.SparkPlan)
           : Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
         p.collect {
@@ -1138,22 +1137,18 @@ class PipelineSpec extends SparkSpec {
           case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
             scansOf(q.plan)
         }.flatten
+      // ONE scan for the batch, statically pruned on the bmu_id
+      // partition column to exactly the union of the probed cells
       val scans = scansOf(got.queryExecution.executedPlan)
-      assert(scans.size == qs.size, s"expected one pruned scan per query: $scans")
-      scans.foreach { scan =>
-        assert(scan.partitionFilters.exists(_.references.exists(_.name == "bmu_id")),
-          s"no partition filter on bmu_id: ${scan.metadata.get("PartitionFilters")}")
-        val partsRead = scan.relation.location
-          .listFiles(scan.partitionFilters, scan.dataFilters).length
-        assert(partsRead <= 2,
-          s"IVF+SQ scan read $partsRead partitions, expected <= nProbe=2 of 9")
-      }
-      // the batch form (one scan over the probed-cell union + broadcast
-      // probe join + bounded heap) returns identical rows
-      val batched = Similarity.ivfSqTopKFromCodesBatch(codes, model, sq,
-        qs, kNN = 5, nProbe = 2)
-      assert(batched.collect().map(_.toString).sorted
-        .sameElements(got.collect().map(_.toString).sorted))
+      assert(scans.size == 1, s"expected one pruned scan for the batch: $scans")
+      val scan = scans.head
+      assert(scan.partitionFilters.exists(_.references.exists(_.name == "bmu_id")),
+        s"no partition filter on bmu_id: ${scan.metadata.get("PartitionFilters")}")
+      val partsRead = scan.relation.location
+        .listFiles(scan.partitionFilters, scan.dataFilters).length
+      val probed = qs.flatMap(q => IvfReference.probedCells(model, q._2, 2)).toSet
+      assert(partsRead == probed.size,
+        s"IVF+SQ scan read $partsRead partitions, probed-cell union is ${probed.size} of 9")
       // cosine within probed cells must agree with the flat SQ serving
       // restricted to the same candidates (composition adds pruning,
       // not a new distance)
@@ -1171,6 +1166,35 @@ class PipelineSpec extends SparkSpec {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
       }
       rm(dir)
+    }
+  }
+
+  test("SOM-IVF and IVF-SQ serving reject a wrong-length query and nProbe = 0") {
+    val rnd = new scala.util.Random(53)
+    val df = (0L until 120L).map(i => (i, Seq.fill(8)(rnd.nextFloat() * 2 - 1)))
+      .toDF("vec_id", "embedding")
+    val model = new graft.som.Som(
+      graft.som.SomConfig(2, 2, seed = 42)).fit(df, "embedding", numEpochs = 2)
+    val sq = Similarity.sqTrain(df, "embedding")
+    val assigned = model.withBmu(df, "embedding")
+    val codes = Similarity.ivfSqAssign(df, "embedding", "vec_id", model, sq)
+    // a longer query would otherwise probe, and rank (vec_cosine reads
+    // min(len)), on its prefix; a shorter one would run off the
+    // codebook row; nProbe = 0 would match no cell and answer empty
+    for ((features, nProbe, msg) <- Seq(
+           (9, 2, "Received 9 features, expected 8."),
+           (7, 2, "Received 7 features, expected 8."),
+           (8, 0, "nProbe must be positive, got 0"))) {
+      val qs = Seq((500L, Array.fill(features)(0.25)))
+      val som = intercept[IllegalArgumentException] {
+        Similarity.somTopKAssigned(assigned, model, "embedding", "vec_id", qs,
+          k = 3, nProbe = nProbe)
+      }
+      assert(som.getMessage.contains(msg), som.getMessage)
+      val ivfSq = intercept[IllegalArgumentException] {
+        Similarity.ivfSqTopKFromCodes(codes, model, sq, qs, kNN = 3, nProbe = nProbe)
+      }
+      assert(ivfSq.getMessage.contains(msg), ivfSq.getMessage)
     }
   }
 
@@ -1212,10 +1236,10 @@ class PipelineSpec extends SparkSpec {
       // the codes tables are row-for-row identical
       assert(incCodes.select("id", "bmu_id", "codes").collect().map(_.toString).sorted
         .sameElements(fullCodes.select("id", "bmu_id", "codes").collect().map(_.toString).sorted))
-      // serving parity: appended index == one-shot rebuild, both forms
-      val incServed = Similarity.ivfSqTopKFromCodesBatch(incCodes, model,
+      // serving parity: appended index == one-shot rebuild
+      val incServed = Similarity.ivfSqTopKFromCodes(incCodes, model,
         incSq, qs, kNN = 5, nProbe = 2)
-      val fullServed = Similarity.ivfSqTopKFromCodesBatch(fullCodes, model,
+      val fullServed = Similarity.ivfSqTopKFromCodes(fullCodes, model,
         fullSq, qs, kNN = 5, nProbe = 2)
       assert(incServed.collect().map(_.toString).sorted
         .sameElements(fullServed.collect().map(_.toString).sorted))
@@ -1337,9 +1361,9 @@ class PipelineSpec extends SparkSpec {
         "embedding", "vec_id", model, sq, refPath)
       val (refCodes, refSq) = Similarity.readIvfSqIndex(spark, refPath)
       val qs = rows.take(2).map { case (i, v) => (i, v.map(_.toDouble).toArray) }
-      val a = Similarity.ivfSqTopKFromCodesBatch(live, model, liveSq, qs,
+      val a = Similarity.ivfSqTopKFromCodes(live, model, liveSq, qs,
         kNN = 5, nProbe = 2)
-      val b = Similarity.ivfSqTopKFromCodesBatch(refCodes, model, refSq, qs,
+      val b = Similarity.ivfSqTopKFromCodes(refCodes, model, refSq, qs,
         kNN = 5, nProbe = 2)
       assert(a.collect().map(_.toString).sorted
         .sameElements(b.collect().map(_.toString).sorted))
@@ -1350,7 +1374,7 @@ class PipelineSpec extends SparkSpec {
       val (folded, foldedSq) = Similarity.readIvfSqIndex(spark, foldPath)
       assert(folded.count() == 260L)
       assert(folded.where(col("id").isin(dead: _*)).count() == 0L)
-      val c = Similarity.ivfSqTopKFromCodesBatch(folded, model, foldedSq, qs,
+      val c = Similarity.ivfSqTopKFromCodes(folded, model, foldedSq, qs,
         kNN = 5, nProbe = 2)
       assert(c.collect().map(_.toString).sorted
         .sameElements(b.collect().map(_.toString).sorted))
@@ -1366,9 +1390,9 @@ class PipelineSpec extends SparkSpec {
       // already-folded ids in the replayed delta are harmless no-ops
       assert(fenced.where(col("id").isin(dead: _*)).count() == 0L)
       assert(Similarity.replayIvfTombstoneDelta(spark, path, foldPath) == 0)
-      val d = Similarity.ivfSqTopKFromCodesBatch(fenced, model, fencedSq, qs,
+      val d = Similarity.ivfSqTopKFromCodes(fenced, model, fencedSq, qs,
         kNN = 5, nProbe = 2)
-      val refFenced = Similarity.ivfSqTopKFromCodesBatch(
+      val refFenced = Similarity.ivfSqTopKFromCodes(
         refCodes.where(col("id") =!= 100L), model, refSq, qs,
         kNN = 5, nProbe = 2)
       assert(d.collect().map(_.toString).sorted

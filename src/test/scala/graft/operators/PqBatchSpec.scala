@@ -1,10 +1,12 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.operators.IvfReference._
 import org.apache.spark.sql.functions._
 
-/** Batch ADC serving: one scan must answer the whole query batch with
-  * results row-for-row identical to the scan-per-query forms.
+/** PQ / IVF-PQ / IVF-SQ serving: one scan answers the whole query batch,
+  * row-for-row equal to a driver-side reference ([[IvfReference]]) at
+  * every batch size.
   */
 class PqBatchSpec extends SparkSpec {
   import spark.implicits._
@@ -14,10 +16,6 @@ class PqBatchSpec extends SparkSpec {
     (0L until n.toLong).map(i =>
       (i, Seq.fill(8)(rnd.nextGaussian().toFloat))).toDF("vec_id", "embedding")
   }
-
-  private def collectTopK(df: org.apache.spark.sql.DataFrame) =
-    df.collect().map(r =>
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
 
   test("k-means-trained PQ codebooks: same layout, lower quantization error than sampling") {
     val vecs = mkVecs(400).persist()
@@ -54,26 +52,27 @@ class PqBatchSpec extends SparkSpec {
     } finally { vecs.unpersist(); () }
   }
 
-  test("pqTopKFromCodesBatch == pqTopKFromCodes, including self-exclusion and ties") {
+  private def gaussQueries(seed: Int, n: Int) = {
+    val rnd = new scala.util.Random(seed)
+    (0 until n).map(i => (i.toLong, Array.fill(8)(rnd.nextGaussian())))
+  }
+
+  test("pqTopKFromCodes == brute-force ADC at 1, 5 and 23 queries, with and without self-exclusion") {
     val vecs = mkVecs(300)
     val cb = Similarity.pqTrainCodebook(vecs, "embedding", m = 4, k = 4)
     val codes = Similarity.pqEncode(vecs, "embedding", "vec_id", cb, m = 4, k = 4)
       .persist()
-    val rnd = new scala.util.Random(11)
-    val qs = (0 until 23).map(i =>
-      (i.toLong, Array.fill(8)(rnd.nextGaussian())))
+    // query ids 0..22 are corpus ids, so self-exclusion bites; 300 rows
+    // over 4^4 code words tie on adc, so the nid tie-break bites too
+    val qs = gaussQueries(11, 23)
     try {
-      val single = collectTopK(
-        Similarity.pqTopKFromCodes(codes, cb, m = 4, k = 4, qs, kNN = 7))
-      val batch = collectTopK(
-        Similarity.pqTopKFromCodesBatch(codes, cb, m = 4, k = 4, qs, kNN = 7))
-      assert(batch == single)
-      // excludeSelf=false leg too
-      val single2 = collectTopK(Similarity.pqTopKFromCodes(
-        codes, cb, m = 4, k = 4, qs, kNN = 7, excludeSelf = false))
-      val batch2 = collectTopK(Similarity.pqTopKFromCodesBatch(
-        codes, cb, m = 4, k = 4, qs, kNN = 7, excludeSelf = false))
-      assert(batch2 == single2)
+      val rows = codeRows(codes)
+      for (n <- Seq(1, 5, 23); excludeSelf <- Seq(true, false)) {
+        val got = collectTopK(Similarity.pqTopKFromCodes(codes, cb, m = 4, k = 4,
+          qs.take(n), kNN = 7, excludeSelf = excludeSelf))
+        assert(got == adcTopK(rows, cb, 4, 4, qs.take(n), 7, excludeSelf),
+          s"n=$n excludeSelf=$excludeSelf")
+      }
     } finally { codes.unpersist(blocking = false); () }
   }
 
@@ -85,73 +84,83 @@ class PqBatchSpec extends SparkSpec {
       Similarity.writePqIndex(vecs, "embedding", "vec_id", cb, m = 4, k = 4,
         s"$dir/index")
       val (codes, cb2, m2, k2) = Similarity.readPqIndex(spark, s"$dir/index")
-      val rnd = new scala.util.Random(3)
-      val qs = (0 until 100).map(i => (i.toLong, Array.fill(8)(rnd.nextGaussian())))
+      val qs = gaussQueries(3, 100)
       def scanCount(df: org.apache.spark.sql.DataFrame): Int =
         "(?m)Scan parquet".r
           .findAllIn(df.queryExecution.executedPlan.toString).length
-      val batchPlanScans = scanCount(
-        Similarity.pqTopKFromCodesBatch(codes, cb2, m2, k2, qs, kNN = 5))
-      assert(batchPlanScans == 1,
-        s"batch form should plan exactly one scan, got $batchPlanScans")
-      val perQueryScans = scanCount(
-        Similarity.pqTopKFromCodes(codes, cb2, m2, k2, qs.take(5), kNN = 5))
-      assert(perQueryScans == 5, // documents the contrast the batch form removes
-        s"per-query form plans one scan per query, got $perQueryScans for 5")
+      for (n <- Seq(1, 100)) {
+        val scans = scanCount(
+          Similarity.pqTopKFromCodes(codes, cb2, m2, k2, qs.take(n), kNN = 5))
+        assert(scans == 1, s"$n queries should plan exactly one scan, got $scans")
+      }
       // and the 100-query batch still answers correctly (5 ranks per qid)
-      val n = Similarity.pqTopKFromCodesBatch(codes, cb2, m2, k2, qs, kNN = 5)
+      val n = Similarity.pqTopKFromCodes(codes, cb2, m2, k2, qs, kNN = 5)
         .groupBy("qid").count().collect()
       assert(n.length == 100 && n.forall(_.getLong(1) == 5))
     } finally { graft.BenchData.deleteRecursively(dir) }
   }
 
-  test("ivfPqTopKFromCodesBatch == ivfPqTopKFromCodes over a partitioned index") {
+  test("ivfPqTopKFromCodes == pruned brute-force ADC at 1, 5 and 23 queries, with and without self-exclusion") {
     val vecs = mkVecs(400)
     val model = new graft.som.Som(
       graft.som.SomConfig(2, 2, seed = 42)).fit(vecs, "embedding", numEpochs = 2)
     val cb = Similarity.pqTrainCodebook(vecs, "embedding", m = 4, k = 4)
-    val codes = Similarity.ivfPqAssign(vecs, "embedding", "vec_id", model, cb,
-      m = 4, k = 4).persist()
-    val rnd = new scala.util.Random(17)
-    val qs = (1000 until 1015).map(i => (i.toLong, Array.fill(8)(rnd.nextGaussian())))
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpqbatch_").toString
+    val qs = gaussQueries(17, 23)
     try {
-      val single = collectTopK(Similarity.ivfPqTopKFromCodes(
-        codes, model, cb, m = 4, k = 4, qs, kNN = 6, nProbe = 2))
-      val batch = collectTopK(Similarity.ivfPqTopKFromCodesBatch(
-        codes, model, cb, m = 4, k = 4, qs, kNN = 6, nProbe = 2))
-      assert(batch == single)
-    } finally { codes.unpersist(blocking = false); () }
+      Similarity.writeIvfPqIndex(vecs, "embedding", "vec_id", model, cb,
+        m = 4, k = 4, s"$dir/index")
+      val codes = spark.read.parquet(s"$dir/index/codes")
+      val rows = codeRows(codes)
+      for (n <- Seq(1, 5, 23); excludeSelf <- Seq(true, false)) {
+        val got = collectTopK(Similarity.ivfPqTopKFromCodes(codes, model, cb,
+          m = 4, k = 4, qs.take(n), kNN = 6, nProbe = 2, excludeSelf = excludeSelf))
+        val want = adcTopK(rows, cb, 4, 4, qs.take(n), 6, excludeSelf,
+          q => probedCells(model, q, 2))
+        assert(got == want, s"n=$n excludeSelf=$excludeSelf")
+      }
+    } finally { graft.BenchData.deleteRecursively(dir) }
   }
 
-  /** The convenience entry points dispatch to the batch form at
-    * `pqBatchDispatchMinQueries` — this pins the boundary value and
-    * that results are identical on BOTH sides of it (so the dispatch
-    * stays a pure physical-plan choice; a caller can never observe
-    * which form ran).
+  /** The one-shot entry points serve through the one batch form at any
+    * batch size: each must equal the driver-side reference at 1, 5 and
+    * 7 queries.
     */
-  test("pqTopK auto-dispatch: identical rows on both sides of the boundary") {
-    assert(Similarity.pqBatchDispatchMinQueries == 6,
-      "dispatch boundary moved — re-verify the per-query-vs-batch crossover")
+  test("pqTopK, ivfPqTopK and ivfSqTopK equal the reference at 1, 5 and 7 queries") {
     val vecs = mkVecs(200)
+    val model = new graft.som.Som(
+      graft.som.SomConfig(2, 2, seed = 42)).fit(vecs, "embedding", numEpochs = 2)
     val cb = Similarity.pqTrainCodebook(vecs, "embedding", m = 4, k = 4)
-    val codes = Similarity.pqEncode(vecs, "embedding", "vec_id", cb, m = 4, k = 4)
+    val sq = Similarity.sqTrain(vecs, "embedding")
+    val pqRows = codeRows(Similarity.ivfPqAssign(vecs, "embedding", "vec_id",
+      model, cb, m = 4, k = 4))
+    val sqCodes = Similarity.ivfSqAssign(vecs, "embedding", "vec_id", model, sq)
       .persist()
-    val rnd = new scala.util.Random(31)
-    val qs = (0 until Similarity.pqBatchDispatchMinQueries + 1).map(i =>
-      (i.toLong, Array.fill(8)(rnd.nextGaussian())))
+    val qs = gaussQueries(31, 7)
     try {
-      for (n <- Seq(Similarity.pqBatchDispatchMinQueries - 1, // per-query side
-                    Similarity.pqBatchDispatchMinQueries,     // batch side
-                    Similarity.pqBatchDispatchMinQueries + 1)) {
+      for (n <- Seq(1, 5, 7)) {
         val sub = qs.take(n)
-        val viaEntry = collectTopK(
-          Similarity.pqTopK(vecs, "embedding", "vec_id", cb, m = 4, k = 4,
-            sub, kNN = 5))
-        val perQuery = collectTopK(
-          Similarity.pqTopKFromCodes(codes, cb, m = 4, k = 4, sub, kNN = 5))
-        assert(viaEntry == perQuery, s"dispatch changed results at n=$n")
+        assert(collectTopK(Similarity.pqTopK(vecs, "embedding", "vec_id", cb,
+            m = 4, k = 4, sub, kNN = 5)) ==
+          adcTopK(pqRows, cb, 4, 4, sub, 5, excludeSelf = true),
+          s"pqTopK at n=$n")
+        assert(collectTopK(Similarity.ivfPqTopK(vecs, "embedding", "vec_id",
+            model, cb, m = 4, k = 4, sub, kNN = 5, nProbe = 2)) ==
+          adcTopK(pqRows, cb, 4, 4, sub, 5, excludeSelf = true,
+            q => probedCells(model, q, 2)),
+          s"ivfPqTopK at n=$n")
+        // IVF-SQ reference: flat SQ serving, one query at a time, over
+        // only that query's probed cells
+        val sqWant = sub.flatMap { case (qid, q) =>
+          collectTopK(Similarity.sqTopK(
+            sqCodes.where(col("bmu_id").isin(probedCells(model, q, 2).toSeq: _*)),
+            "codes", "id", sq, Seq((qid, q)), k = 5))
+        }.toSet
+        assert(collectTopK(Similarity.ivfSqTopK(vecs, "embedding", "vec_id",
+            model, sq, sub, kNN = 5, nProbe = 2)) == sqWant,
+          s"ivfSqTopK at n=$n")
       }
-    } finally { codes.unpersist(blocking = false); () }
+    } finally { sqCodes.unpersist(blocking = false); () }
   }
 
   test("kernel agreement: adcBatch and adcAt match per-query adc tables") {

@@ -174,7 +174,7 @@ class StreamingSpec extends SparkSpec {
   test("PqServer: streamed query micro-batches get the same answers as one batch") {
     // online ANN serving: static PQ index, query stream; each
     // micro-batch is answered by ONE scan of the codes via
-    // pqTopKFromCodesBatch, and per-query independence means the union
+    // pqTopKFromCodes, and per-query independence means the union
     // of micro-batch answers == the single all-queries batch answer
     implicit val sqlCtx = spark.sqlContext
     val dim = 4
@@ -202,7 +202,7 @@ class StreamingSpec extends SparkSpec {
         input.addData(queries.take(4): _*); q.processAllAvailable()
         input.addData(queries.drop(4): _*); q.processAllAvailable()
       } finally q.stop()
-      val batch = graft.operators.Similarity.pqTopKFromCodesBatch(
+      val batch = graft.operators.Similarity.pqTopKFromCodes(
           codes, cb, m = 2, k = 16,
           queries.map(p => (p._1, p._2.toArray)), kNN = 3, excludeSelf = false)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
@@ -847,9 +847,9 @@ class StreamingSpec extends SparkSpec {
       val qs = (base.take(2) ++ mb2.take(2)).map { case (i, v) =>
         (i, v.map(_.toDouble).toArray)
       }
-      val served = Similarity.ivfSqTopKFromCodesBatch(incCodes, som, incSq,
+      val served = Similarity.ivfSqTopKFromCodes(incCodes, som, incSq,
         qs, kNN = 5, nProbe = 2)
-      val rebuilt = Similarity.ivfSqTopKFromCodesBatch(fullCodes, som, fullSq,
+      val rebuilt = Similarity.ivfSqTopKFromCodes(fullCodes, som, fullSq,
         qs, kNN = 5, nProbe = 2)
       assert(served.collect().map(_.toString).sorted
         .sameElements(rebuilt.collect().map(_.toString).sorted))
