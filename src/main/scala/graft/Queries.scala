@@ -34,6 +34,13 @@ object Queries {
     */
   private def emb(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/embeddings.parquet")
+  /** A query over the embeddings read once: `f(s, dir, e)`. Every
+    * `read.parquet` infers the schema with a one-task job, so a query
+    * that needs the table in several places passes `e` along.
+    */
+  private def onEmb(f: (SparkSession, String, DataFrame) => DataFrame)
+      : (SparkSession, String) => DataFrame =
+    (s, dir) => f(s, dir, emb(s, dir))
   private def docs(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/documents.parquet")
       .where(org.apache.spark.sql.functions.col("text").isNotNull)
@@ -43,8 +50,8 @@ object Queries {
     * compares rankings (rrf, recall) depends on all of them selecting
     * the same batch the oracles' LIMIT 5 replays.
     */
-  private def embQueries(s: SparkSession, dir: String): Seq[(Long, Array[Double])] =
-    emb(s, dir).orderBy("vec_id").limit(5).collect()
+  private def embQueries(e: DataFrame): Seq[(Long, Array[Double])] =
+    e.orderBy("vec_id").limit(5).collect()
       .map(r => (r.getLong(r.fieldIndex("vec_id")),
         r.getSeq[Float](r.fieldIndex("embedding")).map(_.toDouble).toArray)).toSeq
 
@@ -52,8 +59,8 @@ object Queries {
     * definition — the three oracles' LIMIT 8 must stay in lockstep
     * with every query that uses it (same rule as [[embQueries]]).
     */
-  private def embQueryIds(s: SparkSession, dir: String): Seq[Long] =
-    emb(s, dir).select(col("vec_id").cast("long")).orderBy(col("vec_id"))
+  private def embQueryIds(e: DataFrame): Seq[Long] =
+    e.select(col("vec_id").cast("long")).orderBy(col("vec_id"))
       .limit(8).collect().map(_.getLong(0)).toSeq
 
   /** Anchor ids for the LABEL-dependent mining/audit queries
@@ -64,8 +71,8 @@ object Queries {
     * sides now restrict to labeled anchors (oracle qids CTEs carry the
     * matching `label IS NOT NULL`).
     */
-  private def embLabeledQueryIds(s: SparkSession, dir: String): Seq[Long] =
-    emb(s, dir).where(col("label").isNotNull)
+  private def embLabeledQueryIds(e: DataFrame): Seq[Long] =
+    e.where(col("label").isNotNull)
       .select(col("vec_id").cast("long")).orderBy(col("vec_id"))
       .limit(8).collect().map(_.getLong(0)).toSeq
 
@@ -135,23 +142,23 @@ object Queries {
   /** First 9 embeddings by vec_id as a 3x3 codebook (driver-local, like
     * the reference's in-core codebook).
     */
-  private def fixedRows(s: SparkSession, dir: String): Seq[Array[Double]] =
-    emb(s, dir).orderBy("vec_id").limit(9).collect()
+  private def fixedRows(e: DataFrame): Seq[Array[Double]] =
+    e.orderBy("vec_id").limit(9).collect()
       .map(r => r.getSeq[Float](r.fieldIndex("embedding")).map(_.toDouble).toArray)
       .toSeq
 
   /** First 16 embeddings by vec_id: the deterministic PQ codebook sample
     * (16 centroids per subspace).
     */
-  private def pqRows(s: SparkSession, dir: String): Seq[Array[Double]] =
-    emb(s, dir).orderBy("vec_id").limit(16).collect()
+  private def pqRows(e: DataFrame): Seq[Array[Double]] =
+    e.orderBy("vec_id").limit(16).collect()
       .map(r => r.getSeq[Float](r.fieldIndex("embedding")).map(_.toDouble).toArray)
       .toSeq
 
-  private def fixedModel(s: SparkSession, dir: String, distance: String = "euclidean",
+  private def fixedModel(e: DataFrame, distance: String = "euclidean",
                          normP: Double = 2.0): SomModel =
     SomModel.fromWeights(
-      SomConfig(3, 3, distance = distance, normP = normP), fixedRows(s, dir))
+      SomConfig(3, 3, distance = distance, normP = normP), fixedRows(e))
 
   /** Shared oracle CTE: codebook + per-(sample, neuron) squared euclidean
     * distance, all math in DOUBLE.
@@ -264,47 +271,47 @@ object Queries {
 
   private lazy val somQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // winner / predict (xpysom.py:370-417,608-617)
-    "som_winner" -> ((s, dir) =>
-      fixedModel(s, dir).transform(emb(s, dir), "embedding")
+    "som_winner" -> onEmb((s, dir, e) =>
+      fixedModel(e).transform(e, "embedding")
         .select(col("vec_id").cast("long").as("vec_id"),
                 col("bmu_id").cast("long").as("bmu_id"))),
 
     // activation_response (xpysom.py:819-829)
-    "som_activation_response" -> ((s, dir) =>
-      fixedModel(s, dir).activationResponse(emb(s, dir), "embedding")
+    "som_activation_response" -> onEmb((s, dir, e) =>
+      fixedModel(e).activationResponse(e, "embedding")
         .select(col("bmu_id").cast("long").as("bmu_id"),
                 col("n_wins").cast("long").as("n_wins"))),
 
     // win_map (xpysom.py:831-840) in relational form: group key + member
-    "som_win_map" -> ((s, dir) =>
-      fixedModel(s, dir).transform(emb(s, dir), "embedding")
+    "som_win_map" -> onEmb((s, dir, e) =>
+      fixedModel(e).transform(e, "embedding")
         .select(col("bmu_id").cast("long").as("bmu_id"),
                 col("vec_id").cast("long").as("vec_id"))),
 
     // labels_map (xpysom.py:842-865)
-    "som_labels_map" -> ((s, dir) =>
-      fixedModel(s, dir).labelsMap(emb(s, dir), "label", "embedding")
+    "som_labels_map" -> onEmb((s, dir, e) =>
+      fixedModel(e).labelsMap(e, "label", "embedding")
         .select(col("bmu_id").cast("long").as("bmu_id"),
                 col("label").cast("long").as("label"),
                 col("n").cast("long").as("n"))),
 
     // quantization (xpysom.py:620-645)
-    "som_quantization" -> ((s, dir) =>
-      fixedModel(s, dir).quantize(emb(s, dir), "embedding")
+    "som_quantization" -> onEmb((s, dir, e) =>
+      fixedModel(e).quantize(e, "embedding")
         .select(col("vec_id").cast("long").as("vec_id"),
                 posexplode(col("quantized")).as(Seq("dim", "q")))
         .select(col("vec_id"), col("dim").cast("long").as("dim"),
                 col("q").cast("double").as("q"))),
 
     // quantization_error (xpysom.py:673-707)
-    "som_quantization_error" -> ((s, dir) => {
-      val qe = fixedModel(s, dir).quantizationError(emb(s, dir), "embedding")
+    "som_quantization_error" -> onEmb((s, dir, e) => {
+      val qe = fixedModel(e).quantizationError(e, "embedding")
       s.createDataFrame(Seq(Tuple1(r6(qe)))).toDF("qe")
     }),
 
     // topographic_error (xpysom.py:709-746)
-    "som_topographic_error" -> ((s, dir) => {
-      val te = fixedModel(s, dir).topographicError(emb(s, dir), "embedding")
+    "som_topographic_error" -> onEmb((s, dir, e) => {
+      val te = fixedModel(e).topographicError(e, "embedding")
       s.createDataFrame(Seq(Tuple1(r6(te)))).toDF("te")
     }),
 
@@ -319,10 +326,10 @@ object Queries {
       distanceQuery(s, dir, "norm_p", sqrtDist = false, normP = 3.0)),
 
     // one full training epoch from the fixed codebook (xpysom.py:420-455)
-    "som_epoch_update" -> ((s, dir) => {
+    "som_epoch_update" -> onEmb((s, dir, e) => {
       val som = new Som(SomConfig(3, 3, sigma = 1.0, stdCoeff = 0.5, seed = 0))
-      val model = som.fit(emb(s, dir), "embedding", numEpochs = 1,
-        init = Codebook.fromRows(3, 3, fixedRows(s, dir)))
+      val model = som.fit(e, "embedding", numEpochs = 1,
+        init = Codebook.fromRows(3, 3, fixedRows(e)))
       val rows = for (n <- 0 until 9; c <- 0 until model.dim) yield
         (n.toLong, c.toLong, r6(model.codebook.weights(n * model.dim + c)))
       s.createDataFrame(rows).toDF("nid", "dim", "w")
@@ -346,8 +353,8 @@ object Queries {
     "som_neighborhood_triangle" -> ((s, dir) => neighborhoodQuery(s, "triangle")),
 
     // U-matrix over the fixed codebook (xpysom.py:788-817)
-    "som_umatrix" -> ((s, dir) => {
-      val dm = Codebook.fromRows(3, 3, fixedRows(s, dir)).distanceMap(Rectangular(3, 3))
+    "som_umatrix" -> onEmb((s, dir, e) => {
+      val dm = Codebook.fromRows(3, 3, fixedRows(e)).distanceMap(Rectangular(3, 3))
       val rows = for (i <- 0 until 3; j <- 0 until 3)
         yield (i.toLong, j.toLong, r6(dm(i)(j)))
       s.createDataFrame(rows).toDF("i", "j", "u")
@@ -365,15 +372,15 @@ object Queries {
     }),
 
     // winner under cosine activation distance (distances.py:45-59)
-    "som_winner_cosine" -> ((s, dir) =>
-      fixedModel(s, dir, distance = "cosine").transform(emb(s, dir), "embedding")
+    "som_winner_cosine" -> onEmb((s, dir, e) =>
+      fixedModel(e, distance = "cosine").transform(e, "embedding")
         .select(col("vec_id").cast("long").as("vec_id"),
                 col("bmu_id").cast("long").as("bmu_id"))),
 
     // U-matrix under hexagonal topology (parity-dependent offsets,
     // xpysom.py:802-810)
-    "som_umatrix_hex" -> ((s, dir) => {
-      val dm = Codebook.fromRows(3, 3, fixedRows(s, dir)).distanceMap(Hexagonal(3, 3))
+    "som_umatrix_hex" -> onEmb((s, dir, e) => {
+      val dm = Codebook.fromRows(3, 3, fixedRows(e)).distanceMap(Hexagonal(3, 3))
       val rows = for (i <- 0 until 3; j <- 0 until 3)
         yield (i.toLong, j.toLong, r6(dm(i)(j)))
       s.createDataFrame(rows).toDF("i", "j", "u")
@@ -381,17 +388,17 @@ object Queries {
 
     // topographic error under hexagonal topology (xpysom.py:741-746,
     // including the transposed meshgrid-indexing quirk)
-    "som_topographic_error_hex" -> ((s, dir) => {
+    "som_topographic_error_hex" -> onEmb((s, dir, e) => {
       val m = SomModel.fromWeights(
-        SomConfig(3, 3, topology = "hexagonal"), fixedRows(s, dir))
-      val te = m.topographicError(emb(s, dir), "embedding")
+        SomConfig(3, 3, topology = "hexagonal"), fixedRows(e))
+      val te = m.topographicError(e, "embedding")
       s.createDataFrame(Seq(Tuple1(r6(te)))).toDF("te")
     }),
 
     // winner via the native som_bmu Catalyst expression (same semantics
     // as som_winner, exercised through the codegen/streaming-safe path)
-    "som_winner_expr" -> ((s, dir) =>
-      fixedModel(s, dir).withBmu(emb(s, dir), "embedding")
+    "som_winner_expr" -> onEmb((s, dir, e) =>
+      fixedModel(e).withBmu(e, "embedding")
         .select(col("vec_id").cast("long").as("vec_id"),
                 col("bmu_id").cast("long").as("bmu_id"))),
 
@@ -464,15 +471,15 @@ object Queries {
     // dataset vectors on exact array<double> equality. A wrong sampler
     // (out-of-dataset vector, wrong count, wrong dim) flips a flag and
     // fails the hash. Seed determinism is golden-pinned in SomInitSpec.
-    "som_sample_init" -> ((s, dir) => {
-      val cb = new Som(SomConfig(3, 3, seed = 7)).sampleInit(emb(s, dir), "embedding")
+    "som_sample_init" -> onEmb((s, dir, e) => {
+      val cb = new Som(SomConfig(3, 3, seed = 7)).sampleInit(e, "embedding")
       val rows = (0 until cb.numNeurons).map(n =>
         (n.toLong, cb.weights.slice(n * cb.dim, (n + 1) * cb.dim).toSeq))
       val cbDf = s.createDataFrame(rows).toDF("nid", "w")
       // scale note: at 100 TB the 9-row codebook side broadcasts and the
       // dataset side stays a single scan — written join-order-agnostic
       // here, AQE picks the broadcast
-      val members = emb(s, dir)
+      val members = e
         .select(col("embedding").cast("array<double>").as("w")).distinct()
         .withColumn("__hit", lit(1L))
       cbDf.join(members, Seq("w"), "left")
@@ -484,12 +491,12 @@ object Queries {
     // codebook, reload, assign winners — oracled against the same
     // codebook SQL as som_winner, so a lossy round-trip flips BMUs
     // and fails the hash (xpysom.py:868-892 pickle-parity analogue)
-    "som_save_load_winner" -> ((s, dir) => {
+    "som_save_load_winner" -> onEmb((s, dir, e) => {
       // unique per (JVM, corpus): concurrent Verify runs over different
       // corpora must not race on the round-trip scratch dir
       val path = s"/tmp/graft_model_roundtrip_${ProcessHandle.current.pid}_${dir.hashCode.toHexString}"
-      fixedModel(s, dir).save(s, path)
-      SomModel.load(s, path).transform(emb(s, dir), "embedding")
+      fixedModel(e).save(s, path)
+      SomModel.load(s, path).transform(e, "embedding")
         .select(col("vec_id").cast("long").as("vec_id"),
                 col("bmu_id").cast("long").as("bmu_id"))
     }),
@@ -497,14 +504,14 @@ object Queries {
     // CSV source driven end-to-end: embeddings -> CSV (floats as
     // shortest-round-trip strings, so the trip is lossless) -> read back
     // -> winners; same oracle as som_winner (§2.1 example-CSV-source row)
-    "som_csv_source_winner" -> ((s, dir) => {
+    "som_csv_source_winner" -> onEmb((s, dir, e) => {
       val path = s"/tmp/graft_csv_roundtrip_${ProcessHandle.current.pid}_${dir.hashCode.toHexString}"
-      emb(s, dir).select(col("vec_id"), concat_ws(";", col("embedding")).as("emb"))
+      e.select(col("vec_id"), concat_ws(";", col("embedding")).as("emb"))
         .write.mode("overwrite").option("header", "true").csv(path)
       val back = s.read.option("header", "true").csv(path)
         .select(col("vec_id").cast("long").as("vec_id"),
                 split(col("emb"), ";").cast("array<float>").as("embedding"))
-      fixedModel(s, dir).transform(back, "embedding")
+      fixedModel(e).transform(back, "embedding")
         .select(col("vec_id"), col("bmu_id").cast("long").as("bmu_id"))
     }),
 
@@ -854,48 +861,48 @@ object Queries {
       // SemDeDup-style semantic dedup: SOM-cell clustering (fixed 3x3
       // codebook, same assignment as som_winner) bounds the pairwise
       // cosine step per cell; duplicate components resolve to keep-min-id
-      "dedup_semantic" -> ((s, dir) =>
-        graft.operators.Dedup.semanticDupClusters(emb(s, dir), "embedding",
-            "vec_id", fixedModel(s, dir), threshold = 0.25)
+      "dedup_semantic" -> onEmb((s, dir, e) =>
+        graft.operators.Dedup.semanticDupClusters(e, "embedding",
+            "vec_id", fixedModel(e), threshold = 0.25)
           .select(col("id").as("vec_id"), col("bmu_id"), col("keep_id"))),
 
       // brute-force cosine top-k (exact ANN baseline)
-      "ann_cosine_topk" -> ((s, dir) => {
-        val qs = embQueries(s, dir)
-        Similarity.bruteForceTopK(emb(s, dir), "embedding", "vec_id", qs, k = 5)
+      "ann_cosine_topk" -> onEmb((s, dir, e) => {
+        val qs = embQueries(e)
+        Similarity.bruteForceTopK(e, "embedding", "vec_id", qs, k = 5)
       }),
 
       // hard-negative mining for contrastive training: per labeled
       // query, the top-5 most-similar vectors with a DIFFERENT label
       // (broadcast query batch, one scan, bounded-heap top-k)
-      "mine_hard_negatives" -> ((s, dir) => {
-        Similarity.hardNegatives(emb(s, dir), "embedding", "vec_id",
-          "label", embLabeledQueryIds(s, dir), k = 5)
+      "mine_hard_negatives" -> onEmb((s, dir, e) => {
+        Similarity.hardNegatives(e, "embedding", "vec_id",
+          "label", embLabeledQueryIds(e), k = 5)
       }),
 
       // assembled training triplets: per anchor, the hardest positive
       // (same label) and hardest negative (different label) plus the
       // similarity margin a triplet loss pushes on
-      "mine_triplets" -> ((s, dir) => {
-        Similarity.mineTriplets(emb(s, dir), "embedding", "vec_id",
-          "label", embLabeledQueryIds(s, dir))
+      "mine_triplets" -> onEmb((s, dir, e) => {
+        Similarity.mineTriplets(e, "embedding", "vec_id",
+          "label", embLabeledQueryIds(e))
       }),
 
       // kNN label-consistency audit (label-error detection): each
       // anchor's 5 nearest neighbors vote; low agreement flags a
       // likely mislabel or off-manifold embedding
-      "label_consistency" -> ((s, dir) => {
-        Similarity.labelConsistency(emb(s, dir), "embedding", "vec_id",
-            "label", embLabeledQueryIds(s, dir), k = 5)
+      "label_consistency" -> onEmb((s, dir, e) => {
+        Similarity.labelConsistency(e, "embedding", "vec_id",
+            "label", embLabeledQueryIds(e), k = 5)
           .select(col("qid"), col("label").cast("long").as("label"),
             col("n_agree"), col("n_nbrs"), col("agreement"), col("suspect"))
       }),
 
       // random-hyperplane LSH ANN — oracled via seeded-plane replay
       // (HashOracleSql.lshTopK)
-      "ann_lsh_topk" -> ((s, dir) => {
-        val qs = embQueries(s, dir)
-        Similarity.lshCosineTopK(emb(s, dir), "embedding", "vec_id", qs, k = 5,
+      "ann_lsh_topk" -> onEmb((s, dir, e) => {
+        val qs = embQueries(e)
+        Similarity.lshCosineTopK(e, "embedding", "vec_id", qs, k = 5,
           numPlanes = 6, numTables = 8)
       }),
 
@@ -905,11 +912,11 @@ object Queries {
       // recomputes both rankings in SQL and intersects them. This pins
       // recall REGRESSIONS (a bucketing bug that silently drops true
       // neighbors) in CORRECTNESS, not just in the sbt suite.
-      "ann_recall" -> ((s, dir) => {
-        val qs = embQueries(s, dir)
-        val lsh = Similarity.lshCosineTopK(emb(s, dir), "embedding", "vec_id", qs,
+      "ann_recall" -> onEmb((s, dir, e) => {
+        val qs = embQueries(e)
+        val lsh = Similarity.lshCosineTopK(e, "embedding", "vec_id", qs,
           k = 5, numPlanes = 6, numTables = 8)
-        val bf = Similarity.bruteForceTopK(emb(s, dir), "embedding", "vec_id", qs, k = 5)
+        val bf = Similarity.bruteForceTopK(e, "embedding", "vec_id", qs, k = 5)
         val hits = lsh.select("qid", "nid").intersect(bf.select("qid", "nid"))
           .groupBy("qid").agg(count(lit(1)).as("n_hit"))
         val qidsDf = s.createDataFrame(qs.map(q => Tuple1(q._1))).toDF("qid")
@@ -920,9 +927,9 @@ object Queries {
 
       // SOM-bucketed (IVF-style) ANN — oracled by replaying the seeded
       // quantizer training in SQL (TrainOracleSql.annSomTopK)
-      "ann_som_topk" -> ((s, dir) => {
-        val qs = embQueries(s, dir)
-        Similarity.somTopK(emb(s, dir), "embedding", "vec_id", qs, k = 5)
+      "ann_som_topk" -> onEmb((s, dir, e) => {
+        val qs = embQueries(e)
+        Similarity.somTopK(e, "embedding", "vec_id", qs, k = 5)
       }),
 
       // product quantization: encode every embedding into m=8 codes
@@ -930,13 +937,13 @@ object Queries {
       // 16 embeddings' subvectors — the fixedModel pattern) — one
       // codegen scan; codes exploded to (vec_id, sub_id, code) for the
       // oracle
-      "pq_encode" -> ((s, dir) => {
-        val cb = Similarity.pqCodebookFromRows(pqRows(s, dir), m = 8)
+      "pq_encode" -> onEmb((s, dir, e) => {
+        val cb = Similarity.pqCodebookFromRows(pqRows(e), m = 8)
         // Materialize.once: posexplode's generator pushdown would
         // otherwise inline the encode kernel into its own size/notnull
         // Filter — three evaluations per row instead of one
         val enc = graft.operators.Materialize.once(
-          emb(s, dir).select(col("vec_id").cast("long").as("vec_id"),
+          e.select(col("vec_id").cast("long").as("vec_id"),
             col("embedding")),
           "codes", graft.plans.GraftFunctions.pq_encode(
             col("embedding"), cb, 8, cb.length / (8 * 16), 16))
@@ -952,13 +959,13 @@ object Queries {
       // 0..255 ints (bit-packs to ~1 byte/dim in parquet — the 4x
       // scan-bandwidth serving tier); codes exploded to
       // (vec_id, dim_id, code) for the oracle
-      "sq_encode" -> ((s, dir) => {
-        val m = Similarity.sqTrain(emb(s, dir), "embedding")
+      "sq_encode" -> onEmb((s, dir, e) => {
+        val m = Similarity.sqTrain(e, "embedding")
         // Materialize.once for the same reason as pq_encode: the
         // posexplode pushdown would re-evaluate the encode kernel in
         // its own size/notnull filters
         graft.operators.Materialize.once(
-            emb(s, dir).where(col("embedding").isNotNull)
+            e.where(col("embedding").isNotNull)
               .select(col("vec_id").cast("long").as("vec_id"),
                 col("embedding")),
             "codes", Similarity.sqEncodeCol(col("embedding"), m))
@@ -971,11 +978,11 @@ object Queries {
       // SQ serving: decode-on-the-fly cosine top-k of the float queries
       // against the int8-coded corpus (deterministic decoded grid —
       // the oracle replays encode + decode + ranking exactly)
-      "sq_topk" -> ((s, dir) => {
-        val model = Similarity.sqTrain(emb(s, dir), "embedding")
-        val codes = Similarity.sqEncode(emb(s, dir), "embedding", "vec_id",
+      "sq_topk" -> onEmb((s, dir, e) => {
+        val model = Similarity.sqTrain(e, "embedding")
+        val codes = Similarity.sqEncode(e, "embedding", "vec_id",
           model)
-        val qs = embQueries(s, dir)
+        val qs = embQueries(e)
         Similarity.sqTopK(codes, "codes", "id", model, qs, k = 5)
       }),
 
@@ -983,13 +990,13 @@ object Queries {
       // exact float ranking (both deterministic — the pq_recall
       // convention; high recall expected since SQ keeps per-dimension
       // resolution, unlike PQ's worst-case-noise codebook)
-      "sq_recall" -> ((s, dir) => {
-        val model = Similarity.sqTrain(emb(s, dir), "embedding")
-        val codes = Similarity.sqEncode(emb(s, dir), "embedding", "vec_id",
+      "sq_recall" -> onEmb((s, dir, e) => {
+        val model = Similarity.sqTrain(e, "embedding")
+        val codes = Similarity.sqEncode(e, "embedding", "vec_id",
           model)
-        val qs = embQueries(s, dir)
+        val qs = embQueries(e)
         val sqr = Similarity.sqTopK(codes, "codes", "id", model, qs, k = 5)
-        val bf = Similarity.bruteForceTopK(emb(s, dir), "embedding",
+        val bf = Similarity.bruteForceTopK(e, "embedding",
           "vec_id", qs, k = 5)
         val hits = sqr.select("qid", "nid").intersect(bf.select("qid", "nid"))
           .groupBy("qid").agg(count(lit(1)).as("n_hit"))
@@ -1006,12 +1013,12 @@ object Queries {
       // LOW here by design: the corpus is isotropic random noise (PQ's
       // worst case — no cluster structure for 16 sample centroids to
       // exploit), so the pin is exact determinism, not retrieval quality
-      "pq_recall" -> ((s, dir) => {
-        val cb = Similarity.pqCodebookFromRows(pqRows(s, dir), m = 8)
-        val qs = embQueries(s, dir)
-        val pq = Similarity.pqTopK(emb(s, dir), "embedding", "vec_id", cb,
+      "pq_recall" -> onEmb((s, dir, e) => {
+        val cb = Similarity.pqCodebookFromRows(pqRows(e), m = 8)
+        val qs = embQueries(e)
+        val pq = Similarity.pqTopK(e, "embedding", "vec_id", cb,
           m = 8, k = 16, qs, kNN = 5)
-        val exact = Similarity.bruteForceTopK(emb(s, dir), "embedding",
+        val exact = Similarity.bruteForceTopK(e, "embedding",
           "vec_id", qs, k = 5, metric = "l2")
         val hits = pq.select("qid", "nid").intersect(exact.select("qid", "nid"))
           .groupBy("qid").agg(count(lit(1)).as("n_hit"))
@@ -1024,10 +1031,10 @@ object Queries {
       // PQ asymmetric-distance top-k: ONE codegen scan of the m-int
       // codes scores the whole query batch (table lookups, no float
       // vectors in the hot path) into a bounded-heap top-k aggregate
-      "pq_topk" -> ((s, dir) => {
-        val cb = Similarity.pqCodebookFromRows(pqRows(s, dir), m = 8)
-        val qs = embQueries(s, dir)
-        Similarity.pqTopK(emb(s, dir), "embedding", "vec_id", cb,
+      "pq_topk" -> onEmb((s, dir, e) => {
+        val cb = Similarity.pqCodebookFromRows(pqRows(e), m = 8)
+        val qs = embQueries(e)
+        Similarity.pqTopK(e, "embedding", "vec_id", cb,
           m = 8, k = 16, qs, kNN = 5)
       }),
 
@@ -1036,11 +1043,11 @@ object Queries {
       // only its nProbe=3 nearest cells' m-int codes. BOTH approximations
       // (cell pruning + asymmetric distance) are replayed exactly in SQL
       // — assignment from cbDistCte's distances, codes from pqCodesCte
-      "ann_ivfpq" -> ((s, dir) => {
-        val model = fixedModel(s, dir)
-        val cb = Similarity.pqCodebookFromRows(pqRows(s, dir), m = 8)
-        val qs = embQueries(s, dir)
-        Similarity.ivfPqTopK(emb(s, dir), "embedding", "vec_id", model, cb,
+      "ann_ivfpq" -> onEmb((s, dir, e) => {
+        val model = fixedModel(e)
+        val cb = Similarity.pqCodebookFromRows(pqRows(e), m = 8)
+        val qs = embQueries(e)
+        Similarity.ivfPqTopK(e, "embedding", "vec_id", model, cb,
           m = 8, k = 16, qs, kNN = 5, nProbe = 3)
       }),
 
@@ -1049,11 +1056,11 @@ object Queries {
       // probed cells' int8 codes decode on the fly and rank by EXACT
       // cosine of the decoded grid — cell pruning is the only ranking
       // approximation. Both stages replayed exactly in SQL
-      "ann_ivfsq" -> ((s, dir) => {
-        val model = fixedModel(s, dir)
-        val sq = Similarity.sqTrain(emb(s, dir), "embedding")
-        val qs = embQueries(s, dir)
-        Similarity.ivfSqTopK(emb(s, dir), "embedding", "vec_id", model, sq,
+      "ann_ivfsq" -> onEmb((s, dir, e) => {
+        val model = fixedModel(e)
+        val sq = Similarity.sqTrain(e, "embedding")
+        val qs = embQueries(e)
+        Similarity.ivfSqTopK(e, "embedding", "vec_id", model, sq,
           qs, kNN = 5, nProbe = 3)
       }),
 
@@ -1066,9 +1073,8 @@ object Queries {
       // oracle replays the full ann_ivfsq chain with bounds trained on
       // the base rows only, so any append-path divergence (stale cells,
       // double rows, re-derived bounds) breaks the hash
-      "ann_ivfsq_append" -> ((s, dir) => {
-        val model = fixedModel(s, dir)
-        val e = emb(s, dir)
+      "ann_ivfsq_append" -> onEmb((s, dir, e) => {
+        val model = fixedModel(e)
         val base = e.where(col("vec_id") % 2 === 0)
         val batch = e.where(col("vec_id") % 2 =!= 0)
         val sq = Similarity.sqTrain(base, "embedding")
@@ -1079,7 +1085,7 @@ object Queries {
         Similarity.appendToIvfSqIndex(batch, "embedding", "vec_id", model, sq, path)
         val (codes, sqBack) = Similarity.readIvfSqIndex(s, path)
         Similarity.ivfSqTopKFromCodes(codes, model, sqBack,
-          embQueries(s, dir), kNN = 5, nProbe = 3)
+          embQueries(e), kNN = 5, nProbe = 3)
       }),
 
       // index lifecycle, delete leg: tombstone the vec_id%10==3 rows
@@ -1088,9 +1094,8 @@ object Queries {
       // replays the ann_ivfsq chain with those ids excluded from the
       // candidate set, so a leaked tombstoned row or an over-delete
       // breaks the hash
-      "ann_ivfsq_delete" -> ((s, dir) => {
-        val model = fixedModel(s, dir)
-        val e = emb(s, dir)
+      "ann_ivfsq_delete" -> onEmb((s, dir, e) => {
+        val model = fixedModel(e)
         val sq = Similarity.sqTrain(e, "embedding")
         val path = s"/tmp/graft_ivfsq_delete_${ProcessHandle.current.pid}_${dir.hashCode.toHexString}"
         // fresh tombstone epoch per run: the codes overwrite below
@@ -1104,7 +1109,7 @@ object Queries {
           "vec_id", path)
         val (live, sqB) = Similarity.readIvfSqIndexLive(s, path)
         Similarity.ivfSqTopKFromCodes(live, model, sqB,
-          embQueries(s, dir), kNN = 5, nProbe = 3)
+          embQueries(e), kNN = 5, nProbe = 3)
       }),
 
       // deterministic content-hash sampling: reproducible across engines
@@ -1727,11 +1732,11 @@ object Queries {
       // ranking with the embedding brute-force-cosine ranking (the two
       // independently-oracled rankings above); a qid present in only
       // one leg fuses over that leg alone
-      "retrieval_rrf" -> ((s, dir) => {
+      "retrieval_rrf" -> onEmb((s, dir, e) => {
         val lex = graft.operators.Retrieval.bm25TopK(docs(s, dir), "text",
           "doc_id", bm25Queries, k = 10)
-        val qs = embQueries(s, dir)
-        val sem = Similarity.bruteForceTopK(emb(s, dir), "embedding",
+        val qs = embQueries(e)
+        val sem = Similarity.bruteForceTopK(e, "embedding",
             "vec_id", qs, k = 5)
           .withColumnRenamed("nid", "doc_id")
         graft.operators.Retrieval.rrfFuse(Seq(lex, sem), kRrf = 60, topK = 10)
@@ -1911,9 +1916,9 @@ object Queries {
 
       // IVF ANN with the k-means coarse quantizer (the standard-IVF
       // sibling of ann_som_topk): probe 3 of 8 cells per query
-      "ann_ivf_kmeans" -> ((s, dir) => {
-        graft.operators.Kmeans.ivfTopK(emb(s, dir), "embedding", "vec_id",
-          embQueries(s, dir), k = 5, kClusters = 8, iters = 4, nProbe = 3)
+      "ann_ivf_kmeans" -> onEmb((s, dir, e) => {
+        graft.operators.Kmeans.ivfTopK(e, "embedding", "vec_id",
+          embQueries(e), k = 5, kClusters = 8, iters = 4, nProbe = 3)
       })
     )
   }
@@ -2147,8 +2152,9 @@ object Queries {
     */
   private def distanceQuery(s: SparkSession, dir: String, distance: String,
                             sqrtDist: Boolean, normP: Double = 2.0): DataFrame = {
-    val m = fixedModel(s, dir, distance = distance, normP = normP)
-    val base = m.activate(emb(s, dir), "embedding")
+    val e = emb(s, dir)
+    val m = fixedModel(e, distance = distance, normP = normP)
+    val base = m.activate(e, "embedding")
       .select(col("vec_id").cast("long").as("vec_id"),
               posexplode(col("activation")).as(Seq("nid", "dist")))
     val d = if (sqrtDist) sqrt(greatest(col("dist"), lit(0.0))) else col("dist")

@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.plans.BpeFunctions
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.plans.{BpeFunctions, BpeKernels}
 
 /** Distributed byte-pair-encoding tokenizer training (Sennrich et al.
   * 2016, arXiv:1508.07909) and encoding — the "fit a subword
@@ -21,8 +23,12 @@ import graft.plans.BpeFunctions
   * word counts exist.
   *
   * Determinism: the argmax tie-breaks totally on (count desc, left
-  * asc, right asc); the greedy merge pass is order-defined; so the
-  * merge table is a pure function of the corpus. The oracle is an
+  * asc, right asc), strings in UTF-8 byte order; the greedy merge pass
+  * is order-defined; so the merge table is a pure function of the
+  * corpus. One merge loop runs over two row sources — the distributed
+  * vocabulary table, or (at most [[localVocabThreshold]] words) the
+  * same table collected — and both call the same symbolize and merge
+  * kernels. The oracle is an
   * INDEPENDENT Python implementation (tools/gen_bpe_oracle.py) whose
   * expected rows the driver's DuckDB gate replays, plus a naive
   * from-the-paper Scala re-implementation differential-tested in
@@ -46,18 +52,18 @@ object Bpe {
     * vocabulary without compression, the reference formulation's stop
     * condition).
     */
-  /** Vocabulary size at or under which the merge loop runs
-    * driver-locally on the collected (word, count) table. Corpus-scale
-    * work (the word-count shuffle) is identical either way; what the
-    * local regime removes is the 2-Spark-jobs-PER-MERGE floor
-    * (pair aggregation + checkpoint materialization) — for a 10k-word
-    * vocabulary and 64 merges that is 128 scheduled jobs doing
+  /** Vocabulary size at or under which the merge loop runs over the
+    * collected (word, count) table instead of the distributed one.
+    * Corpus-scale work (the word-count shuffle) is identical either
+    * way; what the collected form removes is the 2-Spark-jobs-PER-MERGE
+    * floor (pair aggregation + checkpoint materialization) — for a
+    * 10k-word vocabulary and 64 merges that is 128 scheduled jobs doing
     * microseconds of real work each. 2M entries x ~60 bytes is ~100 MB
     * of driver heap, well inside the probe/driver sizing; a 100 TB
     * web-crawl vocabulary (tens of millions of distinct tokens) stays
-    * on the distributed loop. Both regimes share the tie-break and
-    * greedy-pass semantics bit-for-bit (`BpeSpec` pins local ==
-    * distributed on the same corpus).
+    * on the distributed loop. Both forms run the same kernels
+    * (`bpe_symbolize`/`bpe_merge_pair`) with the same byte-order
+    * tie-break (`BpeSpec` pins local == distributed on the same corpus).
     */
   val localVocabThreshold = 2000000L
 
@@ -77,7 +83,7 @@ object Bpe {
         .collect()
       if (capped.length <= localThreshold)
         return trainMergesLocal(
-          capped.map(r => (r.getString(0), r.getLong(1))),
+          capped.map(r => (UTF8String.fromString(r.getString(0)), r.getLong(1))),
           numMerges, minPairCount).toSeq.toDF("rank", "left", "right", "n")
     }
 
@@ -120,90 +126,50 @@ object Bpe {
     merges.toSeq.toDF("rank", "left", "right", "n")
   }
 
-  /** Code-point lexicographic comparison — the order UTF8String's
-    * binary comparison (and DuckDB/Python string ordering) uses.
-    * `String.compareTo` is UTF-16 code-UNIT order, which ranks
-    * supplementary characters below U+E000..U+FFFF — a tie-break
-    * divergence the distributed path would not have.
+  /** The merge loop over the collected vocabulary: the distributed
+    * rounds' own kernels ([[BpeKernels.symbolize]],
+    * [[BpeKernels.mergePair]]) and their tie-break, (count desc, left
+    * asc, right asc) with `UTF8String.compareTo` — the byte order the
+    * rounds' `orderBy` uses (code-point order, unlike `String`'s UTF-16
+    * order).
     */
-  private def cpCompare(a: String, b: String): Int = {
-    var i = 0; var j = 0
-    while (i < a.length && j < b.length) {
-      val ca = a.codePointAt(i); val cb = b.codePointAt(j)
-      if (ca != cb) return Integer.compare(ca, cb)
-      i += Character.charCount(ca); j += Character.charCount(cb)
-    }
-    Integer.compare(a.length - i, b.length - j)
-  }
-
-  /** The driver-local merge loop: same symbols, same greedy pass, same
-    * (count desc, left asc, right asc) code-point tie-break as the
-    * distributed rounds — a pure execution strategy.
-    */
-  private def trainMergesLocal(wordCounts: Array[(String, Long)],
+  private def trainMergesLocal(wordCounts: Array[(UTF8String, Long)],
                                numMerges: Int, minPairCount: Long)
       : Array[(Int, String, String, Long)] = {
-    var words: Array[(Array[String], Long)] = wordCounts.map { case (w, n) =>
-      val syms = scala.collection.mutable.ArrayBuffer[String]()
-      var i = 0
-      while (i < w.length) {
-        val cc = Character.charCount(w.codePointAt(i))
-        syms += w.substring(i, i + cc); i += cc
-      }
-      syms += graft.plans.BpeKernels.END_MARKER
-      (syms.toArray, n)
-    }
+    var words = wordCounts.map { case (w, n) => (BpeKernels.symbolize(w), n) }
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
     var round = 1
     var done = false
     while (round <= numMerges && !done) {
-      val pairs = new java.util.HashMap[(String, String), java.lang.Long]()
+      // adjacent symbol pairs weighted by word count
+      val pairs = new java.util.HashMap[(UTF8String, UTF8String), java.lang.Long]()
       words.foreach { case (syms, n) =>
         var i = 0
-        while (i < syms.length - 1) {
-          val key = (syms(i), syms(i + 1))
+        while (i < syms.numElements() - 1) {
+          val key = (syms.getUTF8String(i), syms.getUTF8String(i + 1))
           val prev = pairs.get(key)
           pairs.put(key, if (prev == null) n else prev + n)
           i += 1
         }
       }
-      var bestL: String = null; var bestR: String = null; var bestN = 0L
-      val it = pairs.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        val (l, r) = e.getKey
-        val n = e.getValue.longValue()
+      var bestL: UTF8String = null; var bestR: UTF8String = null; var bestN = 0L
+      pairs.forEach { (pair, count) =>
+        val (l, r) = pair
+        val n = count.longValue
         val better =
           if (bestL == null) true
           else if (n != bestN) n > bestN
           else {
-            val c = cpCompare(l, bestL)
-            if (c != 0) c < 0 else cpCompare(r, bestR) < 0
+            val c = l.compareTo(bestL)
+            if (c != 0) c < 0 else r.compareTo(bestR) < 0
           }
         if (better) { bestL = l; bestR = r; bestN = n }
       }
       if (bestL == null || bestN < minPairCount) done = true
       else {
-        merges += ((round, bestL, bestR, bestN))
-        val merged = bestL + bestR
+        merges += ((round, bestL.toString, bestR.toString, bestN))
         words = words.map { case (syms, n) =>
-          var has = false
-          var i = 0
-          while (!has && i < syms.length - 1) {
-            if (syms(i) == bestL && syms(i + 1) == bestR) has = true
-            i += 1
-          }
-          if (!has) (syms, n)
-          else {
-            val out = scala.collection.mutable.ArrayBuffer[String]()
-            var p = 0
-            while (p < syms.length) {
-              if (p < syms.length - 1 && syms(p) == bestL && syms(p + 1) == bestR) {
-                out += merged; p += 2
-              } else { out += syms(p); p += 1 }
-            }
-            (out.toArray, n)
-          }
+          (BpeKernels.mergePair(syms, bestL, bestR), n)
         }
         round += 1
       }

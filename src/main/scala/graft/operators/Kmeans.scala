@@ -1,10 +1,13 @@
 package graft.operators
 
+import org.apache.commons.codec.digest.DigestUtils
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.plans.{KmeansFunctions, KmeansKernel}
+import graft.plans.{HashKernels, KmeansFunctions, KmeansKernel, VecScale9Kernel, VecSumCount}
 
 /** Distributed Lloyd's k-means over an embedding column — the standard
   * coarse quantizer / corpus-clustering primitive (IVF cells, SemDeDup
@@ -44,8 +47,11 @@ import graft.plans.{KmeansFunctions, KmeansKernel}
   *    bit-for-bit;
   *  - the k-means‖ φ terms and selection threshold round d² to 9
   *    decimals with `VecScale9Kernel.scale9` — the DECIMAL(38,9) value
-  *    `round(d², 9)` casts to, and the one the driver-local twin and
-  *    the oracle use.
+  *    `round(d², 9)` casts to, and the one the oracle uses;
+  *  - one loop runs over two row sources ([[Rows]]): the cached slim
+  *    frame, or (at most [[localFitMaxRows]] rows) the same rows
+  *    collected, where each step calls the distributed kernel's own
+  *    entry — so both give the same bits by construction.
   */
 object Kmeans {
 
@@ -71,34 +77,303 @@ object Kmeans {
       .select(col(idCol).cast("long").as("__id"),
         col(vecCol).cast("array<double>").as("__v"))
 
+  /** The rows a k-means loop runs over. Lloyd's, farthest-first and the
+    * k-means‖ rounds are each written once, against this, and it comes
+    * in two forms:
+    *  - [[Distributed]]: the slim `(__id, __v[, __vl])` frame; every
+    *    step is a Spark job over the codegen kernels;
+    *  - [[Local]]: the same rows collected and id-sorted; every step
+    *    calls the same kernels' own entries on the driver
+    *    ([[KmeansKernel.assignRows]], `VecScale9Kernel.scaleArray`, the
+    *    [[graft.plans.VecSumCount]] buffer add, `md5PrefixLong`, and
+    *    `DigestUtils.md5Hex`, the call Spark's `md5` makes).
+    * So both forms give the same bits by construction.
+    */
+  private sealed trait Rows {
+    /** Up to `n` (id, vector) rows in `(md5(salt:id), id)` order, ids
+      * in `skip` left out.
+      */
+    def seeded(n: Int, salt: String,
+               skip: Set[Long] = Set.empty): Array[(Long, Array[Double])]
+    /** The vector farthest from the set `picked` (largest min d², ties to
+      * the lowest id). Called with one growing set per init.
+      */
+    def farthest(picked: Seq[Array[Double]], dim: Int): Array[Double]
+    /** These rows for a loop whose aggregates have `keySpace` reduce
+      * keys ([[LoopSession]]).
+      */
+    def onLoop(keySpace: Int): Rows
+    /** Lloyd's update sums under the table `flat`: (cid, exact scale-9
+      * per-dimension sums, count) for every cluster with members.
+      */
+    def clusterSums(flat: Array[Double], dim: Int): Seq[(Int, Array[Long], Long)]
+    /** The k-means‖ running state, started against the one-row table
+      * `seed`.
+      */
+    def running(seed: Array[Double], dim: Int): Running
+  }
+
+  /** Per row, the min d² to the k-means‖ candidates so far and that
+    * candidate's index; `phi` is Σ round9(min d²), exact.
+    */
+  private trait Running {
+    def phi: Double
+    /** Round `r`'s draws, (id, vector) by ascending id: the rows with
+      * `u < ell · round9(min d²) / phi`, `u` the md5-uniform
+      * `(md5_prefix_long("salt|sc<r>:id", 13) + 0.5) / 2^52`.
+      */
+    def draw(r: Int, salt: String, ell: Int): Array[(Long, Array[Double])]
+    /** Folds the candidates `newFlat`, indexed from `baseIdx`, into the
+      * running min (strict <, so ties keep the lower index) and
+      * updates `phi`.
+      */
+    def merge(newFlat: Array[Double], baseIdx: Int): Unit
+    /** Rows per candidate index; releases the state. */
+    def weights(nCand: Int): Int => Long
+  }
+
+  private final class Distributed(data: DataFrame) extends Rows {
+    private def rows(df: DataFrame): Array[(Long, Array[Double])] =
+      df.collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+
+    def seeded(n: Int, salt: String, skip: Set[Long]): Array[(Long, Array[Double])] = {
+      val vecs = data.select(col("__id"), col("__v"))
+      // a TakeOrderedAndProject: per-partition top-n, n rows collected
+      rows((if (skip.isEmpty) vecs else vecs.where(!col("__id").isin(skip.toSeq: _*)))
+        .withColumn("__h", md5(concat_ws(":", lit(salt), col("__id"))))
+        .orderBy(col("__h"), col("__id"))
+        .limit(n))
+    }
+
+    // the min distance to the set IS the assignment kernel's d2
+    def farthest(picked: Seq[Array[Double]], dim: Int): Array[Double] = {
+      val next = data
+        .select(col("__id"), col("__v"),
+          KmeansFunctions.kmeans_assign(col("__v"), Model(picked.toArray).flat, dim)
+            .getField("d2").as("d2"))
+        .orderBy(col("d2").desc, col("__id").asc)
+        .limit(1).collect()
+      require(next.nonEmpty, s"kmeans farthest init needs >= 1 vector")
+      next(0).getSeq[Double](1).toArray
+    }
+
+    def onLoop(keySpace: Int): Rows =
+      new Distributed(LoopSession.rebase(data, keySpace))
+
+    def clusterSums(flat: Array[Double], dim: Int): Seq[(Int, Array[Long], Long)] =
+      sumsOf(data, flat, dim)
+
+    def running(seed: Array[Double], dim: Int): Running = new Running {
+      private val mem = StorageLevel.MEMORY_AND_DISK
+      // round9(md2) as DECIMAL(38,9) straight from scale9: the value
+      // round(md2, 9).cast(DECIMAL(38,9)) spells through two decimal
+      // strings per row
+      private val md29 = KmeansFunctions.dec_scale9(col("__md2"))
+      // φ (exact order-independent sum of the scale-9 running-min grid)
+      // doubles as the persist's materializing action: ONE pass both
+      // caches the new state and returns the next round's threshold
+      // denominator
+      private def phiOf(df: DataFrame): Double = {
+        val phiRow = df.select(sum(md29).as("phi")).collect()(0)
+        if (phiRow.isNullAt(0)) 0.0 else phiRow.getDecimal(0).doubleValue()
+      }
+      // (__id, __v, __md2, __cid); Materialize.once pins the assign
+      // struct to one evaluation, as both merge branches read it
+      private var state = Materialize.once(data, "__na",
+          KmeansFunctions.kmeans_assign(col("__v"), seed, dim))
+        .select(col("__id"), col("__v"), col("__na.d2").as("__md2"),
+          lit(0).as("__cid"))
+        .persist(mem)
+      // φ only changes with the state, so it is carried between rounds:
+      // a round without new candidates costs no job
+      var phi: Double = phiOf(state)
+
+      def draw(r: Int, salt: String, ell: Int): Array[(Long, Array[Double])] = {
+        // fused md5-prefix kernel — same bits as the
+        // conv(substring(md5(..),1,13),16,10) spelling the oracle replays
+        val u = (graft.plans.GraftFunctions.md5_prefix_long(
+            concat_ws(":", lit(s"$salt|sc$r"), col("__id")), 13)
+          .cast("double") + 0.5) / lit(4503599627370496.0) // 2^52
+        // collected unsorted and sorted on the driver: an orderBy would
+        // add a range-partitioning exchange for ~ell rows
+        rows(state.where(u < lit(ell.toDouble) * md29.cast("double") / lit(phi))
+            .select(col("__id"), col("__v")))
+          .sortBy(_._1)
+      }
+
+      def merge(newFlat: Array[Double], baseIdx: Int): Unit = {
+        val next = Materialize.once(state, "__na",
+            KmeansFunctions.kmeans_assign(col("__v"), newFlat, dim))
+          .select(col("__id"), col("__v"),
+            when(col("__na.d2") < col("__md2"), col("__na.d2"))
+              .otherwise(col("__md2")).as("__md2"),
+            when(col("__na.d2") < col("__md2"), col("__na.cid") + lit(baseIdx))
+              .otherwise(col("__cid")).as("__cid"))
+          .persist(mem)
+        phi = phiOf(next) // materializes the persist AND updates φ
+        state.unpersist(blocking = false)
+        state = next
+      }
+
+      // the key space is nCand cids, so the exchange is sized to that,
+      // not to the φ rounds' single partition
+      def weights(nCand: Int): Int => Long = {
+        val w = LoopSession.rebase(state, nCand)
+          .groupBy("__cid").agg(count(lit(1)).as("n"))
+          .collect().map(row => row.getInt(0) -> row.getLong(1)).toMap
+        state.unpersist(blocking = false)
+        j => w.getOrElse(j, 0L)
+      }
+    }
+  }
+
+  private final class Local(ids: Array[Long], xs: Array[Array[Double]]) extends Rows {
+    private val n = ids.length
+    private def md5Uniform(s: String): Double =
+      (HashKernels.md5PrefixLong(UTF8String.fromString(s), 13).toDouble + 0.5) /
+        4503599627370496.0 // 2^52
+
+    def seeded(count: Int, salt: String, skip: Set[Long]): Array[(Long, Array[Double])] =
+      (0 until n).filterNot(i => skip.contains(ids(i)))
+        .map(i => (DigestUtils.md5Hex(s"$salt:${ids(i)}"), i))
+        .sortBy { case (h, i) => (h, ids(i)) }
+        .take(count).map { case (_, i) => (ids(i), xs(i)) }.toArray
+
+    // running min d² over the centroids folded in so far
+    private var minD2: Array[Double] = _
+    private var folded = 0
+
+    def farthest(picked: Seq[Array[Double]], dim: Int): Array[Double] = {
+      val cid = new Array[Int](n)
+      val d2 = new Array[Double](n)
+      KmeansKernel.assignRows(xs, Model(picked.drop(folded).toArray).flat, dim, cid, d2)
+      if (minD2 == null) minD2 = d2
+      else {
+        var i = 0
+        while (i < n) { if (d2(i) < minD2(i)) minD2(i) = d2(i); i += 1 }
+      }
+      folded = picked.length
+      // ids ascend, so strict > keeps the lowest id on ties
+      var bi = 0
+      var i = 1
+      while (i < n) { if (minD2(i) > minD2(bi)) bi = i; i += 1 }
+      xs(bi)
+    }
+
+    def onLoop(keySpace: Int): Rows = this
+
+    // per-element scale-9 longs, computed once (the cached `__vl` column)
+    private lazy val scaled = xs.map(x =>
+      VecScale9Kernel.scaleArray(ArrayData.toArrayData(x), isFloat = false))
+
+    def clusterSums(flat: Array[Double], dim: Int): Seq[(Int, Array[Long], Long)] = {
+      val cid = new Array[Int](n)
+      KmeansKernel.assignRows(xs, flat, dim, cid, new Array[Double](n))
+      val bufs = Array.fill(flat.length / dim)(new Array[Long](dim + 1))
+      var r = 0
+      while (r < n) { VecSumCount.add(bufs(cid(r)), scaled(r), dim); r += 1 }
+      bufs.indices.filter(j => bufs(j)(dim) > 0)
+        .map(j => (j, bufs(j).take(dim), bufs(j)(dim)))
+    }
+
+    def running(seed: Array[Double], dim: Int): Running = new Running {
+      private val md2 = new Array[Double](n)
+      private val cid = new Array[Int](n)
+      KmeansKernel.assignRows(xs, seed, dim, cid, md2)
+      private val newCid = new Array[Int](n)
+      private val newD2 = new Array[Double](n)
+      private def md29(i: Int): Long = VecScale9Kernel.scale9(md2(i))
+      // Σ round9(md2) exact at scale 9 (the DECIMAL(38,9) sum), then the
+      // same Decimal -> double conversion
+      private def phiOf(): Double = {
+        var s = java.math.BigInteger.ZERO
+        var i = 0
+        while (i < n) { s = s.add(java.math.BigInteger.valueOf(md29(i))); i += 1 }
+        new java.math.BigDecimal(s, 9).doubleValue
+      }
+      var phi: Double = phiOf()
+
+      def draw(r: Int, salt: String, ell: Int): Array[(Long, Array[Double])] =
+        (0 until n).filter { i =>
+          md5Uniform(s"$salt|sc$r:${ids(i)}") <
+            ell.toDouble * java.math.BigDecimal.valueOf(md29(i), 9).doubleValue / phi
+        }.map(i => (ids(i), xs(i))).toArray
+
+      def merge(newFlat: Array[Double], baseIdx: Int): Unit = {
+        KmeansKernel.assignRows(xs, newFlat, dim, newCid, newD2)
+        var i = 0
+        while (i < n) {
+          if (newD2(i) < md2(i)) { md2(i) = newD2(i); cid(i) = newCid(i) + baseIdx }
+          i += 1
+        }
+        phi = phiOf()
+      }
+
+      def weights(nCand: Int): Int => Long = {
+        val w = new Array[Long](nCand)
+        cid.foreach(j => w(j) += 1L)
+        j => w(j)
+      }
+    }
+  }
+
+  /** Lloyd's update sums over a slim frame carrying `__vl`, one
+    * [[graft.plans.VecSumCount]] aggregate under the table `flat`.
+    */
+  private def sumsOf(data: DataFrame, flat: Array[Double],
+                     dim: Int): Seq[(Int, Array[Long], Long)] =
+    data.select(KmeansFunctions.kmeans_assign(col("__v"), flat, dim)
+        .getField("cid").as("cid"), col("__vl"))
+      .groupBy("cid")
+      .agg(KmeansFunctions.vec_sum_count(col("__vl"), dim).as("sc"))
+      .select(col("cid"), col("sc.sums"), col("sc.n"))
+      .collect().toSeq
+      .map(r => (r.getInt(0), r.getSeq[Long](1).toArray, r.getLong(2)))
+
+  /** The source for `data` (slim columns): collected when it has at most
+    * `localMaxRows` rows, else the frame itself. ONE CollectLimit probe
+    * over a constant projection decides, so a large input ships at most
+    * `localMaxRows + 1` ints to the driver, never its vectors.
+    */
+  private def rowsOf(data: DataFrame, localMaxRows: Long): Rows = {
+    val small = localMaxRows > 0 && {
+      val lim = (localMaxRows + 1).min(Int.MaxValue.toLong).toInt
+      data.select(lit(1).as("__one")).limit(lim).count() <= localMaxRows
+    }
+    if (!small) new Distributed(data)
+    else {
+      val rows = data.select(col("__id"), col("__v")).collect()
+        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+        .sortBy(_._1)
+      new Local(rows.map(_._1), rows.map(_._2))
+    }
+  }
+
+  /** The `k` seeded rows, failing when there are fewer. */
+  private def seededInit(rows: Rows, k: Int,
+                         salt: String): Array[(Long, Array[Double])] = {
+    require(k > 0, s"kmeans needs k > 0, got $k")
+    val picked = rows.seeded(k, salt)
+    require(picked.length == k,
+      s"kmeans init needs >= $k non-null vectors, found ${picked.length}")
+    picked
+  }
+
   /** Content-keyed seeded init: the k vectors with the smallest
     * `(md5(salt:id), id)` — a deterministic pseudo-random sample that
     * is partitioning-invariant and needs no stateful RNG. Runs as a
     * TakeOrderedAndProject (per-partition top-k, k rows collected).
     */
   def initCentroids(df: DataFrame, vecCol: String, idCol: String, k: Int,
-                    salt: String = "km"): Array[Array[Double]] = {
-    seededInitRows(slim(df, vecCol, idCol), k, salt).map(_._2)
-  }
+                    salt: String = "km"): Array[Array[Double]] =
+    seededInit(new Distributed(slim(df, vecCol, idCol)), k, salt).map(_._2)
 
-  /** The ONE spelling of the seeded selection, returning (id, vector)
-    * pairs — [[initCentroids]] keeps the vectors, the scalable init
-    * also needs the ids for candidate bookkeeping. One definition so
-    * the two callers (and the Python oracle's replay of this ordering)
-    * can never drift.
+  /** Farthest-first runs k-1 SEQUENTIAL full scans — fine in the
+    * coarse-quantizer regime it exists for, a scale-killer at the
+    * k≥4096 sizes real IVF deployments use. The guard forces large-k
+    * callers onto [[initScalableCentroids]] (O(rounds) scans).
     */
-  private def seededInitRows(data: DataFrame, k: Int,
-                             salt: String): Array[(Long, Array[Double])] = {
-    require(k > 0, s"kmeans needs k > 0, got $k")
-    val rows = data
-      .withColumn("__h", md5(concat_ws(":", lit(salt), col("__id"))))
-      .orderBy(col("__h"), col("__id"))
-      .limit(k)
-      .collect()
-    require(rows.length == k,
-      s"kmeans init needs >= $k non-null vectors, found ${rows.length}")
-    rows.map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-  }
+  val farthestMaxK = 512
 
   /** Farthest-first traversal (Gonzalez k-center) init: seed with the
     * md5-smallest row, then repeatedly add the vector FARTHEST from the
@@ -110,35 +385,20 @@ object Kmeans {
     * distance-to-set IS the assignment kernel's `d2`, so no new kernel.
     * Deterministic and independently replayable like the hashed init.
     */
-  /** Farthest-first runs k-1 SEQUENTIAL full scans — fine in the
-    * coarse-quantizer regime it exists for, a scale-killer at the
-    * k≥4096 sizes real IVF deployments use. The guard forces large-k
-    * callers onto [[initScalableCentroids]] (O(rounds) scans).
-    */
-  val farthestMaxK = 512
-
   def initFarthestCentroids(df: DataFrame, vecCol: String, idCol: String,
-                            k: Int, salt: String = "km"): Array[Array[Double]] = {
+                            k: Int, salt: String = "km"): Array[Array[Double]] =
+    farthestFirst(new Distributed(slim(df, vecCol, idCol)), k, salt)
+
+  private def farthestFirst(rows: Rows, k: Int,
+                            salt: String): Array[Array[Double]] = {
     require(k > 0, s"kmeans needs k > 0, got $k")
     require(k <= farthestMaxK,
       s"farthest-first init runs k-1 sequential full scans and is capped " +
         s"at k <= $farthestMaxK; use initMethod='scalable' " +
         s"(k-means||-style, O(rounds) scans) for k = $k")
-    val data = slim(df, vecCol, idCol)
-    val first = initCentroids(data, "__v", "__id", 1, salt)
-    val picked = scala.collection.mutable.ArrayBuffer[Array[Double]](first(0))
-    val dim = first(0).length
-    while (picked.length < k) {
-      val flat = Model(picked.toArray).flat
-      val next = data
-        .select(col("__id"), col("__v"),
-          KmeansFunctions.kmeans_assign(col("__v"), flat, dim)
-            .getField("d2").as("d2"))
-        .orderBy(col("d2").desc, col("__id").asc)
-        .limit(1).collect()
-      require(next.nonEmpty, s"kmeans farthest init needs >= 1 vector")
-      picked += next(0).getSeq[Double](1).toArray
-    }
+    val picked = scala.collection.mutable.ArrayBuffer(seededInit(rows, 1, salt)(0)._2)
+    val dim = picked(0).length
+    while (picked.length < k) picked += rows.farthest(picked.toSeq, dim)
     picked.toArray
   }
 
@@ -165,6 +425,9 @@ object Kmeans {
     * naive recompute-per-round form, and the state it persists per row
     * is one double + one int.
     *
+    * Inputs of at most [[localFitMaxRows]] rows run the same rounds over
+    * the collected rows (one probe job, then one collect).
+    *
     * Determinism (independently replayed by tools/gen_kmeans_oracle.py):
     *  - the "coin flip" for (row, round) is the md5-uniform
     *    `(int(md5('salt|sc<r>:' + id)[:13hex]) + 0.5) / 2^52` — the
@@ -183,147 +446,54 @@ object Kmeans {
     */
   def initScalableCentroids(df: DataFrame, vecCol: String, idCol: String,
                             k: Int, salt: String = "km", rounds: Int = 5,
-                            oversample: Int = -1,
-                            localMaxRows: Long = localFitMaxRows): Array[Array[Double]] = {
+                            oversample: Int = -1): Array[Array[Double]] =
+    initScalableCentroids(rowsOf(slim(df, vecCol, idCol), localFitMaxRows),
+      k, salt, rounds, oversample)
+
+  // keeps the public name so the rounds' Spark jobs carry it in their
+  // call sites, also when `fit` runs them
+  private def initScalableCentroids(rows: Rows, k: Int, salt: String,
+                                    rounds: Int,
+                                    oversample: Int): Array[Array[Double]] = {
     require(k > 0, s"kmeans needs k > 0, got $k")
     require(rounds > 0, s"scalable init needs rounds > 0, got $rounds")
     val ell = if (oversample > 0) oversample else 2 * k
-    val data = slim(df, vecCol, idCol)
-    // small-input dispatch (the [[fit]] pattern): ONE constant-projection
-    // CollectLimit probe, then the driver-local bit-identical twin — the
-    // distributed loop's ~2 jobs/round of scheduler overhead dwarfs the
-    // arithmetic at coarse-quantizer scale. Pass localMaxRows = 0 to
-    // force the distributed rounds (the kmeans_scalable_init_distributed
-    // oracle twin does).
-    if (localMaxRows > 0) {
-      val lim = (localMaxRows + 1).min(Int.MaxValue.toLong).toInt
-      if (data.select(lit(1).as("__one")).limit(lim).count() <= localMaxRows) {
-        val rows = data.collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-          .sortBy(_._1)
-        return initScalableLocal(rows, k, salt, rounds, oversample)
-      }
-    }
-    // distributed rounds: every per-round action below is either a
-    // no-exchange collect (selection filter, TakeOrdered seed/pad) or
-    // an aggregate whose reduce side is tiny at any corpus scale (φ =
-    // one DECIMAL per map task; the weight counts = ≤ |candidates|
-    // (cid, n) pairs) — run them with AQE's per-stage barrier off and
-    // a single reduce partition (LoopSession doc; saves 2 jobs/round);
-    // the keyed weight count re-bases to its own key space below
-    val dataL = LoopSession.rebase(data, 1)
-    // ONE seed job returning (id, vector) via the shared seeded
-    // selection — the old form ran initCentroids AND a second job just
-    // to recover the seed's id
-    val (firstId, firstVec) = seededInitRows(dataL, 1, salt)(0)
-    val first = Array(firstVec)
-    val dim = first(0).length
+    // every per-round action is either a no-exchange collect (selection
+    // filter, TakeOrdered seed/pad) or an aggregate whose reduce side is
+    // tiny at any corpus scale (φ = one DECIMAL per map task) — run them
+    // with AQE's per-stage barrier off and a single reduce partition
+    // (LoopSession doc; saves 2 jobs/round)
+    val loop = rows.onLoop(1)
+    val (firstId, first) = seededInit(loop, 1, salt)(0)
+    val dim = first.length
     // (id, vec) candidates in selection order; ids seen for dedup
-    val cand = scala.collection.mutable.ArrayBuffer[(Long, Array[Double])]()
-    val seen = scala.collection.mutable.HashSet[Long]()
-    cand += ((firstId, first(0))); seen += firstId
-    // running state: (__id, __v, __md2 = min d² to candidates so far,
-    // __cid = that argmin's candidate index). Initialized against the
-    // seed; each round merges ONLY the round's new candidates in
-    // (Materialize.once pins the assign struct to one evaluation —
-    // both merge branches read it)
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    def merged(prev: DataFrame, newFlat: Array[Double],
-               baseIdx: Int): DataFrame =
-      Materialize.once(prev, "__na",
-          KmeansFunctions.kmeans_assign(col("__v"), newFlat, dim))
-        .select(col("__id"), col("__v"),
-          when(col("__na.d2") < col("__md2"), col("__na.d2"))
-            .otherwise(col("__md2")).as("__md2"),
-          when(col("__na.d2") < col("__md2"), col("__na.cid") + lit(baseIdx))
-            .otherwise(col("__cid")).as("__cid"))
-    // round9(md2) as DECIMAL(38,9) straight from scale9: the value
-    // round(md2, 9).cast(DECIMAL(38,9)) spells through two decimal
-    // strings per row
-    val md29 = KmeansFunctions.dec_scale9(col("__md2"))
-    // φ (exact order-independent sum of the scale-9 running-min grid)
-    // doubles as the persist's materializing action: ONE pass both
-    // caches the new state and returns the next round's threshold
-    // denominator — the old shape paid a count() to materialize PLUS a
-    // separate φ scan at the top of every round (2 extra passes over
-    // the full corpus per round at probe scale)
-    def phiOf(df: DataFrame): Double = {
-      val phiRow = df.select(sum(md29).as("phi")).collect()(0)
-      if (phiRow.isNullAt(0)) 0.0 else phiRow.getDecimal(0).doubleValue()
-    }
-    var state = Materialize.once(dataL, "__na",
-        KmeansFunctions.kmeans_assign(col("__v"),
-          Model(Array(first(0))).flat, dim))
-      .select(col("__id"), col("__v"), col("__na.d2").as("__md2"),
-        lit(0).as("__cid"))
-      .persist(mem)
-    // φ only changes when the state changes, so it is carried between
-    // rounds instead of recomputed — a no-new-candidates round now costs
-    // zero jobs where it used to re-scan for an identical φ
-    var phi = phiOf(state)
+    val cand = scala.collection.mutable.ArrayBuffer((firstId, first))
+    val seen = scala.collection.mutable.HashSet(firstId)
+    val state = loop.running(first, dim)
     var r = 0
     while (r < rounds) {
-      if (phi > 0.0) {
-        // fused md5-prefix kernel — same bits as the
-        // conv(substring(md5(..),1,13),16,10) spelling the oracle replays
-        val u = (graft.plans.GraftFunctions.md5_prefix_long(
-            concat_ws(":", lit(s"$salt|sc$r"), col("__id")), 13)
-          .cast("double") + 0.5) / lit(4503599627370496.0) // 2^52
-        // collect unsorted and sort driver-side: the old orderBy forced
-        // a range-partitioning Exchange (plus its sampling pass) over
-        // the filtered rows just to fix the ~ell-row iteration order
-        val picked = state
-          .where(u < lit(ell.toDouble) * md29.cast("double") / lit(phi))
-          .select(col("__id"), col("__v"))
-          .collect()
-          .sortBy(_.getLong(0))
+      if (state.phi > 0.0) {
+        val picked = state.draw(r, salt, ell)
         require(picked.length <= 64 * ell,
           s"scalable init round $r selected ${picked.length} candidates " +
             s"(expected ~$ell) — pathological d² skew; raise rounds or " +
             s"check the data")
         val baseIdx = cand.length
-        picked.foreach { row =>
-          val id = row.getLong(0)
-          if (!seen.contains(id)) {
-            seen += id
-            cand += ((id, row.getSeq[Double](1).toArray))
-          }
-        }
-        if (cand.length > baseIdx) {
-          val newFlat =
-            Model(cand.slice(baseIdx, cand.length).map(_._2).toArray).flat
-          val next = merged(state, newFlat, baseIdx).persist(mem)
-          phi = phiOf(next) // materializes the persist AND updates φ
-          state.unpersist(blocking = false)
-          state = next
-        }
+        picked.foreach { case (id, v) => if (seen.add(id)) cand += ((id, v)) }
+        if (cand.length > baseIdx)
+          state.merge(Model(cand.drop(baseIdx).map(_._2).toArray).flat, baseIdx)
       }
       r += 1
     }
-    // per-candidate population weights: already in the running state —
-    // no extra assignment pass. The key space is |cand| cids, so the
-    // exchange is sized to that, not to the φ rounds' single partition
-    val wRows = LoopSession.rebase(state, cand.length)
-      .groupBy("__cid").agg(count(lit(1)).as("n"))
-      .collect().map(row => row.getInt(0) -> row.getLong(1)).toMap
-    state.unpersist(blocking = false)
-    reduceWeightedCandidates(cand.toIndexedSeq, j => wRows.getOrElse(j, 0L),
-      k, dim,
-      (chosenIds, need) => dataL
-        .where(!col("__id").isin(chosenIds.toSeq: _*))
-        .withColumn("__h", md5(concat_ws(":", lit(s"$salt|pad"), col("__id"))))
-        .orderBy(col("__h"), col("__id"))
-        .limit(need)
-        .collect()
-        .map(row => (row.getLong(0), row.getSeq[Double](1).toArray)).toSeq)
+    reduceWeightedCandidates(cand.toIndexedSeq, state.weights(cand.length),
+      k, dim, (chosenIds, need) => loop.seeded(need, s"$salt|pad", chosenIds).toSeq)
   }
 
-  /** Shared tail of the scalable init (both dispatch arms): the
-    * driver-local weighted greedy over the oversampled candidates, then
-    * the hash-ordered pad for degenerate corpora. `pad(chosenIds, need)`
-    * returns `need` (id, vector) rows in `(md5(salt|pad:id), id)` order,
-    * excluding `chosenIds` — the distributed arm runs it as a
-    * TakeOrdered query, the local twin as an in-memory sort.
+  /** Tail of the scalable init: the driver-local weighted greedy over
+    * the oversampled candidates, then the hash-ordered pad for
+    * degenerate corpora. `pad(chosenIds, need)` returns up to `need`
+    * (id, vector) rows in `(md5(salt|pad:id), id)` order, excluding
+    * `chosenIds`.
     *
     * Greedy: heaviest seed (ties -> lowest id), then repeatedly the
     * candidate maximizing weight * d² to the chosen set. Incremental
@@ -406,260 +576,18 @@ object Kmeans {
     picked.map(_._2).toArray
   }
 
-  /** Driver-local twin of [[initScalableCentroids]] over collected
-    * (id, vector) rows, id-ascending — BIT-IDENTICAL by construction
-    * (the [[fitLocal]] argument, applied to the init): the seed pass
-    * and every round's merge run the `kmeans_assign` kernel itself
-    * through its array entry [[graft.plans.KmeansKernel.assignRows]]
-    * (same d² bits, same strict-< argmin with ties to the lowest
-    * candidate index), the same `VecScale9Kernel.scale9` per-value
-    * rounding (the distributed φ's `dec_scale9`) whose exact
-    * long sums make φ order-independent (summing on the driver cannot
-    * change a bit), the same md5-hex draw
-    * (`parseLong(md5hex.take(13), 16)` == the fused
-    * `md5_prefix_long(..., 13)` kernel == the
-    * `conv(substring(md5(..),1,13),16,10)` spelling the Python oracle
-    * replays), the same double-arithmetic selection predicate
-    * `u < ell * round9(md2) / φ` with the same evaluation order, and
-    * the same (md5, id)-ordered seed and pad. `KmeansSpec` pins
-    * local == forced-distributed equality, and the
-    * `kmeans_scalable_init_distributed` query keeps the distributed
-    * rounds oracle-gated at every SF.
-    */
-  private[operators] def initScalableLocal(rows: Array[(Long, Array[Double])],
-      k: Int, salt: String, rounds: Int,
-      oversample: Int): Array[Array[Double]] = {
-    require(k > 0, s"kmeans needs k > 0, got $k")
-    require(rounds > 0, s"scalable init needs rounds > 0, got $rounds")
-    // the message the distributed arm's 1-row seed job raises on empty
-    require(rows.nonEmpty, "kmeans init needs >= 1 non-null vectors, found 0")
-    val ell = if (oversample > 0) oversample else 2 * k
-    val n = rows.length
-    val dim = rows(0)._2.length
-    // the kernel's dimension guard, up front so no init work runs first
-    rows.foreach(r => if (r._2.length != dim)
-      throw new IllegalArgumentException(
-        s"Received ${r._2.length} features, expected $dim."))
-    val xs = rows.map(_._2)
-    // seed: the (md5(salt:id), id)-smallest row (seededInitRows' order;
-    // md5 hex is ASCII so String compareTo == the UTF8String sort)
-    var seedI = 0
-    var seedH = md5Hex(s"$salt:${rows(0)._1}")
-    var i = 1
-    while (i < n) {
-      val h = md5Hex(s"$salt:${rows(i)._1}")
-      if (h.compareTo(seedH) < 0 ||
-          (h == seedH && rows(i)._1 < rows(seedI)._1)) {
-        seedH = h; seedI = i
-      }
-      i += 1
-    }
-    val seedVec = rows(seedI)._2
-    val cand = scala.collection.mutable.ArrayBuffer[(Long, Array[Double])]()
-    val seen = scala.collection.mutable.HashSet[Long]()
-    cand += ((rows(seedI)._1, seedVec)); seen += rows(seedI)._1
-    // running state: min d² to the candidate set + that argmin's index
-    // (the seed pass: the one-centroid table, cid 0 everywhere)
-    val md2 = new Array[Double](n)
-    val cid = new Array[Int](n)
-    KmeansKernel.assignRows(xs, seedVec, dim, cid, md2)
-    // one round's merge: argmin over only its new candidates
-    val newCid = new Array[Int](n)
-    val newD2 = new Array[Double](n)
-    import graft.plans.VecScale9Kernel.scale9
-    // φ = Σ round9(md2) summed exactly at scale 9 (the DECIMAL(38,9)
-    // sum), then the same Decimal -> double conversion
-    def phiOf(): Double = {
-      var s = java.math.BigInteger.ZERO
-      var j = 0
-      while (j < n) {
-        s = s.add(java.math.BigInteger.valueOf(scale9(md2(j)))); j += 1
-      }
-      new java.math.BigDecimal(s, 9).doubleValue
-    }
-    var phi = phiOf()
-    var r = 0
-    while (r < rounds) {
-      if (phi > 0.0) {
-        // same per-row draw and threshold as the distributed filter:
-        // u = (md5_prefix_long("salt|scR:id", 13) + 0.5) / 2^52,
-        // keep when u < ell * round9(md2) / φ
-        val selIdx = scala.collection.mutable.ArrayBuffer[Int]()
-        i = 0
-        while (i < n) {
-          val u = (java.lang.Long.parseLong(
-              md5Hex(s"$salt|sc$r:${rows(i)._1}").substring(0, 13), 16)
-            .toDouble + 0.5) / 4503599627370496.0 // 2^52
-          val md29 = new java.math.BigDecimal(
-            java.math.BigInteger.valueOf(scale9(md2(i))), 9).doubleValue
-          if (u < ell.toDouble * md29 / phi) selIdx += i
-          i += 1
-        }
-        require(selIdx.length <= 64 * ell,
-          s"scalable init round $r selected ${selIdx.length} candidates " +
-            s"(expected ~$ell) — pathological d² skew; raise rounds or " +
-            s"check the data")
-        val baseIdx = cand.length
-        // rows are id-ascending, so this IS the sorted-collect order
-        selIdx.foreach { idx =>
-          val id = rows(idx)._1
-          if (!seen.contains(id)) { seen += id; cand += ((id, rows(idx)._2)) }
-        }
-        if (cand.length > baseIdx) {
-          // merge ONLY the round's new candidates: the kernel's argmin
-          // (strict <, ties to lowest index), then the strict-< running
-          // min — exactly the `merged` frame
-          KmeansKernel.assignRows(xs,
-            Model(cand.slice(baseIdx, cand.length).map(_._2).toArray).flat,
-            dim, newCid, newD2)
-          i = 0
-          while (i < n) {
-            if (newD2(i) < md2(i)) { md2(i) = newD2(i); cid(i) = newCid(i) + baseIdx }
-            i += 1
-          }
-          phi = phiOf()
-        }
-      }
-      r += 1
-    }
-    // per-candidate population weights from the final state
-    val wCounts = new Array[Long](cand.length)
-    i = 0
-    while (i < n) { wCounts(cid(i)) += 1L; i += 1 }
-    reduceWeightedCandidates(cand.toIndexedSeq, j => wCounts(j), k, dim,
-      (chosenIds, need) => rows.iterator
-        .filter(t => !chosenIds.contains(t._1))
-        .map(t => (md5Hex(s"$salt|pad:${t._1}"), t._1, t._2))
-        .toArray
-        .sortBy(t => (t._1, t._2))
-        .take(need)
-        .map(t => (t._2, t._3)).toSeq)
-  }
-
   /** At or below this row count [[fit]] collects the slim projection
-    * once and runs init + iterations driver-local — the [[graft.som.Som]]
-    * `localFitThreshold` pattern. A 2,000-row coarse-quantizer fit paid
-    * ~1 + iters Spark jobs of pure scheduler overhead (~50 ms each);
-    * the local twin is BIT-IDENTICAL by construction: its assignment
-    * passes, farthest-first included, run the distributed kernel itself
-    * ([[graft.plans.KmeansKernel.assignRows]], the array entry of
-    * [[graft.plans.KmeansKernel.assign]]),
-    * the same `VecScale9Kernel.scale9` per-element rounding, exact
-    * order-independent long sums, the same scale-9 HALF_UP division,
-    * and the same md5-hex init ordering (`KmeansSpec` pins
+    * once and runs init + iterations over the collected rows — the
+    * [[graft.som.Som]] `localFitThreshold` pattern. A 2,000-row
+    * coarse-quantizer fit paid ~1 + iters Spark jobs of pure scheduler
+    * overhead (~50 ms each). It is the same loop over the other form
+    * of [[Rows]], so the bits are the same (`KmeansSpec` pins
     * local == forced-distributed across all three init methods, and the
     * `kmeans_train_distributed` query keeps the distributed loop
     * oracle-gated at every SF). 65,536 x 64-dim rows collect to
     * ≤ ~34 MB — driver-trivial; pass 0 to force the distributed loop.
     */
   val localFitMaxRows = 65536L
-
-  /** Spark's `md5()` spelling (lowercase hex over UTF-8 bytes) for the
-    * local init's content-keyed ordering.
-    */
-  private def md5Hex(s: String): String = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val sb = new java.lang.StringBuilder(32)
-    var i = 0
-    while (i < d.length) {
-      sb.append(Character.forDigit((d(i) >> 4) & 0xF, 16))
-      sb.append(Character.forDigit(d(i) & 0xF, 16))
-      i += 1
-    }
-    sb.toString
-  }
-
-  /** Driver-local Lloyd's over collected rows — the exact twin of the
-    * distributed loop (see [[localFitMaxRows]]). `rows` must be sorted
-    * by id ascending (ties in the farthest-init argmax and the hash
-    * init resolve on id like the distributed orderBys).
-    */
-  private def fitLocal(rows: Array[(Long, Array[Double])], k: Int,
-                       iters: Int, salt: String, initMethod: String,
-                       scalableInit: Option[Array[Array[Double]]]): Model = {
-    require(rows.length >= k,
-      s"kmeans init needs >= $k non-null vectors, found ${rows.length}")
-    val dim = rows(0)._2.length
-    val n = rows.length
-    // the kernel's dimension guard, up front so no init work runs first
-    rows.foreach(r => if (r._2.length != dim)
-      throw new IllegalArgumentException(
-        s"Received ${r._2.length} features, expected $dim."))
-    val xs = rows.map(_._2)
-    // per-row kernel output, reused by every pass
-    val cid = new Array[Int](n)
-    val d2 = new Array[Double](n)
-    val c: Array[Array[Double]] = initMethod match {
-      case "scalable" => scalableInit.get
-      case "hash" =>
-        rows.map { case (id, v) => (md5Hex(s"$salt:$id"), id, v) }
-          .sortBy(t => (t._1, t._2)).take(k).map(_._3.clone())
-      case "farthest" =>
-        require(k <= farthestMaxK,
-          s"farthest-first init runs k-1 sequential full scans and is capped " +
-            s"at k <= $farthestMaxK; use initMethod='scalable' " +
-            s"(k-means||-style, O(rounds) scans) for k = $k")
-        val seed = rows.map { case (id, v) => (md5Hex(s"$salt:$id"), id, v) }
-          .minBy(t => (t._1, t._2))._3
-        val picked = scala.collection.mutable.ArrayBuffer[Array[Double]](seed.clone())
-        // running min-d2 to the picked set: IEEE min via strict < — the
-        // same VALUE the kernel's full-set argmin produces
-        val minD2 = new Array[Double](n)
-        KmeansKernel.assignRows(xs, seed, dim, cid, minD2)
-        while (picked.length < k) {
-          var bi = 0; var bv = minD2(0)
-          var i = 1
-          while (i < n) { // rows are id-ascending: strict > keeps the lowest id on ties
-            if (minD2(i) > bv) { bv = minD2(i); bi = i }
-            i += 1
-          }
-          val nxt = rows(bi)._2
-          picked += nxt.clone()
-          KmeansKernel.assignRows(xs, nxt, dim, cid, d2)
-          i = 0
-          while (i < n) {
-            if (d2(i) < minD2(i)) minD2(i) = d2(i)
-            i += 1
-          }
-        }
-        picked.toArray
-      case other => throw new IllegalArgumentException(
-        s"initMethod must be 'hash', 'farthest' or 'scalable', got '$other'")
-    }
-    // per-element scale-9 longs computed once (the cached __vl column)
-    val vl = rows.map(_._2.map(graft.plans.VecScale9Kernel.scale9))
-    var it = 0
-    while (it < iters) {
-      val sums = Array.ofDim[Long](k, dim)
-      val counts = new Array[Long](k)
-      KmeansKernel.assignRows(xs, Model(c).flat, dim, cid, d2)
-      var r = 0
-      while (r < n) {
-        val best = cid(r)
-        counts(best) += 1
-        val l = vl(r)
-        var d = 0
-        while (d < dim) { sums(best)(d) += l(d); d += 1 }
-        r += 1
-      }
-      var j = 0
-      while (j < k) {
-        if (counts(j) > 0) { // empty clusters keep their previous centroid
-          var d = 0
-          while (d < dim) {
-            c(j)(d) = java.math.BigDecimal.valueOf(sums(j)(d), 9)
-              .divide(java.math.BigDecimal.valueOf(counts(j)), 9,
-                java.math.RoundingMode.HALF_UP).doubleValue
-            d += 1
-          }
-        }
-        j += 1
-      }
-      it += 1
-    }
-    Model(c)
-  }
 
   /** `iters` Lloyd's iterations from the seeded init (`initMethod` =
     * "hash" for the md5-keyed sample, "farthest" for Gonzalez
@@ -668,11 +596,8 @@ object Kmeans {
     * previous centroid (the standard convention; the guard mirrors
     * `_merge_updates`' zero-denominator rule).
     *
-    * Inputs of at most `localMaxRows` rows dispatch to the driver-local
-    * twin ([[fitLocal]] — identical bits, see [[localFitMaxRows]]);
-    * the k-means|| init always runs distributed (its O(rounds) scans
-    * are the point of that path) with only the iteration loop going
-    * local.
+    * Inputs of at most `localMaxRows` rows run init and iterations over
+    * the collected rows (see [[localFitMaxRows]]).
     */
   def fit(df: DataFrame, vecCol: String, idCol: String, k: Int, iters: Int,
           salt: String = "km", initMethod: String = "hash",
@@ -692,73 +617,29 @@ object Kmeans {
       .withColumn("__vl", KmeansFunctions.vec_scale9(col("__v")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // ONE tiny CollectLimit probe decides the dispatch: a constant
-      // projection, so a LARGE input ships ≤ localMaxRows + 1 ints to
-      // the driver (never 65k vectors) and proceeds distributed; a
-      // small input pays one more cheap job to collect the real rows
-      val small = localMaxRows > 0 && {
-        val lim = (localMaxRows + 1).min(Int.MaxValue.toLong).toInt
-        data.select(lit(1).as("__one")).limit(lim).count() <= localMaxRows
-      }
-      if (small) {
-        val rows = data.select(col("__id"), col("__v")).collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-          .sortBy(_._1)
-        val scalableInit =
-          if (initMethod == "scalable")
-            // the rows are already collected (id-ascending) — run the
-            // init's driver-local twin directly, zero further jobs
-            // (defaults mirror initScalableCentroids' rounds/oversample)
-            Some(initScalableLocal(rows, k, salt, rounds = 5, oversample = -1))
-          else None
-        fitLocal(rows, k, iters, salt, initMethod, scalableInit)
-      } else {
-        val c = initMethod match {
-          case "farthest" => initFarthestCentroids(data, "__v", "__id", k, salt)
-          // localMaxRows = 0: this branch is either genuinely above the
-          // threshold or a forced-distributed caller — skip the probe
-          // job and keep the distributed rounds in both cases
-          case "scalable" =>
-            initScalableCentroids(data, "__v", "__id", k, salt,
-              localMaxRows = 0L)
-          case _ => initCentroids(data, "__v", "__id", k, salt)
+      val rows = rowsOf(data, localMaxRows)
+      val c = (initMethod match {
+        case "farthest" => farthestFirst(rows, k, salt)
+        case "scalable" => initScalableCentroids(rows, k, salt, 5, -1)
+        case _ => seededInit(rows, k, salt).map(_._2)
+      }).map(_.clone()) // updated in place below
+      val dim = c(0).length
+      // the per-iteration aggregate's reduce side is k buffers of
+      // (dim+1) longs — constant at any corpus scale. Run the loop on
+      // a child session with AQE off (its stage barrier costs one
+      // extra job per iteration and has nothing to adapt: the key
+      // space is ≤ k integers) and the exchange sized to that key
+      // space, never above the caller's default (LoopSession doc)
+      val loop = rows.onLoop(k)
+      var it = 0
+      while (it < iters) {
+        loop.clusterSums(Model(c).flat, dim).foreach { case (cid, s, n) =>
+          var d = 0
+          while (d < dim) { c(cid)(d) = VecScale9Kernel.mean9(s(d), n); d += 1 }
         }
-        val dim = c(0).length
-        // the per-iteration aggregate's reduce side is k buffers of
-        // (dim+1) longs — constant at any corpus scale. Run the loop on
-        // a child session with AQE off (its stage barrier costs one
-        // extra job per iteration and has nothing to adapt: the key
-        // space is ≤ k integers) and the exchange sized to that key
-        // space, never above the caller's default (LoopSession doc)
-        val dataLoop = LoopSession.rebase(data, k)
-        var it = 0
-        while (it < iters) {
-          val flat = Model(c).flat
-          val sums = dataLoop
-            .select(KmeansFunctions.kmeans_assign(col("__v"), flat, dim)
-              .getField("cid").as("cid"), col("__vl"))
-            .groupBy("cid")
-            .agg(KmeansFunctions.vec_sum_count(col("__vl"), dim).as("sc"))
-            .select(col("cid"), col("sc.sums"), col("sc.n"))
-            .collect()
-          sums.foreach { r =>
-            val cid = r.getInt(0)
-            val s = r.getSeq[Long](1)
-            val nn = r.getLong(2)
-            var d = 0
-            while (d < dim) {
-              // BigDecimal(unscaled, 9) / n at scale 9 HALF_UP — the same
-              // numbers the DECIMAL(28,9)-sum spelling produced
-              c(cid)(d) = java.math.BigDecimal.valueOf(s(d), 9)
-                .divide(java.math.BigDecimal.valueOf(nn), 9,
-                  java.math.RoundingMode.HALF_UP).doubleValue
-              d += 1
-            }
-          }
-          it += 1
-        }
-        Model(c)
+        it += 1
       }
+      Model(c)
     } finally { data.unpersist(); () }
   }
 
@@ -769,15 +650,9 @@ object Kmeans {
     */
   def assignSums(df: DataFrame, vecCol: String, idCol: String,
                  model: Model): Seq[(Int, Array[Long], Long)] =
-    slim(df, vecCol, idCol)
-      .select(KmeansFunctions.kmeans_assign(col("__v"), model.flat, model.dim)
-        .getField("cid").as("cid"),
-        KmeansFunctions.vec_scale9(col("__v")).as("__vl"))
-      .groupBy("cid")
-      .agg(KmeansFunctions.vec_sum_count(col("__vl"), model.dim).as("sc"))
-      .select(col("cid"), col("sc.sums"), col("sc.n"))
-      .collect().toSeq
-      .map(r => (r.getInt(0), r.getSeq[Long](1).toArray, r.getLong(2)))
+    sumsOf(slim(df, vecCol, idCol)
+        .withColumn("__vl", KmeansFunctions.vec_scale9(col("__v"))),
+      model.flat, model.dim)
 
   /** One assignment pass: (vec_id, cid, d2) for every non-null vector —
     * a single codegen scan, no shuffle.
@@ -880,9 +755,11 @@ object Kmeans {
               salt: String = "km"): DataFrame = {
     val model = fit(df, vecCol, idCol, kClusters, iters, salt)
     // assignment inline, ONE scan — the persisted-index deployment
-    // replaces this with a pruned read
-    topKAssigned(withCell(df, vecCol, idCol, model), model, "vec", "vec_id",
-      queries, k, nProbe)
+    // replaces this with a pruned read. The cell is bound once: the
+    // probed-cell isin would otherwise be pushed below the assigning
+    // projection and run kmeans_assign again per row
+    topKAssigned(Materialize.once(withCell(df, vecCol, idCol, model), "cid",
+      col("cid")), model, "vec", "vec_id", queries, k, nProbe)
   }
 
   /** The corpus beside its cell, (vec_id, vec, cid), in one scan. */

@@ -1,11 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.TextFunctions
-import graft.plans.{KmeansFunctions, LogitFunctions}
+import graft.plans.{KmeansFunctions, LogitFunctions, LogitKernel, VecScale9Kernel, VecSumCount}
 
 /** Distributed TRAINING of the linear quality classifier whose
   * inference twin is [[Corpus.qualityLogit]] — full-batch gradient
@@ -40,7 +41,10 @@ import graft.plans.{KmeansFunctions, LogitFunctions}
   *    identically (see [[graft.plans.LogitKernel]]);
   *  - gradient/residual sums accumulate as exact scale-9 longs
   *    (order-independent, partitioning-invariant); the mean divides at
-  *    scale 9 HALF_UP; weight init is all-zero.
+  *    scale 9 HALF_UP; weight init is all-zero;
+  *  - one loop runs over two row sources: the cached feature frame, or
+  *    (at most [[localTrainMaxRows]] rows) the same features collected,
+  *    where each row goes through the same kernel and buffer add.
   */
 object LogitTrain {
 
@@ -100,55 +104,27 @@ object LogitTrain {
   def applyStep(w: Array[Double], sums: Seq[Long], n: Long,
                 lr: Double): (Array[Double], Double) = {
     require(n > 0, "cannot apply a logit update from an empty pass")
-    def mean9(unscaled: Long): Double =
-      java.math.BigDecimal.valueOf(unscaled, 9)
-        .divide(java.math.BigDecimal.valueOf(n), 9,
-          java.math.RoundingMode.HALF_UP).doubleValue
     val w2 = new Array[Double](dim)
     var j = 0
-    while (j < dim) { w2(j) = w(j) - lr * mean9(sums(j)); j += 1 }
-    (w2, mean9(sums(dim)))
+    while (j < dim) { w2(j) = w(j) - lr * VecScale9Kernel.mean9(sums(j), n); j += 1 }
+    (w2, VecScale9Kernel.mean9(sums(dim), n))
   }
 
   /** Above this row count the iteration loop stays distributed; at or
     * below it the features collect once and the remaining iterations
-    * run driver-local. A labeled training sample this small pays more
-    * per iteration in job scheduling (one full Spark job per GD step)
-    * than in arithmetic — 150 iterations over a few thousand rows is
-    * ~150 x ~40 ms of pure driver/scheduler overhead — and the local
-    * loop is BIT-IDENTICAL by construction: the per-row contribution is
-    * the same sequential IEEE arithmetic as [[graft.plans.LogitGrad]]
-    * (same scale-9 rounding), and the scale-9 long sums are exact and
-    * order-independent, so summing driver-side instead of per-partition
-    * cannot change a single bit (`LogitTrainSpec` pins the equality).
-    * At 65,536 rows the collected features are ≤ ~3 MB — driver-trivial.
+    * run over the collected rows. A labeled training sample this small
+    * pays more per iteration in job scheduling (one full Spark job per
+    * GD step) than in arithmetic — 150 iterations over a few thousand
+    * rows is ~150 x ~40 ms of pure driver/scheduler overhead. It is the
+    * same loop over the other row source: each collected row goes
+    * through [[graft.plans.LogitKernel.grad]], the kernel of
+    * [[graft.plans.LogitGrad]], into one [[graft.plans.VecSumCount]]
+    * buffer with the aggregate's own add, and the scale-9 long sums are
+    * exact and order-independent, so the bits are the same
+    * (`LogitSpec` pins the equality). At 65,536 rows the collected
+    * features are ≤ ~3 MB — driver-trivial.
     */
   val localTrainMaxRows = 65536L
-
-  /** The driver-local twin of [[gradSums]]: identical per-row
-    * arithmetic ([[graft.plans.LogitKernel.grad]]'s spelled-out loop),
-    * identical exact long sums.
-    */
-  private def gradSumsLocal(xs: Array[Array[Double]], ys: Array[Double],
-                            w: Array[Double]): Array[Long] = {
-    val sums = new Array[Long](dim + 1)
-    var rIdx = 0
-    while (rIdx < xs.length) {
-      val x = xs(rIdx)
-      var z = 0.0
-      var i = 0
-      while (i < dim) { z += w(i) * x(i); i += 1 }
-      val p = 0.5 * (1.0 + z / (1.0 + math.abs(z)))
-      val r = p - ys(rIdx)
-      i = 0
-      while (i < dim) {
-        sums(i) += graft.plans.VecScale9Kernel.scale9(r * x(i)); i += 1
-      }
-      sums(dim) += graft.plans.VecScale9Kernel.scale9(r * r)
-      rIdx += 1
-    }
-    sums
-  }
 
   /** `iters` full-batch gradient steps from the all-zero init over a
     * `(x, y)` feature frame (the input is cached here and released
@@ -157,9 +133,10 @@ object LogitTrain {
     *
     * The FIRST iteration always runs distributed (it establishes `n`
     * with no extra job); when `n <= localMaxRows` the features collect
-    * once and the remaining iterations run driver-local — same bits,
-    * see [[localTrainMaxRows]]. Pass `localMaxRows = 0` to force every
-    * iteration distributed (the spec uses it to pin the equality).
+    * once and the remaining iterations run over the collected rows —
+    * same bits, see [[localTrainMaxRows]]. Pass `localMaxRows = 0` to
+    * force every iteration distributed (the spec uses it to pin the
+    * equality).
     */
   def train(feats: DataFrame, iters: Int, lr: Double,
             localMaxRows: Long = localTrainMaxRows): Model = {
@@ -180,20 +157,29 @@ object LogitTrain {
       var mse = Double.NaN
       var n = 0L
       var it = 0
-      var local: Option[(Array[Array[Double]], Array[Double])] = None
+      var local: Option[(Array[ArrayData], Array[Double])] = None
       while (it < iters) {
-        val (s, nn) = local match {
-          case Some((xs, ys)) => (gradSumsLocal(xs, ys, w).toSeq, n)
+        val s = local match {
+          case Some((xs, ys)) =>
+            // the gradSums aggregate over the collected rows
+            val buf = new Array[Long](dim + 2)
+            var r = 0
+            while (r < xs.length) {
+              VecSumCount.add(buf, LogitKernel.grad(xs(r), ys(r), w), dim + 1)
+              r += 1
+            }
+            buf.take(dim + 1).toSeq
           case None =>
             val (sd, nd) = gradSums(dataLoop, w)
             require(nd > 0, "cannot train a logit model on an empty dataset")
             n = nd
             if (n <= localMaxRows && it + 1 < iters) {
               val rows = data.collect()
-              local = Some((rows.map(_.getSeq[Double](0).toArray),
+              local = Some((
+                rows.map(r => ArrayData.toArrayData(r.getSeq[Double](0).toArray)),
                 rows.map(_.getDouble(1))))
             }
-            (sd, nd)
+            sd
         }
         val (w2, m) = applyStep(w, s, n, lr)
         mse = m

@@ -365,8 +365,10 @@ object Similarity {
               epochs: Int = 3, seed: Long = 42): DataFrame = {
     val model = new Som(SomConfig(gridX, gridY, seed = seed))
       .fit(df, vecCol, numEpochs = epochs)
-    somTopKAssigned(model.withBmu(df, vecCol), model, vecCol, idCol,
-      queries, k, nProbe)
+    // the cell is bound once: the probed-cell isin would otherwise be
+    // pushed below the assigning projection and run som_bmu again per row
+    somTopKAssigned(Materialize.once(model.withBmu(df, vecCol), "bmu_id",
+      col("bmu_id")), model, vecCol, idCol, queries, k, nProbe)
   }
 
   /** The repeated-query half of the IVF path: build the index ONCE with

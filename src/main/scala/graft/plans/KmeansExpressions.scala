@@ -222,6 +222,16 @@ object VecScale9Kernel {
     }
   }
 
+  /** The mean of `n` values whose exact scale-9 sum is `unscaled`:
+    * `unscaled · 10⁻⁹ / n` at scale 9 HALF_UP, as a double — the update
+    * every exact-sum loop (Lloyd's, incremental k-means, logit GD)
+    * applies to its [[VecSumCount]] sums.
+    */
+  def mean9(unscaled: Long, n: Long): Double =
+    java.math.BigDecimal.valueOf(unscaled, 9)
+      .divide(java.math.BigDecimal.valueOf(n), 9,
+        java.math.RoundingMode.HALF_UP).doubleValue
+
   def scaleArray(v: ArrayData, isFloat: Boolean): ArrayData = {
     val n = v.numElements()
     val out = new Array[Long](n)
@@ -396,15 +406,7 @@ case class VecSumCount(
 
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val v = vec.eval(input)
-    if (v != null) {
-      val a = v.asInstanceOf[ArrayData]
-      if (a.numElements() != dim)
-        throw new IllegalArgumentException(
-          s"Received ${a.numElements()} features, expected $dim.")
-      var i = 0
-      while (i < dim) { buf(i) = Math.addExact(buf(i), a.getLong(i)); i += 1 }
-      buf(dim) = Math.addExact(buf(dim), 1L)
-    }
+    if (v != null) VecSumCount.add(buf, v.asInstanceOf[ArrayData], dim)
     buf
   }
 
@@ -440,6 +442,22 @@ case class VecSumCount(
       newChildren: IndexedSeq[Expression]): VecSumCount =
     copy(vec = newChildren(0))
   override def prettyName: String = "vec_sum_count"
+}
+
+object VecSumCount {
+  /** One row into a [[VecSumCount]] buffer: the `dim` longs of `a` onto
+    * the sums and 1 onto the count, each with `Math.addExact`. The
+    * aggregate's update and the driver-local loops over collected rows
+    * both call it, so their sums agree and both throw on overflow.
+    */
+  def add(buf: Array[Long], a: ArrayData, dim: Int): Unit = {
+    if (a.numElements() != dim)
+      throw new IllegalArgumentException(
+        s"Received ${a.numElements()} features, expected $dim.")
+    var i = 0
+    while (i < dim) { buf(i) = Math.addExact(buf(i), a.getLong(i)); i += 1 }
+    buf(dim) = Math.addExact(buf(dim), 1L)
+  }
 }
 
 object KmeansFunctions {

@@ -401,9 +401,8 @@ object StreamingSom {
               counts(cid) = Math.addExact(counts(cid), n)
               d = 0
               while (d < initial.dim) {
-                next(cid)(d) = java.math.BigDecimal.valueOf(sums(cid)(d), 9)
-                  .divide(java.math.BigDecimal.valueOf(counts(cid)), 9,
-                    java.math.RoundingMode.HALF_UP).doubleValue
+                next(cid)(d) = graft.plans.VecScale9Kernel.mean9(sums(cid)(d),
+                  counts(cid))
                 d += 1
               }
             }

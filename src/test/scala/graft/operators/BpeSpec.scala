@@ -29,10 +29,20 @@ class BpeSpec extends SparkSpec {
       case Nil => Nil
     }
 
+  // one symbol per code point (a surrogate pair is one character)
+  private def naiveSymbols(word: String): List[String] =
+    word.codePoints.toArray.toList.map(cp => new String(Character.toChars(cp)))
+
+  // unsigned UTF-8 byte order — code-point order, unlike String's
+  // UTF-16 code-unit order
+  private val byteOrder: Ordering[String] =
+    Ordering.by[String, Seq[Int]](_.getBytes("UTF-8").toSeq.map(_ & 0xff))(
+      Ordering.Implicits.seqOrdering)
+
   private def naiveTrain(wc: Map[String, Long], numMerges: Int,
                          minPair: Long = 2L): Seq[(Int, String, String, Long)] = {
     var words: Map[String, (List[String], Long)] =
-      wc.map { case (w, n) => w -> (w.toList.map(_.toString) :+ "</w>", n) }
+      wc.map { case (w, n) => w -> (naiveSymbols(w) :+ "</w>", n) }
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
     var rank = 1
     var done = false
@@ -43,7 +53,8 @@ class BpeSpec extends SparkSpec {
       }
       if (pairs.isEmpty) done = true
       else {
-        val ((l, r), n) = pairs.minBy { case ((l, r), n) => (-n, l, r) }
+        val ((l, r), n) = pairs.minBy { case ((l, r), n) => (-n, l, r) }(
+          Ordering.Tuple3(Ordering.Long, byteOrder, byteOrder))
         if (n < minPair) done = true
         else {
           merges += ((rank, l, r, n))
@@ -58,7 +69,7 @@ class BpeSpec extends SparkSpec {
   }
 
   private def naiveEncode(word: String, ranks: Map[(String, String), Int]): List[String] = {
-    var syms = word.toList.map(_.toString) :+ "</w>"
+    var syms = naiveSymbols(word) :+ "</w>"
     var done = false
     while (!done && syms.length > 1) {
       val cands = syms.zip(syms.tail).flatMap(p => ranks.get(p).map(p -> _))
@@ -177,6 +188,25 @@ class BpeSpec extends SparkSpec {
     expStats.foreach { case (id, (nTok, nSub)) =>
       assert(gotStats(id) == ((nTok, nSub)), s"doc $id")
     }
+  }
+
+  test("merge ties break in UTF-8 byte order: supplementary vs U+E000 symbols, local == distributed == naive") {
+    // (x, U+E000) and (x, U+1F600) tie on count and left symbol; byte
+    // (code-point) order ranks U+E000 first, UTF-16 code-unit order
+    // (String.compareTo: surrogate 0xD83D < 0xE000) ranks U+1F600 first
+    val pua = "\uE000"
+    val emoji = new String(Character.toChars(0x1F600))
+    val words = Seq.fill(2)("x" + emoji) ++ Seq.fill(2)("x" + pua)
+    val df = Seq((0L, words.mkString(" "))).toDF("doc_id", "text")
+    val exp = naiveTrain(words.groupBy(identity).map { case (w, xs) =>
+      w -> xs.size.toLong }, numMerges = 4)
+    assert(exp.head == ((1, "x", pua, 2L)), s"naive order: $exp")
+    def merges(localThreshold: Long) =
+      Bpe.trainMerges(df, "text", numMerges = 4, localThreshold = localThreshold)
+        .orderBy("rank").collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
+    assert(merges(Bpe.localVocabThreshold) == exp, "driver-local merge loop")
+    assert(merges(0L) == exp, "distributed merge loop")
   }
 
   test("trainMerges is partitioning-invariant") {

@@ -72,19 +72,31 @@ class KmeansSpec extends SparkSpec {
   }
 
   test("driver-local fast path == forced-distributed fit, bit-for-bit, all inits") {
-    val (_, df) = synth(220, 5, parts = 7)
-    for (init <- Seq("hash", "farthest", "scalable")) {
-      // default dispatch takes the local twin at 220 rows;
-      // localMaxRows = 0 forces the distributed loop — identical bits
-      val loc = Kmeans.fit(df, "embedding", "vec_id", k = 5, iters = 4,
-        salt = "lp", initMethod = init)
-      val dist = Kmeans.fit(df, "embedding", "vec_id", k = 5, iters = 4,
-        salt = "lp", initMethod = init, localMaxRows = 0L)
-      for (j <- 0 until 5)
-        assert(loc.centroids(j).sameElements(dist.centroids(j)),
-          s"init=$init centroid $j diverges between local and distributed")
+    // k = 5 takes the per-centroid kernel loop; k = 24 (>= sweepMinK)
+    // the centroid-wide sweep, which farthest-first's running min over
+    // the collected rows must match against the full-set scans
+    assert(24 >= graft.plans.KmeansKernel.sweepMinK)
+    for ((n, dim, k) <- Seq((220, 5, 5), (360, 6, 24))) {
+      val (_, df) = synth(n, dim, parts = 7)
+      for (init <- Seq("hash", "farthest", "scalable")) {
+        // default dispatch takes the collected rows at this size;
+        // localMaxRows = 0 forces the distributed loop — identical bits
+        val loc = Kmeans.fit(df, "embedding", "vec_id", k = k, iters = 4,
+          salt = "lp", initMethod = init)
+        val dist = Kmeans.fit(df, "embedding", "vec_id", k = k, iters = 4,
+          salt = "lp", initMethod = init, localMaxRows = 0L)
+        for (j <- 0 until k)
+          assert(loc.centroids(j).sameElements(dist.centroids(j)),
+            s"k=$k init=$init centroid $j diverges between local and distributed")
+      }
     }
   }
+
+  /** The k-means‖ init alone through the forced-distributed rounds. */
+  private def scalableDistributed(df: org.apache.spark.sql.DataFrame, k: Int,
+                                  salt: String): Array[Array[Double]] =
+    Kmeans.fit(df, "embedding", "vec_id", k = k, iters = 0, salt = salt,
+      initMethod = "scalable", localMaxRows = 0L).centroids
 
   test("scalable init: driver-local twin == forced-distributed rounds, bit-for-bit") {
     // large enough that every oversampling round selects candidates and
@@ -92,8 +104,7 @@ class KmeansSpec extends SparkSpec {
     val (_, df) = synth(600, 6, parts = 9)
     val loc = Kmeans.initScalableCentroids(df, "embedding", "vec_id",
       k = 24, salt = "sc")
-    val dist = Kmeans.initScalableCentroids(df, "embedding", "vec_id",
-      k = 24, salt = "sc", localMaxRows = 0L)
+    val dist = scalableDistributed(df, k = 24, salt = "sc")
     assert(loc.length == 24 && dist.length == 24)
     for (j <- 0 until 24)
       assert(loc(j).sameElements(dist(j)),
@@ -109,8 +120,7 @@ class KmeansSpec extends SparkSpec {
       .repartition(3)
     val loc = Kmeans.initScalableCentroids(df, "embedding", "vec_id",
       k = 6, salt = "pd")
-    val dist = Kmeans.initScalableCentroids(df, "embedding", "vec_id",
-      k = 6, salt = "pd", localMaxRows = 0L)
+    val dist = scalableDistributed(df, k = 6, salt = "pd")
     assert(loc.length == 6 && dist.length == 6)
     for (j <- 0 until 6)
       assert(loc(j).sameElements(dist(j)),
@@ -148,8 +158,7 @@ class KmeansSpec extends SparkSpec {
       // scalable start is the distributed rounds' own
       val start =
         if (init == "scalable")
-          Some(Kmeans.initScalableCentroids(df, "embedding", "vec_id",
-            k = 24, salt = "sw", localMaxRows = 0L))
+          Some(scalableDistributed(df, k = 24, salt = "sw"))
         else None
       val exp = naiveFit(rows, k = 24, iters = 4, salt = "sw", initC = start)
       for (j <- 0 until 24) {
@@ -339,6 +348,28 @@ class KmeansSpec extends SparkSpec {
       Kmeans.qualityDf(one, "embedding", "vec_id",
         Kmeans.Model(Array(Array(5.0))))
     }
+  }
+
+  test("inline IVF paths name their quantizer kernel once in the executed plan") {
+    // a file-backed corpus, like the ann_* queries: the probed-cell isin
+    // must not be pushed below the assigning projection, where it would
+    // evaluate the kernel again per row (in the scan filter and its
+    // isnotnull twin)
+    val (rows, df0) = synth(200, 8, parts = 3)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivfinline_").toString
+    try {
+      df0.write.parquet(s"$dir/emb")
+      val df = spark.read.parquet(s"$dir/emb")
+      val qs = rows.take(2)
+      def named(kernel: String, out: org.apache.spark.sql.DataFrame): Int =
+        s"\\b$kernel\\(".r.findAllIn(out.queryExecution.executedPlan.toString).length
+      val som = Similarity.somTopK(df, "embedding", "vec_id", qs, k = 5,
+        gridX = 2, gridY = 2, nProbe = 2, epochs = 1)
+      assert(named("som_bmu", som) == 1, som.queryExecution.executedPlan.toString)
+      val km = Kmeans.ivfTopK(df, "embedding", "vec_id", qs, k = 5,
+        kClusters = 4, iters = 1, nProbe = 2)
+      assert(named("kmeans_assign", km) == 1, km.queryExecution.executedPlan.toString)
+    } finally graft.BenchData.deleteRecursively(dir)
   }
 
   test("partitioned index serves identically to inline ivfTopK and PRUNES to probed cells") {
