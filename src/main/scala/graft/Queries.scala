@@ -1819,7 +1819,7 @@ object Queries {
 
       // the SAME fit with the driver-local small-input fast path
       // disabled (localMaxRows = 0): keeps the DISTRIBUTED iteration
-      // loop (codegen assignment kernel + VecSumCount exchange)
+      // loop (block kernels over the cached partitions, exact merges)
       // oracle-gated at every SF now that the tiny-corpus default
       // dispatches locally — the som_train_distributed convention;
       // byte-identical output to kmeans_centroids is the contract

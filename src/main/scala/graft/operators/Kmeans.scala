@@ -1,7 +1,11 @@
 package graft.operators
 
+import scala.reflect.ClassTag
+
 import org.apache.commons.codec.digest.DigestUtils
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -15,21 +19,27 @@ import graft.plans.{HashKernels, KmeansFunctions, KmeansKernel, VecScale9Kernel,
   * role, no neighborhood smoothing, the clustering everyone reaches
   * for first.
   *
-  * Scale shape (per iteration, over a cached slim `(id, vec)`
-  * projection):
-  *  - assignment is the [[graft.plans.KmeansAssign]] codegen kernel —
-  *    the centroid table rides in the expression (broadcast-sized:
-  *    k x dim doubles), no join, no shuffle;
-  *  - the update is the [[graft.plans.VecSumCount]] partial aggregate
-  *    over pre-scaled long vectors ([[graft.plans.VecScale9]], computed
-  *    once before the loop): every partition reduces to <= k buffers of
-  *    (dim + 1) longs BEFORE the exchange, so the shuffle is
-  *    centroid-table-shaped, never data-shaped, and iterations pay no
+  * Scale shape: the slim `(id, vec)` projection is read ONCE into one
+  * cached [[Block]] per input partition (ids, vectors as doubles, and
+  * their scale-9 longs: ~1.1 KB per 64-dim row), so one partition's
+  * block must fit in a task's memory. Every step of the loop — the
+  * seeded init, farthest-first, the k-means‖ rounds, Lloyd's update —
+  * is one block kernel mapped over the cached blocks and a merge of
+  * the per-block results on the driver: the reference's
+  * map-over-Dask-blocks-and-sum shape (`xpysom.py:545-558`), one Spark
+  * job per step with no codegen and no query planning. No rows are
+  * shuffled; from six partitions on, `treeReduce` adds one level
+  * that exchanges per-partition buffers.
+  *  - assignment is [[graft.plans.KmeansKernel.assignRows]], the entry
+  *    of the kernel the `kmeans_assign` expression calls;
+  *  - the update adds each block's pre-scaled longs into k buffers of
+  *    (dim + 1) longs ([[graft.plans.VecSumCount.add]]), merged with
+  *    `Math.addExact` through `treeReduce` — the result is
+  *    centroid-table-shaped at any corpus size, and iterations pay no
   *    per-element decimal work;
-  *  - k x dim (sum, count) rows collect to the driver (bounded by
-  *    construction), which forms the next centroid table.
+  *  - the driver divides the exact sums into the next centroid table.
   * At 100 TB the standard deployment trains on a sampled fraction and
-  * runs ONE full assignment pass — both are these same two kernels.
+  * runs ONE full assignment pass ([[assign]], the codegen kernel).
   *
   * Determinism (the correctness contract):
   *  - init is content-keyed: the k rows with the smallest
@@ -48,10 +58,14 @@ import graft.plans.{HashKernels, KmeansFunctions, KmeansKernel, VecScale9Kernel,
   *  - the k-means‖ φ terms and selection threshold round d² to 9
   *    decimals with `VecScale9Kernel.scale9` — the DECIMAL(38,9) value
   *    `round(d², 9)` casts to, and the one the oracle uses;
-  *  - one loop runs over two row sources ([[Rows]]): the cached slim
-  *    frame, or (at most [[localFitMaxRows]] rows) the same rows
-  *    collected, where each step calls the distributed kernel's own
-  *    entry — so both give the same bits by construction.
+  *  - every merge of per-block results is exact (long and BigInteger
+  *    sums, IEEE min) or lexicographic (`(md5, id)`, `(d², id)`,
+  *    ascending id), so neither the partitioning nor the arrival order
+  *    of the partials can change a bit;
+  *  - one loop runs over two forms of the blocks ([[Parts]]): cached
+  *    per partition, or (at most [[localFitMaxRows]] rows) collected into
+  *    one block on the driver — the same kernels and merges over one
+  *    block, so both give the same bits by construction.
   */
 object Kmeans {
 
@@ -77,283 +91,257 @@ object Kmeans {
       .select(col(idCol).cast("long").as("__id"),
         col(vecCol).cast("array<double>").as("__v"))
 
-  /** The rows a k-means loop runs over. Lloyd's, farthest-first and the
-    * k-means‖ rounds are each written once, against this, and it comes
-    * in two forms:
-    *  - [[Distributed]]: the slim `(__id, __v[, __vl])` frame; every
-    *    step is a Spark job over the codegen kernels;
-    *  - [[Local]]: the same rows collected and id-sorted; every step
-    *    calls the same kernels' own entries on the driver
-    *    ([[KmeansKernel.assignRows]], `VecScale9Kernel.scaleArray`, the
-    *    [[graft.plans.VecSumCount]] buffer add, `md5PrefixLong`, and
-    *    `DigestUtils.md5Hex`, the call Spark's `md5` makes).
-    * So both forms give the same bits by construction.
+  /** One partition's rows sorted by id (ties keep their input order):
+    * the ids, the vectors, and — when the loop sums them — each
+    * vector's scale-9 longs ([[VecScale9Kernel.scaleArray]]), computed
+    * once, when the block is built. Immutable: the kernels below return
+    * new state and never write into a (possibly cached) block.
     */
-  private sealed trait Rows {
-    /** Up to `n` (id, vector) rows in `(md5(salt:id), id)` order, ids
-      * in `skip` left out.
+  private final class Block(val ids: Array[Long], val xs: Array[Array[Double]],
+                            val scaled: Array[ArrayData]) extends Serializable {
+    def size: Int = ids.length
+
+    /** Up to `n` rows in `(md5(salt:id), id)` order, ids in `skip` left
+      * out, each with its md5 hex (the merge key). `md5Hex` is the call
+      * Spark's `md5` makes.
       */
     def seeded(n: Int, salt: String,
-               skip: Set[Long] = Set.empty): Array[(Long, Array[Double])]
-    /** The vector farthest from the set `picked` (largest min d², ties to
-      * the lowest id). Called with one growing set per init.
-      */
-    def farthest(picked: Seq[Array[Double]], dim: Int): Array[Double]
-    /** These rows for a loop whose aggregates have `keySpace` reduce
-      * keys ([[LoopSession]]).
-      */
-    def onLoop(keySpace: Int): Rows
-    /** Lloyd's update sums under the table `flat`: (cid, exact scale-9
-      * per-dimension sums, count) for every cluster with members.
-      */
-    def clusterSums(flat: Array[Double], dim: Int): Seq[(Int, Array[Long], Long)]
-    /** The k-means‖ running state, started against the one-row table
-      * `seed`.
-      */
-    def running(seed: Array[Double], dim: Int): Running
-  }
+               skip: Set[Long]): Array[(String, Long, Array[Double])] =
+      ids.indices.filterNot(i => skip.contains(ids(i)))
+        .map(i => (DigestUtils.md5Hex(s"$salt:${ids(i)}"), i))
+        .sortBy { case (h, i) => (h, ids(i)) }
+        .take(n).map { case (h, i) => (h, ids(i), xs(i)) }.toArray
 
-  /** Per row, the min d² to the k-means‖ candidates so far and that
-    * candidate's index; `phi` is Σ round9(min d²), exact.
-    */
-  private trait Running {
-    def phi: Double
-    /** Round `r`'s draws, (id, vector) by ascending id: the rows with
+    /** Each row's nearest centroid of the table `flat` and its d². */
+    def near(flat: Array[Double], dim: Int): Near = {
+      val cid = new Array[Int](size)
+      val d2 = new Array[Double](size)
+      KmeansKernel.assignRows(xs, flat, dim, cid, d2)
+      Near(d2, cid)
+    }
+
+    /** `s` with the candidates `flat`, indexed from `baseIdx`, folded in:
+      * strict <, so ties keep the lower index — the same min and argmin
+      * as one assignment over every candidate so far (IEEE min is
+      * exact, and the kernel computes each centroid's d² alone).
+      */
+    def fold(s: Near, flat: Array[Double], dim: Int, baseIdx: Int): Near = {
+      val now = near(flat, dim)
+      val md2 = s.md2.clone()
+      val cid = s.cid.clone()
+      var i = 0
+      while (i < size) {
+        if (now.md2(i) < md2(i)) { md2(i) = now.md2(i); cid(i) = now.cid(i) + baseIdx }
+        i += 1
+      }
+      Near(md2, cid)
+    }
+
+    /** The row with the largest min d² under `s`, ties to the lowest id;
+      * None for an empty block.
+      */
+    def farthest(s: Near): Option[(Double, Long, Array[Double])] =
+      if (size == 0) None
+      else {
+        // ids ascend, so strict > keeps the lowest id on ties
+        var bi = 0
+        var i = 1
+        while (i < size) { if (s.md2(i) > s.md2(bi)) bi = i; i += 1 }
+        Some((s.md2(bi), ids(bi), xs(bi)))
+      }
+
+    /** k-means‖ round `r`'s draws, by ascending id: the rows with
       * `u < ell · round9(min d²) / phi`, `u` the md5-uniform
       * `(md5_prefix_long("salt|sc<r>:id", 13) + 0.5) / 2^52`.
       */
-    def draw(r: Int, salt: String, ell: Int): Array[(Long, Array[Double])]
-    /** Folds the candidates `newFlat`, indexed from `baseIdx`, into the
-      * running min (strict <, so ties keep the lower index) and
-      * updates `phi`.
+    def draw(s: Near, r: Int, salt: String, ell: Int,
+             phi: Double): Array[(Long, Array[Double])] =
+      ids.indices.filter { i =>
+        val u = (HashKernels.md5PrefixLong(
+            UTF8String.fromString(s"$salt|sc$r:${ids(i)}"), 13).toDouble + 0.5) /
+          4503599627370496.0 // 2^52
+        u < ell.toDouble *
+          java.math.BigDecimal.valueOf(VecScale9Kernel.scale9(s.md2(i)), 9).doubleValue / phi
+      }.map(i => (ids(i), xs(i))).toArray
+
+    /** Lloyd's update partials under the table `flat`: per cluster, the
+      * exact scale-9 per-dimension sums and the member count, as k
+      * [[VecSumCount]] buffers of `dim + 1` longs.
       */
-    def merge(newFlat: Array[Double], baseIdx: Int): Unit
-    /** Rows per candidate index; releases the state. */
-    def weights(nCand: Int): Int => Long
-  }
-
-  private final class Distributed(data: DataFrame) extends Rows {
-    private def rows(df: DataFrame): Array[(Long, Array[Double])] =
-      df.collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-
-    def seeded(n: Int, salt: String, skip: Set[Long]): Array[(Long, Array[Double])] = {
-      val vecs = data.select(col("__id"), col("__v"))
-      // a TakeOrderedAndProject: per-partition top-n, n rows collected
-      rows((if (skip.isEmpty) vecs else vecs.where(!col("__id").isin(skip.toSeq: _*)))
-        .withColumn("__h", md5(concat_ws(":", lit(salt), col("__id"))))
-        .orderBy(col("__h"), col("__id"))
-        .limit(n))
-    }
-
-    // the min distance to the set IS the assignment kernel's d2
-    def farthest(picked: Seq[Array[Double]], dim: Int): Array[Double] = {
-      val next = data
-        .select(col("__id"), col("__v"),
-          KmeansFunctions.kmeans_assign(col("__v"), Model(picked.toArray).flat, dim)
-            .getField("d2").as("d2"))
-        .orderBy(col("d2").desc, col("__id").asc)
-        .limit(1).collect()
-      require(next.nonEmpty, s"kmeans farthest init needs >= 1 vector")
-      next(0).getSeq[Double](1).toArray
-    }
-
-    def onLoop(keySpace: Int): Rows =
-      new Distributed(LoopSession.rebase(data, keySpace))
-
-    def clusterSums(flat: Array[Double], dim: Int): Seq[(Int, Array[Long], Long)] =
-      sumsOf(data, flat, dim)
-
-    def running(seed: Array[Double], dim: Int): Running = new Running {
-      private val mem = StorageLevel.MEMORY_AND_DISK
-      // round9(md2) as DECIMAL(38,9) straight from scale9: the value
-      // round(md2, 9).cast(DECIMAL(38,9)) spells through two decimal
-      // strings per row
-      private val md29 = KmeansFunctions.dec_scale9(col("__md2"))
-      // φ (exact order-independent sum of the scale-9 running-min grid)
-      // doubles as the persist's materializing action: ONE pass both
-      // caches the new state and returns the next round's threshold
-      // denominator
-      private def phiOf(df: DataFrame): Double = {
-        val phiRow = df.select(sum(md29).as("phi")).collect()(0)
-        if (phiRow.isNullAt(0)) 0.0 else phiRow.getDecimal(0).doubleValue()
-      }
-      // (__id, __v, __md2, __cid); Materialize.once pins the assign
-      // struct to one evaluation, as both merge branches read it
-      private var state = Materialize.once(data, "__na",
-          KmeansFunctions.kmeans_assign(col("__v"), seed, dim))
-        .select(col("__id"), col("__v"), col("__na.d2").as("__md2"),
-          lit(0).as("__cid"))
-        .persist(mem)
-      // φ only changes with the state, so it is carried between rounds:
-      // a round without new candidates costs no job
-      var phi: Double = phiOf(state)
-
-      def draw(r: Int, salt: String, ell: Int): Array[(Long, Array[Double])] = {
-        // fused md5-prefix kernel — same bits as the
-        // conv(substring(md5(..),1,13),16,10) spelling the oracle replays
-        val u = (graft.plans.GraftFunctions.md5_prefix_long(
-            concat_ws(":", lit(s"$salt|sc$r"), col("__id")), 13)
-          .cast("double") + 0.5) / lit(4503599627370496.0) // 2^52
-        // collected unsorted and sorted on the driver: an orderBy would
-        // add a range-partitioning exchange for ~ell rows
-        rows(state.where(u < lit(ell.toDouble) * md29.cast("double") / lit(phi))
-            .select(col("__id"), col("__v")))
-          .sortBy(_._1)
-      }
-
-      def merge(newFlat: Array[Double], baseIdx: Int): Unit = {
-        val next = Materialize.once(state, "__na",
-            KmeansFunctions.kmeans_assign(col("__v"), newFlat, dim))
-          .select(col("__id"), col("__v"),
-            when(col("__na.d2") < col("__md2"), col("__na.d2"))
-              .otherwise(col("__md2")).as("__md2"),
-            when(col("__na.d2") < col("__md2"), col("__na.cid") + lit(baseIdx))
-              .otherwise(col("__cid")).as("__cid"))
-          .persist(mem)
-        phi = phiOf(next) // materializes the persist AND updates φ
-        state.unpersist(blocking = false)
-        state = next
-      }
-
-      // the key space is nCand cids, so the exchange is sized to that,
-      // not to the φ rounds' single partition
-      def weights(nCand: Int): Int => Long = {
-        val w = LoopSession.rebase(state, nCand)
-          .groupBy("__cid").agg(count(lit(1)).as("n"))
-          .collect().map(row => row.getInt(0) -> row.getLong(1)).toMap
-        state.unpersist(blocking = false)
-        j => w.getOrElse(j, 0L)
-      }
-    }
-  }
-
-  private final class Local(ids: Array[Long], xs: Array[Array[Double]]) extends Rows {
-    private val n = ids.length
-    private def md5Uniform(s: String): Double =
-      (HashKernels.md5PrefixLong(UTF8String.fromString(s), 13).toDouble + 0.5) /
-        4503599627370496.0 // 2^52
-
-    def seeded(count: Int, salt: String, skip: Set[Long]): Array[(Long, Array[Double])] =
-      (0 until n).filterNot(i => skip.contains(ids(i)))
-        .map(i => (DigestUtils.md5Hex(s"$salt:${ids(i)}"), i))
-        .sortBy { case (h, i) => (h, ids(i)) }
-        .take(count).map { case (_, i) => (ids(i), xs(i)) }.toArray
-
-    // running min d² over the centroids folded in so far
-    private var minD2: Array[Double] = _
-    private var folded = 0
-
-    def farthest(picked: Seq[Array[Double]], dim: Int): Array[Double] = {
-      val cid = new Array[Int](n)
-      val d2 = new Array[Double](n)
-      KmeansKernel.assignRows(xs, Model(picked.drop(folded).toArray).flat, dim, cid, d2)
-      if (minD2 == null) minD2 = d2
-      else {
-        var i = 0
-        while (i < n) { if (d2(i) < minD2(i)) minD2(i) = d2(i); i += 1 }
-      }
-      folded = picked.length
-      // ids ascend, so strict > keeps the lowest id on ties
-      var bi = 0
-      var i = 1
-      while (i < n) { if (minD2(i) > minD2(bi)) bi = i; i += 1 }
-      xs(bi)
-    }
-
-    def onLoop(keySpace: Int): Rows = this
-
-    // per-element scale-9 longs, computed once (the cached `__vl` column)
-    private lazy val scaled = xs.map(x =>
-      VecScale9Kernel.scaleArray(ArrayData.toArrayData(x), isFloat = false))
-
-    def clusterSums(flat: Array[Double], dim: Int): Seq[(Int, Array[Long], Long)] = {
-      val cid = new Array[Int](n)
-      KmeansKernel.assignRows(xs, flat, dim, cid, new Array[Double](n))
+    def sums(flat: Array[Double], dim: Int): Array[Array[Long]] = {
+      require(scaled != null, "kmeans blocks were built without scale-9 longs")
+      val cid = near(flat, dim).cid
       val bufs = Array.fill(flat.length / dim)(new Array[Long](dim + 1))
-      var r = 0
-      while (r < n) { VecSumCount.add(bufs(cid(r)), scaled(r), dim); r += 1 }
-      bufs.indices.filter(j => bufs(j)(dim) > 0)
-        .map(j => (j, bufs(j).take(dim), bufs(j)(dim)))
-    }
-
-    def running(seed: Array[Double], dim: Int): Running = new Running {
-      private val md2 = new Array[Double](n)
-      private val cid = new Array[Int](n)
-      KmeansKernel.assignRows(xs, seed, dim, cid, md2)
-      private val newCid = new Array[Int](n)
-      private val newD2 = new Array[Double](n)
-      private def md29(i: Int): Long = VecScale9Kernel.scale9(md2(i))
-      // Σ round9(md2) exact at scale 9 (the DECIMAL(38,9) sum), then the
-      // same Decimal -> double conversion
-      private def phiOf(): Double = {
-        var s = java.math.BigInteger.ZERO
-        var i = 0
-        while (i < n) { s = s.add(java.math.BigInteger.valueOf(md29(i))); i += 1 }
-        new java.math.BigDecimal(s, 9).doubleValue
-      }
-      var phi: Double = phiOf()
-
-      def draw(r: Int, salt: String, ell: Int): Array[(Long, Array[Double])] =
-        (0 until n).filter { i =>
-          md5Uniform(s"$salt|sc$r:${ids(i)}") <
-            ell.toDouble * java.math.BigDecimal.valueOf(md29(i), 9).doubleValue / phi
-        }.map(i => (ids(i), xs(i))).toArray
-
-      def merge(newFlat: Array[Double], baseIdx: Int): Unit = {
-        KmeansKernel.assignRows(xs, newFlat, dim, newCid, newD2)
-        var i = 0
-        while (i < n) {
-          if (newD2(i) < md2(i)) { md2(i) = newD2(i); cid(i) = newCid(i) + baseIdx }
-          i += 1
-        }
-        phi = phiOf()
-      }
-
-      def weights(nCand: Int): Int => Long = {
-        val w = new Array[Long](nCand)
-        cid.foreach(j => w(j) += 1L)
-        j => w(j)
-      }
+      var i = 0
+      while (i < size) { VecSumCount.add(bufs(cid(i)), scaled(i), dim); i += 1 }
+      bufs
     }
   }
 
-  /** Lloyd's update sums over a slim frame carrying `__vl`, one
-    * [[graft.plans.VecSumCount]] aggregate under the table `flat`.
-    */
-  private def sumsOf(data: DataFrame, flat: Array[Double],
-                     dim: Int): Seq[(Int, Array[Long], Long)] =
-    data.select(KmeansFunctions.kmeans_assign(col("__v"), flat, dim)
-        .getField("cid").as("cid"), col("__vl"))
-      .groupBy("cid")
-      .agg(KmeansFunctions.vec_sum_count(col("__vl"), dim).as("sc"))
-      .select(col("cid"), col("sc.sums"), col("sc.n"))
-      .collect().toSeq
-      .map(r => (r.getInt(0), r.getSeq[Long](1).toArray, r.getLong(2)))
-
-  /** The source for `data` (slim columns): collected when it has at most
-    * `localMaxRows` rows, else the frame itself. ONE CollectLimit probe
-    * over a constant projection decides, so a large input ships at most
-    * `localMaxRows + 1` ints to the driver, never its vectors.
-    */
-  private def rowsOf(data: DataFrame, localMaxRows: Long): Rows = {
-    val small = localMaxRows > 0 && {
-      val lim = (localMaxRows + 1).min(Int.MaxValue.toLong).toInt
-      data.select(lit(1).as("__one")).limit(lim).count() <= localMaxRows
+  private object Block {
+    /** The block of one partition of the slim `(__id, __v)` rows. */
+    def apply(rows: Iterator[InternalRow], withSums: Boolean): Block = {
+      val ids = scala.collection.mutable.ArrayBuilder.make[Long]
+      val xs = scala.collection.mutable.ArrayBuffer[Array[Double]]()
+      rows.foreach { row =>
+        require(!row.isNullAt(0), "kmeans id column has a null")
+        ids += row.getLong(0)
+        xs += row.getArray(1).toDoubleArray()
+      }
+      sorted(ids.result(), xs.toArray,
+        if (withSums) xs.map(x =>
+          VecScale9Kernel.scaleArray(ArrayData.toArrayData(x), isFloat = false)).toArray
+        else null)
     }
-    if (!small) new Distributed(data)
-    else {
-      val rows = data.select(col("__id"), col("__v")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-        .sortBy(_._1)
-      new Local(rows.map(_._1), rows.map(_._2))
+
+    /** The rows of `parts`, in partition order, as one block. */
+    def concat(parts: Seq[Block]): Block =
+      sorted(parts.flatMap(_.ids).toArray, parts.flatMap(_.xs).toArray,
+        if (parts.exists(_.scaled == null)) null else parts.flatMap(_.scaled).toArray)
+
+    private def sorted(ids: Array[Long], xs: Array[Array[Double]],
+                       scaled: Array[ArrayData]): Block = {
+      val order = ids.indices.sortBy(ids(_)).toArray // stable
+      new Block(order.map(ids(_)), order.map(xs(_)),
+        if (scaled == null) null else order.map(scaled(_)))
     }
   }
+
+  /** Per row of one block, the min d² to the centroids folded in so far
+    * and that centroid's index: the running state of farthest-first and
+    * the k-means‖ rounds.
+    */
+  private final case class Near(md2: Array[Double], cid: Array[Int]) {
+    /** Σ round9(min d²), exact at scale 9 (the DECIMAL(38,9) sum). */
+    def phi9: java.math.BigInteger = {
+      var s = java.math.BigInteger.ZERO
+      var i = 0
+      while (i < md2.length) {
+        s = s.add(java.math.BigInteger.valueOf(VecScale9Kernel.scale9(md2(i)))); i += 1
+      }
+      s
+    }
+
+    /** Rows per candidate index. */
+    def counts(nCand: Int): Array[Long] = {
+      val w = new Array[Long](nCand)
+      cid.foreach(j => w(j) += 1L)
+      w
+    }
+  }
+
+  /** One value per block: the [[Block]]s a k-means loop runs over, and
+    * the per-block state it carries between passes. Each step is a block
+    * kernel followed by an exact or lexicographic merge on the driver,
+    * and the two forms differ only in where the kernel runs:
+    *  - [[Spread]]: an RDD with one value per input partition; each
+    *    `collect` is one Spark job, and `reduce` is `treeReduce`;
+    *  - [[One]]: a single value on the driver.
+    * So both forms give the same bits by construction.
+    */
+  private sealed trait Parts[A] {
+    def map[B: ClassTag](f: A => B): Parts[B]
+    /** `f` over this and `that` block by block; `that` must come from the
+      * same [[Parts]] (the same form and partitions).
+      */
+    def zip[B: ClassTag, C: ClassTag](that: Parts[B])(f: (A, B) => C): Parts[C]
+    /** The values in partition order. */
+    def collect(): Seq[A]
+    /** The values merged by `f`, which must not depend on their order. */
+    def reduce(f: (A, A) => A): A
+    def persist(): Parts[A]
+    /** Drops what [[persist]] cached, waiting until it is gone. */
+    def release(): Unit
+  }
+
+  private final case class One[A](a: A) extends Parts[A] {
+    def map[B: ClassTag](f: A => B): Parts[B] = One(f(a))
+    def zip[B: ClassTag, C: ClassTag](that: Parts[B])(f: (A, B) => C): Parts[C] =
+      One(f(a, that.asInstanceOf[One[B]].a))
+    def collect(): Seq[A] = Seq(a)
+    def reduce(f: (A, A) => A): A = a
+    def persist(): Parts[A] = this
+    def release(): Unit = ()
+  }
+
+  private final case class Spread[A](rdd: RDD[A]) extends Parts[A] {
+    def map[B: ClassTag](f: A => B): Parts[B] = Spread(rdd.map(f))
+    def zip[B: ClassTag, C: ClassTag](that: Parts[B])(f: (A, B) => C): Parts[C] =
+      Spread(rdd.zipPartitions(that.asInstanceOf[Spread[B]].rdd,
+        preservesPartitioning = true)((as, bs) => Iterator(f(as.next(), bs.next()))))
+    def collect(): Seq[A] = rdd.collect().toSeq
+    def reduce(f: (A, A) => A): A = rdd.treeReduce(f)
+    def persist(): Parts[A] = { rdd.persist(StorageLevel.MEMORY_AND_DISK); this }
+    def release(): Unit = { rdd.unpersist(blocking = true); () }
+  }
+
+  /** The blocks of `data` (slim columns), one per partition, not cached.
+    * An input without partitions is one empty block.
+    */
+  private def blocksOf(data: DataFrame, withSums: Boolean): Parts[Block] = {
+    val rdd = data.queryExecution.toRdd
+      .mapPartitions(rows => Iterator(Block(rows, withSums)))
+    if (rdd.partitions.isEmpty) One(Block(Iterator.empty, withSums))
+    else Spread(rdd)
+  }
+
+  /** The cached blocks of `df`'s slim projection, or — when they hold at
+    * most `localMaxRows` rows — the same rows collected into one block.
+    * With `localMaxRows > 0` one job counts the rows, which also fills
+    * the cache; with 0 the count is skipped. The caller releases the
+    * result.
+    */
+  private def rowsOf(df: DataFrame, vecCol: String, idCol: String,
+                     localMaxRows: Long, withSums: Boolean): Parts[Block] = {
+    val all = blocksOf(slim(df, vecCol, idCol), withSums).persist()
+    try {
+      if (localMaxRows <= 0 ||
+          all.map(_.size.toLong).collect().sum > localMaxRows) all
+      else {
+        val one = One(Block.concat(all.collect()))
+        all.release()
+        one
+      }
+    } catch { case e: Throwable => all.release(); throw e }
+  }
+
+  /** Up to `n` (id, vector) rows in `(md5(salt:id), id)` order, ids in
+    * `skip` left out: each block's top n, merged on `(md5, id)`.
+    */
+  private def seeded(rows: Parts[Block], n: Int, salt: String,
+                     skip: Set[Long] = Set.empty): Array[(Long, Array[Double])] =
+    rows.map(_.seeded(n, salt, skip)).collect().flatten
+      .sortBy { case (h, id, _) => (h, id) }
+      .take(n).map { case (_, id, v) => (id, v) }.toArray
+
+  /** Element-wise exact sum of two count or sum vectors. */
+  private def addExact(a: Array[Long], b: Array[Long]): Array[Long] =
+    Array.tabulate(a.length)(i => Math.addExact(a(i), b(i)))
+
+  /** Lloyd's update sums under the table `flat`: (cid, exact scale-9
+    * per-dimension sums, count) for every cluster with members.
+    */
+  private def clusterSums(rows: Parts[Block], flat: Array[Double],
+                          dim: Int): Seq[(Int, Array[Long], Long)] = {
+    val bufs = rows.map(_.sums(flat, dim))
+      .reduce((a, b) => Array.tabulate(a.length)(j => addExact(a(j), b(j))))
+    bufs.indices.filter(j => bufs(j)(dim) > 0)
+      .map(j => (j, bufs(j).take(dim), bufs(j)(dim)))
+  }
+
+  /** Σ round9(min d²) over every block, as the double of the exact
+    * DECIMAL(38,9) sum.
+    */
+  private def phiOf(state: Parts[Near]): Double =
+    new java.math.BigDecimal(
+      state.map(_.phi9).collect().foldLeft(java.math.BigInteger.ZERO)(_ add _), 9)
+      .doubleValue
 
   /** The `k` seeded rows, failing when there are fewer. */
-  private def seededInit(rows: Rows, k: Int,
+  private def seededInit(rows: Parts[Block], k: Int,
                          salt: String): Array[(Long, Array[Double])] = {
     require(k > 0, s"kmeans needs k > 0, got $k")
-    val picked = rows.seeded(k, salt)
+    val picked = seeded(rows, k, salt)
     require(picked.length == k,
       s"kmeans init needs >= $k non-null vectors, found ${picked.length}")
     picked
@@ -361,12 +349,14 @@ object Kmeans {
 
   /** Content-keyed seeded init: the k vectors with the smallest
     * `(md5(salt:id), id)` — a deterministic pseudo-random sample that
-    * is partitioning-invariant and needs no stateful RNG. Runs as a
-    * TakeOrderedAndProject (per-partition top-k, k rows collected).
+    * is partitioning-invariant and needs no stateful RNG. One job: each
+    * block's top k, merged on the driver.
     */
   def initCentroids(df: DataFrame, vecCol: String, idCol: String, k: Int,
-                    salt: String = "km"): Array[Array[Double]] =
-    seededInit(new Distributed(slim(df, vecCol, idCol)), k, salt).map(_._2)
+                    salt: String = "km"): Array[Array[Double]] = {
+    val rows = blocksOf(slim(df, vecCol, idCol), withSums = false)
+    seededInit(rows, k, salt).map(_._2)
+  }
 
   /** Farthest-first runs k-1 SEQUENTIAL full scans — fine in the
     * coarse-quantizer regime it exists for, a scale-killer at the
@@ -380,25 +370,51 @@ object Kmeans {
     * chosen set (max over rows of min squared distance to the set, ties
     * to the lowest id). Better-spread seeds than the hashed sample —
     * the quality option when k is small and clusters matter more than
-    * init cost. k-1 extra scans, each a TakeOrdered top-1 (per-
-    * partition max, k-1 jobs over the cached projection); the min-
-    * distance-to-set IS the assignment kernel's `d2`, so no new kernel.
-    * Deterministic and independently replayable like the hashed init.
+    * init cost. k-1 extra jobs over the cached blocks, each folding the
+    * newest pick into a per-row running min d² (the assignment kernel's
+    * `d2`) and returning each block's farthest row. Deterministic and
+    * independently replayable like the hashed init.
     */
   def initFarthestCentroids(df: DataFrame, vecCol: String, idCol: String,
-                            k: Int, salt: String = "km"): Array[Array[Double]] =
-    farthestFirst(new Distributed(slim(df, vecCol, idCol)), k, salt)
+                            k: Int, salt: String = "km"): Array[Array[Double]] = {
+    val rows = rowsOf(df, vecCol, idCol, 0L, withSums = false)
+    try farthestFirst(rows, k, salt) finally rows.release()
+  }
 
-  private def farthestFirst(rows: Rows, k: Int,
+  private def farthestFirst(rows: Parts[Block], k: Int,
                             salt: String): Array[Array[Double]] = {
     require(k > 0, s"kmeans needs k > 0, got $k")
     require(k <= farthestMaxK,
       s"farthest-first init runs k-1 sequential full scans and is capped " +
         s"at k <= $farthestMaxK; use initMethod='scalable' " +
         s"(k-means||-style, O(rounds) scans) for k = $k")
-    val picked = scala.collection.mutable.ArrayBuffer(seededInit(rows, 1, salt)(0)._2)
-    val dim = picked(0).length
-    while (picked.length < k) picked += rows.farthest(picked.toSeq, dim)
+    val first = seededInit(rows, 1, salt)(0)._2
+    val dim = first.length
+    val picked = scala.collection.mutable.ArrayBuffer(first)
+    var state = rows.map(_.near(first, dim)).persist()
+    // the state `state` was folded from; released once `state` is cached
+    var prev: Parts[Near] = null
+    try {
+      while (picked.length < k) {
+        // the driver max of the per-block maxima; this job also caches
+        // `state`
+        val next = rows.zip(state)(_ farthest _).collect().flatten
+          .reduceOption { (a, b) =>
+            if (b._1 > a._1 || (b._1 == a._1 && b._2 < a._2)) b else a
+          }
+        require(next.nonEmpty, s"kmeans farthest init needs >= 1 vector")
+        if (prev != null) { prev.release(); prev = null }
+        val far = next.get._3
+        picked += far
+        if (picked.length < k) {
+          prev = state
+          state = rows.zip(state)(_.fold(_, far, dim, 0)).persist()
+        }
+      }
+    } finally {
+      state.release()
+      if (prev != null) prev.release()
+    }
     picked.toArray
   }
 
@@ -414,19 +430,20 @@ object Kmeans {
     * vs farthest-first's k-1.
     *
     * Scale shape: each row carries a RUNNING (min d², nearest-candidate)
-    * pair, merged per round against only that round's NEW candidates —
-    * so round r costs n x |new_r| x dim distance work, not
-    * n x |cumulative_r| x dim, and the per-candidate weights fall out
-    * of the final running state with NO extra assignment pass (IEEE min
-    * is associative and the kernel breaks ties to the lowest candidate
-    * index, so the running merge — strict < keeps the earlier, lower
-    * index — is bit-identical to a one-shot argmin over the full set).
-    * At k=4096/d=64/2M rows that is ~5x less distance work than the
-    * naive recompute-per-round form, and the state it persists per row
-    * is one double + one int.
+    * pair in a cached per-block state, merged per round against only
+    * that round's NEW candidates — so round r costs n x |new_r| x dim
+    * distance work, not n x |cumulative_r| x dim, and the per-candidate
+    * weights fall out of the final running state with NO extra
+    * assignment pass (IEEE min is associative and the kernel breaks ties
+    * to the lowest candidate index, so the running merge — strict <
+    * keeps the earlier, lower index — is bit-identical to a one-shot
+    * argmin over the full set). At k=4096/d=64/2M rows that is ~5x less
+    * distance work than the naive recompute-per-round form, and the
+    * state it keeps per row is one double + one int. Per round: one job
+    * draws, one job merges and sums φ; the weights are one more.
     *
     * Inputs of at most [[localFitMaxRows]] rows run the same rounds over
-    * the collected rows (one probe job, then one collect).
+    * the collected rows (one counting job, then one collect).
     *
     * Determinism (independently replayed by tools/gen_kmeans_oracle.py):
     *  - the "coin flip" for (row, round) is the md5-uniform
@@ -434,11 +451,10 @@ object Kmeans {
     *    [[Sampling.sampleByWeight]] draw, partitioning-invariant;
     *  - d² is the assignment kernel's sequential IEEE loop, rounded to
     *    9 decimals HALF_UP by [[graft.plans.VecScale9Kernel.scale9]] (the
-    *    `dec_scale9` expression: the same DECIMAL(38,9) value as
-    *    `round(d², 9)` cast to decimal, without the decimal-string
-    *    route); φ is the EXACT DECIMAL(38,9) sum of those (order-
-    *    independent); the threshold is the double `oversample*d²9/φ`
-    *    with d²9 that decimal's double value;
+    *    same DECIMAL(38,9) value as `round(d², 9)` cast to decimal); φ is
+    *    the EXACT sum of those, per block as a `BigInteger` and then over
+    *    the blocks (order-independent); the threshold is the double
+    *    `oversample*d²9/φ` with d²9 that decimal's double value;
     *  - seed = hash-init row; greedy ties break on the lowest id;
     *    if fewer than k candidates survive (degenerate corpora), the
     *    remainder pads from the hash-init order under salt + "|pad",
@@ -446,47 +462,56 @@ object Kmeans {
     */
   def initScalableCentroids(df: DataFrame, vecCol: String, idCol: String,
                             k: Int, salt: String = "km", rounds: Int = 5,
-                            oversample: Int = -1): Array[Array[Double]] =
-    initScalableCentroids(rowsOf(slim(df, vecCol, idCol), localFitMaxRows),
-      k, salt, rounds, oversample)
+                            oversample: Int = -1): Array[Array[Double]] = {
+    val rows = rowsOf(df, vecCol, idCol, localFitMaxRows, withSums = false)
+    try initScalableCentroids(rows, k, salt, rounds, oversample)
+    finally rows.release()
+  }
 
   // keeps the public name so the rounds' Spark jobs carry it in their
   // call sites, also when `fit` runs them
-  private def initScalableCentroids(rows: Rows, k: Int, salt: String,
+  private def initScalableCentroids(rows: Parts[Block], k: Int, salt: String,
                                     rounds: Int,
                                     oversample: Int): Array[Array[Double]] = {
     require(k > 0, s"kmeans needs k > 0, got $k")
     require(rounds > 0, s"scalable init needs rounds > 0, got $rounds")
     val ell = if (oversample > 0) oversample else 2 * k
-    // every per-round action is either a no-exchange collect (selection
-    // filter, TakeOrdered seed/pad) or an aggregate whose reduce side is
-    // tiny at any corpus scale (φ = one DECIMAL per map task) — run them
-    // with AQE's per-stage barrier off and a single reduce partition
-    // (LoopSession doc; saves 2 jobs/round)
-    val loop = rows.onLoop(1)
-    val (firstId, first) = seededInit(loop, 1, salt)(0)
+    val (firstId, first) = seededInit(rows, 1, salt)(0)
     val dim = first.length
     // (id, vec) candidates in selection order; ids seen for dedup
     val cand = scala.collection.mutable.ArrayBuffer((firstId, first))
     val seen = scala.collection.mutable.HashSet(firstId)
-    val state = loop.running(first, dim)
-    var r = 0
-    while (r < rounds) {
-      if (state.phi > 0.0) {
-        val picked = state.draw(r, salt, ell)
-        require(picked.length <= 64 * ell,
-          s"scalable init round $r selected ${picked.length} candidates " +
-            s"(expected ~$ell) — pathological d² skew; raise rounds or " +
-            s"check the data")
-        val baseIdx = cand.length
-        picked.foreach { case (id, v) => if (seen.add(id)) cand += ((id, v)) }
-        if (cand.length > baseIdx)
-          state.merge(Model(cand.drop(baseIdx).map(_._2).toArray).flat, baseIdx)
+    var state = rows.map(_.near(first, dim)).persist()
+    try {
+      // φ (the first job over a state also caches it) only changes with
+      // the state, so it is carried between rounds: a round without new
+      // candidates costs no job
+      var phi = phiOf(state)
+      var r = 0
+      while (r < rounds) {
+        if (phi > 0.0) {
+          val (round, cut, s) = (r, phi, state)
+          val picked = rows.zip(s)(_.draw(_, round, salt, ell, cut))
+            .collect().flatten.sortBy(_._1).toArray
+          require(picked.length <= 64 * ell,
+            s"scalable init round $r selected ${picked.length} candidates " +
+              s"(expected ~$ell) — pathological d² skew; raise rounds or " +
+              s"check the data")
+          val baseIdx = cand.length
+          picked.foreach { case (id, v) => if (seen.add(id)) cand += ((id, v)) }
+          if (cand.length > baseIdx) {
+            val flat = Model(cand.drop(baseIdx).map(_._2).toArray).flat
+            val next = rows.zip(s)(_.fold(_, flat, dim, baseIdx)).persist()
+            try phi = phiOf(next) finally { s.release(); state = next }
+          }
+        }
+        r += 1
       }
-      r += 1
-    }
-    reduceWeightedCandidates(cand.toIndexedSeq, state.weights(cand.length),
-      k, dim, (chosenIds, need) => loop.seeded(need, s"$salt|pad", chosenIds).toSeq)
+      val nCand = cand.length
+      val weights = state.map(_.counts(nCand)).reduce(addExact)
+      reduceWeightedCandidates(cand.toIndexedSeq, weights(_), k, dim,
+        (chosenIds, need) => seeded(rows, need, s"$salt|pad", chosenIds).toSeq)
+    } finally state.release()
   }
 
   /** Tail of the scalable init: the driver-local weighted greedy over
@@ -576,16 +601,17 @@ object Kmeans {
     picked.map(_._2).toArray
   }
 
-  /** At or below this row count [[fit]] collects the slim projection
-    * once and runs init + iterations over the collected rows — the
+  /** At or below this row count [[fit]] collects the cached blocks into
+    * one and runs init + iterations on the driver — the
     * [[graft.som.Som]] `localFitThreshold` pattern. A 2,000-row
     * coarse-quantizer fit paid ~1 + iters Spark jobs of pure scheduler
     * overhead (~50 ms each). It is the same loop over the other form
-    * of [[Rows]], so the bits are the same (`KmeansSpec` pins
+    * of [[Parts]], so the bits are the same (`KmeansSpec` pins
     * local == forced-distributed across all three init methods, and the
     * `kmeans_train_distributed` query keeps the distributed loop
-    * oracle-gated at every SF). 65,536 x 64-dim rows collect to
-    * ≤ ~34 MB — driver-trivial; pass 0 to force the distributed loop.
+    * oracle-gated at every SF). 65,536 x 64-dim rows and their scale-9
+    * longs collect to ≤ ~70 MB — driver-trivial; pass 0 to force the
+    * distributed loop.
     */
   val localFitMaxRows = 65536L
 
@@ -609,49 +635,38 @@ object Kmeans {
       s"initMethod must be 'hash', 'farthest' or 'scalable', got '$initMethod'")
     // the update sums each element's scale-9 decimal value (exact,
     // order-independent). Those per-element roundings never change
-    // across iterations, so they are computed ONCE here (`vec_scale9`
-    // longs cached next to the doubles); each iteration then pays one
-    // codegen assignment scan + a plain-long-addition aggregate whose
-    // state is k buffers of (dim + 1) longs per partition.
-    val data = slim(df, vecCol, idCol)
-      .withColumn("__vl", KmeansFunctions.vec_scale9(col("__v")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // across iterations, so the blocks carry them, computed once; each
+    // iteration then pays one assignment pass + plain long additions
+    // into k buffers of (dim + 1) longs per block
+    val rows = rowsOf(df, vecCol, idCol, localMaxRows, withSums = true)
     try {
-      val rows = rowsOf(data, localMaxRows)
       val c = (initMethod match {
         case "farthest" => farthestFirst(rows, k, salt)
         case "scalable" => initScalableCentroids(rows, k, salt, 5, -1)
         case _ => seededInit(rows, k, salt).map(_._2)
       }).map(_.clone()) // updated in place below
       val dim = c(0).length
-      // the per-iteration aggregate's reduce side is k buffers of
-      // (dim+1) longs — constant at any corpus scale. Run the loop on
-      // a child session with AQE off (its stage barrier costs one
-      // extra job per iteration and has nothing to adapt: the key
-      // space is ≤ k integers) and the exchange sized to that key
-      // space, never above the caller's default (LoopSession doc)
-      val loop = rows.onLoop(k)
       var it = 0
       while (it < iters) {
-        loop.clusterSums(Model(c).flat, dim).foreach { case (cid, s, n) =>
+        clusterSums(rows, Model(c).flat, dim).foreach { case (cid, s, n) =>
           var d = 0
           while (d < dim) { c(cid)(d) = VecScale9Kernel.mean9(s(d), n); d += 1 }
         }
         it += 1
       }
       Model(c)
-    } finally { data.unpersist(); () }
+    } finally rows.release()
   }
 
   /** One assignment-and-reduce pass: per cluster, the exact scale-9
     * per-dimension sums and member count of `df` under `model`'s
     * centroids — the building block of one Lloyd's iteration, exposed
-    * for incremental (micro-batch) training. Collects ≤ k rows.
+    * for incremental (micro-batch) training. One job over uncached
+    * blocks; ≤ k buffers reach the driver.
     */
   def assignSums(df: DataFrame, vecCol: String, idCol: String,
                  model: Model): Seq[(Int, Array[Long], Long)] =
-    sumsOf(slim(df, vecCol, idCol)
-        .withColumn("__vl", KmeansFunctions.vec_scale9(col("__v"))),
+    clusterSums(blocksOf(slim(df, vecCol, idCol), withSums = true),
       model.flat, model.dim)
 
   /** One assignment pass: (vec_id, cid, d2) for every non-null vector —

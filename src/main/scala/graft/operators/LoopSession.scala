@@ -3,13 +3,15 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.GraftBridge
 
-/** Loop-scoped SQLConf for fixed-shape iteration queries (Lloyd's
-  * assignment-sum, logit gradient pass, k-means|| φ/merge rounds).
+/** Loop-scoped SQLConf for fixed-shape iteration queries. Its one
+  * caller is the logit GD loop ([[LogitTrain]]); the k-means loops run
+  * as block kernels over a cached RDD ([[Kmeans]]) and plan no query
+  * per step.
   *
-  * These loops run one aggregate per iteration whose reduce side is
-  * CONSTANT-SIZED at any corpus scale — k buffers of (dim+1) longs for
-  * a groupBy(cid), one (dim+2)-long buffer (or one DECIMAL) per map
-  * task for the global forms — so there is nothing for AQE to adapt:
+  * Such a loop runs one aggregate per iteration whose reduce side is
+  * CONSTANT-SIZED at any corpus scale — one (dim+2)-long buffer per map
+  * task for logit's global form, k buffers of (dim+1) longs for a
+  * groupBy(cid) — so there is nothing for AQE to adapt:
   * no skew possible (the key space is ≤ k integers), nothing to
   * coalesce that sizing the exchange to the key space doesn't already
   * do. What AQE DOES add is one extra job + a driver-side stage

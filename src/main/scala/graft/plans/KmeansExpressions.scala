@@ -244,43 +244,10 @@ object VecScale9Kernel {
   }
 }
 
-/** `double -> DECIMAL(38,9)`: [[VecScale9Kernel.scale9]] as a decimal —
-  * the value of `round(x, 9).cast(DECIMAL(38,9))` without its two
-  * `Double.toString` trips per row. The k-means‖ φ sum and selection
-  * threshold read it; like `scale9`, it rejects non-finite values and
-  * |x| >= 9e9.
-  */
-case class DecScale9(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DecimalType(38, 9)
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case DoubleType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"dec_scale9 expects double, got $other")
-    }
-
-  override protected def nullSafeEval(input: Any): Any =
-    new Decimal().set(VecScale9Kernel.scale9(input.asInstanceOf[Double]), 38, 9)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = VecScale9Kernel.getClass.getName.stripSuffix("$")
-    val dec = classOf[Decimal].getName
-    defineCodeGen(ctx, ev, c => s"new $dec().set($kernel.scale9($c), 38, 9)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): DecScale9 =
-    copy(child = newChild)
-  override def prettyName: String = "dec_scale9"
-}
-
 /** `array<float|double> -> array<long>`: each element as its exact
-  * scale-9 decimal unscaled value (see [[VecScale9Kernel.scale9]]).
-  * Computed ONCE before an iterative loop so per-iteration sums are
-  * plain long additions.
+  * scale-9 decimal unscaled value (see [[VecScale9Kernel.scale9]]) —
+  * the expression form of the longs the k-means blocks carry
+  * (`VecScale9Kernel.scaleArray`), for summing with [[VecSumCount]].
   */
 case class VecScale9(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -465,8 +432,6 @@ object KmeansFunctions {
     GraftBridge.column(KmeansAssign(GraftBridge.expression(v), weights, dim))
   def vec_scale9(v: Column): Column =
     GraftBridge.column(VecScale9(GraftBridge.expression(v)))
-  def dec_scale9(x: Column): Column =
-    GraftBridge.column(DecScale9(GraftBridge.expression(x)))
   def vec_sum_count(v: Column, dim: Int): Column =
     GraftBridge.column(
       VecSumCount(GraftBridge.expression(v), dim).toAggregateExpression())

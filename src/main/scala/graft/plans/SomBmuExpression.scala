@@ -332,8 +332,9 @@ case class SomBmu(child: Expression, weights: Array[Double], dim: Int,
 /** Quantization distance: the true euclidean distance to the closest
   * codebook vector (always euclidean, regardless of activation distance —
   * reference `_quantization` semantics, `xpysom.py:660-671`). Lets
-  * quantization error run as `select(avg(som_qdist(...)))` — one
-  * codegen'd scan + scalar aggregate.
+  * quantization error run as one codegen'd scan of `som_qdist(...)`
+  * whose per-partition sums the driver adds
+  * (`SomModel.quantizationError`).
   */
 case class SomQDist(child: Expression, weights: Array[Double], dim: Int)
     extends SomCodebookExpression {
@@ -355,8 +356,8 @@ case class SomQDist(child: Expression, weights: Array[Double], dim: Int)
 
 /** `struct<bmu_id int, q_dist double>`: the neuron `som_qdist` measures
   * and that distance, from one scan — quantization's neuron and its
-  * q_dist (`xpysom.py:620-645`), so mean q_dist equals
-  * `avg(som_qdist)` exactly.
+  * q_dist (`xpysom.py:620-645`), so the q_dist of each row equals its
+  * `som_qdist` exactly.
   */
 case class SomNearest(child: Expression, weights: Array[Double], dim: Int)
     extends SomCodebookExpression {

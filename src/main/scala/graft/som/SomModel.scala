@@ -129,13 +129,25 @@ final class SomModel(val config: SomConfig, val codebook: Codebook)
 
   /** Quantization error (`xpysom.py:673-707`): mean distance between each
     * sample and its BMU codebook vector (euclidean, as in the reference),
-    * one codegen scan + scalar aggregate.
+    * skipping null features; NaN on no rows. One codegen scan: each
+    * partition sums its distances in row order, and the driver adds the
+    * partition sums in partition order (`collect` keeps it) — a fixed
+    * function of the input and its partitioning, where an `avg` merges
+    * its partials in arrival order.
     */
   def quantizationError(df: DataFrame, featuresCol: String = "features"): Double = {
-    val r = df.select(avg(graft.plans.SomBmuFunctions.som_qdist(
-        features(df, featuresCol), codebook.weights, dim)).as("qe"))
-      .head()
-    if (r.isNullAt(0)) Double.NaN else r.getDouble(0)
+    val parts = df.select(graft.plans.SomBmuFunctions.som_qdist(
+        features(df, featuresCol), codebook.weights, dim))
+      .queryExecution.toRdd
+      .mapPartitions { rows =>
+        var sum = 0.0
+        var n = 0L
+        rows.foreach { r => if (!r.isNullAt(0)) { sum += r.getDouble(0); n += 1 } }
+        Iterator((sum, n))
+      }
+      .collect()
+    val (sum, n) = parts.foldLeft((0.0, 0L)) { case ((s, c), (ps, pn)) => (s + ps, c + pn) }
+    if (n == 0) Double.NaN else sum / n
   }
 
   /** Topographic error (`xpysom.py:709-746`): share of samples whose two

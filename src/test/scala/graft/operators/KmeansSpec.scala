@@ -127,6 +127,94 @@ class KmeansSpec extends SparkSpec {
         s"pad-path centroid $j diverges between local and distributed")
   }
 
+  /** The persisted RDDs a fit leaves behind: none beyond those before. */
+  private def leavesNothingCached[A](what: String)(body: => A): A = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = body
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"$what left persisted RDDs $left")
+    out
+  }
+
+  /** `rows` laid out over exactly `parts` partitions by `partOf(i)` (the
+    * i-th row's partition), ids out of order inside each partition.
+    */
+  private def laidOut(rows: IndexedSeq[(Long, Array[Double])], parts: Int,
+                      partOf: Int => Int) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val byPart = rows.indices.groupBy(partOf).map { case (p, is) =>
+      p -> is.reverse.map(i => Row(rows(i)._1, rows(i)._2.toSeq))
+    }
+    val rdd = spark.sparkContext.parallelize(0 until parts, parts)
+      .flatMap(p => byPart.getOrElse(p, Nil))
+    val df = spark.createDataFrame(rdd, StructType(Seq(
+      StructField("vec_id", LongType), StructField("embedding", ArrayType(DoubleType)))))
+    assert(df.rdd.getNumPartitions == parts)
+    df
+  }
+
+  test("forced-distributed fit == local fit over 1, 3 and 7 partitions (exact merges)") {
+    val (rows, _) = synth(360, 6, parts = 1)
+    // 7 partitions: one empty, one holding most of the rows
+    val layouts = Seq(
+      1 -> ((_: Int) => 0),
+      3 -> ((i: Int) => i % 3),
+      7 -> ((i: Int) => if (i % 10 < 7) 4 else Seq(0, 2, 3, 5, 6)((i / 10) % 5)))
+    val dfs = layouts.map { case (p, f) => laidOut(rows, p, f) }
+    for (k <- Seq(5, 24); init <- Seq("hash", "farthest", "scalable")) {
+      val loc = leavesNothingCached(s"local k=$k init=$init") {
+        Kmeans.fit(dfs.head, "embedding", "vec_id", k = k, iters = 3,
+          salt = "lay", initMethod = init)
+      }
+      for ((df, (p, _)) <- dfs.zip(layouts)) {
+        val dist = leavesNothingCached(s"$p parts k=$k init=$init") {
+          Kmeans.fit(df, "embedding", "vec_id", k = k, iters = 3,
+            salt = "lay", initMethod = init, localMaxRows = 0L)
+        }
+        for (j <- 0 until k)
+          assert(loc.centroids(j).sameElements(dist.centroids(j)),
+            s"$p partitions k=$k init=$init: centroid $j diverges from the local fit")
+      }
+    }
+    // the scalable pad corpus: phi = 0 after the seed
+    val pad = (0 until 10).map(i => (i.toLong, Array.fill(4)(0.25)))
+    val padLoc = leavesNothingCached("pad local") {
+      Kmeans.initScalableCentroids(laidOut(pad, 1, _ => 0), "embedding",
+        "vec_id", k = 6, salt = "pd")
+    }
+    for ((p, f) <- Seq(1 -> ((_: Int) => 0), 3 -> ((i: Int) => i % 3),
+                       7 -> ((i: Int) => if (i < 7) 4 else i - 6))) {
+      val dist = leavesNothingCached(s"pad $p parts") {
+        scalableDistributed(laidOut(pad, p, f), k = 6, salt = "pd")
+      }
+      for (j <- 0 until 6)
+        assert(padLoc(j).sameElements(dist(j)),
+          s"pad corpus over $p partitions: centroid $j diverges from the local init")
+    }
+    leavesNothingCached("public inits") {
+      Kmeans.initCentroids(dfs.last, "embedding", "vec_id", k = 5)
+      Kmeans.initFarthestCentroids(dfs.last, "embedding", "vec_id", k = 5)
+      Kmeans.initScalableCentroids(dfs.last, "embedding", "vec_id", k = 5)
+    }
+  }
+
+  test("a null id is rejected by both forms with one message") {
+    val df = Seq((Some(0L), Seq(1.0, 0.0)), (None, Seq(0.0, 1.0)),
+        (Some(2L), Seq(1.0, 1.0)), (Some(3L), Seq(0.5, 0.5)))
+      .toDF("vec_id", "embedding")
+    for (localMaxRows <- Seq(Kmeans.localFitMaxRows, 0L)) {
+      val e = intercept[Exception] {
+        Kmeans.fit(df, "embedding", "vec_id", k = 2, iters = 1,
+          localMaxRows = localMaxRows)
+      }
+      val messages = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).flatMap(t => Option(t.getMessage)).toSeq
+      assert(messages.exists(_.contains("kmeans id column has a null")),
+        s"localMaxRows=$localMaxRows: ${messages.mkString(" / ")}")
+    }
+  }
+
   private def synth(n: Int, dim: Int, parts: Int) = {
     val rows = (0 until n).map { i =>
       val rnd = new scala.util.Random(i * 7919 + 13)

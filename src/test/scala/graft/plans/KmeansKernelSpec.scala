@@ -12,8 +12,9 @@ import org.apache.spark.sql.types._
   * reference kept only here: (cid, d2, d2b) must agree bit for bit on
   * both sides of the k < 16 / k >= 16 loop-order split, for float and
   * double rows, through the row entry, the array entry, the codegen
-  * path and the interpreted path. Also pins `dec_scale9` (the k-means‖
-  * φ term) to the `round(x, 9).cast(DECIMAL(38,9))` it replaces.
+  * path and the interpreted path. Also pins the scale-9 decimal of
+  * `VecScale9Kernel.scale9` (the k-means‖ φ term) to
+  * `round(x, 9).cast(DECIMAL(38,9))`.
   */
 class KmeansKernelSpec extends SparkSpec {
 
@@ -179,31 +180,24 @@ class KmeansKernelSpec extends SparkSpec {
   }
 
   test("dec_scale9 == round(x, 9).cast(DECIMAL(38,9)); its double == round(x, 9)") {
+    // the k-means‖ φ term is the decimal of scale9's long at scale 9
     val corpus = KmeansKernelSpec.scale9Corpus
     val df = spark.createDataFrame(
         spark.sparkContext.parallelize(corpus.map(Row(_)), 4),
         StructType(Seq(StructField("x", DoubleType, nullable = false))))
       .select(col("x"),
-        KmeansFunctions.dec_scale9(col("x")).as("fast"),
         round(col("x"), 9).cast(DecimalType(38, 9)).as("slow"),
-        KmeansFunctions.dec_scale9(col("x")).cast("double").as("fastD"),
         round(col("x"), 9).as("slowD"))
-    assert(df.schema("fast").dataType == DecimalType(38, 9))
     val got = withCodegenOnly(df.collect())
     assert(got.length == corpus.length)
     got.foreach { r =>
-      assert(r.getDecimal(1) == r.getDecimal(2), s"x=${r.getDouble(0)}")
-      assert(bits(r.getDouble(3)) == bits(r.getDouble(4)), s"x=${r.getDouble(0)}")
-    }
-    // the interpreted path: the same decimal
-    val expr = DecScale9(BoundReference(0, DoubleType, nullable = false))
-    corpus.take(2000).foreach { x =>
-      val d = expr.eval(InternalRow(x)).asInstanceOf[Decimal]
-      assert(d.toJavaBigDecimal.unscaledValue.longValueExact ==
-        VecScale9Kernel.scale9(x) && d.scale == 9, s"x=$x")
+      val x = r.getDouble(0)
+      val fast = java.math.BigDecimal.valueOf(VecScale9Kernel.scale9(x), 9)
+      assert(fast == r.getDecimal(1), s"x=$x")
+      assert(bits(fast.doubleValue) == bits(r.getDouble(2)), s"x=$x")
     }
     intercept[IllegalArgumentException] {
-      expr.eval(InternalRow(Double.NaN))
+      VecScale9Kernel.scale9(Double.NaN)
     }
   }
 }

@@ -234,6 +234,39 @@ class SomSpec extends SparkSpec {
     assert(m.topographicError(empty).isNaN)
   }
 
+  test("quantizationError: partition sums added in partition order, the same bits every call") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(41)
+    val m = SomModel.fromWeights(SomConfig(3, 3),
+      Seq.fill(9)(Array.fill(4)(rnd.nextDouble() * 3)))
+    // 7 partitions: partition 3 is empty, partition 5 has a null-feature row
+    val byPart = (0 until 7).map { p =>
+      if (p == 3) Seq.empty[Row]
+      else Seq.tabulate(40 + 13 * p) { i =>
+        val r = new scala.util.Random(p * 1000 + i)
+        Row((p * 1000 + i).toLong,
+          if (p == 5 && i == 7) null else Seq.fill(4)(r.nextDouble() * 5 - 1))
+      }
+    }
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(0 until 7, 7).flatMap(byPart(_)),
+      StructType(Seq(StructField("id", LongType),
+        StructField("features", ArrayType(DoubleType)))))
+    // reference: each row's q_dist from `quantize` (a projection, so the
+    // same partitions), summed per partition in row order, the partition
+    // sums added in partition order
+    val perPart = m.quantize(df).select("q_dist").rdd.glom().collect()
+      .map(_.filterNot(_.isNullAt(0)).map(_.getDouble(0)))
+    assert(perPart.length == 7 && perPart(3).isEmpty)
+    val n = perPart.map(_.length).sum
+    assert(n == byPart.map(_.length).sum - 1)
+    val exp = perPart.map(_.foldLeft(0.0)(_ + _)).foldLeft(0.0)(_ + _) / n
+    val bits = java.lang.Double.doubleToLongBits _
+    val got = Seq.fill(5)(m.quantizationError(df))
+    got.foreach(q => assert(bits(q) == bits(exp), s"$q vs reference $exp"))
+  }
+
   test("wrong-dimension rows fail loudly on the expression path too") {
     val m = fixtureModel()
     val bad = Seq((0L, Seq(1f, 2f))).toDF("id", "features")
