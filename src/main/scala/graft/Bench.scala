@@ -749,9 +749,9 @@ object Bench {
           benchMerges).agg(sum("n_subwords")).collect(); ()
       }
       // quality-gate TRAINING: 10 full-batch GD iterations over 200k
-      // docs — per iteration one LogitGrad codegen scan + a (dim+2)-long
-      // VecSumCount buffer per partition (feature extraction included
-      // in the timed region: one gopher_stats pass + cache)
+      // docs — per iteration one pass of the LogitKernel.grad block
+      // kernel + a (dim+2)-long buffer per partition (feature extraction
+      // included in the timed region: one gopher_stats pass + cache)
       results("bench_logit_train10_200k") = time {
         val feats = graft.operators.LogitTrain.features(bigDocs, "text",
           "doc_id", when(col("doc_id") % 4 === 0, 1.0).otherwise(0.0))

@@ -163,7 +163,7 @@ object Probe {
     * run's event lands here, and again before it is read, so none of
     * `f`'s events is missed.
     */
-  private def recordJobs(spark: SparkSession)(f: => Unit)
+  private[graft] def recordJobs(spark: SparkSession)(f: => Unit)
       : (Double, Seq[SparkListenerJobStart]) = {
     val sc = spark.sparkContext
     val started = new ConcurrentLinkedQueue[SparkListenerJobStart]()

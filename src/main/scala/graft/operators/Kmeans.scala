@@ -1,16 +1,13 @@
 package graft.operators
 
-import scala.reflect.ClassTag
-
 import org.apache.commons.codec.digest.DigestUtils
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.Parts
 import graft.plans.{HashKernels, KmeansFunctions, KmeansKernel, VecScale9Kernel, VecSumCount}
 
 /** Distributed Lloyd's k-means over an embedding column — the standard
@@ -28,13 +25,13 @@ import graft.plans.{HashKernels, KmeansFunctions, KmeansKernel, VecScale9Kernel,
   * the per-block results on the driver: the reference's
   * map-over-Dask-blocks-and-sum shape (`xpysom.py:545-558`), one Spark
   * job per step with no codegen and no query planning. No rows are
-  * shuffled; from six partitions on, `treeReduce` adds one level
-  * that exchanges per-partition buffers.
+  * shuffled; from six partitions on, the fold ([[graft.Parts]]`.reduce`)
+  * adds one level that exchanges per-partition buffers.
   *  - assignment is [[graft.plans.KmeansKernel.assignRows]], the entry
   *    of the kernel the `kmeans_assign` expression calls;
   *  - the update adds each block's pre-scaled longs into k buffers of
   *    (dim + 1) longs ([[graft.plans.VecSumCount.add]]), merged with
-  *    `Math.addExact` through `treeReduce` — the result is
+  *    `Math.addExact` through the [[graft.Parts]] fold — the result is
   *    centroid-table-shaped at any corpus size, and iterations pay no
   *    per-element decimal work;
   *  - the driver divides the exact sums into the next centroid table.
@@ -62,7 +59,7 @@ import graft.plans.{HashKernels, KmeansFunctions, KmeansKernel, VecScale9Kernel,
   *    sums, IEEE min) or lexicographic (`(md5, id)`, `(d², id)`,
   *    ascending id), so neither the partitioning nor the arrival order
   *    of the partials can change a bit;
-  *  - one loop runs over two forms of the blocks ([[Parts]]): cached
+  *  - one loop runs over two forms of the blocks ([[graft.Parts]]): cached
   *    per partition, or (at most [[localFitMaxRows]] rows) collected into
   *    one block on the driver — the same kernels and merges over one
   *    block, so both give the same bits by construction.
@@ -230,59 +227,13 @@ object Kmeans {
     }
   }
 
-  /** One value per block: the [[Block]]s a k-means loop runs over, and
-    * the per-block state it carries between passes. Each step is a block
-    * kernel followed by an exact or lexicographic merge on the driver,
-    * and the two forms differ only in where the kernel runs:
-    *  - [[Spread]]: an RDD with one value per input partition; each
-    *    `collect` is one Spark job, and `reduce` is `treeReduce`;
-    *  - [[One]]: a single value on the driver.
-    * So both forms give the same bits by construction.
-    */
-  private sealed trait Parts[A] {
-    def map[B: ClassTag](f: A => B): Parts[B]
-    /** `f` over this and `that` block by block; `that` must come from the
-      * same [[Parts]] (the same form and partitions).
-      */
-    def zip[B: ClassTag, C: ClassTag](that: Parts[B])(f: (A, B) => C): Parts[C]
-    /** The values in partition order. */
-    def collect(): Seq[A]
-    /** The values merged by `f`, which must not depend on their order. */
-    def reduce(f: (A, A) => A): A
-    def persist(): Parts[A]
-    /** Drops what [[persist]] cached, waiting until it is gone. */
-    def release(): Unit
-  }
-
-  private final case class One[A](a: A) extends Parts[A] {
-    def map[B: ClassTag](f: A => B): Parts[B] = One(f(a))
-    def zip[B: ClassTag, C: ClassTag](that: Parts[B])(f: (A, B) => C): Parts[C] =
-      One(f(a, that.asInstanceOf[One[B]].a))
-    def collect(): Seq[A] = Seq(a)
-    def reduce(f: (A, A) => A): A = a
-    def persist(): Parts[A] = this
-    def release(): Unit = ()
-  }
-
-  private final case class Spread[A](rdd: RDD[A]) extends Parts[A] {
-    def map[B: ClassTag](f: A => B): Parts[B] = Spread(rdd.map(f))
-    def zip[B: ClassTag, C: ClassTag](that: Parts[B])(f: (A, B) => C): Parts[C] =
-      Spread(rdd.zipPartitions(that.asInstanceOf[Spread[B]].rdd,
-        preservesPartitioning = true)((as, bs) => Iterator(f(as.next(), bs.next()))))
-    def collect(): Seq[A] = rdd.collect().toSeq
-    def reduce(f: (A, A) => A): A = rdd.treeReduce(f)
-    def persist(): Parts[A] = { rdd.persist(StorageLevel.MEMORY_AND_DISK); this }
-    def release(): Unit = { rdd.unpersist(blocking = true); () }
-  }
-
   /** The blocks of `data` (slim columns), one per partition, not cached.
     * An input without partitions is one empty block.
     */
   private def blocksOf(data: DataFrame, withSums: Boolean): Parts[Block] = {
     val rdd = data.queryExecution.toRdd
       .mapPartitions(rows => Iterator(Block(rows, withSums)))
-    if (rdd.partitions.isEmpty) One(Block(Iterator.empty, withSums))
-    else Spread(rdd)
+    Parts.of(rdd, Block(Iterator.empty, withSums))
   }
 
   /** The cached blocks of `df`'s slim projection, or — when they hold at
@@ -298,7 +249,7 @@ object Kmeans {
       if (localMaxRows <= 0 ||
           all.map(_.size.toLong).collect().sum > localMaxRows) all
       else {
-        val one = One(Block.concat(all.collect()))
+        val one = Parts.Local(Vector(Block.concat(all.collect())))
         all.release()
         one
       }
@@ -324,7 +275,7 @@ object Kmeans {
   private def clusterSums(rows: Parts[Block], flat: Array[Double],
                           dim: Int): Seq[(Int, Array[Long], Long)] = {
     val bufs = rows.map(_.sums(flat, dim))
-      .reduce((a, b) => Array.tabulate(a.length)(j => addExact(a(j), b(j))))
+      .reduce(Parts.exactDepth)((a, b) => Array.tabulate(a.length)(j => addExact(a(j), b(j))))
     bufs.indices.filter(j => bufs(j)(dim) > 0)
       .map(j => (j, bufs(j).take(dim), bufs(j)(dim)))
   }
@@ -508,7 +459,7 @@ object Kmeans {
         r += 1
       }
       val nCand = cand.length
-      val weights = state.map(_.counts(nCand)).reduce(addExact)
+      val weights = state.map(_.counts(nCand)).reduce(Parts.exactDepth)(addExact)
       reduceWeightedCandidates(cand.toIndexedSeq, weights(_), k, dim,
         (chosenIds, need) => seeded(rows, need, s"$salt|pad", chosenIds).toSeq)
     } finally state.release()

@@ -3,10 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
+import graft.Parts
 import graft.functions.TextFunctions
-import graft.plans.{KmeansFunctions, LogitFunctions, LogitKernel, VecScale9Kernel, VecSumCount}
+import graft.plans.{LogitFunctions, LogitKernel, VecScale9Kernel, VecSumCount}
 
 /** Distributed TRAINING of the linear quality classifier whose
   * inference twin is [[Corpus.qualityLogit]] — full-batch gradient
@@ -17,13 +17,16 @@ import graft.plans.{KmeansFunctions, LogitFunctions, LogitKernel, VecScale9Kerne
   * labels (a language tag, a source allowlist, human ratings) instead
   * of hand-tuning weights.
   *
-  * Scale shape (per iteration, over a cached slim `(id, x, y)`
-  * projection — the k-means template):
-  *  - the map side is the [[graft.plans.LogitGrad]] codegen kernel
-  *    (current weights ride in the expression, broadcast-sized);
-  *  - the reduce is ONE [[graft.plans.VecSumCount]] buffer of
-  *    `dim + 2` longs per partition — the shuffle is
-  *    weight-vector-shaped, never data-shaped, at any corpus size;
+  * Scale shape: the `(x, y)` features are read ONCE into one cached
+  * block per input partition ([[graft.Parts]], the k-means template).
+  * Each iteration is one block kernel and an exact fold, one Spark job
+  * with no codegen, no query planning and no row shuffle:
+  *  - per row, [[graft.plans.LogitKernel.grad]] (the kernel of the
+  *    `logit_grad` expression) under the current weights, added into
+  *    ONE buffer of `dim + 2` longs per block
+  *    ([[graft.plans.VecSumCount.add]]);
+  *  - the buffers fold with `Math.addExact` — weight-vector-shaped,
+  *    never data-shaped, at any corpus size;
   *  - the driver applies the update to `dim = 5` doubles.
   * 100 TB deployment: train on a labeled sample (this loop, unchanged),
   * then score the full corpus with [[scoreDf]] — a single
@@ -42,9 +45,9 @@ import graft.plans.{KmeansFunctions, LogitFunctions, LogitKernel, VecScale9Kerne
   *  - gradient/residual sums accumulate as exact scale-9 longs
   *    (order-independent, partitioning-invariant); the mean divides at
   *    scale 9 HALF_UP; weight init is all-zero;
-  *  - one loop runs over two row sources: the cached feature frame, or
-  *    (at most [[localTrainMaxRows]] rows) the same features collected,
-  *    where each row goes through the same kernel and buffer add.
+  *  - one loop runs over two forms of the blocks: cached per
+  *    partition, or (at most [[localTrainMaxRows]] rows) collected to
+  *    the driver — the same kernel and exact merges, so the same bits.
   */
 object LogitTrain {
 
@@ -81,19 +84,53 @@ object LogitTrain {
         Corpus.qualitySignalArray(col("__st")).as("x"),
         col("__y").as("y"))
 
+  /** One block per partition of `feats`' rows with a non-null `x` and
+    * `y`: the feature vectors and the labels.
+    */
+  private final case class Block(xs: Array[ArrayData], ys: Array[Double]) {
+    /** Σ over the rows of the scale-9 per-row contributions under `w`
+      * (`dim` gradients + the squared residual), then the row count.
+      */
+    def sums(w: Array[Double]): Array[Long] = {
+      val buf = new Array[Long](dim + 2)
+      var r = 0
+      while (r < xs.length) {
+        VecSumCount.add(buf, LogitKernel.grad(xs(r), ys(r), w), dim + 1); r += 1
+      }
+      buf
+    }
+  }
+
+  /** The blocks of `feats`, not cached. */
+  private def blocksOf(feats: DataFrame): Parts[Block] = {
+    val rdd = feats.select(col("x").cast("array<double>"), col("y").cast("double"))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val kept = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+          .map(r => (ArrayData.toArrayData(r.getArray(0).toDoubleArray()), r.getDouble(1)))
+          .toArray
+        Iterator.single(Block(kept.map(_._1), kept.map(_._2)))
+      }
+    Parts.of(rdd, Block(Array.empty, Array.empty))
+  }
+
+  /** The exact sums of one gradient pass under `w` over `rows`: `dim`
+    * gradients, the squared residual, then the row count.
+    */
+  private def passSums(rows: Parts[Block], w: Array[Double]): Array[Long] =
+    rows.map(_.sums(w)).reduce(Parts.exactDepth) { (a, b) =>
+      Array.tabulate(a.length)(i => Math.addExact(a(i), b(i)))
+    }
+
   /** ONE gradient pass under `w`: the exact scale-9 sums of the
     * per-row contributions (`dim` gradients + the squared residual)
     * and the row count — the building block of one GD step, exposed
-    * for incremental (micro-batch) training. Collects ONE row.
+    * for incremental (micro-batch) training. One job over uncached
+    * blocks; one buffer per partition reaches the driver.
     */
   def gradSums(feats: DataFrame, w: Array[Double]): (Seq[Long], Long) = {
     require(w.length == dim, s"expected $dim weights, got ${w.length}")
-    val row = feats
-      .select(KmeansFunctions.vec_sum_count(
-        LogitFunctions.logit_grad(col("x"), col("y"), w), dim + 1).as("sc"))
-      .select(col("sc.sums"), col("sc.n"))
-      .collect()(0)
-    (row.getSeq[Long](0), row.getLong(1))
+    val s = passSums(blocksOf(feats), w)
+    (s.take(dim + 1).toSeq, s(dim + 1))
   }
 
   /** The driver-side update: `w − lr · mean(grad)` with the mean taken
@@ -111,83 +148,60 @@ object LogitTrain {
   }
 
   /** Above this row count the iteration loop stays distributed; at or
-    * below it the features collect once and the remaining iterations
-    * run over the collected rows. A labeled training sample this small
+    * below it the cached blocks collect once and the remaining
+    * iterations run on the driver. A labeled training sample this small
     * pays more per iteration in job scheduling (one full Spark job per
     * GD step) than in arithmetic — 150 iterations over a few thousand
     * rows is ~150 x ~40 ms of pure driver/scheduler overhead. It is the
-    * same loop over the other row source: each collected row goes
-    * through [[graft.plans.LogitKernel.grad]], the kernel of
-    * [[graft.plans.LogitGrad]], into one [[graft.plans.VecSumCount]]
-    * buffer with the aggregate's own add, and the scale-9 long sums are
-    * exact and order-independent, so the bits are the same
-    * (`LogitSpec` pins the equality). At 65,536 rows the collected
-    * features are ≤ ~3 MB — driver-trivial.
+    * same loop over the other form of the blocks: the same kernel and
+    * buffer add per row, and the scale-9 long sums are exact and
+    * order-independent, so the bits are the same (`LogitSpec` pins the
+    * equality). At 65,536 rows the collected features are ≤ ~3 MB —
+    * driver-trivial.
     */
   val localTrainMaxRows = 65536L
 
   /** `iters` full-batch gradient steps from the all-zero init over a
-    * `(x, y)` feature frame (the input is cached here and released
+    * `(x, y)` feature frame (read once into cached blocks, released
     * before returning). `y` must be 0/1-ish (any double works
     * arithmetically; the residual is `p − y`).
     *
-    * The FIRST iteration always runs distributed (it establishes `n`
-    * with no extra job); when `n <= localMaxRows` the features collect
-    * once and the remaining iterations run over the collected rows —
-    * same bits, see [[localTrainMaxRows]]. Pass `localMaxRows = 0` to
-    * force every iteration distributed (the spec uses it to pin the
-    * equality).
+    * The FIRST iteration always runs distributed (it fills the cache and
+    * establishes `n` with no extra job); when `n <= localMaxRows` the
+    * blocks collect once and the remaining iterations run on the driver
+    * — same bits, see [[localTrainMaxRows]]. So a distributed train runs
+    * `iters` jobs, a local one 2. Pass `localMaxRows = 0` to force every
+    * iteration distributed (the spec uses it to pin the equality).
     */
   def train(feats: DataFrame, iters: Int, lr: Double,
             localMaxRows: Long = localTrainMaxRows): Model = {
     require(iters >= 1, s"logit training needs iters >= 1, got $iters")
     require(lr > 0.0 && !lr.isNaN && !lr.isInfinite,
       s"logit training needs a positive finite learning rate, got $lr")
-    val data = feats.select(col("x"), col("y"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // the gradient pass is a GLOBAL aggregate — its reduce side is one
-    // (dim+2)-long buffer per map task at any corpus scale, so AQE's
-    // per-stage barrier (one extra job per iteration, measured 21 vs
-    // 11 jobs on a 10-iteration train) has nothing to adapt; run the
-    // iterations on a loop-scoped child session with a single reduce
-    // partition (LoopSession doc). Exact long sums: bit-identical.
-    val dataLoop = LoopSession.rebase(data, 1)
+    val cached = blocksOf(feats).persist()
     try {
+      var rows = cached
       var w = new Array[Double](dim)
       var mse = Double.NaN
       var n = 0L
       var it = 0
-      var local: Option[(Array[ArrayData], Array[Double])] = None
       while (it < iters) {
-        val s = local match {
-          case Some((xs, ys)) =>
-            // the gradSums aggregate over the collected rows
-            val buf = new Array[Long](dim + 2)
-            var r = 0
-            while (r < xs.length) {
-              VecSumCount.add(buf, LogitKernel.grad(xs(r), ys(r), w), dim + 1)
-              r += 1
-            }
-            buf.take(dim + 1).toSeq
-          case None =>
-            val (sd, nd) = gradSums(dataLoop, w)
-            require(nd > 0, "cannot train a logit model on an empty dataset")
-            n = nd
-            if (n <= localMaxRows && it + 1 < iters) {
-              val rows = data.collect()
-              local = Some((
-                rows.map(r => ArrayData.toArrayData(r.getSeq[Double](0).toArray)),
-                rows.map(_.getDouble(1))))
-            }
-            sd
+        val s = passSums(rows, w)
+        if (it == 0) {
+          n = s(dim + 1)
+          require(n > 0, "cannot train a logit model on an empty dataset")
+          if (n <= localMaxRows && iters > 1) {
+            rows = Parts.Local(cached.collect())
+            cached.release()
+          }
         }
-        val (w2, m) = applyStep(w, s, n, lr)
+        val (w2, m) = applyStep(w, s.take(dim + 1).toSeq, n, lr)
         mse = m
         w = w2
         it += 1
       }
       Model(w, mse, n)
-    } finally { data.unpersist(); () }
+    } finally cached.release()
   }
 
   /** One-scan serving pass: `(id, score, keep)` under a trained model —

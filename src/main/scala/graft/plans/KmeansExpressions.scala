@@ -225,7 +225,7 @@ object VecScale9Kernel {
   /** The mean of `n` values whose exact scale-9 sum is `unscaled`:
     * `unscaled · 10⁻⁹ / n` at scale 9 HALF_UP, as a double — the update
     * every exact-sum loop (Lloyd's, incremental k-means, logit GD)
-    * applies to its [[VecSumCount]] sums.
+    * applies to its [[VecSumCount]] buffers.
     */
   def mean9(unscaled: Long, n: Long): Double =
     java.math.BigDecimal.valueOf(unscaled, 9)
@@ -247,7 +247,7 @@ object VecScale9Kernel {
 /** `array<float|double> -> array<long>`: each element as its exact
   * scale-9 decimal unscaled value (see [[VecScale9Kernel.scale9]]) —
   * the expression form of the longs the k-means blocks carry
-  * (`VecScale9Kernel.scaleArray`), for summing with [[VecSumCount]].
+  * (`VecScale9Kernel.scaleArray`), for summing with [[VecSumCount.add]].
   */
 case class VecScale9(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -335,87 +335,14 @@ case class KmeansAssign(child: Expression, weights: Array[Double], dim: Int)
   override def hashCode(): Int = child.hashCode() * 31 + dim
 }
 
-/** Per-group element-wise sum of scale-9 long vectors + member count,
-  * as a real PARTIAL aggregate: buffer = `long[dim + 1]` (sums, count),
-  * update/merge are `Math.addExact` loops (exact, order-independent,
-  * LOUD on overflow — safe to ~9e9 members per group at |x| <= 1; for
-  * the k-means update the declarative alternative, posexplode ->
-  * groupBy(cid, dim) with DECIMAL sums, multiplies the scan by `dim`
-  * rows and pays decimal arithmetic per element PER ITERATION — this
-  * aggregate made the 2M x 64 fit iteration assignment-bound).
-  * Shuffles one `(dim + 1) x 8`-byte buffer per group per partition.
+/** Element-wise sums of scale-9 long vectors plus a member count, in
+  * one `long[dim + 1]` buffer: the k-means update's per-cluster buffers
+  * and the logit step's per-block buffer. Exact and order-independent,
+  * LOUD on overflow — safe to ~9e9 members per buffer at |x| <= 1.
   */
-case class VecSumCount(
-    vec: Expression,
-    dim: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[Array[Long]] {
-
-  require(dim > 0, s"vec_sum_count needs dim > 0, got $dim")
-
-  override def children: Seq[Expression] = Seq(vec)
-  override def nullable: Boolean = false
-  override def dataType: DataType = StructType(Seq(
-    StructField("sums", ArrayType(LongType, containsNull = false), nullable = false),
-    StructField("n", LongType, nullable = false)))
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    vec.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"vec_sum_count expects array<long> (vec_scale9 output), got $other")
-    }
-
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](dim + 1)
-
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val v = vec.eval(input)
-    if (v != null) VecSumCount.add(buf, v.asInstanceOf[ArrayData], dim)
-    buf
-  }
-
-  override def merge(buf: Array[Long], other: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i <= dim) { buf(i) = Math.addExact(buf(i), other(i)); i += 1 }
-    buf
-  }
-
-  override def eval(buf: Array[Long]): Any =
-    new GenericInternalRow(Array[Any](
-      org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-        java.util.Arrays.copyOfRange(buf, 0, dim)),
-      buf(dim)))
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate((dim + 1) * 8)
-    bb.asLongBuffer().put(buf)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val out = new Array[Long](dim + 1)
-    java.nio.ByteBuffer.wrap(bytes).asLongBuffer().get(out)
-    out
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): VecSumCount =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): VecSumCount =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): VecSumCount =
-    copy(vec = newChildren(0))
-  override def prettyName: String = "vec_sum_count"
-}
-
 object VecSumCount {
-  /** One row into a [[VecSumCount]] buffer: the `dim` longs of `a` onto
-    * the sums and 1 onto the count, each with `Math.addExact`. The
-    * aggregate's update and the driver-local loops over collected rows
-    * both call it, so their sums agree and both throw on overflow.
+  /** One row into a buffer: the `dim` longs of `a` onto the sums and 1
+    * onto the count, each with `Math.addExact`.
     */
   def add(buf: Array[Long], a: ArrayData, dim: Int): Unit = {
     if (a.numElements() != dim)
@@ -432,7 +359,4 @@ object KmeansFunctions {
     GraftBridge.column(KmeansAssign(GraftBridge.expression(v), weights, dim))
   def vec_scale9(v: Column): Column =
     GraftBridge.column(VecScale9(GraftBridge.expression(v)))
-  def vec_sum_count(v: Column, dim: Int): Column =
-    GraftBridge.column(
-      VecSumCount(GraftBridge.expression(v), dim).toAggregateExpression())
 }

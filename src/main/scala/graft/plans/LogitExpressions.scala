@@ -19,11 +19,11 @@ import org.apache.spark.sql.types._
   *   out = [scale9(r·x_0), …, scale9(r·x_{d−1}), scale9(r²)]
   *
   * returned as scale-9 longs ([[VecScale9Kernel.scale9]]) so the
-  * downstream [[VecSumCount]] aggregate sums them exactly and
-  * order-independently — the same shuffle shape as the k-means update:
-  * every partition reduces to ONE (dim + 2)-long buffer before the
-  * exchange, so an iteration's network cost is per-partition, not
-  * per-row, at any corpus size.
+  * training loop sums them exactly and order-independently
+  * ([[VecSumCount.add]]) — the same shape as the k-means update: every
+  * partition reduces to ONE (dim + 2)-long buffer before the fold, so an
+  * iteration's network cost is per-partition, not per-row, at any
+  * corpus size.
   *
   * The ALGEBRAIC sigmoid (only +, ·, /, |·| — no exp) is a deliberate
   * determinism choice: every step of the training loop is either exact
@@ -78,8 +78,9 @@ object LogitKernel {
 }
 
 /** `(array<double> x, double y) -> array<long>` of length `dim + 1`:
-  * the scale-9 gradient contributions plus the squared residual, for
-  * one [[VecSumCount]] pass per training iteration.
+  * the scale-9 gradient contributions plus the squared residual — the
+  * expression form of [[LogitKernel.grad]], the kernel each training
+  * iteration runs per row.
   */
 case class LogitGrad(left: Expression, right: Expression,
                      weights: Array[Double]) extends BinaryExpression {

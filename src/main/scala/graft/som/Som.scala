@@ -2,7 +2,11 @@ package graft.som
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.ArrayType
 import org.apache.spark.storage.StorageLevel
+
+import graft.Parts
 
 /** SOM estimator configuration. Defaults mirror the reference constructor
   * (`xpysom.py:73-82`): sigma=0 ⇒ min(x,y)/2 (`xpysom.py:178-181`),
@@ -35,20 +39,28 @@ final case class SomConfig(
       */
     batchSize: Int = 2048,
     /** Inputs whose total value count (rows x dim) is at or under this
-      * threshold train DRIVER-LOCALLY: one fused Spark job collects the
-      * partitions (with their ids), then every epoch runs on the driver
-      * with the SAME kernels and the SAME combine topology — results
-      * are bit-identical to the distributed path, but the
-      * 1-job-per-epoch scheduling floor (which dwarfs the arithmetic on
-      * tiny inputs: r8 measured 0.5 s for 10 epochs over 2,000 rows vs
-      * 0.027 s in-core) disappears. The analogue of the reference's
-      * in-core path (`xpysom.py:560-575`). 0 disables the fast path.
-      * Execution knob only — not part of the saved model params.
+      * threshold train DRIVER-LOCALLY. One job reads the input into one
+      * cached block per partition and sizes it; it also returns the
+      * blocks of a small input, with their partition order, and every
+      * epoch then runs on the driver with the SAME kernels and the SAME
+      * fold topology — results are bit-identical to the distributed
+      * epochs, but the 1-job-per-epoch scheduling floor (which dwarfs
+      * the arithmetic on tiny inputs: r8 measured 0.5 s for 10 epochs
+      * over 2,000 rows vs 0.027 s in-core) disappears. A larger input
+      * keeps the cached blocks, with no second scan. The analogue of the
+      * reference's in-core path (`xpysom.py:560-575`). 0 disables the
+      * fast path. Execution knob only — not part of the saved model
+      * params.
       */
     localFitThreshold: Long = 2000000L,
-    /** Tree depth for the per-epoch deterministic (sums, counts) combine;
-      * 2 keeps driver fan-in bounded at cluster scale (the reference's
-      * dask path does a flat single-node sum, `xpysom.py:545-558`).
+    /** Tree depth of the per-epoch fixed-topology fold of the
+      * (sums, counts) partials ([[graft.Parts]]): fan-out
+      * ⌈partitions^(1/depth)⌉, so 2 keeps driver fan-in bounded at
+      * cluster scale (the reference's dask path does a flat single-node
+      * sum, `xpysom.py:545-558`). The fold exchanges partials on the
+      * cluster only where `treeAggregate` would add a level; an epoch
+      * over at most 5 partitions at depth 2 is one stage with no
+      * exchange.
       */
     treeDepth: Int = 2) {
 
@@ -73,20 +85,22 @@ final case class SomConfig(
   }
 }
 
-/** Batch-SOM trainer: one Spark job per epoch — broadcast the codebook,
-  * per-partition batched pass (distances → winners → per-winner row sums
-  * and counts), deterministic elementwise tree combine of
-  * (sums, counts), then on the driver the neighbourhood spread
-  * num = Hᵀ·sums, den = Hᵀ·counts through the k x k neighbourhood table
-  * H and the guarded-division merge. The reference applies the
-  * neighbourhood per row, as an n x k weight matrix G with num = Gᵀ·X
-  * (`xpysom.py:420-443`); since every row of G is its winner's row of H,
-  * summing rows per winner first (Kohonen's Voronoi-set batch map) gives
-  * the same sums for n·dim additions instead of an n·k·dim gemm.
-  * Dataflow per `xpysom.py:458-594` re-expressed as the idiomatic MLlib
-  * broadcast+aggregate pattern; the per-partition sub-batching replaces
-  * the reference's `n_parallel` chunking (`xpysom.py:560-575`) and the
-  * tree combine replaces dask's delayed flat sum (`xpysom.py:545-558`).
+/** Batch-SOM trainer: one Spark job per epoch over cached per-partition
+  * blocks — broadcast the codebook, per-block batched pass (distances →
+  * winners → per-winner row sums and counts), the fixed-topology fold
+  * of (sums, counts) ([[graft.Parts]]), then on the driver the
+  * neighbourhood spread num = Hᵀ·sums, den = Hᵀ·counts through the
+  * k x k neighbourhood table H and the guarded-division merge. The
+  * reference applies the neighbourhood per row, as an n x k weight
+  * matrix G with num = Gᵀ·X (`xpysom.py:420-443`); since every row of G
+  * is its winner's row of H, summing rows per winner first (Kohonen's
+  * Voronoi-set batch map) gives the same sums for n·dim additions
+  * instead of an n·k·dim gemm. Dataflow per `xpysom.py:458-594`: the
+  * blocks are the reference's Dask blocks, the per-block sub-batching
+  * replaces its `n_parallel` chunking (`xpysom.py:560-575`) and the
+  * fold replaces dask's delayed flat sum (`xpysom.py:545-558`). One
+  * job reads and sizes the input; a small input's blocks stay on the
+  * driver and its epochs run no job (`localFitThreshold`).
   */
 final class Som(val config: SomConfig) extends Serializable {
   config.validated
@@ -99,119 +113,73 @@ final class Som(val config: SomConfig) extends Serializable {
     * single `fit(…, 10)` — the checkpoint/resume contract. `iterEnd = -1`
     * (default) means `numEpochs`. `init` overrides the default seeded
     * uniform-normalized initialization (`xpysom.py:188-190`).
+    *
+    * One job reads the input into one cached float32 block per
+    * partition and sizes it ([[Som.trainingParts]]); the epochs then run
+    * over those blocks, on the cluster or — at most
+    * `localFitThreshold` values — on the driver.
     */
   def fit(df: DataFrame, featuresCol: String = "features", numEpochs: Int,
           init: Codebook = null, verbose: Boolean = false,
           iterBeg: Int = 0, iterEnd: Int = -1): SomModel = {
-    require(numEpochs >= 1, s"numEpochs must be >= 1, got $numEpochs")
-    val end = if (iterEnd < 0) numEpochs else iterEnd
-    require(iterBeg >= 0 && iterBeg <= end && end <= numEpochs,
-      s"need 0 <= iterBeg ($iterBeg) <= iterEnd ($end) <= numEpochs ($numEpochs)")
-    // float32 vectors: half the cache footprint of double, and exactly
-    // the reference's training dtype (`xpysom.py:485,510`); all math
-    // still runs in double inside the kernels
-    // tiny-input fast path, tried BEFORE any RDD conversion: ONE job
-    // over the same physical plan `toFloatVectors` would execute either
-    // collects the whole input (with partition ids — bit-identity with
-    // the distributed path depends on replaying the same partition
-    // structure) or proves it is too big. Probing the DataFrame
-    // directly (internal rows, no Dataset encoder) halves the
-    // fixed-cost floor vs converting to the vector RDD first.
-    val probed = Som.collectIfSmallDf(df, featuresCol, config.localFitThreshold)
-    probed match {
-      case Some((chunks, numParts)) =>
-        val dim = chunks.iterator.flatMap(_._2.iterator).next().length
-        val cb0 = Option(init).getOrElse(
-          Codebook.randomUniform(config.x, config.y, dim, config.seed))
-        require(cb0.dim == dim, s"Received $dim features, expected ${cb0.dim}.")
-        require(cb0.x == config.x && cb0.y == config.y,
-          s"init codebook grid ${cb0.x}x${cb0.y} does not match config ${config.x}x${config.y}")
-        val model = new SomModel(config,
-          fitLocalChunks(chunks, numParts, cb0, numEpochs, verbose, iterBeg, end))
-        if (verbose)
-          println(s"\n quantization error: ${model.quantizationError(df, featuresCol)}")
-        return model
-      case None => ()
-    }
-    val data = SomData.toFloatVectors(df, featuresCol)
-    data.persist(StorageLevel.MEMORY_AND_DISK)
+    val end = epochsEnd(numEpochs, iterBeg, iterEnd)
+    val (data, dim) = Som.trainingParts(df, featuresCol, config.localFitThreshold)
     try {
-      val first = data.take(1)
-      require(first.nonEmpty, "cannot fit a SOM on an empty dataset")
-      val dim = first.head.length
-      val cb0 = Option(init).getOrElse(
-        Codebook.randomUniform(config.x, config.y, dim, config.seed))
-      require(cb0.dim == dim, s"Received $dim features, expected ${cb0.dim}.")
-      require(cb0.x == config.x && cb0.y == config.y,
-        s"init codebook grid ${cb0.x}x${cb0.y} does not match config ${config.x}x${config.y}")
       val model = new SomModel(config,
-        fitFrom(data, cb0, numEpochs, verbose, iterBeg, end))
+        train(data, dim, init, numEpochs, verbose, iterBeg, end))
       // end-of-train QE print (`xpysom.py:591-592`)
       if (verbose)
         println(s"\n quantization error: ${model.quantizationError(df, featuresCol)}")
       model
-    } finally data.unpersist(blocking = false)
+    } finally data.release()
   }
 
   /** In-core training on an already-materialized matrix — the direct
     * analogue of the reference's own API, which trains on in-memory
     * arrays (`xpysom.py:560-575` processes them in `n_parallel`
-    * batches on one node). Zero Spark jobs: the epoch loop is
-    * [[fitLocalChunks]] over one chunk, the same kernels the cluster
+    * batches on one node). Zero Spark jobs: the epochs run over the
+    * matrix as one block on the driver, the same kernels the cluster
     * path runs. Use this when the data already lives on the driver
     * (notebook-scale exploration, per-group sub-SOMs inside a larger
     * job); `fit` remains the entry point for anything DataFrame-shaped
-    * and dispatches to this regime automatically under
-    * `localFitThreshold`.
+    * and trains on the driver automatically under `localFitThreshold`.
     */
   def fitMatrix(data: Array[Array[Float]], numEpochs: Int,
                 init: Codebook = null, verbose: Boolean = false,
                 iterBeg: Int = 0, iterEnd: Int = -1): SomModel = {
-    require(numEpochs >= 1, s"numEpochs must be >= 1, got $numEpochs")
+    val end = epochsEnd(numEpochs, iterBeg, iterEnd)
     require(data.nonEmpty, "cannot fit a SOM on an empty dataset")
-    val end = if (iterEnd < 0) numEpochs else iterEnd
-    require(iterBeg >= 0 && iterBeg <= end && end <= numEpochs,
-      s"need 0 <= iterBeg ($iterBeg) <= iterEnd ($end) <= numEpochs ($numEpochs)")
     val dim = data(0).length
     data.foreach(v => require(v.length == dim,
       s"Received ${v.length} features, expected $dim."))
-    val cb0 = Option(init).getOrElse(
-      Codebook.randomUniform(config.x, config.y, dim, config.seed))
-    require(cb0.dim == dim, s"Received $dim features, expected ${cb0.dim}.")
-    require(cb0.x == config.x && cb0.y == config.y,
-      s"init codebook grid ${cb0.x}x${cb0.y} does not match config ${config.x}x${config.y}")
     new SomModel(config,
-      fitLocalChunks(Array((0, data)), 1, cb0, numEpochs, verbose, iterBeg, end))
+      train(Parts.Local(Vector(data)), dim, init, numEpochs, verbose, iterBeg, end))
   }
 
-  /** Driver-local epoch loop over the collected partition chunks: the
-    * SAME `partitionUpdate` kernel per original partition, the SAME
-    * combine topology (`foldDeterministicLocal` replays
-    * `reduceDeterministic` exactly), the SAME `spread` and guarded merge
-    * — so the trained codebook is bit-identical to what the distributed
-    * path would produce on the same RDD (`SomLocalFitSpec` pins it),
-    * with zero Spark jobs per epoch.
+  /** The validated end of the epoch range [iterBeg, iterEnd). */
+  private def epochsEnd(numEpochs: Int, iterBeg: Int, iterEnd: Int): Int = {
+    require(numEpochs >= 1, s"numEpochs must be >= 1, got $numEpochs")
+    val end = if (iterEnd < 0) numEpochs else iterEnd
+    require(iterBeg >= 0 && iterBeg <= end && end <= numEpochs,
+      s"need 0 <= iterBeg ($iterBeg) <= iterEnd ($end) <= numEpochs ($numEpochs)")
+    end
+  }
+
+  /** Epochs [iterBeg, iterEnd) of the `numEpochs` decay schedule over
+    * `dim`-feature blocks, from `init` or the seeded uniform codebook.
     */
-  private def fitLocalChunks(chunks: Array[(Int, Array[Array[Float]])],
-                             numPartitions: Int, init: Codebook,
-                             numEpochs: Int, verbose: Boolean,
-                             iterBeg: Int, iterEnd: Int): Codebook = {
-    val cfg = config
-    var cb = init
+  private def train(data: Parts[Array[Array[Float]]], dim: Int, init: Codebook,
+                    numEpochs: Int, verbose: Boolean,
+                    iterBeg: Int, iterEnd: Int): Codebook = {
+    var cb = Option(init).getOrElse(
+      Codebook.randomUniform(config.x, config.y, dim, config.seed))
+    require(cb.dim == dim, s"Received $dim features, expected ${cb.dim}.")
+    require(cb.x == config.x && cb.y == config.y,
+      s"init codebook grid ${cb.x}x${cb.y} does not match config ${config.x}x${config.y}")
     var t = iterBeg
     val begin = System.nanoTime()
     while (t < iterEnd) {
-      val eta = cfg.decayFn(cfg.learningRate, cfg.learningRateN, t, numEpochs)
-      val sig = cfg.decayFn(cfg.sigma0, cfg.sigmaN, t, numEpochs)
-      val wSq = if (cfg.distanceFn.canCache) cb.rowSumSq() else null
-      val w = cb.weights
-      val partials = chunks.toSeq.map { case (pid, rows) =>
-        pid -> SomKernels.partitionUpdate(rows.iterator, w, wSq, cfg)
-      }
-      val (sums, counts) = SomKernels.foldDeterministicLocal(
-        partials, numPartitions, cfg.treeDepth)(SomKernels.addPartial)
-      val (num, den) = SomKernels.spread(sums, counts, cfg, eta, sig)
-      cb = cb.merged(num, den)
+      cb = epoch(data, cb, t, numEpochs).getOrElse(cb)
       if (verbose) println(Som.progressLine(t - iterBeg, iterEnd - iterBeg,
         numEpochs, (System.nanoTime() - begin) / 1e9))
       t += 1
@@ -219,62 +187,44 @@ final class Som(val config: SomConfig) extends Serializable {
     cb
   }
 
-  /** Epoch loop over an already-materialized vector RDD: epochs
-    * [iterBeg, iterEnd) of the `numEpochs` decay schedule.
-    */
-  private[graft] def fitFrom(data: RDD[Array[Float]], init: Codebook,
-                             numEpochs: Int, verbose: Boolean = false,
-                             iterBeg: Int = 0, iterEnd: Int = -1): Codebook = {
-    val end = if (iterEnd < 0) numEpochs else iterEnd
-    var cb = init
-    var t = iterBeg
-    val begin = System.nanoTime()
-    while (t < end) {
-      cb = epoch(data, cb, t, numEpochs)
-      if (verbose) println(Som.progressLine(t - iterBeg, end - iterBeg,
-        numEpochs, (System.nanoTime() - begin) / 1e9))
-      t += 1
-    }
-    cb
-  }
-
-  /** One training epoch (one Spark job): broadcast codebook (+ wSq
-    * cache), per-partition update, deterministic tree-combine of
-    * (sums, counts), neighbourhood spread and merge on the driver.
-    * Exposed for incremental/streaming training where each micro-batch
-    * advances the decay schedule by one step.
+  /** One training epoch: the codebook (+ wSq cache) to every block (one
+    * broadcast on the cluster form), `partitionUpdate` per block, the
+    * fixed-topology fold of the (sums, counts) partials at
+    * `treeDepth` ([[graft.Parts]]), then the neighbourhood spread and
+    * merge on the driver. On cached cluster blocks that is one Spark job
+    * with no exchange below the `treeAggregate` level rule; on driver
+    * blocks, none. None when the blocks hold no row (the codebook would
+    * not move). Exposed for incremental/streaming training where each
+    * micro-batch advances the decay schedule by one step.
     *
-    * The fan-in is a fixed-topology tree keyed by partition id (partials
-    * sorted before every fold) rather than `treeReduce`, whose combine
-    * order follows shuffle-block arrival and therefore perturbs the
-    * float sum by ~1 ulp from run to run. Same shuffle volume and
-    * bounded driver fan-in, plus bit-reproducible training — which the
-    * resume contract (`fit(iterBeg/iterEnd)`) and the seeded-determinism
-    * guarantee both rely on.
+    * The fold's combine order depends only on the partition count and
+    * `treeDepth`, never on the form or on arrival order, so training is
+    * bit-reproducible — which the resume contract (`fit(iterBeg/iterEnd)`),
+    * the seeded-determinism guarantee and the driver-local fast path all
+    * rely on.
     */
-  private[graft] def epoch(data: RDD[Array[Float]], cb: Codebook, t: Int,
-                           numEpochs: Int): Codebook = {
-    val sc = data.sparkContext
+  private[graft] def epoch(data: Parts[Array[Array[Float]]], cb: Codebook, t: Int,
+                           numEpochs: Int): Option[Codebook] = {
     val cfg = config
     val eta = cfg.decayFn(cfg.learningRate, cfg.learningRateN, t, numEpochs)
     val sig = cfg.decayFn(cfg.sigma0, cfg.sigmaN, t, numEpochs)
     val wSq = if (cfg.distanceFn.canCache) cb.rowSumSq() else null
-    val bc = sc.broadcast((cb.weights, wSq))
-    try {
-      val partials = data.mapPartitionsWithIndex { (pid, it) =>
-        val (w, wsq) = bc.value
-        Iterator.single(pid -> SomKernels.partitionUpdate(it, w, wsq, cfg))
-      }
-      val (sums, counts) = SomKernels.reduceDeterministic(
-        partials, data.getNumPartitions, cfg.treeDepth)(SomKernels.addPartial)
+    val (sums, counts) = data.withShared((cb.weights, wSq)) { shared =>
+      data.map { rows =>
+        val (w, wsq) = shared()
+        SomKernels.partitionUpdate(rows.iterator, w, wsq, cfg)
+      }.reduce(cfg.treeDepth)(SomKernels.addPartial)
+    }
+    if (counts.forall(_ == 0.0)) None
+    else {
       val (num, den) = SomKernels.spread(sums, counts, cfg, eta, sig)
-      cb.merged(num, den)
-    } finally bc.destroy() // don't leak the broadcast on job failure
+      Some(cb.merged(num, den))
+    }
   }
 
   /** Sample init (`random_weights_init`, `xpysom.py:749-759`): draw x*y
     * rows uniformly with replacement (distributed `takeSample`), one per
-    * neuron in row-major order.
+    * neuron in row-major order. Null feature rows are never drawn.
     */
   def sampleInit(df: DataFrame, featuresCol: String = "features"): Codebook = {
     val rows = SomData.toVectors(df, featuresCol)
@@ -283,9 +233,10 @@ final class Som(val config: SomConfig) extends Serializable {
   }
 
   /** Sample covariance (N-1 normalization) of the feature column via a
-    * single distributed pass (deterministic tree-reduce of
-    * (x xᵀ, Σx, n) partials — bit-reproducible across runs like the
-    * training path). Public: the pca-init invariant oracle recomputes
+    * single distributed pass (the fixed-topology fold of per-partition
+    * (x xᵀ, Σx, n) partials, [[graft.Parts]] — bit-reproducible across
+    * runs like the training path). Null feature rows are skipped, as
+    * `fit` skips them. Public: the pca-init invariant oracle recomputes
     * eigen-residuals against it.
     */
   def sampleCovariance(df: DataFrame,
@@ -294,7 +245,7 @@ final class Som(val config: SomConfig) extends Serializable {
     val first = data.take(1)
     require(first.nonEmpty, "cannot compute covariance of an empty dataset")
     val d = first.head.length
-    val partials = data.mapPartitionsWithIndex { (pid, it) =>
+    val partials = data.mapPartitions { it =>
       val m = new Array[Double](d * d)
       val s = new Array[Double](d)
       var c = 0L
@@ -309,10 +260,9 @@ final class Som(val config: SomConfig) extends Serializable {
         }
         c += 1
       }
-      Iterator.single(pid -> ((m, s, c)))
+      Iterator.single((m, s, c))
     }
-    val (xtx, sums, n) = SomKernels.reduceDeterministic(
-      partials, data.getNumPartitions, config.treeDepth) {
+    val (xtx, sums, n) = Parts.Spread(partials).reduce(config.treeDepth) {
       case ((m1, s1, c1), (m2, s2, c2)) =>
         SomKernels.addInPlace(m1, m2); SomKernels.addInPlace(s1, s2)
         (m1, s1, c1 + c2)
@@ -342,70 +292,42 @@ final class Som(val config: SomConfig) extends Serializable {
 }
 
 object Som {
-  /** Partition-count guard for the fast-path probe: above this, the
-    * worst-case driver transfer (every task just under the cap while
-    * the total overflows) stops being negligible, and an input spread
-    * over this many partitions is not "tiny" anyway.
+  /** Partition-count guard for the driver-local fit: above this, the
+    * worst-case driver transfer of the sizing job (every block just
+    * under the threshold while the total overflows) stops being
+    * negligible, and an input spread over this many partitions is not
+    * "tiny" anyway.
     */
   val localFitMaxPartitions = 64
 
-  /** The fast-path probe: one job that returns every partition (with
-    * its id, empty partitions included) and the partition count when
-    * the input's total value count is at or under `threshold`, or None
-    * when it is not. Each task stops buffering the moment its own
-    * running value count exceeds the threshold — an oversized
-    * partition costs its scan, not a driver transfer.
-    *
-    * Reads the query's INTERNAL rows directly (`queryExecution.toRdd`
-    * over the same where+cast plan `SomData.toFloatVectors` executes) —
-    * no Dataset-encoder planning and no second plan compilation, which
-    * halves the fixed-cost floor of a tiny fit. Partitioning is the
-    * physical scan's, identical to the RDD `toFloatVectors` would
-    * produce (no exchange in between), so the collected chunks replay
-    * the same partition structure the distributed path would see — the
-    * bit-identity contract (`SomLocalFitSpec`). Array-typed feature
-    * columns only; other containers (VectorUDT, struct) return None and
-    * take the RDD path.
+  /** The training blocks of `df` ([[SomData.blocks]]) and their feature
+    * count, in one job. The job fills the blocks' cache and returns, per
+    * partition, the value count (rows x dim), the dim of its first row
+    * and — when `threshold > 0`, there are at most
+    * [[localFitMaxPartitions]] partitions and this partition alone holds
+    * at most `threshold` values — the block itself. When the total is
+    * within `threshold` the cache is dropped and the blocks stay on the
+    * driver, in partition order ([[graft.Parts.Local]]): the epochs then
+    * run no Spark job. Otherwise the cached blocks are the cluster form,
+    * with no second scan. The caller releases the result.
     */
-  private[som] def collectIfSmallDf(df: DataFrame, featuresCol: String,
-      threshold: Long): Option[(Array[(Int, Array[Array[Float]])], Int)] = {
-    import org.apache.spark.sql.functions.{col => c}
-    if (threshold <= 0) return None
-    df.schema(featuresCol).dataType match {
-      case _: org.apache.spark.sql.types.ArrayType => ()
-      case _ => return None
-    }
-    val rdd = df.where(c(featuresCol).isNotNull)
-      .select(c(featuresCol).cast("array<float>"))
-      .queryExecution.toRdd
-    if (rdd.getNumPartitions > localFitMaxPartitions) return None
-    val parts = rdd.mapPartitionsWithIndex { (pid, it) =>
-      val buf = scala.collection.mutable.ArrayBuffer[Array[Float]]()
-      var nVals = 0L
-      var overflow = false
-      while (it.hasNext && !overflow) {
-        val ad = it.next().getArray(0)
-        val n = ad.numElements()
-        // null ELEMENTS must fail exactly like the Dataset encoder on
-        // the distributed path (ArrayData.toFloatArray would silently
-        // read them as 0.0)
-        var i = 0
-        while (i < n) {
-          if (ad.isNullAt(i))
-            throw new NullPointerException(
-              s"Null value appeared in non-nullable field: $featuresCol element")
-          i += 1
-        }
-        val v = ad.toFloatArray()
-        nVals += v.length
-        if (nVals <= threshold) buf += v else overflow = true
-      }
-      Iterator.single((pid, if (overflow) null else buf.toArray))
-    }.collect().sortBy(_._1)
-    if (parts.exists(_._2 == null)) return None
-    val totalVals = parts.iterator.flatMap(_._2.iterator).map(_.length.toLong).sum
-    require(totalVals > 0, "cannot fit a SOM on an empty dataset")
-    if (totalVals <= threshold) Some((parts, rdd.getNumPartitions)) else None
+  private[graft] def trainingParts(df: DataFrame, featuresCol: String,
+      threshold: Long): (Parts[Array[Array[Float]]], Int) = {
+    val blocks = SomData.blocks(df, featuresCol).persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val ship = threshold > 0 && blocks.getNumPartitions <= localFitMaxPartitions
+      val sized = blocks.map { b =>
+        val n = b.iterator.map(_.length.toLong).sum
+        (n, if (b.isEmpty) -1 else b(0).length, if (ship && n <= threshold) b else null)
+      }.collect()
+      val total = sized.iterator.map(_._1).sum
+      require(total > 0, "cannot fit a SOM on an empty dataset")
+      val dim = sized.iterator.map(_._2).find(_ >= 0).get
+      if (ship && total <= threshold) {
+        blocks.unpersist(blocking = true)
+        (Parts.Local(sized.map(_._3).toIndexedSeq), dim)
+      } else (Parts.Spread(blocks), dim)
+    } catch { case e: Throwable => blocks.unpersist(blocking = true); throw e }
   }
 
   /** Reference-format progress line (`print_progress`, `xpysom.py:50-69`)
@@ -431,7 +353,7 @@ object Som {
 }
 
 /** Per-partition numeric kernels for training. Serializable: the
-  * deterministic-combine closures reference the module from executors.
+  * fold's closures reference the module from executors.
   */
 private[som] object SomKernels extends Serializable {
 
@@ -441,64 +363,6 @@ private[som] object SomKernels extends Serializable {
   }
 
   type Partial = (Array[Double], Array[Double])
-
-  /** Deterministic tree-combine of per-partition partials: group
-    * `fanout` adjacent partition ids per level, sort each group by id,
-    * fold left; repeat until at most `fanout` partials remain, then
-    * collect (sorted) and fold on the driver. Combine topology depends
-    * only on (width, depth) — never on shuffle arrival order — so the
-    * float sum is bit-reproducible across runs and resumes, unlike
-    * `RDD.treeReduce`/`treeAggregate`. Fan-in stays bounded
-    * (`fanout` ≈ width^(1/depth)) for cluster-scale partition counts.
-    * `comb` may mutate and return its left argument (both operands are
-    * task-local deserialized copies).
-    */
-  def reduceDeterministic[T: scala.reflect.ClassTag](
-      parts: RDD[(Int, T)], width0: Int, depth: Int)(comb: (T, T) => T): T = {
-    val fanout = math.max(
-      math.ceil(math.pow(width0.toDouble, 1.0 / math.max(depth, 1))).toInt, 2)
-    var cur = parts
-    var width = width0
-    while (width > fanout) {
-      val nextWidth = (width + fanout - 1) / fanout
-      cur = cur
-        .map { case (pid, v) => (pid / fanout, (pid, v)) }
-        .groupByKey(nextWidth)
-        .map { case (gid, it) =>
-          gid -> it.toArray.sortBy(_._1).map(_._2).reduceLeft(comb)
-        }
-      width = nextWidth
-    }
-    val fin = cur.collect().sortBy(_._1).map(_._2)
-    require(fin.nonEmpty, "no partials to reduce (empty RDD)")
-    fin.reduceLeft(comb)
-  }
-
-  /** Driver-local replay of [[reduceDeterministic]]'s combine topology
-    * over in-memory partials: same fanout, same adjacent-id grouping,
-    * same sorted fold order at every level — so the float sum is
-    * BIT-IDENTICAL to the distributed reduce (combine topology depends
-    * only on (width0, depth), never on where the partials live). The
-    * tiny-input local fit relies on this equality; a change here must
-    * mirror [[reduceDeterministic]] exactly.
-    */
-  def foldDeterministicLocal[T](parts: Seq[(Int, T)], width0: Int,
-                                depth: Int)(comb: (T, T) => T): T = {
-    val fanout = math.max(
-      math.ceil(math.pow(width0.toDouble, 1.0 / math.max(depth, 1))).toInt, 2)
-    var cur = parts
-    var width = width0
-    while (width > fanout) {
-      val nextWidth = (width + fanout - 1) / fanout
-      cur = cur.groupBy(_._1 / fanout).toSeq.map { case (gid, group) =>
-        gid -> group.sortBy(_._1).map(_._2).reduceLeft(comb)
-      }
-      width = nextWidth
-    }
-    val fin = cur.sortBy(_._1).map(_._2)
-    require(fin.nonEmpty, "no partials to reduce (empty input)")
-    fin.reduceLeft(comb)
-  }
 
   /** One partition's per-winner partial for one epoch: iterate the
     * partition in `batchSize` sub-batches; per batch compute activation
@@ -617,41 +481,56 @@ private[som] object SomKernels extends Serializable {
   * before the math sees it.
   */
 object SomData {
-  /** float32 vectors — the training representation (reference dtype).
-    * Null feature rows are skipped (they carry no information for the
-    * update; the reference would crash on them).
+  /** The training blocks: one per partition, the partition's non-null
+    * feature rows as float32 vectors (the reference's training dtype,
+    * `xpysom.py:485,510`; all math still runs in double inside the
+    * kernels), not cached. Null feature rows are skipped (they carry no
+    * information for the update; the reference would crash on them); a
+    * null ELEMENT fails, as the Dataset encoder fails on it. Array
+    * columns are read as the where+cast plan's internal rows, other
+    * containers (VectorUDT) through [[rowToVec]]. Partitioning is the
+    * input's.
     */
-  def toFloatVectors(df: DataFrame, featuresCol: String): RDD[Array[Float]] = {
-    df.schema.fieldIndex(featuresCol)
+  def blocks(df: DataFrame, featuresCol: String): RDD[Array[Array[Float]]] = {
+    val c = col(featuresCol)
+    val rows = df.where(c.isNotNull)
     df.schema(featuresCol).dataType match {
-      case _: org.apache.spark.sql.types.ArrayType =>
-        val spark = df.sparkSession
-        import spark.implicits._
-        df.where(org.apache.spark.sql.functions.col(featuresCol).isNotNull)
-          .select(org.apache.spark.sql.functions.col(featuresCol)
-          .cast("array<float>")).as[Array[Float]].rdd
+      case _: ArrayType =>
+        rows.select(c.cast("array<float>")).queryExecution.toRdd.mapPartitions { it =>
+          Iterator.single(it.map { r =>
+            val ad = r.getArray(0)
+            var i = 0
+            while (i < ad.numElements()) {
+              if (ad.isNullAt(i))
+                throw new NullPointerException(
+                  s"Null value appeared in non-nullable field: $featuresCol element")
+              i += 1
+            }
+            ad.toFloatArray()
+          }.toArray)
+        }
       case _ =>
-        df.select(featuresCol).rdd.map { r =>
-          val d = rowToVec(r, 0)
-          val out = new Array[Float](d.length)
-          var i = 0
-          while (i < d.length) { out(i) = d(i).toFloat; i += 1 }
-          out
+        rows.select(c).rdd.mapPartitions { it =>
+          Iterator.single(it.map(r => rowToVec(r, 0).map(_.toFloat)).toArray)
         }
     }
   }
 
+  /** double vectors of the non-null feature rows — the init
+    * representation (`sampleInit`, `sampleCovariance`): initialization
+    * keeps double precision.
+    */
   def toVectors(df: DataFrame, featuresCol: String): RDD[Array[Double]] = {
-    df.schema.fieldIndex(featuresCol) // fail fast on missing column
+    val c = col(featuresCol)
+    val rows = df.where(c.isNotNull)
     df.schema(featuresCol).dataType match {
-      case _: org.apache.spark.sql.types.ArrayType =>
+      case _: ArrayType =>
         // cast in codegen + primitive-array encoder: no per-element boxing
         val spark = df.sparkSession
         import spark.implicits._
-        df.select(org.apache.spark.sql.functions.col(featuresCol)
-          .cast("array<double>")).as[Array[Double]].rdd
+        rows.select(c.cast("array<double>")).as[Array[Double]].rdd
       case _ => // VectorUDT and friends
-        df.select(featuresCol).rdd.map(r => rowToVec(r, 0))
+        rows.select(c).rdd.map(r => rowToVec(r, 0))
     }
   }
 

@@ -371,8 +371,8 @@ object StreamingSom {
   /** Incremental k-means (mini-batch, Sculley 2010 shape): call
     * `update` from `foreachBatch`. Cumulative per-cluster scale-9 sums
     * and counts accumulate across micro-batches — each batch is
-    * assigned under the CURRENT centroids (one codegen scan + the
-    * `VecSumCount` partial aggregate, ≤ k rows collected), then every
+    * assigned under the CURRENT centroids (`Kmeans.assignSums`: one
+    * block pass, ≤ k buffers collected), then every
     * touched centroid moves to its cumulative exact mean. One update
     * over the whole dataset therefore equals one batch Lloyd's
     * iteration (spec-pinned); clusters no batch has touched keep their
@@ -452,10 +452,11 @@ object StreamingSom {
   }
 
   /** Incremental trainer: call `update` from `foreachBatch`. Each
-    * micro-batch runs one epoch (broadcast + deterministic tree combine +
-    * merge) at the
-    * current position of the decay schedule, capped at `totalEpochs`
-    * (after which eta/sigma stay at their final values).
+    * micro-batch runs one epoch (one Spark job: the block epoch over one
+    * un-cached pass of the batch) at the current position of the decay
+    * schedule, capped at `totalEpochs` (after which eta/sigma stay at
+    * their final values). A batch without a non-null feature row leaves
+    * both the codebook and the schedule position unchanged.
     */
   final class IncrementalTrainer(som: Som, initial: Codebook,
                                  totalEpochs: Int) extends Serializable {
@@ -468,12 +469,10 @@ object StreamingSom {
 
     def update(batch: DataFrame, featuresCol: String = "features"): Unit =
       synchronized {
-        if (!batch.isEmpty) {
-          val data = SomData.toFloatVectors(batch, featuresCol)
-          val t = math.min(step, totalEpochs - 1)
-          cb = som.epoch(data, cb, t, totalEpochs)
-          step += 1
-        }
+        val data = graft.Parts.of(SomData.blocks(batch, featuresCol),
+          Array.empty[Array[Float]])
+        som.epoch(data, cb, math.min(step, totalEpochs - 1), totalEpochs)
+          .foreach { next => cb = next; step += 1 }
       }
   }
 }

@@ -99,6 +99,22 @@ class LogitSpec extends SparkSpec {
     assert(dist.n == loc.n)
   }
 
+  test("forced-distributed train: one job per iteration, the session conf untouched") {
+    val feats = LogitTrain.features(toyDocs, "text", "doc_id", col("label"))
+    val conf = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+      .map(k => k -> spark.conf.get(k))
+    for (iters <- Seq(1, 4)) {
+      val (_, jobs) = graft.Probe.recordJobs(spark)(
+        LogitTrain.train(feats, iters = iters, lr = 0.3, localMaxRows = 0L))
+      assert(jobs.size == iters, s"iters=$iters")
+    }
+    // the driver-local form: the first pass, then one collect
+    val (_, localJobs) = graft.Probe.recordJobs(spark)(
+      LogitTrain.train(feats, iters = 4, lr = 0.3))
+    assert(localJobs.size == 2)
+    assert(conf.forall { case (k, v) => spark.conf.get(k) == v })
+  }
+
   test("partitioning-invariant: 1 vs 7 partitions, identical weights") {
     val feats = LogitTrain.features(toyDocs, "text", "doc_id", col("label"))
     val a = LogitTrain.train(feats.repartition(1), iters = 8, lr = 0.3)

@@ -30,6 +30,29 @@ class SomInitSpec extends SparkSpec {
     }
   }
 
+  test("sampleInit, pcaInit and sampleCovariance skip null feature rows, as fit does") {
+    import org.apache.spark.ml.linalg.Vectors
+    def v(i: Int) = Seq(math.sin(i * 0.9).toFloat, math.cos(i * 0.4).toFloat, (i % 7).toFloat)
+    val ids = 0 until 24
+    def isNull(i: Int) = i % 5 == 2
+    val frames = Seq(
+      "array" -> ids.map(i => (i.toLong, if (isNull(i)) None else Some(v(i))))
+        .toDF("id", "features"),
+      "vector" -> ids.map(i => (i.toLong,
+        if (isNull(i)) null else Vectors.dense(v(i).map(_.toDouble).toArray)))
+        .toDF("id", "features"))
+    val som = new Som(SomConfig(2, 2, seed = 11))
+    for ((kind, df) <- frames) {
+      val clean = df.where(col("features").isNotNull)
+      assert(som.sampleInit(df).weights.sameElements(som.sampleInit(clean).weights), kind)
+      assert(som.pcaInit(df).weights.sameElements(som.pcaInit(clean).weights), kind)
+      val (cov, n) = som.sampleCovariance(df)
+      val (cleanCov, cleanN) = som.sampleCovariance(clean)
+      assert(n == ids.count(!isNull(_)) && n == cleanN, kind)
+      assert(cov.map(_.toSeq).toSeq == cleanCov.map(_.toSeq).toSeq, kind)
+    }
+  }
+
   test("withBmu (expression) agrees with transform (mapPartitions) on all distances") {
     val rnd = new scala.util.Random(31)
     val df = Seq.fill(64)(Seq.fill(6)(rnd.nextFloat() * 2 - 1)).zipWithIndex

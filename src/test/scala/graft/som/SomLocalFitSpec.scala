@@ -1,6 +1,6 @@
 package graft.som
 
-import graft.SparkSpec
+import graft.{Parts, SparkSpec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -79,18 +79,31 @@ class SomLocalFitSpec extends SparkSpec {
     val df = spark.sparkContext.parallelize(layout, 5)
       .flatMap(_.map(i => Seq(i.toFloat))).toDF("embedding")
     assert(df.schema("embedding").dataType.sql == "ARRAY<FLOAT>")
-    val small = Som.collectIfSmallDf(df, "embedding", threshold = 100L)
-    assert(small.isDefined)
-    val (chunks, nParts) = small.get
-    assert(nParts == 5)
-    assert(chunks.map(_._1).toSeq == (0 until 5))
-    // same rows, same per-partition order as the frame itself
-    assert(chunks.map(_._2.map(_.head.toInt).toSeq).toSeq == layout.map(_.toSeq))
-    assert(Som.collectIfSmallDf(df, "embedding", threshold = 99L).isEmpty,
-      "100-value input must not pass a 99-value threshold")
-    assert(Som.collectIfSmallDf(df, "embedding", threshold = 39L).isEmpty,
-      "a 40-value partition must not pass a 39-value cap")
-    assert(Som.collectIfSmallDf(df, "embedding", threshold = 0L).isEmpty, "0 disables")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    def firsts(p: Parts[Array[Array[Float]]]) = p.collect().map(_.map(_.head.toInt).toSeq)
+    // within the threshold: the blocks come back in ONE sizing job, on
+    // the driver, one per partition in partition order
+    val (small, dim) = Som.trainingParts(df, "embedding", threshold = 100L)
+    assert(dim == 1)
+    assert(small.isInstanceOf[Parts.Local[_]])
+    assert(firsts(small) == layout.map(_.toSeq))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+      "a driver-local input must not stay cached")
+    for ((threshold, why) <- Seq(
+        99L -> "100-value input must not pass a 99-value threshold",
+        39L -> "a 40-value partition must not pass a 39-value cap",
+        0L -> "0 disables")) {
+      val (big, _) = Som.trainingParts(df, "embedding", threshold)
+      try {
+        assert(big.isInstanceOf[Parts.Spread[_]], why)
+        assert(firsts(big) == layout.map(_.toSeq))
+      } finally big.release()
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+    intercept[IllegalArgumentException] {
+      Som.trainingParts(df.where(lit(false)), "embedding", threshold = 100L)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
   }
 
   test("empty partitions participate exactly as in the distributed reduce") {
@@ -108,19 +121,71 @@ class SomLocalFitSpec extends SparkSpec {
 
   test("foldDeterministicLocal replays reduceDeterministic's exact topology") {
     val sc = spark.sparkContext
-    // doubles chosen so a different association changes the sum
-    val vals = (0 until 37).map(i => Array(math.pow(10.0, (i % 9) - 4)))
-    for (depth <- Seq(1, 2, 3)) {
-      val distRes = SomKernels.reduceDeterministic(
-        sc.parallelize(vals.indices.map(i => (i, vals(i).clone())), 37),
-        37, depth) { (a, b) => SomKernels.addInPlace(a, b); a }
-      val localRes = SomKernels.foldDeterministicLocal(
-        vals.indices.map(i => (i, vals(i).clone())), 37, depth) { (a, b) =>
-        SomKernels.addInPlace(a, b); a
-      }
-      assert(java.lang.Double.doubleToLongBits(distRes(0)) ==
-        java.lang.Double.doubleToLongBits(localRes(0)),
-        s"fold divergence at depth=$depth")
+    def add(a: Array[Double], b: Array[Double]) = { SomKernels.addInPlace(a, b); a }
+    // the fixed topology spelled out: group `fanout` adjacent ids per
+    // level, fold each group in id order, until at most `fanout` remain
+    def reference(vals: IndexedSeq[Array[Double]], depth: Int): Array[Double] = {
+      val fanout = math.max(math.ceil(math.pow(vals.length.toDouble, 1.0 / depth)).toInt, 2)
+      var cur = vals.indices.map(i => i -> vals(i))
+      while (cur.length > fanout)
+        cur = cur.groupBy(_._1 / fanout).toSeq.sortBy(_._1).map { case (g, grp) =>
+          g -> grp.sortBy(_._1).map(_._2).reduceLeft(add)
+        }.toIndexedSeq
+      cur.sortBy(_._1).map(_._2).reduceLeft(add)
     }
+    for (width <- Seq(1, 2, 4, 5, 6, 16, 33, 37); depth <- Seq(1, 2, 3)) {
+      // doubles chosen so a different association changes the sum
+      val vals = (0 until width).map(i => Array(math.pow(10.0, (i % 9) - 4)))
+      val exp = reference(vals.map(_.clone()), depth)(0)
+      val spread = Parts.Spread(sc.parallelize(vals, width)).reduce(depth)(add)(0)
+      val local = Parts.Local(vals.map(_.clone())).reduce(depth)(add)(0)
+      for ((form, got) <- Seq("spread" -> spread, "local" -> local))
+        assert(java.lang.Double.doubleToLongBits(got) == java.lang.Double.doubleToLongBits(exp),
+          s"$form fold diverged at width=$width depth=$depth")
+    }
+  }
+
+  test("fit with the default threshold == threshold 0, bit for bit, over layouts and containers") {
+    import org.apache.spark.ml.linalg.Vectors
+    import spark.implicits._
+    val sc = spark.sparkContext
+    def vec(i: Int) = Array.tabulate(4)(j => math.sin(i * 0.7 + j * 1.3).toFloat)
+    // 1, 3 and 7 partitions; empty partitions; one partition holding most rows
+    val layouts = Seq(
+      Seq(0 until 60),
+      Seq(0 until 0, 0 until 50, 50 until 60),
+      Seq(0 until 5, 0 until 0, 5 until 55, 55 until 57, 0 until 0, 57 until 60, 0 until 0))
+    val c = SomConfig(3, 3, seed = 3)
+    for (layout <- layouts) {
+      val ids = sc.parallelize(layout, layout.length).flatMap(r => r)
+      val frames = Seq(
+        "array<float>" -> ids.map(i => vec(i).toSeq).toDF("embedding"),
+        "array<double>" -> ids.map(i => vec(i).map(_.toDouble).toSeq).toDF("embedding"),
+        "vector" -> ids.map(i => Tuple1(Vectors.dense(vec(i).map(_.toDouble)))).toDF("embedding"))
+      for ((kind, df) <- frames) {
+        val before = sc.getPersistentRDDs.keySet
+        val local = new Som(c).fit(df, "embedding", numEpochs = 3)
+        assert(sc.getPersistentRDDs.keySet == before)
+        val dist = new Som(c.copy(localFitThreshold = 0L)).fit(df, "embedding", numEpochs = 3)
+        assert(sc.getPersistentRDDs.keySet == before)
+        assert(local.codebook.weights.sameElements(dist.codebook.weights),
+          s"$kind over ${layout.length} partitions: local fit diverged")
+      }
+    }
+  }
+
+  test("a 4-partition distributed epoch is one job of one stage") {
+    import spark.implicits._
+    // no exchange upstream, so the job lists no skipped shuffle stage
+    val df = spark.sparkContext.parallelize(0 until 200, 4)
+      .map(i => Seq.tabulate(4)(j => math.sin(i * 0.7 + j * 1.3).toFloat)).toDF("embedding")
+    val som = new Som(cfg)
+    val (data, dim) = Som.trainingParts(df, "embedding", threshold = 0L)
+    try {
+      val cb = Codebook.randomUniform(cfg.x, cfg.y, dim, cfg.seed)
+      val (_, jobs) = graft.Probe.recordJobs(spark)(som.epoch(data, cb, 0, 1))
+      assert(jobs.size == 1)
+      assert(jobs.map(_.stageInfos.size).sum == 1)
+    } finally data.release()
   }
 }

@@ -163,16 +163,19 @@ class SomSpec extends SparkSpec {
 
   test("reduceDeterministic: fixed combine topology, any width/depth") {
     val sc = spark.sparkContext
-    for (width <- Seq(1, 2, 5, 16, 33); depth <- Seq(1, 2, 3)) {
-      val parts = sc.parallelize(0 until width, width)
-        .map(pid => pid -> ((Array(pid.toDouble, 1.0), Array(pid * 2.0))))
-      val (a, b) = SomKernels.reduceDeterministic(parts, width, depth) {
-        case ((m1, s1), (m2, s2)) =>
-          SomKernels.addInPlace(m1, m2); SomKernels.addInPlace(s1, s2); (m1, s1)
-      }
+    def comb(l: (Array[Double], Array[Double]), r: (Array[Double], Array[Double])) = {
+      SomKernels.addInPlace(l._1, r._1); SomKernels.addInPlace(l._2, r._2); l
+    }
+    for (width <- Seq(1, 2, 4, 5, 6, 16, 33, 37); depth <- Seq(1, 2, 3)) {
+      val vals = (0 until width).map(pid => (Array(pid.toDouble, 1.0), Array(pid * 2.0)))
       val expSum = (0 until width).map(_.toDouble).sum
-      assert(a.toSeq == Seq(expSum, width.toDouble), s"w=$width d=$depth")
-      assert(b.toSeq == Seq(expSum * 2), s"w=$width d=$depth")
+      for ((form, parts) <- Seq(
+          "spread" -> graft.Parts.Spread(sc.parallelize(vals, width)),
+          "local" -> graft.Parts.Local(vals.map(v => (v._1.clone(), v._2.clone()))))) {
+        val (a, b) = parts.reduce(depth)(comb)
+        assert(a.toSeq == Seq(expSum, width.toDouble), s"$form w=$width d=$depth")
+        assert(b.toSeq == Seq(expSum * 2), s"$form w=$width d=$depth")
+      }
     }
   }
 

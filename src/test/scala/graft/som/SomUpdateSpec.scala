@@ -65,12 +65,10 @@ class SomUpdateSpec extends AnyFunSuite {
     val k = cfg.x * cfg.y
     val wSq = if (cfg.distanceFn.canCache) Distances.rowSumSq(w, k, w.length / k) else null
     val size = (data.length + parts - 1) / parts
-    val partials = (0 until parts).map { p =>
-      p -> SomKernels.partitionUpdate(
-        data.slice(p * size, (p + 1) * size).iterator, w, wSq, cfg)
-    }
-    val (sums, counts) = SomKernels.foldDeterministicLocal(
-      partials, parts, cfg.treeDepth)(SomKernels.addPartial)
+    val (sums, counts) = graft.Parts.Local((0 until parts).map { p =>
+      data.slice(p * size, (p + 1) * size)
+    }).map(b => SomKernels.partitionUpdate(b.iterator, w, wSq, cfg))
+      .reduce(cfg.treeDepth)(SomKernels.addPartial)
     SomKernels.spread(sums, counts, cfg, eta, sig)
   }
 

@@ -531,6 +531,28 @@ class StreamingSpec extends SparkSpec {
     } finally query.stop()
   }
 
+  test("incremental SOM update: one job per non-empty batch; a batch without rows is a no-op") {
+    val som = new Som(SomConfig(3, 3, seed = 5))
+    val init = Codebook.randomUniform(3, 3, 2, seed = 5)
+    val trainer = new StreamingSom.IncrementalTrainer(som, init, totalEpochs = 4)
+    val batch = spark.sparkContext.parallelize(0 until 40, 4)
+      .map(i => Seq(math.sin(i * 0.3).toFloat, math.cos(i * 0.7).toFloat)).toDF("features")
+    val (_, jobs) = graft.Probe.recordJobs(spark)(trainer.update(batch))
+    assert(jobs.size == 1)
+    assert(!trainer.codebook.weights.sameElements(init.weights))
+    // the same epoch as one fit step at position 0 of the schedule
+    val fitted = som.fit(batch, "features", numEpochs = 4, init = init, iterEnd = 1)
+    assert(trainer.codebook.weights.sameElements(fitted.codebook.weights))
+    // all-null and empty batches move neither the codebook nor the schedule
+    val after = trainer.codebook.weights.clone()
+    trainer.update(Seq[Option[Seq[Float]]](None, None).toDF("features"))
+    trainer.update(batch.where(lit(false)))
+    assert(trainer.codebook.weights.sameElements(after))
+    trainer.update(batch)
+    val twoSteps = som.fit(batch, "features", numEpochs = 4, init = init, iterEnd = 2)
+    assert(trainer.codebook.weights.sameElements(twoSteps.codebook.weights))
+  }
+
   test("streaming sharded export: the file sink writes the same content-keyed shards as batch") {
     // the release pipeline's streaming tail: shard assignment is a pure
     // expression (Shards.shardOf), so the file sink's partitionBy lays
