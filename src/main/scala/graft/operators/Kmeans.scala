@@ -275,7 +275,7 @@ object Kmeans {
   private def clusterSums(rows: Parts[Block], flat: Array[Double],
                           dim: Int): Seq[(Int, Array[Long], Long)] = {
     val bufs = rows.map(_.sums(flat, dim))
-      .reduce(Parts.exactDepth)((a, b) => Array.tabulate(a.length)(j => addExact(a(j), b(j))))
+      .reduce((a, b) => Array.tabulate(a.length)(j => addExact(a(j), b(j))))
     bufs.indices.filter(j => bufs(j)(dim) > 0)
       .map(j => (j, bufs(j).take(dim), bufs(j)(dim)))
   }
@@ -459,7 +459,7 @@ object Kmeans {
         r += 1
       }
       val nCand = cand.length
-      val weights = state.map(_.counts(nCand)).reduce(Parts.exactDepth)(addExact)
+      val weights = state.map(_.counts(nCand)).reduce(addExact)
       reduceWeightedCandidates(cand.toIndexedSeq, weights(_), k, dim,
         (chosenIds, need) => seeded(rows, need, s"$salt|pad", chosenIds).toSeq)
     } finally state.release()

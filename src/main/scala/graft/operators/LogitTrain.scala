@@ -117,7 +117,7 @@ object LogitTrain {
     * gradients, the squared residual, then the row count.
     */
   private def passSums(rows: Parts[Block], w: Array[Double]): Array[Long] =
-    rows.map(_.sums(w)).reduce(Parts.exactDepth) { (a, b) =>
+    rows.map(_.sums(w)).reduce { (a, b) =>
       Array.tabulate(a.length)(i => Math.addExact(a(i), b(i)))
     }
 

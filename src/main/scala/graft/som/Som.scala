@@ -43,8 +43,8 @@ final case class SomConfig(
       * cached block per partition and sizes it; it also returns the
       * blocks of a small input, with their partition order, and every
       * epoch then runs on the driver with the SAME kernels and the SAME
-      * fold topology — results are bit-identical to the distributed
-      * epochs, but the 1-job-per-epoch scheduling floor (which dwarfs
+      * exact merges ([[ExactSum]]) — results are bit-identical to the
+      * distributed epochs, but the 1-job-per-epoch scheduling floor (which dwarfs
       * the arithmetic on tiny inputs: r8 measured 0.5 s for 10 epochs
       * over 2,000 rows vs 0.027 s in-core) disappears. A larger input
       * keeps the cached blocks, with no second scan. The analogue of the
@@ -52,17 +52,7 @@ final case class SomConfig(
       * fast path. Execution knob only — not part of the saved model
       * params.
       */
-    localFitThreshold: Long = 2000000L,
-    /** Tree depth of the per-epoch fixed-topology fold of the
-      * (sums, counts) partials ([[graft.Parts]]): fan-out
-      * ⌈partitions^(1/depth)⌉, so 2 keeps driver fan-in bounded at
-      * cluster scale (the reference's dask path does a flat single-node
-      * sum, `xpysom.py:545-558`). The fold exchanges partials on the
-      * cluster only where `treeAggregate` would add a level; an epoch
-      * over at most 5 partitions at depth 2 is one stage with no
-      * exchange.
-      */
-    treeDepth: Int = 2) {
+    localFitThreshold: Long = 2000000L) {
 
   def sigma0: Double = if (sigma == 0) math.min(x, y) / 2.0 else sigma
 
@@ -79,7 +69,6 @@ final case class SomConfig(
     require(batchSize > 0, s"batchSize must be positive, got $batchSize")
     require(localFitThreshold >= 0,
       s"localFitThreshold must be >= 0, got $localFitThreshold")
-    require(treeDepth >= 1, s"treeDepth must be >= 1, got $treeDepth")
     topo; decayFn; distanceFn; neighborhoodFn
     this
   }
@@ -87,8 +76,8 @@ final case class SomConfig(
 
 /** Batch-SOM trainer: one Spark job per epoch over cached per-partition
   * blocks — broadcast the codebook, per-block batched pass (distances →
-  * winners → per-winner row sums and counts), the fixed-topology fold
-  * of (sums, counts) ([[graft.Parts]]), then on the driver the
+  * winners → exact per-winner row sums and counts, [[ExactSum]]), the
+  * merge of those partials ([[graft.Parts]]), then on the driver the
   * neighbourhood spread num = Hᵀ·sums, den = Hᵀ·counts through the
   * k x k neighbourhood table H and the guarded-division merge. The
   * reference applies the neighbourhood per row, as an n x k weight
@@ -98,9 +87,16 @@ final case class SomConfig(
   * instead of an n·k·dim gemm. Dataflow per `xpysom.py:458-594`: the
   * blocks are the reference's Dask blocks, the per-block sub-batching
   * replaces its `n_parallel` chunking (`xpysom.py:560-575`) and the
-  * fold replaces dask's delayed flat sum (`xpysom.py:545-558`). One
-  * job reads and sizes the input; a small input's blocks stay on the
-  * driver and its epochs run no job (`localFitThreshold`).
+  * merge replaces dask's delayed flat sum (`xpysom.py:545-558`). Like
+  * that sum, the merge may run in any order: the partials are exact, so
+  * the codebook is a function of the rows and the config alone, not of
+  * the partition layout — given a BLAS whose per-row distances do not
+  * depend on the batch's shape, as the JVM BLAS's do (a native
+  * OpenBLAS or MKL picked by `BLAS.getInstance()` may round a blocked
+  * kernel's edge tiles differently; see [[epoch]]). One job reads and
+  * sizes the input; a small input's blocks stay on the driver and its
+  * epochs run no job (`localFitThreshold`). Feature values must be
+  * finite.
   */
 final class Som(val config: SomConfig) extends Serializable {
   config.validated
@@ -150,8 +146,10 @@ final class Som(val config: SomConfig) extends Serializable {
     val end = epochsEnd(numEpochs, iterBeg, iterEnd)
     require(data.nonEmpty, "cannot fit a SOM on an empty dataset")
     val dim = data(0).length
-    data.foreach(v => require(v.length == dim,
-      s"Received ${v.length} features, expected $dim."))
+    data.indices.foreach { r =>
+      require(data(r).length == dim, s"Received ${data(r).length} features, expected $dim.")
+      require(SomData.finite(data(r)), s"row $r holds a non-finite feature value")
+    }
     new SomModel(config,
       train(Parts.Local(Vector(data)), dim, init, numEpochs, verbose, iterBeg, end))
   }
@@ -189,19 +187,22 @@ final class Som(val config: SomConfig) extends Serializable {
 
   /** One training epoch: the codebook (+ wSq cache) to every block (one
     * broadcast on the cluster form), `partitionUpdate` per block, the
-    * fixed-topology fold of the (sums, counts) partials at
-    * `treeDepth` ([[graft.Parts]]), then the neighbourhood spread and
-    * merge on the driver. On cached cluster blocks that is one Spark job
-    * with no exchange below the `treeAggregate` level rule; on driver
-    * blocks, none. None when the blocks hold no row (the codebook would
-    * not move). Exposed for incremental/streaming training where each
-    * micro-batch advances the decay schedule by one step.
+    * exact merge of the (sums, counts) partials ([[graft.Parts]]), then
+    * the neighbourhood spread and merge on the driver. On cached cluster
+    * blocks that is one Spark job, one stage up to five partitions; on
+    * driver blocks, none. None when the blocks hold no row (the codebook
+    * would not move). Exposed for incremental/streaming training where
+    * each micro-batch advances the decay schedule by one step.
     *
-    * The fold's combine order depends only on the partition count and
-    * `treeDepth`, never on the form or on arrival order, so training is
-    * bit-reproducible — which the resume contract (`fit(iterBeg/iterEnd)`),
-    * the seeded-determinism guarantee and the driver-local fast path all
-    * rely on.
+    * The partials are exact ([[ExactSum]]), and each row's winner depends
+    * on that row alone where the BLAS `dgemm` computes a row's distances
+    * independently of the row's place in the batch and of the batch
+    * size — so the JVM BLAS does in every case sampled, and the layout
+    * spec in `SomSpec` pins it. An epoch then gives the same bits over
+    * any layout of the same rows: any partitioning, either form, any
+    * merge order — which the resume contract (`fit(iterBeg/iterEnd)`),
+    * the seeded-determinism guarantee and the driver-local fast path
+    * all rely on.
     */
   private[graft] def epoch(data: Parts[Array[Array[Float]]], cb: Codebook, t: Int,
                            numEpochs: Int): Option[Codebook] = {
@@ -213,11 +214,11 @@ final class Som(val config: SomConfig) extends Serializable {
       data.map { rows =>
         val (w, wsq) = shared()
         SomKernels.partitionUpdate(rows.iterator, w, wsq, cfg)
-      }.reduce(cfg.treeDepth)(SomKernels.addPartial)
+      }.reduce(SomKernels.merge)
     }
-    if (counts.forall(_ == 0.0)) None
+    if (counts.forall(_ == 0L)) None
     else {
-      val (num, den) = SomKernels.spread(sums, counts, cfg, eta, sig)
+      val (num, den) = SomKernels.spread(sums.values(), counts.map(_.toDouble), cfg, eta, sig)
       Some(cb.merged(num, den))
     }
   }
@@ -232,44 +233,28 @@ final class Som(val config: SomConfig) extends Serializable {
     Codebook.fromRows(config.x, config.y, rows.toSeq)
   }
 
-  /** Sample covariance (N-1 normalization) of the feature column via a
-    * single distributed pass (the fixed-topology fold of per-partition
-    * (x xᵀ, Σx, n) partials, [[graft.Parts]] — bit-reproducible across
-    * runs like the training path). Null feature rows are skipped, as
-    * `fit` skips them. Public: the pca-init invariant oracle recomputes
-    * eigen-residuals against it.
+  /** Sample covariance (N-1 normalization) of the feature column in one
+    * distributed pass: per partition a [[SomKernels.Cov]] of exact sums
+    * ([[ExactSum]]), merged by `treeReduce` ([[graft.Parts]]) — the
+    * same bits over any partitioning, like the training path. The dim
+    * is the first row's; an empty partition contributes nothing. Null
+    * feature rows are skipped, as `fit` skips them; a row of another
+    * length or a non-finite value fails, as in `fit`. Public: the
+    * pca-init invariant oracle recomputes eigen-residuals against it.
     */
   def sampleCovariance(df: DataFrame,
                        featuresCol: String = "features"): (Array[Array[Double]], Long) = {
-    val data = SomData.toVectors(df, featuresCol)
-    val first = data.take(1)
-    require(first.nonEmpty, "cannot compute covariance of an empty dataset")
-    val d = first.head.length
-    val partials = data.mapPartitions { it =>
-      val m = new Array[Double](d * d)
-      val s = new Array[Double](d)
-      var c = 0L
-      it.foreach { v =>
-        var i = 0
-        while (i < d) {
-          s(i) += v(i)
-          var j = 0
-          val base = i * d
-          while (j < d) { m(base + j) += v(i) * v(j); j += 1 }
-          i += 1
-        }
-        c += 1
-      }
-      Iterator.single((m, s, c))
-    }
-    val (xtx, sums, n) = Parts.Spread(partials).reduce(config.treeDepth) {
-      case ((m1, s1, c1), (m2, s2, c2)) =>
-        SomKernels.addInPlace(m1, m2); SomKernels.addInPlace(s1, s2)
-        (m1, s1, c1 + c2)
-    }
+    val partials = SomData.toVectors(df, featuresCol).mapPartitions(it => Iterator(SomKernels.cov(it)))
+    val total = Parts.of(partials, SomKernels.Cov.empty).reduce(_ merge _)
+    require(total.dim >= 0, "cannot compute covariance of an empty dataset")
+    require(total.finite, SomData.nonFinite(featuresCol))
+    val (d, n) = (total.dim, total.n)
     require(n > 1, "covariance needs at least 2 samples")
+    val v = total.sums.values()
+    val tri = d * (d + 1) / 2
     (Array.tabulate(d, d) { (i, j) =>
-      (xtx(i * d + j) - sums(i) * sums(j) / n) / (n - 1)
+      val (a, b) = (math.min(i, j), math.max(i, j))
+      (v(SomKernels.Cov.at(d, a, b)) - v(tri + i) * v(tri + j) / n) / (n - 1)
     }, n)
   }
 
@@ -302,9 +287,9 @@ object Som {
 
   /** The training blocks of `df` ([[SomData.blocks]]) and their feature
     * count, in one job. The job fills the blocks' cache and returns, per
-    * partition, the value count (rows x dim), the dim of its first row
-    * and — when `threshold > 0`, there are at most
-    * [[localFitMaxPartitions]] partitions and this partition alone holds
+    * partition, the value count (rows x dim), the dim of its first row,
+    * whether every value is finite and — when `threshold > 0`, there are
+    * at most [[localFitMaxPartitions]] partitions and this partition alone holds
     * at most `threshold` values — the block itself. When the total is
     * within `threshold` the cache is dropped and the blocks stay on the
     * driver, in partition order ([[graft.Parts.Local]]): the epochs then
@@ -318,14 +303,16 @@ object Som {
       val ship = threshold > 0 && blocks.getNumPartitions <= localFitMaxPartitions
       val sized = blocks.map { b =>
         val n = b.iterator.map(_.length.toLong).sum
-        (n, if (b.isEmpty) -1 else b(0).length, if (ship && n <= threshold) b else null)
+        (n, if (b.isEmpty) -1 else b(0).length, b.forall(SomData.finite),
+          if (ship && n <= threshold) b else null)
       }.collect()
       val total = sized.iterator.map(_._1).sum
       require(total > 0, "cannot fit a SOM on an empty dataset")
+      require(sized.forall(_._3), SomData.nonFinite(featuresCol))
       val dim = sized.iterator.map(_._2).find(_ >= 0).get
       if (ship && total <= threshold) {
         blocks.unpersist(blocking = true)
-        (Parts.Local(sized.map(_._3).toIndexedSeq), dim)
+        (Parts.Local(sized.map(_._4).toIndexedSeq), dim)
       } else (Parts.Spread(blocks), dim)
     } catch { case e: Throwable => blocks.unpersist(blocking = true); throw e }
   }
@@ -353,21 +340,16 @@ object Som {
 }
 
 /** Per-partition numeric kernels for training. Serializable: the
-  * fold's closures reference the module from executors.
+  * epoch's closures reference the module from executors.
   */
 private[som] object SomKernels extends Serializable {
-
-  def addInPlace(a: Array[Double], b: Array[Double]): Unit = {
-    var i = 0
-    while (i < a.length) { a(i) += b(i); i += 1 }
-  }
 
   type Partial = (Array[Double], Array[Double])
 
   /** One partition's per-winner partial for one epoch: iterate the
     * partition in `batchSize` sub-batches; per batch compute activation
     * distances and first-index argmin winners, then add each row into
-    * its winner's `sums` row (k x dim, row-major) and `counts` entry.
+    * its winner's exact feature sums (k x dim, row-major) and count.
     * This is the Voronoi-set form of the batch map: every row's
     * neighbourhood weights depend only on its winner, so the epoch
     * needs only per-winner sums — the neighbourhood is applied once, to
@@ -375,13 +357,13 @@ private[som] object SomKernels extends Serializable {
     * sub-batches (`xpysom.py:516-527`).
     */
   def partitionUpdate(it: Iterator[Array[Float]], w: Array[Double],
-                      wSq: Array[Double], cfg: SomConfig): Partial = {
+                      wSq: Array[Double], cfg: SomConfig): (ExactSum, Array[Long]) = {
     val k = cfg.x * cfg.y
     val dim = w.length / k
     val dist = cfg.distanceFn
     val bs = cfg.batchSize
-    val sums = new Array[Double](k * dim)
-    val counts = new Array[Double](k)
+    val sums = new ExactSum(k * dim)
+    val counts = new Array[Long](k)
     val xBuf = new Array[Double](bs * dim)
     val dBuf = new Array[Double](bs * k)
     val wins = new Array[Int](bs)
@@ -401,23 +383,72 @@ private[som] object SomKernels extends Serializable {
       Distances.argminRows(dBuf, n, k, wins)
       var s = 0
       while (s < n) {
-        val win = wins(s)
-        counts(win) += 1.0
-        val src = s * dim
-        val dst = win * dim
-        var c = 0
-        while (c < dim) { sums(dst + c) += xBuf(src + c); c += 1 }
+        sums.add(wins(s) * dim, xBuf, s * dim, dim)
+        counts(wins(s)) += 1
         s += 1
       }
     }
     (sums, counts)
   }
 
-  /** Combine for [[partitionUpdate]] partials: elementwise sum into the
-    * left operand.
+  /** Merge for [[partitionUpdate]] partials, into the left operand:
+    * exact, so any order gives the same bits.
     */
-  def addPartial(a: Partial, b: Partial): Partial = {
-    addInPlace(a._1, b._1); addInPlace(a._2, b._2); a
+  def merge(a: (ExactSum, Array[Long]), b: (ExactSum, Array[Long])): (ExactSum, Array[Long]) = {
+    a._1.merge(b._1)
+    var i = 0
+    while (i < a._2.length) { a._2(i) += b._2(i); i += 1 }
+    a
+  }
+
+  /** One partition's covariance partial: the exact sums of x xᵀ (upper
+    * triangle, row-major, at [[Cov.at]]) and then of x, over `n` rows
+    * of `dim` features; `dim` -1 for a partition without rows. A
+    * non-finite value stops the sums and clears `finite`.
+    */
+  final case class Cov(dim: Int, finite: Boolean, sums: ExactSum, n: Long) {
+    def merge(that: Cov): Cov =
+      if (that.dim < 0) this
+      else if (dim < 0) that
+      else {
+        require(that.dim == dim, s"Received ${that.dim} features, expected $dim.")
+        Cov(dim, finite && that.finite, sums.merge(that.sums), n + that.n)
+      }
+  }
+
+  object Cov {
+    val empty = Cov(-1, finite = true, null, 0L)
+    /** The index of Σ x_i·x_j, i <= j, among `d` features' sums. */
+    def at(d: Int, i: Int, j: Int): Int = i * d - i * (i - 1) / 2 + (j - i)
+  }
+
+  /** The [[Cov]] of one partition's rows; the first row sets the dim. */
+  def cov(it: Iterator[Array[Double]]): Cov = {
+    if (!it.hasNext) return Cov.empty
+    val first = it.next()
+    val d = first.length
+    val tri = d * (d + 1) / 2
+    val sums = new ExactSum(tri + d)
+    val prod = new Array[Double](d)
+    var finite = true
+    var n = 0L
+    (Iterator.single(first) ++ it).foreach { v =>
+      if (v.length != d)
+        throw new IllegalArgumentException(s"Received ${v.length} features, expected $d.")
+      finite &&= SomData.finite(v)
+      if (finite) {
+        var i = 0
+        while (i < d) {
+          var j = i
+          while (j < d) { prod(j) = v(i) * v(j); j += 1 }
+          sums.add(Cov.at(d, i, i), prod, i, d - i)
+          i += 1
+        }
+        sums.add(tri, v, 0, d)
+        n += 1
+      }
+    }
+    Cov(d, finite, sums, n)
   }
 
   /** The epoch's (num, den) from the combined per-winner (sums, counts):
@@ -515,6 +546,23 @@ object SomData {
         }
     }
   }
+
+  /** Whether every value of `v` is finite: an [[ExactSum]] holds no NaN
+    * or ±Inf.
+    */
+  def finite(v: Array[Float]): Boolean = {
+    var i = 0
+    while (i < v.length && java.lang.Float.isFinite(v(i))) i += 1
+    i == v.length
+  }
+  def finite(v: Array[Double]): Boolean = {
+    var i = 0
+    while (i < v.length && java.lang.Double.isFinite(v(i))) i += 1
+    i == v.length
+  }
+
+  def nonFinite(featuresCol: String): String =
+    s"features column $featuresCol holds a non-finite value (NaN or ±Infinity)"
 
   /** double vectors of the non-null feature rows — the init
     * representation (`sampleInit`, `sampleCovariance`): initialization

@@ -130,24 +130,24 @@ final class SomModel(val config: SomConfig, val codebook: Codebook)
   /** Quantization error (`xpysom.py:673-707`): mean distance between each
     * sample and its BMU codebook vector (euclidean, as in the reference),
     * skipping null features; NaN on no rows. One codegen scan: each
-    * partition sums its distances in row order, and the driver adds the
-    * partition sums in partition order (`collect` keeps it) — a fixed
-    * function of the input and its partitioning, where an `avg` merges
-    * its partials in arrival order.
+    * partition sums its distances exactly ([[ExactSum]]) and the driver
+    * merges the partition sums, so the mean is the same bits over any
+    * partitioning of the same rows, where an `avg` adds doubles in
+    * arrival order.
     */
   def quantizationError(df: DataFrame, featuresCol: String = "features"): Double = {
     val parts = df.select(graft.plans.SomBmuFunctions.som_qdist(
         features(df, featuresCol), codebook.weights, dim))
       .queryExecution.toRdd
       .mapPartitions { rows =>
-        var sum = 0.0
+        val sum = new ExactSum(1)
         var n = 0L
-        rows.foreach { r => if (!r.isNullAt(0)) { sum += r.getDouble(0); n += 1 } }
+        rows.foreach { r => if (!r.isNullAt(0)) { sum.add(0, r.getDouble(0)); n += 1 } }
         Iterator((sum, n))
       }
       .collect()
-    val (sum, n) = parts.foldLeft((0.0, 0L)) { case ((s, c), (ps, pn)) => (s + ps, c + pn) }
-    if (n == 0) Double.NaN else sum / n
+    val n = parts.iterator.map(_._2).sum
+    if (n == 0) Double.NaN else parts.map(_._1).reduce(_ merge _).values()(0) / n
   }
 
   /** Topographic error (`xpysom.py:709-746`): share of samples whose two
@@ -247,7 +247,7 @@ final class SomModel(val config: SomConfig, val codebook: Codebook)
          |"stdCoeff":${c.stdCoeff},"topology":"${c.topology}",
          |"distance":"${c.distance}","normP":${c.normP},
          |"compactSupport":${c.compactSupport},"seed":${c.seed},
-         |"batchSize":${c.batchSize},"treeDepth":${c.treeDepth},"dim":${codebook.dim}}"""
+         |"batchSize":${c.batchSize},"dim":${codebook.dim}}"""
         .stripMargin.replace("\n", "")
     val neurons = (0 until x * y).map(n => (n, codebook.weights.slice(n * dim, (n + 1) * dim).toSeq))
     neurons.toDF("nid", "w").coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
@@ -274,8 +274,7 @@ object SomModel {
       topology = str("topology"), distance = str("distance"),
       normP = num("normP"),
       compactSupport = json.contains("\"compactSupport\":true"),
-      seed = num("seed").toLong, batchSize = num("batchSize").toInt,
-      treeDepth = num("treeDepth").toInt)
+      seed = num("seed").toLong, batchSize = num("batchSize").toInt)
     val dim = num("dim").toInt
     val rows = spark.read.parquet(s"$path/codebook")
       .collect()

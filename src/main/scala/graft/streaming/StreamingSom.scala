@@ -390,24 +390,22 @@ object StreamingSom {
 
     def update(batch: DataFrame, vecCol: String, idCol: String): Unit =
       synchronized {
-        if (!batch.isEmpty) {
-          val next = c.map(_.clone())
-          Kmeans.assignSums(batch, vecCol, idCol, Kmeans.Model(c))
-            .foreach { case (cid, s, n) =>
-              var d = 0
-              while (d < initial.dim) {
-                sums(cid)(d) = Math.addExact(sums(cid)(d), s(d)); d += 1
-              }
-              counts(cid) = Math.addExact(counts(cid), n)
-              d = 0
-              while (d < initial.dim) {
-                next(cid)(d) = graft.plans.VecScale9Kernel.mean9(sums(cid)(d),
-                  counts(cid))
-                d += 1
-              }
+        val next = c.map(_.clone())
+        Kmeans.assignSums(batch, vecCol, idCol, Kmeans.Model(c))
+          .foreach { case (cid, s, n) =>
+            var d = 0
+            while (d < initial.dim) {
+              sums(cid)(d) = Math.addExact(sums(cid)(d), s(d)); d += 1
             }
-          c = next
-        }
+            counts(cid) = Math.addExact(counts(cid), n)
+            d = 0
+            while (d < initial.dim) {
+              next(cid)(d) = graft.plans.VecScale9Kernel.mean9(sums(cid)(d),
+                counts(cid))
+              d += 1
+            }
+          }
+        c = next
       }
   }
 

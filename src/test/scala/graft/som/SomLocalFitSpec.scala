@@ -119,32 +119,6 @@ class SomLocalFitSpec extends SparkSpec {
     assert(local.codebook.weights.sameElements(dist.codebook.weights))
   }
 
-  test("foldDeterministicLocal replays reduceDeterministic's exact topology") {
-    val sc = spark.sparkContext
-    def add(a: Array[Double], b: Array[Double]) = { SomKernels.addInPlace(a, b); a }
-    // the fixed topology spelled out: group `fanout` adjacent ids per
-    // level, fold each group in id order, until at most `fanout` remain
-    def reference(vals: IndexedSeq[Array[Double]], depth: Int): Array[Double] = {
-      val fanout = math.max(math.ceil(math.pow(vals.length.toDouble, 1.0 / depth)).toInt, 2)
-      var cur = vals.indices.map(i => i -> vals(i))
-      while (cur.length > fanout)
-        cur = cur.groupBy(_._1 / fanout).toSeq.sortBy(_._1).map { case (g, grp) =>
-          g -> grp.sortBy(_._1).map(_._2).reduceLeft(add)
-        }.toIndexedSeq
-      cur.sortBy(_._1).map(_._2).reduceLeft(add)
-    }
-    for (width <- Seq(1, 2, 4, 5, 6, 16, 33, 37); depth <- Seq(1, 2, 3)) {
-      // doubles chosen so a different association changes the sum
-      val vals = (0 until width).map(i => Array(math.pow(10.0, (i % 9) - 4)))
-      val exp = reference(vals.map(_.clone()), depth)(0)
-      val spread = Parts.Spread(sc.parallelize(vals, width)).reduce(depth)(add)(0)
-      val local = Parts.Local(vals.map(_.clone())).reduce(depth)(add)(0)
-      for ((form, got) <- Seq("spread" -> spread, "local" -> local))
-        assert(java.lang.Double.doubleToLongBits(got) == java.lang.Double.doubleToLongBits(exp),
-          s"$form fold diverged at width=$width depth=$depth")
-    }
-  }
-
   test("fit with the default threshold == threshold 0, bit for bit, over layouts and containers") {
     import org.apache.spark.ml.linalg.Vectors
     import spark.implicits._

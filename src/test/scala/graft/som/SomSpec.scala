@@ -161,20 +161,24 @@ class SomSpec extends SparkSpec {
     }
   }
 
-  test("reduceDeterministic: fixed combine topology, any width/depth") {
+  test("Parts.reduce: exact merges give one sum over any width, order and form") {
     val sc = spark.sparkContext
-    def comb(l: (Array[Double], Array[Double]), r: (Array[Double], Array[Double])) = {
-      SomKernels.addInPlace(l._1, r._1); SomKernels.addInPlace(l._2, r._2); l
-    }
-    for (width <- Seq(1, 2, 4, 5, 6, 16, 33, 37); depth <- Seq(1, 2, 3)) {
-      val vals = (0 until width).map(pid => (Array(pid.toDouble, 1.0), Array(pid * 2.0)))
-      val expSum = (0 until width).map(_.toDouble).sum
+    val bits = java.lang.Double.doubleToLongBits _
+    for (width <- Seq(1, 2, 4, 5, 6, 16, 33, 37)) {
+      // magnitudes 1e-3 .. 1e3: a double sum of these depends on the order
+      val vals = (0 until width).map(i => math.pow(10.0, (i % 7) - 3))
+      val exp = vals.map(new java.math.BigDecimal(_)).reduce(_ add _).doubleValue
+      def partials(seed: Int) = new scala.util.Random(seed).shuffle(vals).map { v =>
+        val acc = new ExactSum(2)
+        acc.add(0, v); acc.add(1, 1.0)
+        acc
+      }
       for ((form, parts) <- Seq(
-          "spread" -> graft.Parts.Spread(sc.parallelize(vals, width)),
-          "local" -> graft.Parts.Local(vals.map(v => (v._1.clone(), v._2.clone()))))) {
-        val (a, b) = parts.reduce(depth)(comb)
-        assert(a.toSeq == Seq(expSum, width.toDouble), s"$form w=$width d=$depth")
-        assert(b.toSeq == Seq(expSum * 2), s"$form w=$width d=$depth")
+          "spread" -> graft.Parts.Spread(sc.parallelize(partials(width), width)),
+          "local" -> graft.Parts.Local(partials(width + 1)))) {
+        val Array(sum, n) = parts.reduce(_ merge _).values()
+        assert(bits(sum) == bits(exp), s"$form w=$width: $sum vs $exp")
+        assert(n == width.toDouble, s"$form w=$width")
       }
     }
   }
@@ -199,8 +203,8 @@ class SomSpec extends SparkSpec {
     val init = Codebook.randomUniform(4, 4, 3, seed = 2)
     val w1 = new Som(cfg).fit(df1p, "features", 3, init = init).codebook.weights
     val w8 = new Som(cfg).fit(df8p, "features", 3, init = init).codebook.weights
-    // double-precision sums: partition order only perturbs at ~1e-13
-    assert(w1.zip(w8).forall { case (a, b) => math.abs(a - b) < 1e-9 })
+    // exact partials: the partition layout cannot change a bit
+    assert(w1.sameElements(w8))
   }
 
   test("feature-count mismatch raises (`xpysom.py:361-367`)") {
@@ -237,37 +241,33 @@ class SomSpec extends SparkSpec {
     assert(m.topographicError(empty).isNaN)
   }
 
-  test("quantizationError: partition sums added in partition order, the same bits every call") {
+  test("quantizationError: the same bits over any partitioning of the rows") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val rnd = new scala.util.Random(41)
     val m = SomModel.fromWeights(SomConfig(3, 3),
       Seq.fill(9)(Array.fill(4)(rnd.nextDouble() * 3)))
-    // 7 partitions: partition 3 is empty, partition 5 has a null-feature row
-    val byPart = (0 until 7).map { p =>
-      if (p == 3) Seq.empty[Row]
-      else Seq.tabulate(40 + 13 * p) { i =>
-        val r = new scala.util.Random(p * 1000 + i)
-        Row((p * 1000 + i).toLong,
-          if (p == 5 && i == 7) null else Seq.fill(4)(r.nextDouble() * 5 - 1))
-      }
+    val rows = Seq.tabulate(400) { i =>
+      val r = new scala.util.Random(i)
+      Row(i.toLong, if (i == 77) null else Seq.fill(4)(r.nextDouble() * 5 - 1))
     }
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(0 until 7, 7).flatMap(byPart(_)),
-      StructType(Seq(StructField("id", LongType),
-        StructField("features", ArrayType(DoubleType)))))
-    // reference: each row's q_dist from `quantize` (a projection, so the
-    // same partitions), summed per partition in row order, the partition
-    // sums added in partition order
-    val perPart = m.quantize(df).select("q_dist").rdd.glom().collect()
-      .map(_.filterNot(_.isNullAt(0)).map(_.getDouble(0)))
-    assert(perPart.length == 7 && perPart(3).isEmpty)
-    val n = perPart.map(_.length).sum
-    assert(n == byPart.map(_.length).sum - 1)
-    val exp = perPart.map(_.foldLeft(0.0)(_ + _)).foldLeft(0.0)(_ + _) / n
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("features", ArrayType(DoubleType))))
+    // 7 partitions with partition 3 empty, and the rows reversed over 1 and 3
+    val frames = Seq(
+      spark.createDataFrame(spark.sparkContext.parallelize(0 until 7, 7)
+        .flatMap(p => rows.filter(r => Seq(0, 1, 2, 4, 5, 6)(r.getLong(0).toInt % 6) == p)),
+        schema),
+      spark.createDataFrame(spark.sparkContext.parallelize(rows.reverse, 1), schema),
+      spark.createDataFrame(spark.sparkContext.parallelize(rows.reverse, 3), schema))
+    // reference: the exact sum of every row's q_dist from `quantize`
+    val dists = m.quantize(frames.head).select("q_dist").collect()
+      .filterNot(_.isNullAt(0)).map(_.getDouble(0))
+    assert(dists.length == 399)
+    val exp = dists.map(new java.math.BigDecimal(_)).reduce(_ add _).doubleValue / dists.length
     val bits = java.lang.Double.doubleToLongBits _
-    val got = Seq.fill(5)(m.quantizationError(df))
-    got.foreach(q => assert(bits(q) == bits(exp), s"$q vs reference $exp"))
+    for ((df, i) <- frames.zipWithIndex; q <- Seq.fill(2)(m.quantizationError(df)))
+      assert(bits(q) == bits(exp), s"layout $i: $q vs reference $exp")
   }
 
   test("wrong-dimension rows fail loudly on the expression path too") {
@@ -339,5 +339,125 @@ class SomSpec extends SparkSpec {
         assert(got == exp, s"$t answer $i differs from ${all.head._1}")
       }
     }
+  }
+
+  test("one codebook, QE and covariance over any partition layout, either form") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    def vec(i: Int) = Seq.tabulate(4)(j => math.sin(i * 0.7 + j * 1.3).toFloat * (j + 1))
+    // 1, 3, 7 and 16 partitions: empty partitions, one partition holding
+    // most rows, rows reversed inside partitions
+    val layouts: Seq[Seq[Seq[Int]]] = Seq(
+      Seq(0 until 60),
+      Seq(Nil, (0 until 55).reverse, 55 until 60),
+      Seq(0 until 3, Nil, (3 until 50).reverse, 50 until 52, Nil, 52 until 60, Nil),
+      (0 until 16).map(p => (p * 4 until math.min(p * 4 + 4, 60)).reverse))
+    val c = SomConfig(3, 3, seed = 4, batchSize = 7)
+    val bits = (a: Array[Double]) => a.map(java.lang.Double.doubleToLongBits).toSeq
+    val results = for (layout <- layouts) yield {
+      val df = sc.parallelize(layout, layout.length).flatMap(_.map(vec)).toDF("features")
+      val fits = Seq(c, c.copy(localFitThreshold = 0L))
+        .map(cfg => bits(new Som(cfg).fit(df, "features", numEpochs = 3).codebook.weights))
+      assert(fits.distinct.size == 1, s"${layout.length} partitions: forms differ")
+      val model = SomModel.fromWeights(c, Seq.tabulate(9)(n => Array.fill(4)(n * 0.3 - 1)))
+      var cov: Array[Array[Double]] = null
+      val (_, jobs) = graft.Probe.recordJobs(spark) { cov = new Som(c).sampleCovariance(df)._1 }
+      assert(jobs.size == 1, "sampleCovariance is one pass")
+      (fits.head, bits(Array(model.quantizationError(df))), cov.toSeq.map(bits))
+    }
+    assert(results.distinct.size == 1, "the partition layout changed a bit")
+  }
+
+  test("ExactSum: one sum over any order and grouping, exact on any scale") {
+    val rnd = new scala.util.Random(12)
+    val bits = (a: Array[Double]) => a.map(java.lang.Double.doubleToLongBits).toSeq
+    // magnitudes 2^-90 .. 2^90, both signs: the window drops the smallest
+    val xs = Seq.fill(300)(math.scalb(rnd.nextDouble() - 0.5, rnd.nextInt(181) - 90))
+    def summed(vs: Seq[Double], groups: Int): Array[Double] = vs.grouped((vs.length + groups - 1) / groups)
+      .map { g => val a = new ExactSum(1); g.foreach(a.add(0, _)); a }.toSeq
+      .reduce(_ merge _).values()
+    // the model: every value truncated toward zero at the floor of the
+    // largest value's window (three 2^30 bins), summed exactly, rounded once
+    val top = math.floorDiv(math.getExponent(xs.map(math.abs).max), 30)
+    val floor = new java.math.BigDecimal(math.scalb(1.0, 30 * (top - 2)))
+    val exp = xs.map(x => new java.math.BigDecimal(x).divide(floor)
+      .setScale(0, java.math.RoundingMode.DOWN).multiply(floor)).reduce(_ add _).doubleValue
+    val one = bits(summed(xs, 1))
+    assert(one == bits(Array(exp)))
+    for (g <- Seq(2, 7, 300)) assert(bits(summed(rnd.shuffle(xs), g)) == one, s"$g groups")
+    // float32 values within 2^37 of the largest add exactly, on any scale
+    for (s <- Seq(-1000, -34, 0, 40, 900)) {
+      val fs = Seq.fill(500)(math.scalb((rnd.nextFloat() - 0.5f).toDouble, s - rnd.nextInt(37)))
+      val exp = fs.map(new java.math.BigDecimal(_)).reduce(_ add _).doubleValue
+      assert(summed(fs, 3)(0) == exp, s"scale 2^$s")
+    }
+    for (bad <- Seq(Double.NaN, Double.PositiveInfinity))
+      intercept[ArithmeticException](new ExactSum(1).add(0, bad))
+  }
+
+  test("fit and sampleCovariance give the same bits on any power-of-two scale") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(8)
+    // 20k rows in [0.5, 1.5): at 2^17 the covariance sums pass 1e14, at
+    // 2^34 a winner's feature sums do, and at 2^-34 the squares are ~1e-20
+    val base = Seq.fill(20000)(Array.fill(2)(rnd.nextFloat() + 0.5f))
+    val init = Seq.tabulate(4)(n => Array(0.6 + n * 0.2, 1.4 - n * 0.2))
+    val c = SomConfig(2, 2, seed = 3)
+    def run(s: Int) = {
+      val df = spark.sparkContext.parallelize(base.map(_.map(math.scalb(_, s)).toSeq), 4).toDF("f")
+      val w = new Som(c).fit(df, "f", numEpochs = 2,
+        init = Codebook.fromRows(2, 2, init.map(_.map(math.scalb(_, s))))).codebook.weights
+      (w, new Som(c).sampleCovariance(df, "f")._1)
+    }
+    val (w0, cov0) = run(0)
+    // the reference covariance from exact BigDecimal sums
+    val bd = (v: Double) => new java.math.BigDecimal(v)
+    def sum(f: Array[Float] => Double) = base.map(r => bd(f(r))).reduce(_ add _).doubleValue
+    val n = base.length
+    for (i <- 0 until 2; j <- 0 until 2) {
+      val exp = (sum(r => r(i).toDouble * r(j)) - sum(r => r(i)) * sum(r => r(j)) / n) / (n - 1)
+      assert(cov0(i)(j) == exp, s"cov($i,$j)")
+    }
+    for (s <- Seq(-34, 17, 34)) {
+      val (w, cov) = run(s)
+      assert(w.sameElements(w0.map(math.scalb(_, s))), s"fit at 2^$s")
+      assert(cov.flatten.sameElements(cov0.flatten.map(math.scalb(_, 2 * s))), s"covariance at 2^$s")
+    }
+  }
+
+  test("non-finite features fail loudly in fit, fitMatrix and sampleCovariance") {
+    import spark.implicits._
+    val c = SomConfig(2, 2, seed = 1)
+    for (bad <- Seq(Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity)) {
+      val rows = Seq.tabulate(20)(i => Seq(i.toFloat, if (i == 13) bad else 1f))
+      val df = spark.sparkContext.parallelize(rows, 3).toDF("emb")
+      for (cfg <- Seq(c, c.copy(localFitThreshold = 0L))) {
+        val ex = intercept[IllegalArgumentException](new Som(cfg).fit(df, "emb", numEpochs = 2))
+        assert(ex.getMessage.contains("emb"), ex.getMessage)
+      }
+      val ex = intercept[IllegalArgumentException](new Som(c).sampleCovariance(df, "emb"))
+      assert(ex.getMessage.contains("emb"), ex.getMessage)
+      intercept[IllegalArgumentException] {
+        new Som(c).fitMatrix(rows.map(_.toArray).toArray, numEpochs = 2)
+      }
+    }
+    // a row of another length fails with fit's message
+    val ragged = spark.sparkContext.parallelize(Seq(Seq(1.0, 2.0), Seq(3.0, 4.0), Seq(5.0)), 1)
+      .toDF("emb")
+    val ex = intercept[Exception](new Som(c).sampleCovariance(ragged, "emb"))
+    assert(ex.getMessage.contains("Received 1 features, expected 2."), ex.getMessage)
+  }
+
+  test("save/load reads params written with the old treeDepth key") {
+    val m = fixtureModel()
+    val path = java.nio.file.Files.createTempDirectory("som-legacy").toString
+    m.save(spark, path)
+    val json = spark.read.textFile(s"$path/params").head()
+    assert(!json.contains("treeDepth"))
+    val legacy = json.replace("\"dim\":", "\"treeDepth\":2,\"dim\":")
+    spark.createDataset(Seq(legacy)).coalesce(1).write.mode("overwrite").text(s"$path/params")
+    val loaded = SomModel.load(spark, path)
+    assert(loaded.config == m.config)
+    assert(loaded.codebook.weights.sameElements(m.codebook.weights))
   }
 }

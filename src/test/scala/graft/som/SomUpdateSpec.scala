@@ -68,8 +68,8 @@ class SomUpdateSpec extends AnyFunSuite {
     val (sums, counts) = graft.Parts.Local((0 until parts).map { p =>
       data.slice(p * size, (p + 1) * size)
     }).map(b => SomKernels.partitionUpdate(b.iterator, w, wSq, cfg))
-      .reduce(cfg.treeDepth)(SomKernels.addPartial)
-    SomKernels.spread(sums, counts, cfg, eta, sig)
+      .reduce(SomKernels.merge)
+    SomKernels.spread(sums.values(), counts.map(_.toDouble), cfg, eta, sig)
   }
 
   private def check(cfg: SomConfig, data: Array[Array[Float]], parts: Int = 1,
@@ -146,7 +146,8 @@ class SomUpdateSpec extends AnyFunSuite {
     check(SomConfig(4, 4, compactSupport = true), same)
     val cfg = SomConfig(4, 4)
     val w = Codebook.randomUniform(4, 4, 3, 1L).weights
-    val (sums, counts) = SomKernels.partitionUpdate(Iterator.empty, w, null, cfg)
+    val (acc, n) = SomKernels.partitionUpdate(Iterator.empty, w, null, cfg)
+    val (sums, counts) = (acc.values(), n.map(_.toDouble))
     assert(sums.forall(_ == 0.0) && counts.forall(_ == 0.0))
     val (num, den) = SomKernels.spread(sums, counts, cfg, eta, sig)
     assert(num.forall(_ == 0.0) && den.forall(_ == 0.0))
@@ -164,7 +165,7 @@ class SomUpdateSpec extends AnyFunSuite {
     val k = 30
     val (_, counts) = SomKernels.partitionUpdate(data.iterator, w,
       Distances.rowSumSq(w, k, 3), cfg)
-    assert(counts.sum == 53.0)
+    assert(counts.sum == 53L)
     assert(counts.count(_ > 0) > cfg.batchSize)
   }
 

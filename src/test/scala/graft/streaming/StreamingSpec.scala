@@ -115,6 +115,27 @@ class StreamingSpec extends SparkSpec {
       "incremental training did not reduce inertia")
   }
 
+
+  test("incremental k-means: one job per update; an empty batch leaves the model as it is") {
+    import graft.operators.Kmeans
+    val rows = (0 until 40).map { i =>
+      val rnd = new scala.util.Random(i * 7 + 1)
+      (i.toLong, Seq.fill(3)(rnd.nextDouble()))
+    }
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4))
+      .toDF("vec_id", "embedding")
+    val trainer = new StreamingSom.IncrementalKmeans(
+      Kmeans.Model(Kmeans.initCentroids(df, "embedding", "vec_id", 3)))
+    // the block pass alone: no emptiness probe before it
+    val (_, jobs) = graft.Probe.recordJobs(spark)(trainer.update(df, "embedding", "vec_id"))
+    assert(jobs.size == 1)
+    val before = trainer.model.centroids.map(_.toSeq).toSeq
+    for (empty <- Seq(df.where("vec_id < 0"), df.where(col("embedding").isNull),
+        spark.sparkContext.parallelize(rows, 4).filter(_ => false).toDF("vec_id", "embedding"))) {
+      trainer.update(empty, "embedding", "vec_id")
+      assert(trainer.model.centroids.map(_.toSeq).toSeq == before)
+    }
+  }
   test("PQ encoding runs stateless on a stream, matching batch") {
     // pq_encode is a pure codegen expression (codebook rides in the
     // expression), so an ingest pipeline can emit the compact codes
