@@ -6,9 +6,9 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.storage.StorageLevel
 
 /** One value per input partition: the blocks a training loop runs over
-  * (SOM epochs, k-means init and Lloyd's steps, logit GD) and the
-  * per-block state it carries between passes. Every step maps one block
-  * kernel over the values and folds the per-block results — the
+  * (SOM epochs, k-means init and Lloyd's steps, logit GD, BPE merges)
+  * and the per-block state it carries between passes. Every step maps
+  * one block kernel over the values and folds the per-block results — the
   * reference's map-over-Dask-blocks-and-sum shape (`xpysom.py:545-558`).
   * Two forms differ only in where the kernel runs:
   *  - [[Parts.Spread]]: an RDD with one value per partition; each
@@ -39,7 +39,15 @@ private[graft] sealed trait Parts[A] {
     */
   def withShared[B: ClassTag, R](v: B)(body: (() => B) => R): R
   def persist(): Parts[A]
-  /** Drops what [[persist]] cached, waiting until it is gone. */
+  /** Like [[persist]], for values a loop rewrites step by step: on
+    * [[Parts.Spread]] the RDD is marked for `localCheckpoint`, so the
+    * first job over it caches it and cuts its lineage there, and the
+    * values of step k keep a lineage one step deep, not k.
+    */
+  def checkpoint(): Parts[A]
+  /** Drops what [[persist]] or [[checkpoint]] cached, waiting until it
+    * is gone.
+    */
   def release(): Unit
 }
 
@@ -59,6 +67,7 @@ private[graft] object Parts {
     def reduce(f: (A, A) => A): A = values.reduceLeft(f)
     def withShared[B: ClassTag, R](v: B)(body: (() => B) => R): R = body(() => v)
     def persist(): Parts[A] = this
+    def checkpoint(): Parts[A] = this
     def release(): Unit = ()
   }
 
@@ -78,6 +87,7 @@ private[graft] object Parts {
       try body(() => bc.value) finally bc.destroy()
     }
     def persist(): Parts[A] = { rdd.persist(StorageLevel.MEMORY_AND_DISK); this }
+    def checkpoint(): Parts[A] = { rdd.localCheckpoint(); this }
     def release(): Unit = { rdd.unpersist(blocking = true); () }
   }
 }

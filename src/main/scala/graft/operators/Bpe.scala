@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.Parts
 import graft.plans.{BpeFunctions, BpeKernels}
 
 /** Distributed byte-pair-encoding tokenizer training (Sennrich et al.
@@ -14,21 +15,21 @@ import graft.plans.{BpeFunctions, BpeKernels}
   * word-count aggregation, whose shuffle carries per-doc DISTINCT
   * (token, tf) partial sums (the `token_tf` kernel keeps raw token
   * instances out of the exchange). Everything after runs on the
-  * VOCABULARY table (words x counts — millions of rows for a 100 TB
-  * corpus, not billions): each merge round is one vocabulary-sized
-  * adjacent-pair aggregation, a single-row argmax collect, and a
-  * kernel rewrite of the symbol column. Lineage is truncated with an
-  * eager `localCheckpoint` every round, so the plan never grows with
-  * the number of merges; per-round cost is flat in corpus size once
-  * word counts exist.
+  * VOCABULARY (words x counts — millions of rows for a 100 TB corpus,
+  * not billions), held as one block of symbol sequences per partition
+  * ([[graft.Parts]]). The driver keeps the pair counts; each merge
+  * rewrites, in every block, only the words that hold the chosen pair,
+  * and sums the blocks' sparse pair-count deltas: the incremental
+  * update of reference BPE trainers, one Spark job per merge. Each
+  * merge's blocks are local-checkpointed by that job, so the lineage
+  * stays one merge deep whatever the number of merges.
   *
   * Determinism: the argmax tie-breaks totally on (count desc, left
   * asc, right asc), strings in UTF-8 byte order; the greedy merge pass
-  * is order-defined; so the merge table is a pure function of the
-  * corpus. One merge loop runs over two row sources — the distributed
-  * vocabulary table, or (at most [[localVocabThreshold]] words) the
-  * same table collected — and both call the same symbolize and merge
-  * kernels. The oracle is an
+  * is order-defined; the deltas are exact long sums; so the merge table
+  * is a pure function of the corpus, whatever its partitioning and
+  * whether the blocks sit on the cluster or (at most
+  * [[localVocabThreshold]] words) on the driver. The oracle is an
   * INDEPENDENT Python implementation (tools/gen_bpe_oracle.py) whose
   * expected rows the driver's DuckDB gate replays, plus a naive
   * from-the-paper Scala re-implementation differential-tested in
@@ -45,28 +46,29 @@ object Bpe {
       .groupBy(col("kv.token").as("word"))
       .agg(sum(col("kv.tf")).as("n"))
 
+  /** Vocabulary size at or under which the merge loop runs over blocks
+    * on the driver instead of cached ones on the cluster. Corpus-scale
+    * work (the word-count shuffle) is identical either way; what the
+    * driver form removes is the one Spark job PER MERGE — for a
+    * 10k-word vocabulary and 64 merges, 64 scheduled jobs doing
+    * microseconds of real work each. 2M entries x ~60 bytes is ~100 MB
+    * of driver heap; a 100 TB web-crawl vocabulary (tens of millions
+    * of distinct tokens) stays on the cluster. The word counts' blocks
+    * must each hold at most their even share of it (hash partitioning
+    * spreads words evenly), which caps the driver transfer at the
+    * threshold. Both forms run the same loop (`BpeSpec` pins them
+    * equal on the same corpus).
+    */
+  val localVocabThreshold = 2000000L
+
   /** Learn `numMerges` merges. Returns (rank, left, right, n): rank
     * 1-based in learn order, (left, right) the merged symbol pair, n
     * its pair count at merge time. Stops early when no adjacent pair
     * reaches `minPairCount` (by default 2 — merging singletons adds
     * vocabulary without compression, the reference formulation's stop
-    * condition).
+    * condition). A vocabulary of at most `localThreshold` words is
+    * merged on the driver (0 keeps it on the cluster).
     */
-  /** Vocabulary size at or under which the merge loop runs over the
-    * collected (word, count) table instead of the distributed one.
-    * Corpus-scale work (the word-count shuffle) is identical either
-    * way; what the collected form removes is the 2-Spark-jobs-PER-MERGE
-    * floor (pair aggregation + checkpoint materialization) — for a
-    * 10k-word vocabulary and 64 merges that is 128 scheduled jobs doing
-    * microseconds of real work each. 2M entries x ~60 bytes is ~100 MB
-    * of driver heap, well inside the probe/driver sizing; a 100 TB
-    * web-crawl vocabulary (tens of millions of distinct tokens) stays
-    * on the distributed loop. Both forms run the same kernels
-    * (`bpe_symbolize`/`bpe_merge_pair`) with the same byte-order
-    * tie-break (`BpeSpec` pins local == distributed on the same corpus).
-    */
-  val localVocabThreshold = 2000000L
-
   def trainMerges(docs: DataFrame, textCol: String, numMerges: Int,
                   minPairCount: Long = 2L,
                   localThreshold: Long = localVocabThreshold): DataFrame = {
@@ -74,107 +76,138 @@ object Bpe {
     val spark = docs.sparkSession
     import spark.implicits._
 
-    val wc = wordCounts(docs, textCol)
-    if (localThreshold > 0) {
-      // cap-and-collect probe: one job that either returns the whole
-      // vocabulary or proves it is too big (same contract as the
-      // tiny-input training fast path)
-      val capped = wc.limit((math.min(localThreshold, Int.MaxValue - 1L) + 1).toInt)
-        .collect()
-      if (capped.length <= localThreshold)
-        return trainMergesLocal(
-          capped.map(r => (UTF8String.fromString(r.getString(0)), r.getLong(1))),
-          numMerges, minPairCount).toSeq.toDF("rank", "left", "right", "n")
-    }
-
-    var words = wc
-      .select(BpeFunctions.bpe_symbolize(col("word")).as("syms"), col("n"))
-      .localCheckpoint(true)
-
+    val pairs = new PairTable
+    var words = vocabParts(wordCounts(docs, textCol), localThreshold, pairs)
+    // the blocks `words` was made from; released once `words` is cached
+    var prev: Parts[Vocab] = null
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
-    var round = 1
-    var exhausted = false
-    while (round <= numMerges && !exhausted) {
-      // adjacent symbol pairs weighted by word count; the aggregation
-      // is vocabulary-sized and combines map-side
-      val best = words
-        .where(size(col("syms")) >= 2)
-        .select(col("n"),
-          slice(col("syms"), lit(1), size(col("syms")) - 1).as("la"),
-          slice(col("syms"), lit(2), size(col("syms")) - 1).as("lb"))
-        .select(col("n"), explode(arrays_zip(col("la"), col("lb"))).as("p"))
-        .groupBy(col("p.la").as("left"), col("p.lb").as("right"))
-        .agg(sum(col("n")).as("pn"))
-        .orderBy(col("pn").desc, col("left"), col("right"))
-        .limit(1)
-        .collect()
-      if (best.isEmpty || best(0).getLong(2) < minPairCount) exhausted = true
-      else {
-        val (l, r, pn) = (best(0).getString(0), best(0).getString(1),
-          best(0).getLong(2))
-        merges += ((round, l, r, pn))
-        val prev = words
-        words = words
-          .select(BpeFunctions.bpe_merge_pair(col("syms"), l, r).as("syms"),
-            col("n"))
-          .localCheckpoint(true) // plan stays one rewrite deep per round
-        prev.unpersist(blocking = false)
-        round += 1
+    try {
+      var best = pairs.best
+      while (merges.length < numMerges && best.exists(_._2 >= minPairCount)) {
+        val ((l, r), n) = best.get
+        merges += ((merges.length + 1, l.toString, r.toString, n))
+        prev = words
+        words = words.map(_.merge(l, r)).checkpoint()
+        // the one job per merge: caches `words` and returns its deltas
+        pairs.add(words.map(_.delta).reduce(Vocab.addInto))
+        prev.release()
+        prev = null
+        best = pairs.best
       }
+    } finally {
+      words.release()
+      if (prev != null) prev.release()
     }
-    words.unpersist(blocking = false)
     merges.toSeq.toDF("rank", "left", "right", "n")
   }
 
-  /** The merge loop over the collected vocabulary: the distributed
-    * rounds' own kernels ([[BpeKernels.symbolize]],
-    * [[BpeKernels.mergePair]]) and their tie-break, (count desc, left
-    * asc, right asc) with `UTF8String.compareTo` — the byte order the
-    * rounds' `orderBy` uses (code-point order, unlike `String`'s UTF-16
-    * order).
+  private type Pair = (UTF8String, UTF8String)
+  /** Pair -> count, or a change of counts. */
+  private type PairCounts = scala.collection.mutable.HashMap[Pair, Long]
+
+  /** One partition's vocabulary: each word's symbols and count, and
+    * `delta`, what the step that made this block changed in its pair
+    * counts (for the first block, all of them).
     */
-  private def trainMergesLocal(wordCounts: Array[(UTF8String, Long)],
-                               numMerges: Int, minPairCount: Long)
-      : Array[(Int, String, String, Long)] = {
-    var words = wordCounts.map { case (w, n) => (BpeKernels.symbolize(w), n) }
-    val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
-    var round = 1
-    var done = false
-    while (round <= numMerges && !done) {
-      // adjacent symbol pairs weighted by word count
-      val pairs = new java.util.HashMap[(UTF8String, UTF8String), java.lang.Long]()
-      words.foreach { case (syms, n) =>
-        var i = 0
-        while (i < syms.numElements() - 1) {
-          val key = (syms.getUTF8String(i), syms.getUTF8String(i + 1))
-          val prev = pairs.get(key)
-          pairs.put(key, if (prev == null) n else prev + n)
-          i += 1
+  private final case class Vocab(syms: Array[Array[UTF8String]], counts: Array[Long],
+                                 delta: PairCounts) {
+    /** This block after merging (l, r): the words holding the pair
+      * rewritten, the others shared, and the delta of their pairs.
+      */
+    def merge(l: UTF8String, r: UTF8String): Vocab = {
+      val delta = new PairCounts
+      val out = syms.clone()
+      var i = 0
+      while (i < syms.length) {
+        val m = BpeKernels.mergePair(syms(i), l, r)
+        if (!(m eq syms(i))) {
+          Vocab.addPairs(delta, syms(i), -counts(i))
+          Vocab.addPairs(delta, m, counts(i))
+          out(i) = m
         }
+        i += 1
       }
-      var bestL: UTF8String = null; var bestR: UTF8String = null; var bestN = 0L
-      pairs.forEach { (pair, count) =>
-        val (l, r) = pair
-        val n = count.longValue
-        val better =
-          if (bestL == null) true
-          else if (n != bestN) n > bestN
-          else {
-            val c = l.compareTo(bestL)
-            if (c != 0) c < 0 else r.compareTo(bestR) < 0
-          }
-        if (better) { bestL = l; bestR = r; bestN = n }
-      }
-      if (bestL == null || bestN < minPairCount) done = true
-      else {
-        merges += ((round, bestL.toString, bestR.toString, bestN))
-        words = words.map { case (syms, n) =>
-          (BpeKernels.mergePair(syms, bestL, bestR), n)
-        }
-        round += 1
+      Vocab(out, counts, delta)
+    }
+  }
+
+  private object Vocab {
+    def of(words: Iterator[(String, Long)]): Vocab = {
+      val (ws, ns) = words.toArray.unzip
+      val syms = ws.map(w => BpeKernels.symbolize(UTF8String.fromString(w)))
+      val delta = new PairCounts
+      syms.indices.foreach(i => addPairs(delta, syms(i), ns(i)))
+      Vocab(syms, ns, delta)
+    }
+
+    /** Adds `n` to the count of every adjacent pair of `syms`. */
+    def addPairs(into: PairCounts, syms: Array[UTF8String], n: Long): Unit = {
+      var i = 0
+      while (i < syms.length - 1) {
+        val p = (syms(i), syms(i + 1))
+        into.update(p, Math.addExact(into.getOrElse(p, 0L), n))
+        i += 1
       }
     }
-    merges.toArray
+
+    /** `b` summed into `a`, exactly. */
+    def addInto(a: PairCounts, b: PairCounts): PairCounts = {
+      b.foreachEntry((p, n) => a.update(p, Math.addExact(a.getOrElse(p, 0L), n)))
+      a
+    }
+  }
+
+  /** The driver's pair counts, best first: count desc, then left and
+    * right in UTF-8 byte order (`UTF8String.compareTo`, code-point
+    * order, unlike `String`'s UTF-16 order).
+    */
+  private final class PairTable {
+    private val counts = new PairCounts
+    private val ranked = new java.util.TreeSet[(Pair, Long)](
+      (a: (Pair, Long), b: (Pair, Long)) => {
+        val c = java.lang.Long.compare(b._2, a._2)
+        if (c != 0) c
+        else {
+          val cl = a._1._1.compareTo(b._1._1)
+          if (cl != 0) cl else a._1._2.compareTo(b._1._2)
+        }
+      })
+
+    def add(delta: PairCounts): Unit = delta.foreachEntry { (p, d) =>
+      val old = counts.getOrElse(p, 0L)
+      if (old > 0) ranked.remove((p, old))
+      val now = Math.addExact(old, d)
+      if (now > 0) { counts.update(p, now); ranked.add((p, now)) }
+      else counts.remove(p)
+    }
+
+    def best: Option[(Pair, Long)] =
+      if (ranked.isEmpty) None else Some(ranked.first())
+  }
+
+  /** The vocabulary blocks of `wc`, one per partition, their pair counts
+    * added to `pairs`, in one job. The job fills the blocks' cache and
+    * returns, per block, its pair counts and — when
+    * `threshold > 0` and the block holds at most its even share of
+    * `threshold` words, so the job never ships more than `threshold` —
+    * the block itself. When every block came back, the cache is
+    * dropped and the blocks stay on the driver ([[graft.Parts.Local]]):
+    * the merges then run no Spark job. The caller releases the result.
+    */
+  private def vocabParts(wc: DataFrame, threshold: Long, pairs: PairTable): Parts[Vocab] = {
+    val rdd = wc.rdd.mapPartitions(rows =>
+      Iterator(Vocab.of(rows.map(r => (r.getString(0), r.getLong(1))))))
+    val blocks = Parts.of(rdd, Vocab.of(Iterator.empty)).persist()
+    try {
+      val share = if (threshold > 0) threshold / math.max(rdd.getNumPartitions, 1) else -1L
+      val sized = blocks.map(v => (v.delta, if (v.counts.length <= share) v else null))
+        .collect()
+      sized.foreach(s => pairs.add(s._1))
+      if (sized.forall(_._2 != null)) {
+        blocks.release()
+        Parts.Local(sized.map(_._2))
+      } else blocks
+    } catch { case e: Throwable => blocks.release(); throw e }
   }
 
   /** Collect a merge table into the driver-side (left, right) list the

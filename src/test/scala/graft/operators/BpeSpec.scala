@@ -1,10 +1,8 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.plans.{BpeFunctions, BpeKernels}
-import org.apache.spark.sql.functions._
+import graft.plans.BpeKernels
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.sql.catalyst.util.ArrayData
 
 /** BPE trainer/encoder coverage.
   *
@@ -84,8 +82,7 @@ class BpeSpec extends SparkSpec {
 
   // ------------------------------------------------------------- kernels
 
-  private def arr(a: ArrayData): Seq[String] =
-    (0 until a.numElements()).map(a.getUTF8String(_).toString)
+  private def arr(a: Array[UTF8String]): Seq[String] = a.map(_.toString).toSeq
 
   test("symbolize: code points + end marker") {
     assert(arr(BpeKernels.symbolize(UTF8String.fromString("ab"))) ==
@@ -98,9 +95,7 @@ class BpeSpec extends SparkSpec {
 
   test("mergePair is one greedy left-to-right pass") {
     def mp(syms: Seq[String], a: String, b: String): Seq[String] =
-      arr(BpeKernels.mergePair(
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(
-          syms.map(UTF8String.fromString).toArray[Any]),
+      arr(BpeKernels.mergePair(syms.map(UTF8String.fromString).toArray,
         UTF8String.fromString(a), UTF8String.fromString(b)))
     assert(mp(Seq("a", "a", "a"), "a", "a") == Seq("aa", "a"))
     assert(mp(Seq("a", "a", "a", "a"), "a", "a") == Seq("aa", "aa"))
@@ -128,17 +123,21 @@ class BpeSpec extends SparkSpec {
     Seq((0L, text)).toDF("doc_id", "text")
   }
 
-  test("trainMerges reproduces the classic worked example, ties broken (count desc, left, right)") {
-    val got = Bpe.trainMerges(classicCorpus, "text", numMerges = 10)
+  private def table(df: org.apache.spark.sql.DataFrame, numMerges: Int,
+                    localThreshold: Long = Bpe.localVocabThreshold) =
+    Bpe.trainMerges(df, "text", numMerges, localThreshold = localThreshold)
       .orderBy("rank").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
+
+  test("trainMerges reproduces the classic worked example, ties broken (count desc, left, right)") {
     val expected = Seq(
       (1, "e", "s", 9L), (2, "es", "t", 9L), (3, "est", "</w>", 9L),
       (4, "l", "o", 7L), (5, "lo", "w", 7L),
       // n,e / e,w / w,est</w> all count 6 -> left-asc tie-break picks (e,w)
       (6, "e", "w", 6L), (7, "ew", "est</w>", 6L), (8, "n", "ewest</w>", 6L),
       (9, "low", "</w>", 5L), (10, "d", "est</w>", 3L))
-    assert(got == expected)
+    assert(table(classicCorpus, 10) == expected, "driver blocks")
+    assert(table(classicCorpus, 10, localThreshold = 0L) == expected, "cluster blocks")
   }
 
   test("trainMerges stops below minPairCount and on exhausted vocabularies") {
@@ -210,12 +209,68 @@ class BpeSpec extends SparkSpec {
   }
 
   test("trainMerges is partitioning-invariant") {
-    val df = Seq((0L, "low lower low"), (1L, "newest widest newest"),
-      (2L, "low newest lowest")).toDF("doc_id", "text")
-    val a = Bpe.trainMerges(df, "text", 8).orderBy("rank").collect().toSeq
-    val b = Bpe.trainMerges(df.repartition(7), "text", 8)
-      .orderBy("rank").collect().toSeq
-    assert(a == b)
+    val rows = Seq((0L, "low lower low"), (1L, "newest widest newest"),
+      (2L, "low newest lowest"))
+    val expected = table(rows.toDF("doc_id", "text"), 8)
+    assert(expected.size == 8)
+    for (p <- Seq(1, 3, 7, 16)) {
+      // the word counts' shuffle lays out the blocks: p partitions, no
+      // coalescing, on a child session so this suite's conf is untouched
+      val s = spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", p.toLong)
+      s.conf.set("spark.sql.adaptive.enabled", "false")
+      val df = s.createDataFrame(rows).toDF("doc_id", "text").repartition(p)
+      val sizes = Bpe.wordCounts(df, "text").rdd.glom().map(_.length).collect()
+      assert(sizes.length == p)
+      if (p >= 7) assert(sizes.contains(0), s"p=$p: no empty block in ${sizes.toSeq}")
+      assert(table(df, 8) == expected, s"p=$p driver blocks")
+      assert(table(df, 8, localThreshold = 0L) == expected, s"p=$p cluster blocks")
+    }
+  }
+
+  test("forced-distributed fit: at most one job per merge, none locally; nothing left cached") {
+    // every word twice, so every pair keeps count >= 2 until words fuse
+    val df = Seq((0L, "banana band bananas sandbank"), (1L, "abandon banana banded"),
+      (2L, "nan ban and band banana")).map { case (id, t) => (id, t + " " + t) }
+      .toDF("doc_id", "text")
+    val sc = spark.sparkContext
+    def jobs(numMerges: Int, localThreshold: Long): Int = {
+      val before = sc.getPersistentRDDs.keySet
+      var out: org.apache.spark.sql.DataFrame = null
+      val (_, started) = graft.Probe.recordJobs(spark) {
+        out = Bpe.trainMerges(df, "text", numMerges, localThreshold = localThreshold)
+      }
+      assert(sc.getPersistentRDDs.keySet == before,
+        s"fit left cached RDDs ${sc.getPersistentRDDs.keySet -- before}")
+      assert(out.count() == numMerges, "the corpus ran out of merges")
+      started.size
+    }
+    val dist = jobs(12, 0L) - jobs(4, 0L)
+    assert(dist <= 8, s"12 vs 4 merges on the cluster: $dist more jobs")
+    assert(jobs(12, Bpe.localVocabThreshold) == jobs(4, Bpe.localVocabThreshold))
+  }
+
+  test("Parts.checkpoint keeps a stepped loop's lineage one step deep") {
+    // the merge loop's shape: each step maps the previous step's values
+    // and one job over the step both caches it and cuts its lineage
+    def depth(r: org.apache.spark.rdd.RDD[_]): Int =
+      1 + r.dependencies.map(d => depth(d.rdd)).maxOption.getOrElse(0)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    var p: graft.Parts[Long] = graft.Parts.Spread(sc.parallelize(0L until 4L, 4)).checkpoint()
+    for (_ <- 1 to 20) {
+      val next = p.map(_ + 1).checkpoint()
+      next.reduce(_ + _)
+      p.release()
+      p = next
+    }
+    assert(p.reduce(_ + _) == 6L + 4 * 20)
+    p match {
+      case graft.Parts.Spread(rdd) => assert(depth(rdd) == 2, rdd.toDebugString)
+      case other => fail(s"expected the cluster form, got $other")
+    }
+    p.release()
+    assert(sc.getPersistentRDDs.keySet == before)
   }
 
   test("encode generalizes to unseen words via learned units") {
