@@ -16,6 +16,10 @@ import org.apache.spark.storage.StorageLevel
   *  - [[Parts.Local]]: the values in partition order, on the driver;
   *    no Spark job at all.
   *
+  * A loop gets its blocks from [[Parts.load]], which picks the form by
+  * one rule for every loop: its blocks total at most the loop's
+  * threshold, or they stay on the cluster.
+  *
   * Every merge `reduce` runs is exact — long sums, IEEE min, the SOM's
   * [[graft.som.ExactSum]] — so its result cannot depend on the
   * partitioning, the combine tree or the arrival order of the partials.
@@ -58,6 +62,51 @@ private[graft] object Parts {
     */
   def of[A](rdd: RDD[A], empty: => A): Parts[A] =
     if (rdd.partitions.isEmpty) Local(Vector(empty)) else Spread(rdd)
+
+  /** A loop's input: the values of `rdd` ([[of]]), on the driver when
+    * their `size`s total at most `threshold` (in the loop's unit: rows,
+    * values or words; 0 keeps them on the cluster), and `first` of each
+    * value in partition order — the loop's first step, paid for by the
+    * job that reads the input.
+    *
+    * `rdd` is cached and read by ONE job, which returns `first` of every
+    * block, and the block itself when `threshold > 0` and its size is at
+    * most its even share `threshold / partitions` — so the job never
+    * ships more than `threshold`. Then:
+    *  - every block came back: the cache is dropped, [[Local]];
+    *  - some did not, but the sizes total at most `threshold`: one more
+    *    job collects the others from the cache, which is then dropped,
+    *    [[Local]] in partition order;
+    *  - otherwise: the cached [[Spread]].
+    * An RDD without partitions is [[Local]] of `empty`, with no job. On
+    * a failure nothing stays cached; otherwise the caller releases the
+    * result.
+    */
+  def load[A: ClassTag, F: ClassTag](rdd: RDD[A], empty: => A, threshold: Long)(
+      size: A => Long, first: A => F): (Parts[A], IndexedSeq[F]) =
+    if (rdd.partitions.isEmpty) {
+      val e = empty
+      (Local(Vector(e)), Vector(first(e)))
+    } else {
+      val blocks = Spread(rdd).persist()
+      try {
+        val share = if (threshold > 0) threshold / rdd.getNumPartitions else -1L
+        val got = rdd.map { a =>
+          val n = size(a)
+          (n, first(a), if (n <= share) Some(a) else None)
+        }.collect()
+        val missing = got.indices.filter(got(_)._3.isEmpty)
+        val local =
+          if (missing.isEmpty) Some(got.map(_._3.get).toIndexedSeq)
+          else if (threshold > 0 && got.iterator.map(_._1).sum <= threshold) {
+            val rest = missing.zip(rdd.sparkContext.runJob(rdd,
+              (it: Iterator[A]) => it.next(), missing)).toMap
+            Some(got.indices.map(i => got(i)._3.getOrElse(rest(i))))
+          } else None
+        local.foreach(_ => blocks.release())
+        (local.fold[Parts[A]](blocks)(Local(_)), got.map(_._2).toIndexedSeq)
+      } catch { case e: Throwable => blocks.release(); throw e }
+    }
 
   final case class Local[A](values: IndexedSeq[A]) extends Parts[A] {
     def map[B: ClassTag](f: A => B): Parts[B] = Local(values.map(f))

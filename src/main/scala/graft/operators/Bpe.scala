@@ -28,8 +28,8 @@ import graft.plans.{BpeFunctions, BpeKernels}
   * asc, right asc), strings in UTF-8 byte order; the greedy merge pass
   * is order-defined; the deltas are exact long sums; so the merge table
   * is a pure function of the corpus, whatever its partitioning and
-  * whether the blocks sit on the cluster or (at most
-  * [[localVocabThreshold]] words) on the driver. The oracle is an
+  * whether the blocks sit on the cluster or on the driver
+  * ([[localVocabThreshold]]). The oracle is an
   * INDEPENDENT Python implementation (tools/gen_bpe_oracle.py) whose
   * expected rows the driver's DuckDB gate replays, plus a naive
   * from-the-paper Scala re-implementation differential-tested in
@@ -46,17 +46,14 @@ object Bpe {
       .groupBy(col("kv.token").as("word"))
       .agg(sum(col("kv.tf")).as("n"))
 
-  /** Vocabulary size at or under which the merge loop runs over blocks
-    * on the driver instead of cached ones on the cluster. Corpus-scale
-    * work (the word-count shuffle) is identical either way; what the
-    * driver form removes is the one Spark job PER MERGE — for a
-    * 10k-word vocabulary and 64 merges, 64 scheduled jobs doing
-    * microseconds of real work each. 2M entries x ~60 bytes is ~100 MB
-    * of driver heap; a 100 TB web-crawl vocabulary (tens of millions
-    * of distinct tokens) stays on the cluster. The word counts' blocks
-    * must each hold at most their even share of it (hash partitioning
-    * spreads words evenly), which caps the driver transfer at the
-    * threshold. Both forms run the same loop (`BpeSpec` pins them
+  /** Vocabularies of at most this many words run the merge loop on the
+    * driver, by the rule of [[graft.Parts.load]]. Corpus-scale work (the
+    * word-count shuffle) is identical either way; what the driver form
+    * removes is the one Spark job PER MERGE — for a 10k-word vocabulary
+    * and 64 merges, 64 scheduled jobs doing microseconds of real work
+    * each. 2M entries x ~60 bytes is ~100 MB of driver heap; a 100 TB
+    * web-crawl vocabulary (tens of millions of distinct tokens) stays on
+    * the cluster. Both forms run the same loop (`BpeSpec` pins them
     * equal on the same corpus).
     */
   val localVocabThreshold = 2000000L
@@ -77,11 +74,16 @@ object Bpe {
     import spark.implicits._
 
     val pairs = new PairTable
-    var words = vocabParts(wordCounts(docs, textCol), localThreshold, pairs)
+    // the job that reads the vocabulary also returns its pair counts
+    val (loaded, counts) = Parts.load(wordCounts(docs, textCol).rdd.mapPartitions(rows =>
+        Iterator(Vocab.of(rows.map(r => (r.getString(0), r.getLong(1)))))),
+      Vocab.of(Iterator.empty), localThreshold)(_.counts.length.toLong, _.delta)
+    var words = loaded
     // the blocks `words` was made from; released once `words` is cached
     var prev: Parts[Vocab] = null
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
     try {
+      counts.foreach(pairs.add)
       var best = pairs.best
       while (merges.length < numMerges && best.exists(_._2 >= minPairCount)) {
         val ((l, r), n) = best.get
@@ -183,31 +185,6 @@ object Bpe {
 
     def best: Option[(Pair, Long)] =
       if (ranked.isEmpty) None else Some(ranked.first())
-  }
-
-  /** The vocabulary blocks of `wc`, one per partition, their pair counts
-    * added to `pairs`, in one job. The job fills the blocks' cache and
-    * returns, per block, its pair counts and — when
-    * `threshold > 0` and the block holds at most its even share of
-    * `threshold` words, so the job never ships more than `threshold` —
-    * the block itself. When every block came back, the cache is
-    * dropped and the blocks stay on the driver ([[graft.Parts.Local]]):
-    * the merges then run no Spark job. The caller releases the result.
-    */
-  private def vocabParts(wc: DataFrame, threshold: Long, pairs: PairTable): Parts[Vocab] = {
-    val rdd = wc.rdd.mapPartitions(rows =>
-      Iterator(Vocab.of(rows.map(r => (r.getString(0), r.getLong(1))))))
-    val blocks = Parts.of(rdd, Vocab.of(Iterator.empty)).persist()
-    try {
-      val share = if (threshold > 0) threshold / math.max(rdd.getNumPartitions, 1) else -1L
-      val sized = blocks.map(v => (v.delta, if (v.counts.length <= share) v else null))
-        .collect()
-      sized.foreach(s => pairs.add(s._1))
-      if (sized.forall(_._2 != null)) {
-        blocks.release()
-        Parts.Local(sized.map(_._2))
-      } else blocks
-    } catch { case e: Throwable => blocks.release(); throw e }
   }
 
   /** Collect a merge table into the driver-side (left, right) list the

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.commons.codec.digest.DigestUtils
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -60,9 +61,8 @@ import graft.plans.{HashKernels, KmeansFunctions, KmeansKernel, VecScale9Kernel,
   *    ascending id), so neither the partitioning nor the arrival order
   *    of the partials can change a bit;
   *  - one loop runs over two forms of the blocks ([[graft.Parts]]): cached
-  *    per partition, or (at most [[localFitMaxRows]] rows) collected into
-  *    one block on the driver — the same kernels and merges over one
-  *    block, so both give the same bits by construction.
+  *    on the cluster, or on the driver ([[localFitMaxRows]]) — the same
+  *    kernels and merges, so both give the same bits by construction.
   */
 object Kmeans {
 
@@ -103,7 +103,7 @@ object Kmeans {
       * Spark's `md5` makes.
       */
     def seeded(n: Int, salt: String,
-               skip: Set[Long]): Array[(String, Long, Array[Double])] =
+               skip: Set[Long] = Set.empty): Array[(String, Long, Array[Double])] =
       ids.indices.filterNot(i => skip.contains(ids(i)))
         .map(i => (DigestUtils.md5Hex(s"$salt:${ids(i)}"), i))
         .sortBy { case (h, i) => (h, ids(i)) }
@@ -185,22 +185,12 @@ object Kmeans {
         ids += row.getLong(0)
         xs += row.getArray(1).toDoubleArray()
       }
-      sorted(ids.result(), xs.toArray,
-        if (withSums) xs.map(x =>
-          VecScale9Kernel.scaleArray(ArrayData.toArrayData(x), isFloat = false)).toArray
+      val (is, vs) = (ids.result(), xs.toArray)
+      val order = is.indices.sortBy(is(_)).toArray // stable
+      new Block(order.map(is(_)), order.map(vs(_)),
+        if (withSums) order.map(i =>
+          VecScale9Kernel.scaleArray(ArrayData.toArrayData(vs(i)), isFloat = false))
         else null)
-    }
-
-    /** The rows of `parts`, in partition order, as one block. */
-    def concat(parts: Seq[Block]): Block =
-      sorted(parts.flatMap(_.ids).toArray, parts.flatMap(_.xs).toArray,
-        if (parts.exists(_.scaled == null)) null else parts.flatMap(_.scaled).toArray)
-
-    private def sorted(ids: Array[Long], xs: Array[Array[Double]],
-                       scaled: Array[ArrayData]): Block = {
-      val order = ids.indices.sortBy(ids(_)).toArray // stable
-      new Block(order.map(ids(_)), order.map(xs(_)),
-        if (scaled == null) null else order.map(scaled(_)))
     }
   }
 
@@ -227,42 +217,38 @@ object Kmeans {
     }
   }
 
-  /** The blocks of `data` (slim columns), one per partition, not cached.
-    * An input without partitions is one empty block.
-    */
-  private def blocksOf(data: DataFrame, withSums: Boolean): Parts[Block] = {
-    val rdd = data.queryExecution.toRdd
+  /** The blocks of `df`'s slim projection, one per partition, not cached. */
+  private def blockRdd(df: DataFrame, vecCol: String, idCol: String,
+                       withSums: Boolean): RDD[Block] =
+    slim(df, vecCol, idCol).queryExecution.toRdd
       .mapPartitions(rows => Iterator(Block(rows, withSums)))
-    Parts.of(rdd, Block(Iterator.empty, withSums))
+
+  /** The blocks of `df`'s slim projection, not cached; an input without
+    * partitions is one empty block.
+    */
+  private def blocksOf(df: DataFrame, vecCol: String, idCol: String,
+                       withSums: Boolean): Parts[Block] =
+    Parts.of(blockRdd(df, vecCol, idCol, withSums), Block(Iterator.empty, withSums))
+
+  /** The blocks of `df`'s slim projection, loaded at `maxRows` rows by
+    * [[graft.Parts.load]], and the `n` seeded rows ([[seededInit]]) its
+    * one job picks. The caller releases the blocks.
+    */
+  private def load(df: DataFrame, vecCol: String, idCol: String, maxRows: Long,
+                   withSums: Boolean, n: Int,
+                   salt: String): (Parts[Block], Array[(Long, Array[Double])]) = {
+    val (rows, tops) = Parts.load(blockRdd(df, vecCol, idCol, withSums),
+      Block(Iterator.empty, withSums), maxRows)(_.size.toLong, _.seeded(n, salt))
+    try (rows, seededInit(tops, n))
+    catch { case e: Throwable => rows.release(); throw e }
   }
 
-  /** The cached blocks of `df`'s slim projection, or — when they hold at
-    * most `localMaxRows` rows — the same rows collected into one block.
-    * With `localMaxRows > 0` one job counts the rows, which also fills
-    * the cache; with 0 the count is skipped. The caller releases the
-    * result.
+  /** Up to `n` (id, vector) rows in `(md5(salt:id), id)` order: the
+    * blocks' own top-n lists ([[Block.seeded]]) merged on `(md5, id)`.
     */
-  private def rowsOf(df: DataFrame, vecCol: String, idCol: String,
-                     localMaxRows: Long, withSums: Boolean): Parts[Block] = {
-    val all = blocksOf(slim(df, vecCol, idCol), withSums).persist()
-    try {
-      if (localMaxRows <= 0 ||
-          all.map(_.size.toLong).collect().sum > localMaxRows) all
-      else {
-        val one = Parts.Local(Vector(Block.concat(all.collect())))
-        all.release()
-        one
-      }
-    } catch { case e: Throwable => all.release(); throw e }
-  }
-
-  /** Up to `n` (id, vector) rows in `(md5(salt:id), id)` order, ids in
-    * `skip` left out: each block's top n, merged on `(md5, id)`.
-    */
-  private def seeded(rows: Parts[Block], n: Int, salt: String,
-                     skip: Set[Long] = Set.empty): Array[(Long, Array[Double])] =
-    rows.map(_.seeded(n, salt, skip)).collect().flatten
-      .sortBy { case (h, id, _) => (h, id) }
+  private def seeded(tops: Seq[Array[(String, Long, Array[Double])]],
+                     n: Int): Array[(Long, Array[Double])] =
+    tops.flatten.sortBy { case (h, id, _) => (h, id) }
       .take(n).map { case (_, id, v) => (id, v) }.toArray
 
   /** Element-wise exact sum of two count or sum vectors. */
@@ -288,11 +274,12 @@ object Kmeans {
       state.map(_.phi9).collect().foldLeft(java.math.BigInteger.ZERO)(_ add _), 9)
       .doubleValue
 
-  /** The `k` seeded rows, failing when there are fewer. */
-  private def seededInit(rows: Parts[Block], k: Int,
-                         salt: String): Array[(Long, Array[Double])] = {
-    require(k > 0, s"kmeans needs k > 0, got $k")
-    val picked = seeded(rows, k, salt)
+  /** The `k` seeded rows of the blocks' top-k lists, failing when there
+    * are fewer.
+    */
+  private def seededInit(tops: Seq[Array[(String, Long, Array[Double])]],
+                         k: Int): Array[(Long, Array[Double])] = {
+    val picked = seeded(tops, k)
     require(picked.length == k,
       s"kmeans init needs >= $k non-null vectors, found ${picked.length}")
     picked
@@ -305,8 +292,9 @@ object Kmeans {
     */
   def initCentroids(df: DataFrame, vecCol: String, idCol: String, k: Int,
                     salt: String = "km"): Array[Array[Double]] = {
-    val rows = blocksOf(slim(df, vecCol, idCol), withSums = false)
-    seededInit(rows, k, salt).map(_._2)
+    require(k > 0, s"kmeans needs k > 0, got $k")
+    val rows = blocksOf(df, vecCol, idCol, withSums = false)
+    seededInit(rows.map(_.seeded(k, salt)).collect(), k).map(_._2)
   }
 
   /** Farthest-first runs k-1 SEQUENTIAL full scans — fine in the
@@ -321,25 +309,30 @@ object Kmeans {
     * chosen set (max over rows of min squared distance to the set, ties
     * to the lowest id). Better-spread seeds than the hashed sample —
     * the quality option when k is small and clusters matter more than
-    * init cost. k-1 extra jobs over the cached blocks, each folding the
-    * newest pick into a per-row running min d² (the assignment kernel's
-    * `d2`) and returning each block's farthest row. Deterministic and
-    * independently replayable like the hashed init.
+    * init cost. On the cluster, k-1 extra jobs over the cached blocks,
+    * each folding the newest pick into a per-row running min d² (the
+    * assignment kernel's `d2`) and returning each block's farthest row;
+    * inputs of at most [[localFitMaxRows]] rows run them on the driver.
+    * Deterministic and independently replayable like the hashed init.
     */
   def initFarthestCentroids(df: DataFrame, vecCol: String, idCol: String,
                             k: Int, salt: String = "km"): Array[Array[Double]] = {
-    val rows = rowsOf(df, vecCol, idCol, 0L, withSums = false)
-    try farthestFirst(rows, k, salt) finally rows.release()
+    checkFarthest(k)
+    val (rows, first) = load(df, vecCol, idCol, localFitMaxRows, withSums = false, 1, salt)
+    try farthestFirst(rows, first(0)._2, k) finally rows.release()
   }
 
-  private def farthestFirst(rows: Parts[Block], k: Int,
-                            salt: String): Array[Array[Double]] = {
+  private def checkFarthest(k: Int): Unit = {
     require(k > 0, s"kmeans needs k > 0, got $k")
     require(k <= farthestMaxK,
       s"farthest-first init runs k-1 sequential full scans and is capped " +
         s"at k <= $farthestMaxK; use initMethod='scalable' " +
         s"(k-means||-style, O(rounds) scans) for k = $k")
-    val first = seededInit(rows, 1, salt)(0)._2
+  }
+
+  /** Farthest-first from the seed row `first` to `k` centroids. */
+  private def farthestFirst(rows: Parts[Block], first: Array[Double],
+                            k: Int): Array[Array[Double]] = {
     val dim = first.length
     val picked = scala.collection.mutable.ArrayBuffer(first)
     var state = rows.map(_.near(first, dim)).persist()
@@ -393,8 +386,8 @@ object Kmeans {
     * state it keeps per row is one double + one int. Per round: one job
     * draws, one job merges and sums φ; the weights are one more.
     *
-    * Inputs of at most [[localFitMaxRows]] rows run the same rounds over
-    * the collected rows (one counting job, then one collect).
+    * Inputs of at most [[localFitMaxRows]] rows run the same rounds on
+    * the driver.
     *
     * Determinism (independently replayed by tools/gen_kmeans_oracle.py):
     *  - the "coin flip" for (row, round) is the md5-uniform
@@ -414,20 +407,20 @@ object Kmeans {
   def initScalableCentroids(df: DataFrame, vecCol: String, idCol: String,
                             k: Int, salt: String = "km", rounds: Int = 5,
                             oversample: Int = -1): Array[Array[Double]] = {
-    val rows = rowsOf(df, vecCol, idCol, localFitMaxRows, withSums = false)
-    try initScalableCentroids(rows, k, salt, rounds, oversample)
+    require(k > 0, s"kmeans needs k > 0, got $k")
+    require(rounds > 0, s"scalable init needs rounds > 0, got $rounds")
+    val (rows, first) = load(df, vecCol, idCol, localFitMaxRows, withSums = false, 1, salt)
+    try initScalableCentroids(rows, first(0), k, salt, rounds, oversample)
     finally rows.release()
   }
 
   // keeps the public name so the rounds' Spark jobs carry it in their
   // call sites, also when `fit` runs them
-  private def initScalableCentroids(rows: Parts[Block], k: Int, salt: String,
-                                    rounds: Int,
+  private def initScalableCentroids(rows: Parts[Block], seed: (Long, Array[Double]),
+                                    k: Int, salt: String, rounds: Int,
                                     oversample: Int): Array[Array[Double]] = {
-    require(k > 0, s"kmeans needs k > 0, got $k")
-    require(rounds > 0, s"scalable init needs rounds > 0, got $rounds")
     val ell = if (oversample > 0) oversample else 2 * k
-    val (firstId, first) = seededInit(rows, 1, salt)(0)
+    val (firstId, first) = seed
     val dim = first.length
     // (id, vec) candidates in selection order; ids seen for dedup
     val cand = scala.collection.mutable.ArrayBuffer((firstId, first))
@@ -461,7 +454,8 @@ object Kmeans {
       val nCand = cand.length
       val weights = state.map(_.counts(nCand)).reduce(addExact)
       reduceWeightedCandidates(cand.toIndexedSeq, weights(_), k, dim,
-        (chosenIds, need) => seeded(rows, need, s"$salt|pad", chosenIds).toSeq)
+        (chosenIds, need) =>
+          seeded(rows.map(_.seeded(need, s"$salt|pad", chosenIds)).collect(), need).toSeq)
     } finally state.release()
   }
 
@@ -552,17 +546,16 @@ object Kmeans {
     picked.map(_._2).toArray
   }
 
-  /** At or below this row count [[fit]] collects the cached blocks into
-    * one and runs init + iterations on the driver — the
-    * [[graft.som.Som]] `localFitThreshold` pattern. A 2,000-row
+  /** Inputs of at most this many rows run init and iterations on the
+    * driver, by the rule of [[graft.Parts.load]]. A 2,000-row
     * coarse-quantizer fit paid ~1 + iters Spark jobs of pure scheduler
     * overhead (~50 ms each). It is the same loop over the other form
     * of [[Parts]], so the bits are the same (`KmeansSpec` pins
     * local == forced-distributed across all three init methods, and the
     * `kmeans_train_distributed` query keeps the distributed loop
     * oracle-gated at every SF). 65,536 x 64-dim rows and their scale-9
-    * longs collect to ≤ ~70 MB — driver-trivial; pass 0 to force the
-    * distributed loop.
+    * longs are ≤ ~70 MB — driver-trivial; 0 keeps every input on the
+    * cluster.
     */
   val localFitMaxRows = 65536L
 
@@ -573,8 +566,9 @@ object Kmeans {
     * previous centroid (the standard convention; the guard mirrors
     * `_merge_updates`' zero-denominator rule).
     *
-    * Inputs of at most `localMaxRows` rows run init and iterations over
-    * the collected rows (see [[localFitMaxRows]]).
+    * Inputs of at most `localMaxRows` rows run init and iterations on
+    * the driver ([[localFitMaxRows]]). The job that reads the input also
+    * draws the seeded init.
     */
   def fit(df: DataFrame, vecCol: String, idCol: String, k: Int, iters: Int,
           salt: String = "km", initMethod: String = "hash",
@@ -584,17 +578,19 @@ object Kmeans {
     require(initMethod == "hash" || initMethod == "farthest" ||
         initMethod == "scalable",
       s"initMethod must be 'hash', 'farthest' or 'scalable', got '$initMethod'")
+    if (initMethod == "farthest") checkFarthest(k)
     // the update sums each element's scale-9 decimal value (exact,
     // order-independent). Those per-element roundings never change
     // across iterations, so the blocks carry them, computed once; each
     // iteration then pays one assignment pass + plain long additions
     // into k buffers of (dim + 1) longs per block
-    val rows = rowsOf(df, vecCol, idCol, localMaxRows, withSums = true)
+    val (rows, seeds) = load(df, vecCol, idCol, localMaxRows, withSums = true,
+      if (initMethod == "hash") k else 1, salt)
     try {
       val c = (initMethod match {
-        case "farthest" => farthestFirst(rows, k, salt)
-        case "scalable" => initScalableCentroids(rows, k, salt, 5, -1)
-        case _ => seededInit(rows, k, salt).map(_._2)
+        case "farthest" => farthestFirst(rows, seeds(0)._2, k)
+        case "scalable" => initScalableCentroids(rows, seeds(0), k, salt, 5, -1)
+        case _ => seeds.map(_._2)
       }).map(_.clone()) // updated in place below
       val dim = c(0).length
       var it = 0
@@ -617,8 +613,7 @@ object Kmeans {
     */
   def assignSums(df: DataFrame, vecCol: String, idCol: String,
                  model: Model): Seq[(Int, Array[Long], Long)] =
-    clusterSums(blocksOf(slim(df, vecCol, idCol), withSums = true),
-      model.flat, model.dim)
+    clusterSums(blocksOf(df, vecCol, idCol, withSums = true), model.flat, model.dim)
 
   /** One assignment pass: (vec_id, cid, d2) for every non-null vector —
     * a single codegen scan, no shuffle.

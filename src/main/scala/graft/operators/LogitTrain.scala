@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
@@ -45,9 +46,9 @@ import graft.plans.{LogitFunctions, LogitKernel, VecScale9Kernel, VecSumCount}
   *  - gradient/residual sums accumulate as exact scale-9 longs
   *    (order-independent, partitioning-invariant); the mean divides at
   *    scale 9 HALF_UP; weight init is all-zero;
-  *  - one loop runs over two forms of the blocks: cached per
-  *    partition, or (at most [[localTrainMaxRows]] rows) collected to
-  *    the driver — the same kernel and exact merges, so the same bits.
+  *  - one loop runs over two forms of the blocks: cached on the
+  *    cluster, or on the driver ([[localTrainMaxRows]]) — the same kernel
+  *    and exact merges, so the same bits.
   */
 object LogitTrain {
 
@@ -101,25 +102,27 @@ object LogitTrain {
     }
   }
 
-  /** The blocks of `feats`, not cached. */
-  private def blocksOf(feats: DataFrame): Parts[Block] = {
-    val rdd = feats.select(col("x").cast("array<double>"), col("y").cast("double"))
+  private val emptyBlock = Block(Array.empty, Array.empty)
+
+  /** The blocks of `feats`, one per partition, not cached. */
+  private def blockRdd(feats: DataFrame): RDD[Block] =
+    feats.select(col("x").cast("array<double>"), col("y").cast("double"))
       .queryExecution.toRdd.mapPartitions { rows =>
         val kept = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
           .map(r => (ArrayData.toArrayData(r.getArray(0).toDoubleArray()), r.getDouble(1)))
           .toArray
         Iterator.single(Block(kept.map(_._1), kept.map(_._2)))
       }
-    Parts.of(rdd, Block(Array.empty, Array.empty))
-  }
+
+  /** Element-wise exact sum of two pass buffers. */
+  private def addExact(a: Array[Long], b: Array[Long]): Array[Long] =
+    Array.tabulate(a.length)(i => Math.addExact(a(i), b(i)))
 
   /** The exact sums of one gradient pass under `w` over `rows`: `dim`
     * gradients, the squared residual, then the row count.
     */
   private def passSums(rows: Parts[Block], w: Array[Double]): Array[Long] =
-    rows.map(_.sums(w)).reduce { (a, b) =>
-      Array.tabulate(a.length)(i => Math.addExact(a(i), b(i)))
-    }
+    rows.map(_.sums(w)).reduce(addExact)
 
   /** ONE gradient pass under `w`: the exact scale-9 sums of the
     * per-row contributions (`dim` gradients + the squared residual)
@@ -129,7 +132,7 @@ object LogitTrain {
     */
   def gradSums(feats: DataFrame, w: Array[Double]): (Seq[Long], Long) = {
     require(w.length == dim, s"expected $dim weights, got ${w.length}")
-    val s = passSums(blocksOf(feats), w)
+    val s = passSums(Parts.of(blockRdd(feats), emptyBlock), w)
     (s.take(dim + 1).toSeq, s(dim + 1))
   }
 
@@ -147,17 +150,16 @@ object LogitTrain {
     (w2, VecScale9Kernel.mean9(sums(dim), n))
   }
 
-  /** Above this row count the iteration loop stays distributed; at or
-    * below it the cached blocks collect once and the remaining
-    * iterations run on the driver. A labeled training sample this small
-    * pays more per iteration in job scheduling (one full Spark job per
-    * GD step) than in arithmetic — 150 iterations over a few thousand
-    * rows is ~150 x ~40 ms of pure driver/scheduler overhead. It is the
-    * same loop over the other form of the blocks: the same kernel and
-    * buffer add per row, and the scale-9 long sums are exact and
-    * order-independent, so the bits are the same (`LogitSpec` pins the
-    * equality). At 65,536 rows the collected features are ≤ ~3 MB —
-    * driver-trivial.
+  /** Inputs of at most this many rows run their GD steps on the driver,
+    * by the rule of [[graft.Parts.load]]. A labeled training sample this
+    * small pays more per iteration in job scheduling (one full Spark job
+    * per GD step) than in arithmetic — 150 iterations over a few
+    * thousand rows is ~150 x ~40 ms of pure driver/scheduler overhead.
+    * It is the same loop over the other form of the blocks: the same
+    * kernel and buffer add per row, and the scale-9 long sums are exact
+    * and order-independent, so the bits are the same (`LogitSpec` pins
+    * the equality). At 65,536 rows the features are ≤ ~3 MB —
+    * driver-trivial; 0 keeps every input on the cluster.
     */
   val localTrainMaxRows = 65536L
 
@@ -166,42 +168,35 @@ object LogitTrain {
     * before returning). `y` must be 0/1-ish (any double works
     * arithmetically; the residual is `p − y`).
     *
-    * The FIRST iteration always runs distributed (it fills the cache and
-    * establishes `n` with no extra job); when `n <= localMaxRows` the
-    * blocks collect once and the remaining iterations run on the driver
-    * — same bits, see [[localTrainMaxRows]]. So a distributed train runs
-    * `iters` jobs, a local one 2. Pass `localMaxRows = 0` to force every
-    * iteration distributed (the spec uses it to pin the equality).
+    * The job that reads the input also runs the first GD step; inputs
+    * of at most `localMaxRows` rows run the others on the driver
+    * ([[localTrainMaxRows]]), so a distributed train runs `iters` jobs
+    * and a local one 1. A single step ships no block.
     */
   def train(feats: DataFrame, iters: Int, lr: Double,
             localMaxRows: Long = localTrainMaxRows): Model = {
     require(iters >= 1, s"logit training needs iters >= 1, got $iters")
     require(lr > 0.0 && !lr.isNaN && !lr.isInfinite,
       s"logit training needs a positive finite learning rate, got $lr")
-    val cached = blocksOf(feats).persist()
+    val zero = new Array[Double](dim)
+    val (rows, firsts) = Parts.load(blockRdd(feats), emptyBlock,
+      if (iters > 1) localMaxRows else 0L)(_.ys.length.toLong, _.sums(zero))
     try {
-      var rows = cached
-      var w = new Array[Double](dim)
+      var s = firsts.reduce(addExact)
+      val n = s(dim + 1)
+      require(n > 0, "cannot train a logit model on an empty dataset")
+      var w = zero
       var mse = Double.NaN
-      var n = 0L
       var it = 0
       while (it < iters) {
-        val s = passSums(rows, w)
-        if (it == 0) {
-          n = s(dim + 1)
-          require(n > 0, "cannot train a logit model on an empty dataset")
-          if (n <= localMaxRows && iters > 1) {
-            rows = Parts.Local(cached.collect())
-            cached.release()
-          }
-        }
+        if (it > 0) s = passSums(rows, w)
         val (w2, m) = applyStep(w, s.take(dim + 1).toSeq, n, lr)
         mse = m
         w = w2
         it += 1
       }
       Model(w, mse, n)
-    } finally cached.release()
+    } finally rows.release()
   }
 
   /** One-scan serving pass: `(id, score, keep)` under a trained model —

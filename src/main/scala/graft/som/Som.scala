@@ -4,7 +4,6 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.ArrayType
-import org.apache.spark.storage.StorageLevel
 
 import graft.Parts
 
@@ -38,19 +37,15 @@ final case class SomConfig(
       * at most `batchSize` winners at a time.
       */
     batchSize: Int = 2048,
-    /** Inputs whose total value count (rows x dim) is at or under this
-      * threshold train DRIVER-LOCALLY. One job reads the input into one
-      * cached block per partition and sizes it; it also returns the
-      * blocks of a small input, with their partition order, and every
-      * epoch then runs on the driver with the SAME kernels and the SAME
-      * exact merges ([[ExactSum]]) — results are bit-identical to the
-      * distributed epochs, but the 1-job-per-epoch scheduling floor (which dwarfs
-      * the arithmetic on tiny inputs: r8 measured 0.5 s for 10 epochs
-      * over 2,000 rows vs 0.027 s in-core) disappears. A larger input
-      * keeps the cached blocks, with no second scan. The analogue of the
-      * reference's in-core path (`xpysom.py:560-575`). 0 disables the
-      * fast path. Execution knob only — not part of the saved model
-      * params.
+    /** Inputs of at most this many feature values (rows x dim) train on
+      * the driver, by the rule of [[graft.Parts.load]]: every epoch then
+      * runs the SAME kernels and exact merges ([[ExactSum]]) on the
+      * driver, bit-identical to the distributed epochs, without the
+      * 1-job-per-epoch scheduling floor (which dwarfs the arithmetic on
+      * tiny inputs: r8 measured 0.5 s for 10 epochs over 2,000 rows vs
+      * 0.027 s in-core). The analogue of the reference's in-core path
+      * (`xpysom.py:560-575`). 0 keeps every input on the cluster.
+      * Execution knob only — not part of the saved model params.
       */
     localFitThreshold: Long = 2000000L) {
 
@@ -93,10 +88,8 @@ final case class SomConfig(
   * the partition layout — given a BLAS whose per-row distances do not
   * depend on the batch's shape, as the JVM BLAS's do (a native
   * OpenBLAS or MKL picked by `BLAS.getInstance()` may round a blocked
-  * kernel's edge tiles differently; see [[epoch]]). One job reads and
-  * sizes the input; a small input's blocks stay on the driver and its
-  * epochs run no job (`localFitThreshold`). Feature values must be
-  * finite.
+  * kernel's edge tiles differently; see [[epoch]]). Feature values must
+  * be finite.
   */
 final class Som(val config: SomConfig) extends Serializable {
   config.validated
@@ -110,10 +103,9 @@ final class Som(val config: SomConfig) extends Serializable {
     * (default) means `numEpochs`. `init` overrides the default seeded
     * uniform-normalized initialization (`xpysom.py:188-190`).
     *
-    * One job reads the input into one cached float32 block per
-    * partition and sizes it ([[Som.trainingParts]]); the epochs then run
-    * over those blocks, on the cluster or — at most
-    * `localFitThreshold` values — on the driver.
+    * The input is read once into one float32 block per partition
+    * ([[Som.trainingParts]]); the epochs run over those blocks, on the
+    * cluster or on the driver (`localFitThreshold`).
     */
   def fit(df: DataFrame, featuresCol: String = "features", numEpochs: Int,
           init: Codebook = null, verbose: Boolean = false,
@@ -277,44 +269,23 @@ final class Som(val config: SomConfig) extends Serializable {
 }
 
 object Som {
-  /** Partition-count guard for the driver-local fit: above this, the
-    * worst-case driver transfer of the sizing job (every block just
-    * under the threshold while the total overflows) stops being
-    * negligible, and an input spread over this many partitions is not
-    * "tiny" anyway.
-    */
-  val localFitMaxPartitions = 64
-
   /** The training blocks of `df` ([[SomData.blocks]]) and their feature
-    * count, in one job. The job fills the blocks' cache and returns, per
-    * partition, the value count (rows x dim), the dim of its first row,
-    * whether every value is finite and — when `threshold > 0`, there are
-    * at most [[localFitMaxPartitions]] partitions and this partition alone holds
-    * at most `threshold` values — the block itself. When the total is
-    * within `threshold` the cache is dropped and the blocks stay on the
-    * driver, in partition order ([[graft.Parts.Local]]): the epochs then
-    * run no Spark job. Otherwise the cached blocks are the cluster form,
-    * with no second scan. The caller releases the result.
+    * count, loaded at `threshold` values (rows x dim) by
+    * [[graft.Parts.load]], whose one job also returns each block's value
+    * count, the dim of its first row and whether every value is finite.
+    * The caller releases the result.
     */
   private[graft] def trainingParts(df: DataFrame, featuresCol: String,
       threshold: Long): (Parts[Array[Array[Float]]], Int) = {
-    val blocks = SomData.blocks(df, featuresCol).persist(StorageLevel.MEMORY_AND_DISK)
+    def values(b: Array[Array[Float]]): Long = b.iterator.map(_.length.toLong).sum
+    val (data, firsts) = Parts.load(SomData.blocks(df, featuresCol),
+      Array.empty[Array[Float]], threshold)(values,
+      b => (values(b), if (b.isEmpty) -1 else b(0).length, b.forall(SomData.finite)))
     try {
-      val ship = threshold > 0 && blocks.getNumPartitions <= localFitMaxPartitions
-      val sized = blocks.map { b =>
-        val n = b.iterator.map(_.length.toLong).sum
-        (n, if (b.isEmpty) -1 else b(0).length, b.forall(SomData.finite),
-          if (ship && n <= threshold) b else null)
-      }.collect()
-      val total = sized.iterator.map(_._1).sum
-      require(total > 0, "cannot fit a SOM on an empty dataset")
-      require(sized.forall(_._3), SomData.nonFinite(featuresCol))
-      val dim = sized.iterator.map(_._2).find(_ >= 0).get
-      if (ship && total <= threshold) {
-        blocks.unpersist(blocking = true)
-        (Parts.Local(sized.map(_._4).toIndexedSeq), dim)
-      } else (Parts.Spread(blocks), dim)
-    } catch { case e: Throwable => blocks.unpersist(blocking = true); throw e }
+      require(firsts.iterator.map(_._1).sum > 0, "cannot fit a SOM on an empty dataset")
+      require(firsts.forall(_._3), SomData.nonFinite(featuresCol))
+      (data, firsts.iterator.map(_._2).find(_ >= 0).get)
+    } catch { case e: Throwable => data.release(); throw e }
   }
 
   /** Reference-format progress line (`print_progress`, `xpysom.py:50-69`)

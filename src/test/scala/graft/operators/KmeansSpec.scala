@@ -199,6 +199,31 @@ class KmeansSpec extends SparkSpec {
     }
   }
 
+  test("jobs: a local fit runs 1, a forced-distributed hash fit 1 + iters") {
+    val (rows, _) = synth(220, 5, parts = 1)
+    val df = laidOut(rows, 4, _ % 4) // no exchange: the fit's jobs only
+    def jobs(body: => Any): Int = graft.Probe.recordJobs(spark) { body; () }._2.size
+    for (init <- Seq("hash", "farthest", "scalable"))
+      assert(jobs(Kmeans.fit(df, "embedding", "vec_id", k = 5, iters = 4,
+        initMethod = init)) == 1, s"local fit, init=$init")
+    assert(jobs(Kmeans.fit(df, "embedding", "vec_id", k = 5, iters = 4,
+      localMaxRows = 0L)) == 1 + 4)
+  }
+
+  test("farthest init on a small input: at most 2 jobs, == the forced-distributed fit's") {
+    val (rows, _) = synth(220, 5, parts = 1)
+    val df = laidOut(rows, 4, _ % 4)
+    var init: Array[Array[Double]] = null
+    val (_, started) = graft.Probe.recordJobs(spark) {
+      init = Kmeans.initFarthestCentroids(df, "embedding", "vec_id", k = 5)
+    }
+    assert(started.size <= 2, s"${started.size} jobs")
+    val dist = Kmeans.fit(df, "embedding", "vec_id", k = 5, iters = 0,
+      initMethod = "farthest", localMaxRows = 0L)
+    for (j <- 0 until 5)
+      assert(init(j).sameElements(dist.centroids(j)), s"centroid $j")
+  }
+
   test("a null id is rejected by both forms with one message") {
     val df = Seq((Some(0L), Seq(1.0, 0.0)), (None, Seq(0.0, 1.0)),
         (Some(2L), Seq(1.0, 1.0)), (Some(3L), Seq(0.5, 0.5)))

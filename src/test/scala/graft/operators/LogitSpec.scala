@@ -108,10 +108,10 @@ class LogitSpec extends SparkSpec {
         LogitTrain.train(feats, iters = iters, lr = 0.3, localMaxRows = 0L))
       assert(jobs.size == iters, s"iters=$iters")
     }
-    // the driver-local form: the first pass, then one collect
+    // the driver-local form: one job reads the blocks and runs the first step
     val (_, localJobs) = graft.Probe.recordJobs(spark)(
       LogitTrain.train(feats, iters = 4, lr = 0.3))
-    assert(localJobs.size == 2)
+    assert(localJobs.size == 1)
     assert(conf.forall { case (k, v) => spark.conf.get(k) == v })
   }
 

@@ -72,7 +72,7 @@ class SomLocalFitSpec extends SparkSpec {
     assert(tiny.codebook.weights.sameElements(dist.codebook.weights))
   }
 
-  test("collectIfSmall: caps per task, preserves partition ids, rejects big input") {
+  test("trainingParts: small input to the driver in partition order, big cached") {
     import spark.implicits._
     // 100 one-value rows over 5 partitions, partitions 1 and 4 empty
     val layout = Seq(0 until 30, 0 until 0, 30 until 60, 60 until 100, 0 until 0)
@@ -81,8 +81,9 @@ class SomLocalFitSpec extends SparkSpec {
     assert(df.schema("embedding").dataType.sql == "ARRAY<FLOAT>")
     val before = spark.sparkContext.getPersistentRDDs.keySet
     def firsts(p: Parts[Array[Array[Float]]]) = p.collect().map(_.map(_.head.toInt).toSeq)
-    // within the threshold: the blocks come back in ONE sizing job, on
-    // the driver, one per partition in partition order
+    // within the threshold: the blocks come back to the driver, one per
+    // partition in partition order (Parts.load: the 30- and 40-value
+    // blocks exceed their 20-value share, so a second job collects them)
     val (small, dim) = Som.trainingParts(df, "embedding", threshold = 100L)
     assert(dim == 1)
     assert(small.isInstanceOf[Parts.Local[_]])
@@ -91,7 +92,7 @@ class SomLocalFitSpec extends SparkSpec {
       "a driver-local input must not stay cached")
     for ((threshold, why) <- Seq(
         99L -> "100-value input must not pass a 99-value threshold",
-        39L -> "a 40-value partition must not pass a 39-value cap",
+        39L -> "100-value input must not pass a 39-value threshold",
         0L -> "0 disables")) {
       val (big, _) = Som.trainingParts(df, "embedding", threshold)
       try {
@@ -146,6 +147,19 @@ class SomLocalFitSpec extends SparkSpec {
           s"$kind over ${layout.length} partitions: local fit diverged")
       }
     }
+  }
+
+  test("a tiny input over 100 partitions trains on the driver, bit-equal to threshold 0") {
+    import spark.implicits._
+    val df = spark.sparkContext.parallelize(0 until 300, 100)
+      .map(i => Seq.tabulate(4)(j => math.sin(i * 0.7 + j * 1.3).toFloat)).toDF("embedding")
+    var local: SomModel = null
+    val (_, jobs) = graft.Probe.recordJobs(spark) {
+      local = new Som(cfg).fit(df, "embedding", numEpochs = 3)
+    }
+    assert(jobs.size == 1, "one job reads the input; the epochs run none")
+    val dist = new Som(cfg.copy(localFitThreshold = 0L)).fit(df, "embedding", numEpochs = 3)
+    assert(local.codebook.weights.sameElements(dist.codebook.weights))
   }
 
   test("a 4-partition distributed epoch is one job of one stage") {

@@ -10,7 +10,8 @@ log lines around them are skipped. Prints one line per query whose job or
 task count differs (A -> B and the delta), the queries present in only one
 file, and a total line. Wall seconds are not compared: they are not
 deterministic. Exits 1 when any query's jobs or tasks rise from A to B,
-else 0.
+or when a query of A is missing from B (the probe leaves out the row of
+a query that throws), else 0. Queries only in B are listed, not failed.
 """
 import sys
 
@@ -28,16 +29,18 @@ def read_counts(path):
 
 
 def diff(a, b):
-    """(report lines, True when some query's jobs or tasks rose)."""
-    lines, rose = [], False
+    """(report lines, True when some query's jobs or tasks rose or a query
+    of A is missing from B)."""
+    lines, failed = [], False
     for q in sorted(a.keys() & b.keys()):
         (ja, ta), (jb, tb) = a[q], b[q]
         if (ja, ta) != (jb, tb):
             lines.append(f"{q}\tjobs {ja} -> {jb} ({jb - ja:+d})\t"
                          f"tasks {ta} -> {tb} ({tb - ta:+d})")
-            rose = rose or jb > ja or tb > ta
+            failed = failed or jb > ja or tb > ta
     for q in sorted(a.keys() - b.keys()):
         lines.append(f"{q}\tonly in A")
+        failed = True
     for q in sorted(b.keys() - a.keys()):
         lines.append(f"{q}\tonly in B")
     both = a.keys() & b.keys()
@@ -47,7 +50,7 @@ def diff(a, b):
     tb = sum(b[q][1] for q in both)
     lines.append(f"total ({len(both)} queries)\tjobs {ja} -> {jb} ({jb - ja:+d})\t"
                  f"tasks {ta} -> {tb} ({tb - ta:+d})")
-    return lines, rose
+    return lines, failed
 
 
 def main(argv):
@@ -60,9 +63,9 @@ def main(argv):
               + " and ".join(p for p, c in ((argv[1], a), (argv[2], b)) if not c),
               file=sys.stderr)
         return 2
-    lines, rose = diff(a, b)
+    lines, failed = diff(a, b)
     print("\n".join(lines))
-    return 1 if rose else 0
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":

@@ -37,9 +37,9 @@ class JobsDiffTest(unittest.TestCase):
 
     def test_decrease_passes_and_is_reported(self):
         b = A.replace("ann_ivfpq\t13\t40", "ann_ivfpq\t9\t36")
-        lines, rose = jobs_diff.diff(jobs_diff.read_counts(self.write(A)),
+        lines, failed = jobs_diff.diff(jobs_diff.read_counts(self.write(A)),
                                      jobs_diff.read_counts(self.write(b)))
-        self.assertFalse(rose)
+        self.assertFalse(failed)
         self.assertIn("ann_ivfpq\tjobs 13 -> 9 (-4)\ttasks 40 -> 36 (-4)", lines)
         self.assertEqual(lines[-1], "total (3 queries)\tjobs 26 -> 22 (-4)\t"
                                     "tasks 79 -> 75 (-4)")
@@ -52,13 +52,18 @@ class JobsDiffTest(unittest.TestCase):
         b = A.replace("pq_topk\t10\t30", "pq_topk\t9\t31")
         self.assertEqual(self.run_main(A, b), 1)
 
-    def test_queries_in_one_file_only_are_listed(self):
+    def test_a_query_missing_from_b_fails_and_one_only_in_b_is_listed(self):
+        # the probe leaves out the row of a query that throws
         b = A.replace("pq_topk\t10\t30\t0.300\n", "") + "zipf_fit\t3\t4\t0.2\n"
-        lines, rose = jobs_diff.diff(jobs_diff.read_counts(self.write(A)),
+        lines, failed = jobs_diff.diff(jobs_diff.read_counts(self.write(A)),
                                      jobs_diff.read_counts(self.write(b)))
-        self.assertFalse(rose)
+        self.assertTrue(failed)
         self.assertIn("pq_topk\tonly in A", lines)
         self.assertIn("zipf_fit\tonly in B", lines)
+        self.assertEqual(self.run_main(A, b), 1)
+
+    def test_a_query_only_in_b_passes(self):
+        self.assertEqual(self.run_main(A, A + "zipf_fit\t3\t4\t0.2\n"), 0)
 
     def test_input_without_rows_is_a_usage_error(self):
         self.assertEqual(self.run_main(A, "[info] nothing here\n"), 2)
