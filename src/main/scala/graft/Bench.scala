@@ -582,7 +582,7 @@ object Bench {
         graft.operators.Similarity.writeIvfPqIndex(big, "embedding", "id",
           model, pqCb, m = 8, k = 16, ivfPqPath)
       }
-      val pqCodes = spark.read.parquet(s"$ivfPqPath/codes")
+      val pqCodes = graft.operators.Similarity.readIvfPqIndex(spark, ivfPqPath)._1
       graft.operators.Similarity.ivfPqTopKFromCodes(pqCodes, model, pqCb,
         m = 8, k = 16, qvecs, kNN = 10, nProbe = 4).count() // warmup
       results("bench_ivfpq_serve_200k") = time2 {
@@ -612,7 +612,7 @@ object Bench {
         graft.operators.Similarity.writeIvfSqIndex(big, "embedding", "id",
           model, sqM, ivfSqPath)
       }
-      val sqIdxCodes = spark.read.parquet(s"$ivfSqPath/codes")
+      val sqIdxCodes = graft.operators.Similarity.readIvfSqIndex(spark, ivfSqPath)._1
       graft.operators.Similarity.ivfSqTopKFromCodes(sqIdxCodes, model, sqM,
         qvecs, kNN = 10, nProbe = 4).count() // warmup
       results("bench_ivfsq_serve_200k") = time2 {

@@ -1098,16 +1098,13 @@ object Queries {
         val model = fixedModel(e)
         val sq = Similarity.sqTrain(e, "embedding")
         val path = s"/tmp/graft_ivfsq_delete_${ProcessHandle.current.pid}_${dir.hashCode.toHexString}"
-        // fresh tombstone epoch per run: the codes overwrite below
-        // resets the index, so stale tombstones must go too
-        val ts = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-        val fs = ts.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(ts)) fs.delete(ts, true)
+        // the write starts the index over: an earlier run's deletes
+        // are not live after it
         Similarity.writeIvfSqIndex(e, "embedding", "vec_id", model, sq, path)
         Similarity.deleteFromIvfIndex(
           e.where(col("vec_id") % 10 === 3).select(col("vec_id")),
           "vec_id", path)
-        val (live, sqB) = Similarity.readIvfSqIndexLive(s, path)
+        val (live, sqB) = Similarity.readIvfSqIndex(s, path)
         Similarity.ivfSqTopKFromCodes(live, model, sqB,
           embQueries(e), kNN = 5, nProbe = 3)
       }),

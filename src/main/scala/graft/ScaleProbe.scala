@@ -153,7 +153,7 @@ object ScaleProbe {
       if (phase == "logit" || phase == "all") {
         // quality-gate training a decade above the bench entry: 10
         // full-batch GD iterations over nDocs docs. Per-iteration cost
-        // must scale with the cached LogitGrad scan alone (the shuffle
+        // must scale with the cached block pass of `LogitKernel.grad` alone (the shuffle
         // is ONE dim+2-long buffer per partition, constant in nDocs)
         import org.apache.spark.sql.functions._
         val docsL = BenchData.dupGroupDocs(spark, nDocs)
@@ -263,21 +263,20 @@ object ScaleProbe {
         }
         println(f"[scale] bm25seg_serve_8seg ${nDocs / 1000000}M docs (run $rep/$repeats): $tServe8%.1f s")
         val tCompact = time {
-          operators.Retrieval.compactBm25Index(spark, name8, path8,
-            s"${name8}c", s"/tmp/${name8}c", nBuckets = 64)
+          operators.Retrieval.compactBm25Index(spark, name8, path8, nBuckets = 64)
         }
         println(f"[scale] bm25seg_compact8 ${nDocs / 1000000}M docs (run $rep/$repeats): $tCompact%.1f s")
         val tServeC = time {
           println("  compacted rows: " + operators.Retrieval
-            .bm25TopKSegmented(spark, s"${name8}c", s"/tmp/${name8}c", q16, k = 10).count())
+            .bm25TopKSegmented(spark, name8, path8, q16, k = 10).count())
         }
         println(f"[scale] bm25seg_serve_compacted ${nDocs / 1000000}M docs (run $rep/$repeats): $tServeC%.1f s")
-        (Seq(s"${name}__base", s"${name}__delta", s"${name8}c__0") ++
-          (0 until 8).map(sgm => s"${name8}__s$sgm"))
+        (Seq(s"${name}__base", s"${name}__delta") ++
+          (sources.IndexLog.snapshot(spark, path8).data ++
+            (0 until 8).map(sgm => s"s$sgm")).map(sgm => s"${name8}__$sgm"))
           .foreach(graft.sources.Bucketed.drop(spark, _))
         BenchData.deleteRecursively(path)
         BenchData.deleteRecursively(path8)
-        BenchData.deleteRecursively(s"/tmp/${name8}c")
         docsN.unpersist(blocking = true)
         settle()
       }

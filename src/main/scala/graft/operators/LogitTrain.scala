@@ -22,8 +22,8 @@ import graft.plans.{LogitFunctions, LogitKernel, VecScale9Kernel, VecSumCount}
   * block per input partition ([[graft.Parts]], the k-means template).
   * Each iteration is one block kernel and an exact fold, one Spark job
   * with no codegen, no query planning and no row shuffle:
-  *  - per row, [[graft.plans.LogitKernel.grad]] (the kernel of the
-  *    `logit_grad` expression) under the current weights, added into
+  *  - per row, [[graft.plans.LogitKernel.grad]] under the current
+  *    weights, added into
   *    ONE buffer of `dim + 2` longs per block
   *    ([[graft.plans.VecSumCount.add]]);
   *  - the buffers fold with `Math.addExact` — weight-vector-shaped,

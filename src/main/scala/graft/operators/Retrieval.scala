@@ -229,8 +229,13 @@ object Retrieval {
     *   <path>/seg_<s>_docs/   (doc_id, dl) doc-values, the exact
     *                          stats correction table for deletes
     *
-    * plus a root manifest `<path>/_segments`. Append cost is
-    * segment-sized: one scan of the new docs + one token shuffle.
+    * The live segments and deletes are what the newest
+    * [[graft.sources.IndexLog]] manifest lists: the append writes the
+    * segment's files, then commits its name. A name that is already
+    * live is rejected before anything is written; the name of a segment
+    * that never committed or was compacted away may be used again.
+    * Append cost is segment-sized: one scan of the new docs + one token
+    * shuffle.
     *
     * Unlike [[writeBm25Index]], df is NOT stored: a cross-segment df
     * would be invalidated by every append (df is corpus-global). The
@@ -248,7 +253,8 @@ object Retrieval {
     require(segment.matches("[A-Za-z0-9_-]+"),
       s"segment must be a plain token, got '$segment'")
     val spark = docs.sparkSession
-    import spark.implicits._
+    require(!graft.sources.IndexLog.snapshot(spark, path).data.contains(segment),
+      s"segment '$segment' is already live in $path")
     // three write actions (postings, stats, doc-values) share ONE
     // tokenization scan via the persist — without it each action
     // re-runs the text scan + token kernels over the whole batch
@@ -262,47 +268,59 @@ object Retrieval {
         .select(col("doc_id"), col("dl"), explode(col("__kvs")).as("kv"))
         .select(col("kv.token").as("token"), col("doc_id"), col("dl"),
           col("kv.tf").as("tf"))
-      graft.sources.Bucketed.writeBucketed(pairs, s"${name}__$segment",
-        s"$path/seg_$segment", "token", nBuckets)
-      d.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/seg_${segment}_stats")
-      d.select(col("doc_id"), col("dl"))
-        .write.mode("overwrite").parquet(s"$path/seg_${segment}_docs")
-      Seq(segment).toDF("segment")
-        .write.mode("append").parquet(s"$path/_segments")
+      writeSegment(pairs, d.select(col("doc_id"), col("dl")), name, path,
+        nBuckets, segment)
     } finally d.unpersist(blocking = false)
+    graft.sources.IndexLog.append(spark, path, segment)
   }
 
-  /** Tombstone doc_ids out of a segmented BM25 index — id-list-sized,
-    * the immutable segment files untouched (the IVF tombstone
-    * contract). [[bm25TopKSegmented]] applies them at serve;
-    * [[compactBm25Index]] folds them for real.
+  /** The files of segment `seg` — an append's or a compaction's, before
+    * its commit: bucketed `postings`, and from the `(doc_id, dl)`
+    * doc-values the 1-row stats and the doc-values. Every segment's
+    * postings carry one column order, (token, doc_id, dl, tf), because
+    * the serve unions segments by position (a compaction's anti-join
+    * puts `doc_id` first).
+    */
+  private[graft] def writeSegment(postings: DataFrame, docValues: DataFrame,
+                                  name: String, path: String, nBuckets: Int,
+                                  seg: String): Unit = {
+    graft.sources.Bucketed.writeBucketed(
+      postings.select("token", "doc_id", "dl", "tf"), s"${name}__$seg",
+      s"$path/seg_$seg", "token", nBuckets)
+    docValues.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/seg_${seg}_stats")
+    docValues.write.mode("overwrite").parquet(s"$path/seg_${seg}_docs")
+  }
+
+  /** One read of a file kind (`stats` or `docs`) across `segs`. */
+  private def segmentTable(spark: org.apache.spark.sql.SparkSession,
+                           path: String, segs: Seq[String], kind: String,
+                           schema: String): DataFrame =
+    spark.read.schema(schema).parquet(segs.map(s => s"$path/seg_${s}_$kind"): _*)
+
+  /** The distinct doc_ids `snap` tombstones, broadcast; None without any. */
+  private def deadDocs(spark: org.apache.spark.sql.SparkSession, path: String,
+                       snap: graft.sources.IndexLog.Snapshot): Option[DataFrame] =
+    graft.sources.IndexLog.tombstones(spark, path, snap, "doc_id")
+      .map(t => broadcast(t.distinct()))
+
+  /** Tombstone doc_ids out of a segmented BM25 index — one id-list
+    * tombstone file of the index's log, the immutable segment files
+    * untouched (the IVF tombstone contract). [[bm25TopKSegmented]]
+    * drops them at serve; [[compactBm25Index]] folds them for real.
     */
   def deleteFromBm25Index(ids: DataFrame, idCol: String, path: String): Unit =
-    ids.select(col(idCol).cast("long").as("doc_id"))
-      .write.mode("append").parquet(s"$path/_tombstones")
+    graft.sources.IndexLog.delete(
+      ids.select(col(idCol).cast("long").as("doc_id")), path)
 
-  private def bm25Segments(spark: org.apache.spark.sql.SparkSession,
-                           path: String): Seq[String] =
-    spark.read.parquet(s"$path/_segments")
-      .select("segment").distinct().collect().map(_.getString(0)).sorted.toSeq
-
-  private def bm25Tombstones(spark: org.apache.spark.sql.SparkSession,
-                             path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_tombstones")
-    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      Some(spark.read.parquet(p.toString).select("doc_id").distinct())
-    else None
-  }
-
-  /** Serve a query batch from a segmented index, pending tombstones
-    * applied: per segment one bucket-pruned postings scan, unioned;
-    * tombstoned docs anti-joined out; df recomputed EXACTLY over the
-    * surviving scanned rows (a map-side-combined per-token count —
-    * each posting row is a distinct (doc, term), so count(*) per token
-    * IS df — broadcast-joined back, so no posting row re-shuffles);
-    * corpus stats = Σ segment stats minus the tombstoned docs'
-    * doc-values (exact longs). Output is row-for-row what
+  /** Serve a query batch from a segmented index as its newest manifest
+    * lists it: per live segment one bucket-pruned postings scan,
+    * unioned; tombstoned docs anti-joined out; df recomputed EXACTLY
+    * over the surviving scanned rows (a map-side-combined per-token
+    * count — each posting row is a distinct (doc, term), so count(*)
+    * per token IS df — broadcast-joined back, so no posting row
+    * re-shuffles); corpus stats = Σ segment stats minus the tombstoned
+    * docs' doc-values (exact longs). Output is row-for-row what
     * [[bm25TopK]] returns over the surviving corpus — the spec and
     * the `bm25_segmented` oracle pin it.
     */
@@ -315,9 +333,10 @@ object Retrieval {
     val qTerms = queryTerms(queries)
     val qdf = broadcast(qTerms.toDF("qid", "token"))
     val terms = qTerms.map(_._2).distinct
-    val segs = bm25Segments(spark, path)
+    val snap = graft.sources.IndexLog.snapshot(spark, path)
+    val segs = snap.data
     require(segs.nonEmpty, s"no segments under $path")
-    val tomb = bm25Tombstones(spark, path).map(broadcast(_))
+    val tomb = deadDocs(spark, path, snap)
 
     val scanned = segs.map { s =>
       graft.sources.Bucketed.table(spark, s"${name}__$s")
@@ -325,14 +344,13 @@ object Retrieval {
     }.reduce(_ union _)
     val posts = tomb.fold(scanned)(t => scanned.join(t, Seq("doc_id"), "left_anti"))
 
-    val statsAll = segs.map(s => spark.read.parquet(s"$path/seg_${s}_stats"))
-      .reduce(_ union _)
+    val statsAll = segmentTable(spark, path, segs, "stats",
+        "n_docs LONG, sum_dl LONG")
       .agg(sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl"))
     val stats = tomb match {
       case None => statsAll
       case Some(t) =>
-        val dead = segs.map(s => spark.read.parquet(s"$path/seg_${s}_docs"))
-          .reduce(_ union _)
+        val dead = segmentTable(spark, path, segs, "docs", "doc_id LONG, dl LONG")
           .join(t, Seq("doc_id"))
           .agg(count(lit(1)).as("dead_n"),
             coalesce(sum("dl"), lit(0L)).as("dead_dl"))
@@ -360,65 +378,38 @@ object Retrieval {
     topKByScore(contrib, k)
   }
 
-  /** Fold a segmented index into ONE fresh segment at `outPath`:
-    * surviving postings (tombstones applied) re-bucket once, stats and
-    * doc-values recompute from the survivors, and the new epoch starts
-    * with no tombstones. The maintenance pass that bounds per-serve
-    * segment fan-out — run it when segment count (not data size)
-    * starts to dominate serve planning.
-    *
-    * DELETE FENCE: the fold snapshots the `_tombstones` FILE listing,
-    * folds exactly those files, and records the listing in the new
-    * epoch (`outPath/_folded_tombstones`). A delete issued after the
-    * snapshot but before the deployment-layer swap lands only in the
-    * old epoch's side-table; [[replayBm25TombstoneDelta]] — called
-    * immediately before the swap — copies exactly those post-snapshot
-    * files into the new epoch, where the serve-time anti-join picks
-    * them up (tombstones for already-folded docs are harmless no-ops).
-    * No writer quiesce needed; see [[graft.sources.Tombstones]].
+  /** Fold a segmented index into ONE new segment in place: the newest
+    * snapshot's surviving postings (its tombstones applied) re-bucket
+    * once, stats and doc-values recompute from the survivors, and the
+    * new segment replaces exactly the snapshot's segments and
+    * tombstones by [[graft.sources.IndexLog]]'s commit rule — segments
+    * appended and deletes committed while the fold ran stay live. The
+    * maintenance pass that bounds per-serve segment fan-out — run it
+    * when segment count (not data size) starts to dominate serve
+    * planning.
     */
   def compactBm25Index(spark: org.apache.spark.sql.SparkSession,
-                       name: String, path: String,
-                       outName: String, outPath: String,
-                       nBuckets: Int): Unit = {
-    require(nBuckets > 0, s"compactBm25Index needs nBuckets > 0, got $nBuckets")
-    import spark.implicits._
-    val segs = bm25Segments(spark, path)
-    require(segs.nonEmpty, s"no segments under $path")
-    // fold EXACTLY the snapshotted files (reading the live dir could
-    // pick up tombstones the folded listing below does not record)
-    val tombFiles = graft.sources.Tombstones.listParquet(
-      spark, s"$path/_tombstones")
-    val tomb =
-      if (tombFiles.isEmpty) None
-      else Some(broadcast(spark.read.parquet(tombFiles: _*)
-        .select("doc_id").distinct()))
-    val all = segs.map(s =>
-      graft.sources.Bucketed.table(spark, s"${name}__$s")).reduce(_ union _)
-    val survivors = tomb.fold(all)(t => all.join(t, Seq("doc_id"), "left_anti"))
-    graft.sources.Bucketed.writeBucketed(survivors, s"${outName}__0",
-      s"$outPath/seg_0", "token", nBuckets)
-    val dv = segs.map(s => spark.read.parquet(s"$path/seg_${s}_docs"))
-      .reduce(_ union _)
-    val dvLive = tomb.fold(dv)(t => dv.join(t, Seq("doc_id"), "left_anti"))
-    dvLive.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$outPath/seg_0_stats")
-    dvLive.write.mode("overwrite").parquet(s"$outPath/seg_0_docs")
-    Seq("0").toDF("segment")
-      .write.mode("overwrite").parquet(s"$outPath/_segments")
-    graft.sources.Tombstones.writeFolded(spark, outPath,
-      "_folded_tombstones", tombFiles)
-  }
+                       name: String, path: String, nBuckets: Int): Unit =
+    compactBm25Snapshot(spark, name, path,
+      graft.sources.IndexLog.snapshot(spark, path), nBuckets)
 
-  /** Pre-swap fence step for [[compactBm25Index]]: copy tombstone files
-    * the old epoch accumulated AFTER the fold's snapshot into the new
-    * epoch's side-table, so a delete issued mid-compaction survives the
-    * swap. Idempotent; returns the number of files replayed.
-    */
-  def replayBm25TombstoneDelta(spark: org.apache.spark.sql.SparkSession,
-                               path: String, outPath: String): Int =
-    graft.sources.Tombstones.replayDelta(spark, s"$path/_tombstones",
-      outPath, "_folded_tombstones", s"$outPath/_tombstones")
+  /** [[compactBm25Index]] of a given snapshot `snap` of `path`. */
+  private[graft] def compactBm25Snapshot(spark: org.apache.spark.sql.SparkSession,
+                                         name: String, path: String,
+                                         snap: graft.sources.IndexLog.Snapshot,
+                                         nBuckets: Int): Unit = {
+    require(nBuckets > 0, s"compactBm25Index needs nBuckets > 0, got $nBuckets")
+    require(snap.data.nonEmpty, s"no segments under $path")
+    val tomb = deadDocs(spark, path, snap)
+    val all = snap.data.map(s =>
+      graft.sources.Bucketed.table(spark, s"${name}__$s")).reduce(_ union _)
+    val dv = segmentTable(spark, path, snap.data, "docs", "doc_id LONG, dl LONG")
+    val seg = s"c${graft.sources.IndexLog.freshName()}"
+    writeSegment(tomb.fold(all)(t => all.join(t, Seq("doc_id"), "left_anti")),
+      tomb.fold(dv)(t => dv.join(t, Seq("doc_id"), "left_anti")),
+      name, path, nBuckets, seg)
+    graft.sources.IndexLog.replace(spark, path, snap, Seq(seg))
+  }
 
   /** Reciprocal-rank fusion (Cormack, Clarke & Büttcher, SIGIR 2009)
     * of per-query rankings — the standard calibration-free way to

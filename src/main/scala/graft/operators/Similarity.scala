@@ -638,19 +638,30 @@ object Similarity {
     */
   def writePqIndex(df: DataFrame, vecCol: String, idCol: String,
                    cb: Array[Double], m: Int, k: Int, path: String): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
     pqEncode(df, vecCol, idCol, cb, m, k)
       .write.mode("overwrite").parquet(s"$path/codes")
+    writePqParams(df.sparkSession, cb, m, k, path)
+  }
+
+  /** The geometry + codebook params file both PQ index layouts share. */
+  private def writePqParams(spark: org.apache.spark.sql.SparkSession,
+                            cb: Array[Double], m: Int, k: Int,
+                            path: String): Unit = {
     val json = s"""{"m":$m,"k":$k,"subDim":${cb.length / (m * k)},""" +
       s""""cb":[${cb.mkString(",")}]}"""
-    spark.createDataset(Seq(json)).coalesce(1)
-      .write.mode("overwrite").text(s"$path/params")
+    spark.createDataset(Seq(json))(org.apache.spark.sql.Encoders.STRING)
+      .coalesce(1).write.mode("overwrite").text(s"$path/params")
   }
 
   /** Read a PQ index back: (codes DataFrame, codebook, m, k). */
   def readPqIndex(spark: org.apache.spark.sql.SparkSession,
                   path: String): (DataFrame, Array[Double], Int, Int) = {
+    val (cb, m, k) = readPqParams(spark, path)
+    (spark.read.parquet(s"$path/codes"), cb, m, k)
+  }
+
+  private def readPqParams(spark: org.apache.spark.sql.SparkSession,
+                           path: String): (Array[Double], Int, Int) = {
     val json = spark.read.textFile(s"$path/params").head()
     def intOf(key: String): Int =
       ("\"" + key + "\":(-?[0-9]+)").r.findFirstMatchIn(json)
@@ -661,7 +672,7 @@ object Similarity {
       .getOrElse(sys.error("missing cb"))
     require(cb.length == m * k * intOf("subDim"),
       s"corrupt PQ params: ${cb.length} codebook values for m=$m k=$k")
-    (spark.read.parquet(s"$path/codes"), cb, m, k)
+    (cb, m, k)
   }
 
   /** Serve ADC top-k from an already-encoded codes table (e.g. a
@@ -751,20 +762,18 @@ object Similarity {
     * the billion-scale serving layout: a query batch lists only its
     * probed cells' directories and scans m-byte codes inside them —
     * neither the unprobed cells nor any float embedding is ever read.
-    * The coarse quantizer itself persists via `SomModel.save`.
+    * The coarse quantizer itself persists via `SomModel.save`. The
+    * lifecycle is [[writeIvfSqIndex]]'s: this write starts the index
+    * over, deletes of an earlier build included.
     */
   def writeIvfPqIndex(df: DataFrame, vecCol: String, idCol: String,
                       model: graft.som.SomModel, cb: Array[Double],
                       m: Int, k: Int, path: String,
                       filesPerCell: Int = defaultFilesPerCell): Unit = {
-    val spark = df.sparkSession
-    clusterByCell(ivfPqAssign(df, vecCol, idCol, model, cb, m, k),
-      "bmu_id", xxhash64(col("id")), filesPerCell)
-      .write.mode("overwrite").partitionBy("bmu_id").parquet(s"$path/codes")
-    val json = s"""{"m":$m,"k":$k,"subDim":${cb.length / (m * k)},""" +
-      s""""cb":[${cb.mkString(",")}]}"""
-    spark.createDataset(Seq(json))(org.apache.spark.sql.Encoders.STRING)
-      .coalesce(1).write.mode("overwrite").text(s"$path/params")
+    val unit = writeIvfCodes(ivfPqAssign(df, vecCol, idCol, model, cb, m, k),
+      path, filesPerCell)
+    writePqParams(df.sparkSession, cb, m, k, path)
+    graft.sources.IndexLog.overwrite(df.sparkSession, path, Seq(unit))
   }
 
   /** Serve ADC top-k from an assigned-codes table (inline
@@ -938,13 +947,17 @@ object Similarity {
     * to the writer's.
     */
   def readSqIndex(spark: org.apache.spark.sql.SparkSession,
-                  path: String): (DataFrame, SqModel) = {
+                  path: String): (DataFrame, SqModel) =
+    (spark.read.parquet(s"$path/codes"), readSqParams(spark, path))
+
+  private def readSqParams(spark: org.apache.spark.sql.SparkSession,
+                           path: String): SqModel = {
     val json = spark.read.textFile(s"$path/params").head()
     def arr(key: String): Array[Double] =
       ("\"" + key + "\":\\[([^\\]]*)\\]").r.findFirstMatchIn(json)
         .map(_.group(1).split(",").map(_.toDouble))
         .getOrElse(sys.error(s"missing $key"))
-    (spark.read.parquet(s"$path/codes"), SqModel(arr("mins"), arr("maxs")))
+    SqModel(arr("mins"), arr("maxs"))
   }
 
   /** Assign each vector to its coarse SOM cell and int8-encode it: the
@@ -962,28 +975,53 @@ object Similarity {
     * per-dimension bounds as a params file — the [[writeIvfPqIndex]]
     * layout with SQ's higher-resolution (and 8x larger) codes. The
     * coarse quantizer itself persists via `SomModel.save`.
+    *
+    * Lifecycle: the index at `path` is what its newest
+    * [[graft.sources.IndexLog]] manifest lists — code batches
+    * (`codes/batch=<name>/bmu_id=<cell>/`) and tombstone files. This
+    * write commits its one batch as the whole index, so a rebuild at a
+    * live path serves exactly the rows written, deletes of the earlier
+    * build included; [[appendToIvfSqIndex]], [[deleteFromIvfIndex]]
+    * and [[compactIvfIndex]] commit on top of it by the log's rule.
     */
   def writeIvfSqIndex(df: DataFrame, vecCol: String, idCol: String,
                       model: graft.som.SomModel, sq: SqModel,
                       path: String,
                       filesPerCell: Int = defaultFilesPerCell): Unit = {
-    clusterByCell(ivfSqAssign(df, vecCol, idCol, model, sq),
-      "bmu_id", xxhash64(col("id")), filesPerCell)
-      .write.mode("overwrite").partitionBy("bmu_id").parquet(s"$path/codes")
+    val unit = writeIvfCodes(ivfSqAssign(df, vecCol, idCol, model, sq),
+      path, filesPerCell)
     writeSqParams(df.sparkSession, sq, path)
+    graft.sources.IndexLog.overwrite(df.sparkSession, path, Seq(unit))
+  }
+
+  /** Write assigned `(id, bmu_id, codes)` rows, cell-clustered, as a
+    * new code batch — the files of an append, before its commit.
+    * Returns the batch's unit name.
+    */
+  private[graft] def writeIvfCodes(assigned: DataFrame, path: String,
+                                   filesPerCell: Int): String =
+    writeIvfBatch(clusterByCell(assigned, "bmu_id", xxhash64(col("id")),
+      filesPerCell), path)
+
+  /** Write laid-out codes as a new batch `codes/batch=<fresh name>/`,
+    * one directory per cell — invisible until a commit lists it.
+    */
+  private def writeIvfBatch(laidOut: DataFrame, path: String): String = {
+    val unit = s"batch=${graft.sources.IndexLog.freshName()}"
+    laidOut.write.partitionBy("bmu_id").parquet(s"$path/codes/$unit")
+    unit
   }
 
   /** Append a NEW batch into a persisted IVF+SQ index without
     * rebuilding it: encode the batch with the index's FROZEN
-    * quantizers (coarse cells + per-dimension SQ bounds) and append
-    * the resulting code files into the cell-partitioned layout.
+    * quantizers (coarse cells + per-dimension SQ bounds), write the
+    * resulting code files as a new cell-partitioned batch and commit it.
     *
     * Cost is batch-sized — one scan of the batch, zero reads or
-    * rewrites of the existing corpus codes (parquet append adds new
-    * files inside the touched `bmu_id=` directories; untouched cells'
-    * directories are not visited at all). Serving is unchanged: probe
-    * filters still prune to cell directories, and old and new files
-    * within a directory are indistinguishable to the reader — this is
+    * rewrites of the existing corpus codes (the new batch holds
+    * directories only for the cells its rows land in). Serving is
+    * unchanged: probe filters still prune to cell directories, and old
+    * and new batches are indistinguishable to the reader — this is
     * the ingest path a 100 TB deployment runs nightly, where a full
     * re-encode of the corpus would cost 10^4x the batch.
     *
@@ -1000,9 +1038,8 @@ object Similarity {
                          model: graft.som.SomModel, sq: SqModel,
                          path: String,
                          filesPerCell: Int = defaultFilesPerCell): Unit =
-    clusterByCell(ivfSqAssign(batch, vecCol, idCol, model, sq),
-      "bmu_id", xxhash64(col("id")), filesPerCell)
-      .write.mode("append").partitionBy("bmu_id").parquet(s"$path/codes")
+    graft.sources.IndexLog.append(batch.sparkSession, path, writeIvfCodes(
+      ivfSqAssign(batch, vecCol, idCol, model, sq), path, filesPerCell))
 
   /** IVF+PQ sibling of [[appendToIvfSqIndex]]: encode the batch with
     * the frozen coarse cells + PQ codebook and append into the
@@ -1013,155 +1050,111 @@ object Similarity {
                          model: graft.som.SomModel, cb: Array[Double],
                          m: Int, k: Int, path: String,
                          filesPerCell: Int = defaultFilesPerCell): Unit =
-    clusterByCell(ivfPqAssign(batch, vecCol, idCol, model, cb, m, k),
-      "bmu_id", xxhash64(col("id")), filesPerCell)
-      .write.mode("append").partitionBy("bmu_id").parquet(s"$path/codes")
+    graft.sources.IndexLog.append(batch.sparkSession, path, writeIvfCodes(
+      ivfPqAssign(batch, vecCol, idCol, model, cb, m, k), path, filesPerCell))
 
-  /** Read a persisted IVF+SQ index back: (codes with the `bmu_id`
-    * partition column restored by parquet partition discovery, bounds).
-    * The [[readSqIndex]] parser — the layouts share the params file.
+  /** Read a persisted IVF+SQ index back as it serves: (live codes with
+    * the `bmu_id` partition column, bounds). The live codes are the
+    * newest manifest's batches with its tombstoned ids anti-joined out;
+    * without tombstones there is no join.
     */
   def readIvfSqIndex(spark: org.apache.spark.sql.SparkSession,
                      path: String): (DataFrame, SqModel) =
-    readSqIndex(spark, path)
+    (ivfCodes(spark, path, graft.sources.IndexLog.snapshot(spark, path)),
+      readSqParams(spark, path))
 
-  /** Delete rows from a persisted IVF index WITHOUT rewriting it:
-    * append the ids to a `path/tombstones` parquet side-table
-    * (batch-sized — the immutable code files are never touched).
-    * The removal paths a pipeline actually runs — dedup verdicts and
-    * per-id erasure requests — are both id-lists, and at 100 TB
-    * rewriting cells synchronously for each would cost more than the
-    * whole ingest. Serving applies tombstones via
-    * [[readIvfSqIndexLive]] (an anti-join against the side-table);
-    * [[compactIvfIndex]] folds them into the files for real and
-    * starts the next tombstone epoch empty.
-    */
-  def deleteFromIvfIndex(ids: DataFrame, idCol: String, path: String): Unit =
-    ids.select(col(idCol).cast("long").as("id"))
-      .write.mode("append").parquet(s"$path/tombstones")
-
-  /** The serving view of an IVF+SQ index with pending tombstones
-    * applied: codes anti-joined against `path/tombstones` (absent dir
-    * = nothing pending). The anti-join sits ABOVE the pruned scan, so
-    * per-query partition pruning is untouched; with a sane deletion
-    * rate the tombstone side broadcasts.
-    */
-  def readIvfSqIndexLive(spark: org.apache.spark.sql.SparkSession,
-                         path: String): (DataFrame, SqModel) = {
-    val (codes, sq) = readSqIndex(spark, path)
-    (applyTombstones(codes, path), sq)
-  }
-
-  private def applyTombstones(codes: DataFrame, path: String): DataFrame = {
-    val spark = codes.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val ts = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    if (ts.getFileSystem(conf).exists(ts))
-      codes.join(broadcast(spark.read.parquet(ts.toString)), Seq("id"),
-        "left_anti")
-    else codes
-  }
-
-  /** Read a persisted IVF+PQ index back: (codes with the `bmu_id`
-    * partition column, codebook, m, k) — [[readPqIndex]]'s parser,
-    * shared layout.
+  /** Read a persisted IVF+PQ index back as it serves: (live codes with
+    * the `bmu_id` partition column, codebook, m, k) — the
+    * [[readIvfSqIndex]] live read over the [[readPqIndex]] params.
     */
   def readIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-                     path: String): (DataFrame, Array[Double], Int, Int) =
-    readPqIndex(spark, path)
-
-  /** [[readIvfPqIndex]] with pending tombstones applied — the PQ
-    * sibling of [[readIvfSqIndexLive]] (the tombstone side-table is
-    * layout-agnostic: it joins on `id`).
-    */
-  def readIvfPqIndexLive(spark: org.apache.spark.sql.SparkSession,
-                         path: String): (DataFrame, Array[Double], Int, Int) = {
-    val (codes, cb, m, k) = readPqIndex(spark, path)
-    (applyTombstones(codes, path), cb, m, k)
+                     path: String): (DataFrame, Array[Double], Int, Int) = {
+    val (cb, m, k) = readPqParams(spark, path)
+    (ivfCodes(spark, path, graft.sources.IndexLog.snapshot(spark, path)),
+      cb, m, k)
   }
+
+  /** The codes `snap` lists, tombstones applied. Both IVF layouts store
+    * `(id, codes: array<int>)` under the `bmu_id` cell directories; the
+    * read names that schema (no inference job), and its `basePath`
+    * keeps `bmu_id` a partition column, so probe filters still prune.
+    * The anti-join sits ABOVE the pruned scan; with a sane deletion
+    * rate the tombstone side broadcasts.
+    */
+  private def ivfCodes(spark: org.apache.spark.sql.SparkSession,
+                       path: String,
+                       snap: graft.sources.IndexLog.Snapshot): DataFrame = {
+    require(snap.data.nonEmpty, s"no IVF index at $path")
+    val codes = spark.read.schema("id LONG, codes ARRAY<INT>, bmu_id INT")
+      .option("basePath", s"$path/codes")
+      .parquet(snap.data.map(u => s"$path/codes/$u"): _*)
+      .drop("batch")
+    graft.sources.IndexLog.tombstones(spark, path, snap, "id")
+      .fold(codes)(t => codes.join(broadcast(t), Seq("id"), "left_anti"))
+  }
+
+  /** Delete rows from a persisted IVF index WITHOUT rewriting it: the
+    * ids become one tombstone file of the index's log (batch-sized —
+    * the immutable code files are never touched). The removal paths a
+    * pipeline actually runs — dedup verdicts and per-id erasure
+    * requests — are both id-lists, and at 100 TB rewriting cells
+    * synchronously for each would cost more than the whole ingest.
+    * [[readIvfSqIndex]] / [[readIvfPqIndex]] serve without the ids;
+    * [[compactIvfIndex]] folds them into the files for real.
+    */
+  def deleteFromIvfIndex(ids: DataFrame, idCol: String, path: String): Unit =
+    graft.sources.IndexLog.delete(
+      ids.select(col(idCol).cast("long").as("id")), path)
 
   /** Maintenance for an append-heavy IVF index (SQ or PQ layout):
     * every [[appendToIvfSqIndex]] adds one file per (batch, task) to
     * its cells, and at nightly-ingest cadence a hot cell accumulates
     * thousands of small files whose open/footer cost eventually
-    * dominates the pruned serve scan. This rewrites `path/codes` into
-    * `outPath/codes` at ~`targetFileBytes` per file VIA
-    * [[graft.sources.Compact.compactParquet]] — per cell directory, so
-    * the `bmu_id=` routing (and static partition pruning) survives —
-    * and copies the params file verbatim. Off the serving path: build
-    * the compacted copy, then swap directories atomically at the
-    * deployment layer. Returns (input files, output files).
-    *
-    * DELETE FENCE: the fold snapshots the tombstone FILE listing, folds
-    * exactly those files, and records the listing in the new epoch
-    * (`outPath/_folded_tombstones`). A delete issued after the snapshot
-    * but before the deployment-layer swap lands only in the old epoch's
-    * side-table; [[replayIvfTombstoneDelta]] — called immediately
-    * before the swap — copies exactly those post-snapshot files into
-    * the new epoch, where the serve-time anti-join picks them up
-    * (tombstones for already-folded ids are harmless no-ops). No
-    * writer quiesce needed; see [[graft.sources.Tombstones]].
+    * dominates the pruned serve scan. This folds the newest snapshot
+    * into ONE new batch in place: its live rows (tombstones applied)
+    * are laid out again by cell, each cell in ~`targetFileBytes` files
+    * sized by the cell's own input bytes, and the new batch replaces
+    * exactly the snapshot's batches and tombstones by
+    * [[graft.sources.IndexLog]]'s commit rule — anything committed
+    * while the fold ran stays live. The params file is untouched.
+    * Returns (input files, output files).
     */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                      path: String, outPath: String,
-                      targetFileBytes: Long = 512L * 1024 * 1024): (Int, Int) = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val tombFiles = graft.sources.Tombstones.listParquet(
-      spark, s"$path/tombstones")
-    val hasTombstones = tombFiles.nonEmpty
-    val counts =
-      if (!hasTombstones)
-        // pure small-file merge: the generic per-leaf walk keeps each
-        // cell's file count sized to its own bytes
-        graft.sources.Compact.compactParquet(
-          spark, s"$path/codes", s"$outPath/codes", targetFileBytes)
-      else {
-        // tombstone fold: one distributed pass — anti-join the pending
-        // deletes and lay the survivors back out ≤ filesPerCell files
-        // per cell (salted cell-clustered repartition, r11: the bare
-        // `repartition(bmu_id)` pinned a hot cell's entire rewrite on
-        // ONE task; the routing tree and static pruning survive either
-        // way, and the fresh epoch's tombstone dir starts absent
-        // because only codes + params are written to outPath)
-        def countFiles(dir: String): Int = {
-          val p = new org.apache.hadoop.fs.Path(dir)
-          val fs = p.getFileSystem(conf)
-          val it = fs.listFiles(p, true)
-          var n = 0
-          while (it.hasNext) {
-            if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-          }
-          n
-        }
-        val nIn = countFiles(s"$path/codes")
-        // fold EXACTLY the snapshotted files (reading the live dir here
-        // could pick up tombstones the listing below does not record)
-        val pending = broadcast(
-          spark.read.parquet(tombFiles: _*).select("id"))
-        clusterByCell(spark.read.parquet(s"$path/codes")
-            .join(pending, Seq("id"), "left_anti"),
-          "bmu_id", xxhash64(col("id")), defaultFilesPerCell)
-          .write.mode("overwrite").partitionBy("bmu_id")
-          .parquet(s"$outPath/codes")
-        (nIn, countFiles(s"$outPath/codes"))
-      }
-    val params = spark.read.textFile(s"$path/params").collect()
-    spark.createDataset(params.toSeq)(org.apache.spark.sql.Encoders.STRING)
-      .coalesce(1).write.mode("overwrite").text(s"$outPath/params")
-    graft.sources.Tombstones.writeFolded(spark, outPath,
-      "_folded_tombstones", tombFiles)
-    counts
-  }
+                      path: String,
+                      targetFileBytes: Long = 512L * 1024 * 1024): (Int, Int) =
+    compactIvfSnapshot(spark, path,
+      graft.sources.IndexLog.snapshot(spark, path), targetFileBytes)
 
-  /** Pre-swap fence step for [[compactIvfIndex]]: copy tombstone files
-    * the old epoch accumulated AFTER the fold's snapshot into the new
-    * epoch's side-table, so a delete issued mid-compaction survives the
-    * swap. Idempotent; returns the number of files replayed.
-    */
-  def replayIvfTombstoneDelta(spark: org.apache.spark.sql.SparkSession,
-                              path: String, outPath: String): Int =
-    graft.sources.Tombstones.replayDelta(spark, s"$path/tombstones",
-      outPath, "_folded_tombstones", s"$outPath/tombstones")
+  /** [[compactIvfIndex]] of a given snapshot `snap` of `path`. */
+  private[graft] def compactIvfSnapshot(spark: org.apache.spark.sql.SparkSession,
+                                        path: String,
+                                        snap: graft.sources.IndexLog.Snapshot,
+                                        targetFileBytes: Long): (Int, Int) = {
+    require(targetFileBytes > 0, s"targetFileBytes must be positive: $targetFileBytes")
+    val conf = spark.sparkContext.hadoopConfiguration
+    def parquetFiles(dir: String): Seq[org.apache.hadoop.fs.LocatedFileStatus] = {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      val it = p.getFileSystem(conf).listFiles(p, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .filter(_.getPath.getName.endsWith(".parquet")).toSeq
+    }
+    val inFiles = snap.data.flatMap(u => parquetFiles(s"$path/codes/$u"))
+    // files per cell from the cell's input bytes; the salted
+    // cell-clustered repartition spreads a hot cell over that many
+    // tasks (r11: a bare `repartition(bmu_id)` pinned a hot cell's
+    // whole rewrite on ONE task), routing and static pruning intact
+    val filesOfCell = inFiles
+      .groupBy(_.getPath.getParent.getName.stripPrefix("bmu_id=").toInt)
+      .map { case (cell, fs) =>
+        cell -> math.max(1L,
+          (fs.map(_.getLen).sum + targetFileBytes - 1) / targetFileBytes).toInt
+      }
+    val unit = writeIvfBatch(ivfCodes(spark, path, snap)
+      .repartition(col("bmu_id"), pmod(xxhash64(col("id")),
+        element_at(typedLit(filesOfCell), col("bmu_id")))), path)
+    graft.sources.IndexLog.replace(spark, path, snap, Seq(unit))
+    (inFiles.length, parquetFiles(s"$path/codes/$unit").length)
+  }
 
   /** Serve cosine top-k from an assigned-codes table (inline
     * [[ivfSqAssign]] output or a [[writeIvfSqIndex]] read-back): ONE

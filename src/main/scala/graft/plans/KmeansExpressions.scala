@@ -244,42 +244,6 @@ object VecScale9Kernel {
   }
 }
 
-/** `array<float|double> -> array<long>`: each element as its exact
-  * scale-9 decimal unscaled value (see [[VecScale9Kernel.scale9]]) —
-  * the expression form of the longs the k-means blocks carry
-  * (`VecScale9Kernel.scaleArray`), for summing with [[VecSumCount.add]].
-  */
-case class VecScale9(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"vec_scale9 expects array<float>/array<double>, got $other")
-    }
-
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    VecScale9Kernel.scaleArray(input.asInstanceOf[ArrayData], isFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = VecScale9Kernel.getClass.getName.stripSuffix("$")
-    defineCodeGen(ctx, ev, c => s"$kernel.scaleArray($c, $isFloat)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): VecScale9 =
-    copy(child = newChild)
-  override def prettyName: String = "vec_scale9"
-}
-
 case class KmeansAssign(child: Expression, weights: Array[Double], dim: Int)
     extends UnaryExpression {
   override def dataType: DataType = StructType(Seq(
@@ -357,6 +321,4 @@ object VecSumCount {
 object KmeansFunctions {
   def kmeans_assign(v: Column, weights: Array[Double], dim: Int): Column =
     GraftBridge.column(KmeansAssign(GraftBridge.expression(v), weights, dim))
-  def vec_scale9(v: Column): Column =
-    GraftBridge.column(VecScale9(GraftBridge.expression(v)))
 }

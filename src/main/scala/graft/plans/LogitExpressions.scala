@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -77,48 +77,6 @@ object LogitKernel {
   }
 }
 
-/** `(array<double> x, double y) -> array<long>` of length `dim + 1`:
-  * the scale-9 gradient contributions plus the squared residual — the
-  * expression form of [[LogitKernel.grad]], the kernel each training
-  * iteration runs per row.
-  */
-case class LogitGrad(left: Expression, right: Expression,
-                     weights: Array[Double]) extends BinaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), DoubleType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"logit_grad expects (array<double>, double), got ($l, $r)")
-    }
-
-  override protected def nullSafeEval(x: Any, y: Any): Any =
-    LogitKernel.grad(x.asInstanceOf[ArrayData], y.asInstanceOf[Double], weights)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = LogitKernel.getClass.getName.stripSuffix("$") // mirror-class static forwarders — Janino cannot resolve MODULE$
-    val wRef = ctx.addReferenceObj("logitWeights", weights, "double[]")
-    defineCodeGen(ctx, ev, (x, y) => s"$kernel.grad($x, $y, $wRef)")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): LogitGrad =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "logit_grad"
-
-  // the weight array would bloat tree equality/hash; identity is fine
-  override def equals(o: Any): Boolean = o match {
-    case s: LogitGrad =>
-      (s.left == left) && (s.right == right) && (s.weights eq weights)
-    case _ => false
-  }
-  override def hashCode(): Int = left.hashCode() * 31 + right.hashCode()
-}
-
 /** `array<double> -> double`: round-6 algebraic-sigmoid score under
   * fixed weights — the one-scan serving kernel for a trained model.
   */
@@ -157,9 +115,6 @@ case class LogitScore(child: Expression, weights: Array[Double])
 }
 
 object LogitFunctions {
-  def logit_grad(x: Column, y: Column, weights: Array[Double]): Column =
-    GraftBridge.column(LogitGrad(
-      GraftBridge.expression(x), GraftBridge.expression(y), weights))
   def logit_score(x: Column, weights: Array[Double]): Column =
     GraftBridge.column(LogitScore(GraftBridge.expression(x), weights))
 }

@@ -354,19 +354,23 @@ object StreamingSom {
 
   /** Continuous LEXICAL index ingest: the streaming twin of
     * [[graft.operators.Retrieval.appendBm25Segment]] — call from
-    * `foreachBatch` with a unique segment name per micro-batch (the
-    * batchId is the natural choice). Each micro-batch becomes its own
-    * segment; [[graft.operators.Retrieval.bm25TopKSegmented]] serves
-    * exact BM25 over whatever has arrived (df and corpus stats are
-    * recomputed over survivors at serve time, so there is nothing to
-    * invalidate), and `compactBm25Index` folds the accumulated
-    * segments when their count starts to dominate serve planning.
+    * `foreachBatch`; micro-batch `batchId` becomes segment `b<batchId>`.
+    * [[graft.operators.Retrieval.bm25TopKSegmented]] serves exact BM25
+    * over whatever has arrived (df and corpus stats are recomputed over
+    * survivors at serve time, so there is nothing to invalidate), and
+    * [[graft.operators.Retrieval.compactBm25Index]] folds the
+    * accumulated segments in place when their count starts to dominate
+    * serve planning. A micro-batch replayed after its segment committed
+    * (foreachBatch is at-least-once) finds the segment live and is
+    * skipped.
     */
   def appendBm25SegmentBatch(microBatch: DataFrame, textCol: String,
                              idCol: String, name: String, path: String,
                              nBuckets: Int, batchId: Long): Unit =
-    graft.operators.Retrieval.appendBm25Segment(
-      microBatch, textCol, idCol, name, path, nBuckets, s"b$batchId")
+    if (!graft.sources.IndexLog.snapshot(microBatch.sparkSession, path)
+        .data.contains(s"b$batchId"))
+      graft.operators.Retrieval.appendBm25Segment(
+        microBatch, textCol, idCol, name, path, nBuckets, s"b$batchId")
 
   /** Incremental k-means (mini-batch, Sculley 2010 shape): call
     * `update` from `foreachBatch`. Cumulative per-cluster scale-9 sums

@@ -1221,11 +1221,13 @@ class PipelineSpec extends SparkSpec {
     val fullPath = new java.io.File(dir, "full").getAbsolutePath
     try {
       Similarity.writeIvfSqIndex(baseDf, "embedding", "vec_id", model, sq, incPath)
-      def cellFiles(cell: Int): Set[String] = {
-        val d = new java.io.File(s"$incPath/codes/bmu_id=$cell")
-        Option(d.listFiles()).getOrElse(Array.empty)
-          .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
-      }
+      def cellFiles(cell: Int): Set[String] =
+        Option(new java.io.File(s"$incPath/codes").listFiles())
+          .getOrElse(Array.empty).toSet.flatMap { batch: java.io.File =>
+            Option(new java.io.File(batch, s"bmu_id=$cell").listFiles())
+              .getOrElse(Array.empty)
+              .filter(_.getName.endsWith(".parquet")).map(_.getPath)
+          }
       val beforeAppend = (0 until 9).map(c => c -> cellFiles(c)).toMap
       Similarity.appendToIvfSqIndex(batchDf, "embedding", "vec_id", model, sq, incPath)
       Similarity.writeIvfSqIndex(allDf, "embedding", "vec_id", model, sq, fullPath)
@@ -1277,7 +1279,6 @@ class PipelineSpec extends SparkSpec {
     val sq = Similarity.sqTrain(baseDf, "embedding")
     val dir = java.nio.file.Files.createTempDirectory("ivfsqcompact").toFile
     val path = new java.io.File(dir, "idx").getAbsolutePath
-    val outPath = new java.io.File(dir, "idx_compact").getAbsolutePath
     try {
       Similarity.writeIvfSqIndex(baseDf, "embedding", "vec_id", model, sq, path)
       // five small appends -> many small files per hot cell
@@ -1286,11 +1287,12 @@ class PipelineSpec extends SparkSpec {
           .map(i => (i, Seq.fill(8)(rnd.nextFloat() * 2 - 1))).toDF("vec_id", "embedding")
         Similarity.appendToIvfSqIndex(batch, "embedding", "vec_id", model, sq, path)
       }
-      val (nIn, nOut) = Similarity.compactIvfIndex(spark, path, outPath,
+      val (oldCodes, oldSq) = Similarity.readIvfSqIndex(spark, path)
+      val (nIn, nOut) = Similarity.compactIvfIndex(spark, path,
         targetFileBytes = 512L * 1024 * 1024)
       assert(nOut < nIn, s"compaction did not reduce files: $nIn -> $nOut")
-      val (oldCodes, oldSq) = Similarity.readIvfSqIndex(spark, path)
-      val (newCodes, newSq) = Similarity.readIvfSqIndex(spark, outPath)
+      assert(graft.sources.IndexLog.snapshot(spark, path).data.size == 1)
+      val (newCodes, newSq) = Similarity.readIvfSqIndex(spark, path)
       assert(newSq.mins.sameElements(oldSq.mins) && newSq.maxs.sameElements(oldSq.maxs))
       assert(newCodes.count() == 300L)
       assert(newCodes.select("id", "bmu_id", "codes").collect().map(_.toString).sorted
@@ -1334,7 +1336,6 @@ class PipelineSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ivfsqdelete").toFile
     val path = new java.io.File(dir, "idx").getAbsolutePath
     val refPath = new java.io.File(dir, "ref").getAbsolutePath
-    val foldPath = new java.io.File(dir, "fold").getAbsolutePath
     try {
       Similarity.writeIvfSqIndex(df, "embedding", "vec_id", model, sq, path)
       val codesDir = new java.io.File(s"$path/codes")
@@ -1352,7 +1353,7 @@ class PipelineSpec extends SparkSpec {
       // immutable code files untouched by deletes
       assert(fileSet() == beforeDelete)
       // the live view excludes exactly the tombstoned ids
-      val (live, liveSq) = Similarity.readIvfSqIndexLive(spark, path)
+      val (live, liveSq) = Similarity.readIvfSqIndex(spark, path)
       assert(live.count() == 260L)
       assert(live.where(col("id").isin(dead: _*)).count() == 0L)
       // serving the live view == serving a rebuild that never had them
@@ -1367,29 +1368,20 @@ class PipelineSpec extends SparkSpec {
         kNN = 5, nProbe = 2)
       assert(a.collect().map(_.toString).sorted
         .sameElements(b.collect().map(_.toString).sorted))
-      // compaction folds the tombstones: fresh epoch, reduced rows, no
-      // tombstones dir at the output, live == plain read there
-      Similarity.compactIvfIndex(spark, path, foldPath)
-      assert(!new java.io.File(s"$foldPath/tombstones").exists())
-      val (folded, foldedSq) = Similarity.readIvfSqIndex(spark, foldPath)
-      assert(folded.count() == 260L)
-      assert(folded.where(col("id").isin(dead: _*)).count() == 0L)
-      val c = Similarity.ivfSqTopKFromCodes(folded, model, foldedSq, qs,
-        kNN = 5, nProbe = 2)
-      assert(c.collect().map(_.toString).sorted
-        .sameElements(b.collect().map(_.toString).sorted))
-      // DELETE FENCE: a delete issued AFTER the fold's snapshot (i.e.
-      // mid-compaction, landing only in the old epoch's side-table)
-      // survives the swap once the pre-swap replay runs — and the
-      // replay is an idempotent no-op the second time
+      // in-place compaction with a delete committed between its
+      // snapshot and its commit: the fold drops the snapshot's two
+      // tombstone files' ids, and the late delete stays live on top
+      val snap = graft.sources.IndexLog.snapshot(spark, path)
       Similarity.deleteFromIvfIndex(Seq(100L).toDF("vec_id"), "vec_id", path)
-      assert(Similarity.replayIvfTombstoneDelta(spark, path, foldPath) >= 1)
-      val (fenced, fencedSq) = Similarity.readIvfSqIndexLive(spark, foldPath)
+      Similarity.compactIvfSnapshot(spark, path, snap,
+        targetFileBytes = 512L * 1024 * 1024)
+      val compacted = graft.sources.IndexLog.snapshot(spark, path)
+      assert(compacted.data.size == 1 && !compacted.data.exists(snap.data.contains))
+      assert(compacted.tombstones.size == 1)
+      val (fenced, fencedSq) = Similarity.readIvfSqIndex(spark, path)
       assert(fenced.count() == 259L)
       assert(fenced.where(col("id") === 100L).count() == 0L)
-      // already-folded ids in the replayed delta are harmless no-ops
       assert(fenced.where(col("id").isin(dead: _*)).count() == 0L)
-      assert(Similarity.replayIvfTombstoneDelta(spark, path, foldPath) == 0)
       val d = Similarity.ivfSqTopKFromCodes(fenced, model, fencedSq, qs,
         kNN = 5, nProbe = 2)
       val refFenced = Similarity.ivfSqTopKFromCodes(
@@ -1397,6 +1389,40 @@ class PipelineSpec extends SparkSpec {
         kNN = 5, nProbe = 2)
       assert(d.collect().map(_.toString).sorted
         .sameElements(refFenced.collect().map(_.toString).sorted))
+      // a second compaction folds the late delete too
+      Similarity.compactIvfIndex(spark, path)
+      assert(graft.sources.IndexLog.snapshot(spark, path).tombstones.isEmpty)
+      val (folded, foldedSq) = Similarity.readIvfSqIndex(spark, path)
+      assert(folded.count() == 259L)
+      assert(Similarity.ivfSqTopKFromCodes(folded, model, foldedSq, qs,
+          kNN = 5, nProbe = 2).collect().map(_.toString).sorted
+        .sameElements(refFenced.collect().map(_.toString).sorted))
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+      }
+      rm(dir)
+    }
+  }
+
+  test("IVF rebuild at a live path: write -> delete -> write serves every row") {
+    val rnd = new scala.util.Random(61)
+    val rows = (0L until 120L).map(i => (i, Seq.fill(8)(rnd.nextFloat() * 2 - 1)))
+    val df = rows.toDF("vec_id", "embedding")
+    val model = new graft.som.Som(
+      graft.som.SomConfig(2, 2, seed = 42)).fit(df, "embedding", numEpochs = 1)
+    val sq = Similarity.sqTrain(df, "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("ivfsqrebuild").toFile
+    val path = new java.io.File(dir, "idx").getAbsolutePath
+    try {
+      Similarity.writeIvfSqIndex(df, "embedding", "vec_id", model, sq, path)
+      Similarity.deleteFromIvfIndex((0L until 40L).toDF("vec_id"), "vec_id", path)
+      assert(Similarity.readIvfSqIndex(spark, path)._1.count() == 80L)
+      // the rebuild starts the index over: the earlier delete is gone
+      Similarity.writeIvfSqIndex(df, "embedding", "vec_id", model, sq, path)
+      val (codes, _) = Similarity.readIvfSqIndex(spark, path)
+      assert(codes.select("id").collect().map(_.getLong(0)).sorted.toSeq ==
+        rows.map(_._1))
     } finally {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
@@ -1438,11 +1464,11 @@ class PipelineSpec extends SparkSpec {
         m = 4, k = 8, qs, kNN = 5, nProbe = 2)
       assert(incServed.collect().map(_.toString).sorted
         .sameElements(fullServed.collect().map(_.toString).sorted))
-      // tombstones are layout-agnostic: the PQ live view drops them too
+      // tombstones are layout-agnostic: the PQ read drops them too
       Similarity.deleteFromIvfIndex(
         (250L until 300L).toDF("vec_id"), "vec_id", incPath)
       val (liveCodes, liveCb, liveM, liveK) =
-        Similarity.readIvfPqIndexLive(spark, incPath)
+        Similarity.readIvfPqIndex(spark, incPath)
       assert(liveCodes.count() == 250L)
       assert((liveM, liveK) == (4, 8) && liveCb.sameElements(cb))
       val liveServed = Similarity.ivfPqTopKFromCodes(liveCodes, model,

@@ -114,8 +114,7 @@ class RetrievalSpec extends SparkSpec {
     val tag = s"seg_${System.nanoTime()}"
     val name = s"graft_bm25s_$tag"
     val path = s"/tmp/$name"
-    val outName = s"${name}_c"
-    val outPath = s"/tmp/$outName"
+    val segments = scala.collection.mutable.Set("a", "b")
     try {
       Retrieval.appendBm25Segment(segA.toDF("doc_id", "text"), "text",
         "doc_id", name, path, nBuckets = 8, segment = "a")
@@ -144,33 +143,59 @@ class RetrievalSpec extends SparkSpec {
         all.filterNot(r => dead.contains(r._1)).toDF("doc_id", "text"),
         "text", "doc_id", q, 10).orderBy("qid", "rank").collect().toSeq
       assert(segDel == scanDel)
-      // compaction folds segments + tombstones into one fresh segment
-      Retrieval.compactBm25Index(spark, name, path, outName, outPath,
-        nBuckets = 8)
-      val folded = Retrieval.bm25TopKSegmented(spark, outName, outPath, q, 10)
-        .orderBy("qid", "rank").collect().toSeq
-      assert(folded == scanDel)
-      assert(!new java.io.File(s"$outPath/_tombstones").exists())
-      // DELETE FENCE: a delete issued AFTER the fold's snapshot (i.e.
-      // mid-compaction, landing only in the old epoch's side-table)
-      // survives the swap once the pre-swap replay runs — and the
-      // replay is an idempotent no-op the second time
+      // in-place compaction with a delete committed between its
+      // snapshot and its commit: the fold covers the snapshot's two
+      // segments and first delete, and the late delete stays live
+      val snap = graft.sources.IndexLog.snapshot(spark, path)
       val lateDead = all.map(_._1).filterNot(dead.contains).take(2)
       Retrieval.deleteFromBm25Index(lateDead.toDF("doc_id"), "doc_id", path)
-      assert(Retrieval.replayBm25TombstoneDelta(spark, path, outPath) >= 1)
-      val fenced = Retrieval.bm25TopKSegmented(spark, outName, outPath, q, 10)
+      Retrieval.compactBm25Snapshot(spark, name, path, snap, nBuckets = 8)
+      val live = graft.sources.IndexLog.snapshot(spark, path)
+      segments ++= live.data
+      assert(live.data.size == 1 && !live.data.exists(Set("a", "b")))
+      assert(live.tombstones.size == 1)
+      val fenced = Retrieval.bm25TopKSegmented(spark, name, path, q, 10)
         .orderBy("qid", "rank").collect().toSeq
       val scanFenced = Retrieval.bm25TopK(
         all.filterNot(r => dead.contains(r._1) || lateDead.contains(r._1))
           .toDF("doc_id", "text"),
         "text", "doc_id", q, 10).orderBy("qid", "rank").collect().toSeq
       assert(fenced == scanFenced)
-      assert(Retrieval.replayBm25TombstoneDelta(spark, path, outPath) == 0)
+      // a second compaction folds the late delete too: same answers
+      Retrieval.compactBm25Index(spark, name, path, nBuckets = 8)
+      val folded = graft.sources.IndexLog.snapshot(spark, path)
+      segments ++= folded.data
+      assert(folded.data.size == 1 && folded.tombstones.isEmpty)
+      assert(Retrieval.bm25TopKSegmented(spark, name, path, q, 10)
+        .orderBy("qid", "rank").collect().toSeq == scanFenced)
     } finally {
-      Seq(s"${name}__a", s"${name}__b", s"${outName}__0")
-        .foreach(graft.sources.Bucketed.drop(spark, _))
+      segments.foreach(s => graft.sources.Bucketed.drop(spark, s"${name}__$s"))
       graft.BenchData.deleteRecursively(path)
-      graft.BenchData.deleteRecursively(outPath)
+    }
+  }
+
+  test("segmented index: appending a live segment name is rejected, the live segment intact") {
+    val segA = Seq((0L, "apple banana"), (1L, "banana cherry"))
+    val segA2 = Seq((2L, "apple apple"), (3L, "cherry date"))
+    val q = Seq(0L -> "apple banana cherry")
+    val name = s"graft_bm25live_${System.nanoTime()}"
+    val path = s"/tmp/$name"
+    try {
+      Retrieval.appendBm25Segment(segA.toDF("doc_id", "text"), "text",
+        "doc_id", name, path, nBuckets = 4, segment = "a")
+      val e = intercept[IllegalArgumentException] {
+        Retrieval.appendBm25Segment(segA2.toDF("doc_id", "text"), "text",
+          "doc_id", name, path, nBuckets = 4, segment = "a")
+      }
+      assert(e.getMessage.contains("segment 'a' is already live"), e.getMessage)
+      val served = Retrieval.bm25TopKSegmented(spark, name, path, q, 10)
+        .orderBy("qid", "rank").collect().toSeq
+      val scanA = Retrieval.bm25TopK(segA.toDF("doc_id", "text"), "text",
+        "doc_id", q, 10).orderBy("qid", "rank").collect().toSeq
+      assert(served == scanA)
+    } finally {
+      graft.sources.Bucketed.drop(spark, s"${name}__a")
+      graft.BenchData.deleteRecursively(path)
     }
   }
 

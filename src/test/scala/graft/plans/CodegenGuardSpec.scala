@@ -100,30 +100,20 @@ class CodegenGuardSpec extends SparkSpec {
       assert(bmus.map(_.getInt(0)).toSeq == Seq(1, 1))
       assert(bmus.map(_.getDouble(1)).forall(_ >= 0.0))
 
-      // k-means kernels: struct-returning argmin + the scale-9 array
+      // k-means kernel: struct-returning argmin
       val km = vecs.select(
-          KmeansFunctions.kmeans_assign(col("v"), weights, 3).as("a"),
-          KmeansFunctions.vec_scale9(col("v")).as("vl"))
+          KmeansFunctions.kmeans_assign(col("v"), weights, 3).as("a"))
         .collect()
       assert(km.map(_.getStruct(0).getInt(0)).toSeq == Seq(1, 1))
       assert(km.forall(_.getStruct(0).getDouble(1) >= 0.0))
-      assert(km.head.getSeq[Long](1).length == 3)
 
-      // logit-training kernels: gradient contribution (array<long>,
-      // dim+1 with the squared residual last) + round-6 scoring
+      // logit scoring: round-6 of the algebraic sigmoid
       val lw = Array(0.0, 1.0, -1.0)
-      val lvecs = Seq((Seq(1.0, 2.0, 3.0), 1.0), (Seq(1.0, 0.0, 0.0), 0.0))
-        .toDF("x", "y")
-      val lg = lvecs.select(
-          LogitFunctions.logit_grad(col("x"), col("y"), lw).as("g"),
-          LogitFunctions.logit_score(col("x"), lw).as("s"))
+      val lvecs = Seq(Seq(1.0, 2.0, 3.0), Seq(1.0, 0.0, 0.0)).toDF("x")
+      val lg = lvecs.select(LogitFunctions.logit_score(col("x"), lw).as("s"))
         .collect()
-      assert(lg.forall(_.getSeq[Long](0).length == 4))
-      // row 1: z=-1, p=0.25, r=-0.75 -> grad r*x, r^2 at scale 9
-      assert(lg.head.getSeq[Long](0) ==
-        Seq(-750000000L, -1500000000L, -2250000000L, 562500000L))
-      // row 2: z=0 -> p=0.5; scores are round-6 of p
-      assert(lg.map(_.getDouble(1)).toSeq == Seq(0.25, 0.5))
+      // row 1: z=-1 -> p=0.25; row 2: z=0 -> p=0.5
+      assert(lg.map(_.getDouble(0)).toSeq == Seq(0.25, 0.5))
 
       // PQ: m=1 subspace of 3 dims, 2 centroids = the two vectors
       // themselves; each encodes to itself and ADC to an all-zeros
