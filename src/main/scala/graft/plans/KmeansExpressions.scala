@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * once per task); the argmin loop runs inside whole-stage codegen.
   *
   * Distance is squared euclidean accumulated SEQUENTIALLY over
-  * dimensions (`(x_i - w_i)^2` in ascending i) — not the dgemm
+  * dimensions (`(x_i - w_i)^2` in ascending i) — not the
   * `wSq - 2 dot` rearrangement the SOM BMU kernel uses — because the
   * k-means oracle is an independent implementation that must reproduce
   * the argmin bit-for-bit, and the plain loop is the form any

@@ -1,5 +1,6 @@
 package graft.som
 
+import dev.ludovic.netlib.blas.BLAS
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
@@ -83,13 +84,11 @@ final case class SomConfig(
   * blocks are the reference's Dask blocks, the per-block sub-batching
   * replaces its `n_parallel` chunking (`xpysom.py:560-575`) and the
   * merge replaces dask's delayed flat sum (`xpysom.py:545-558`). Like
-  * that sum, the merge may run in any order: the partials are exact, so
-  * the codebook is a function of the rows and the config alone, not of
-  * the partition layout — given a BLAS whose per-row distances do not
-  * depend on the batch's shape, as the JVM BLAS's do (a native
-  * OpenBLAS or MKL picked by `BLAS.getInstance()` may round a blocked
-  * kernel's edge tiles differently; see [[epoch]]). Feature values must
-  * be finite.
+  * that sum, the merge may run in any order: the partials are exact and
+  * each row's distances are a function of that row and the codebook
+  * ([[Distances]]), so the codebook is a function of the rows and the
+  * config alone, not of the partition layout (see [[epoch]]). Feature
+  * values must be finite.
   */
 final class Som(val config: SomConfig) extends Serializable {
   config.validated
@@ -187,14 +186,14 @@ final class Som(val config: SomConfig) extends Serializable {
     * each micro-batch advances the decay schedule by one step.
     *
     * The partials are exact ([[ExactSum]]), and each row's winner depends
-    * on that row alone where the BLAS `dgemm` computes a row's distances
-    * independently of the row's place in the batch and of the batch
-    * size — so the JVM BLAS does in every case sampled, and the layout
-    * spec in `SomSpec` pins it. An epoch then gives the same bits over
-    * any layout of the same rows: any partitioning, either form, any
-    * merge order — which the resume contract (`fit(iterBeg/iterEnd)`),
-    * the seeded-determinism guarantee and the driver-local fast path
-    * all rely on.
+    * on that row alone: the distance kernels compute a row's distances
+    * by the same operations whatever the row's place in the batch, the
+    * batch size and the CPU's vector width ([[Distances]]; `DistancesSpec`
+    * and the layout spec in `SomSpec` pin it). An epoch then gives the
+    * same bits over any layout of the same rows: any partitioning,
+    * either form, any merge order — which the resume contract
+    * (`fit(iterBeg/iterEnd)`), the seeded-determinism guarantee and the
+    * driver-local fast path all rely on.
     */
   private[graft] def epoch(data: Parts[Array[Array[Float]]], cb: Codebook, t: Int,
                            numEpochs: Int): Option[Codebook] = {
@@ -316,6 +315,8 @@ object Som {
 private[som] object SomKernels extends Serializable {
 
   type Partial = (Array[Double], Array[Double])
+
+  private lazy val blas: BLAS = BLAS.getInstance()
 
   /** One partition's per-winner partial for one epoch: iterate the
     * partition in `batchSize` sub-batches; per batch compute activation
@@ -469,7 +470,7 @@ private[som] object SomKernels extends Serializable {
       }
       // num (k x dim, row-major) += H_blockᵀ (k x m) * S_block (m x dim):
       // column-major view numᵀ (dim x k) = S_blockᵀ (dim x m) * H_block (m x k).
-      Distances.blas.dgemm("N", "T", dim, k, m, 1.0, sBuf, dim, hBuf, k, 1.0, num, dim)
+      blas.dgemm("N", "T", dim, k, m, 1.0, sBuf, dim, hBuf, k, 1.0, num, dim)
       off += m
     }
     (num, den)

@@ -14,12 +14,13 @@ import org.apache.spark.sql.types._
   * `xpysom.py:819-865`) stock Catalyst aggregates follow, so Spark's
   * optimizer, AQE and codegen handle that layer too. Only `activate`,
   * which returns every neuron's distance, is a narrow `mapPartitions`
-  * over batched BLAS distance calls.
+  * over the batched training distance kernels ([[Distances]]).
   *
   * Feature columns may be array<float>, array<double>, any other
   * numeric array (cast to array<double>) or an ml/mllib `Vector`. Rows
-  * with null features get null outputs from the per-row queries and are
-  * skipped by the aggregates, as `fit` skips them.
+  * with null features get null outputs from the per-row queries
+  * (`activate` included) and are skipped by the aggregates, as `fit`
+  * skips them.
   */
 final class SomModel(val config: SomConfig, val codebook: Codebook)
     extends Serializable {
@@ -74,7 +75,7 @@ final class SomModel(val config: SomConfig, val codebook: Codebook)
 
   /** Activation map (`activate`, `xpysom.py:323-354`): appends the full
     * per-neuron distance vector, from batched per-partition distance
-    * calls.
+    * calls; null for a row with null features.
     */
   def activate(df: DataFrame, featuresCol: String = "features"): DataFrame = {
     val spark = df.sparkSession
@@ -93,17 +94,26 @@ final class SomModel(val config: SomConfig, val codebook: Codebook)
       val wSq = if (distFn.canCache) Distances.rowSumSq(w, k, d) else null
       it.grouped(bs).flatMap { batch =>
         val rows = batch.toArray
+        // each row's place among the batch's non-null rows, -1 when null
+        val at = new Array[Int](rows.length)
+        var n = 0
         rows.indices.foreach { r =>
-          val v = SomData.rowToVec(rows(r), fIdx)
-          if (v.length != d)
-            throw new IllegalArgumentException(
-              s"Received ${v.length} features, expected $d.")
-          System.arraycopy(v, 0, xBuf, r * d, d)
+          if (rows(r).isNullAt(fIdx)) at(r) = -1
+          else {
+            val v = SomData.rowToVec(rows(r), fIdx)
+            if (v.length != d)
+              throw new IllegalArgumentException(
+                s"Received ${v.length} features, expected $d.")
+            System.arraycopy(v, 0, xBuf, n * d, d)
+            at(r) = n
+            n += 1
+          }
         }
-        distFn.compute(xBuf, rows.length, w, k, d, wSq, dBuf)
+        distFn.compute(xBuf, n, w, k, d, wSq, dBuf)
         rows.indices.iterator.map { r =>
+          val a = at(r)
           Row.fromSeq(rows(r).toSeq :+
-            java.util.Arrays.copyOfRange(dBuf, r * k, (r + 1) * k).toSeq)
+            (if (a < 0) null else java.util.Arrays.copyOfRange(dBuf, a * k, (a + 1) * k).toSeq))
         }
       }
     }

@@ -1,5 +1,6 @@
 package graft.som
 
+import jdk.incubator.vector.DoubleVector
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
 
@@ -73,10 +74,79 @@ class DistancesSpec extends AnyFunSuite {
 
   test("seeded fuzz matrices (n x d vs k x d)") {
     val rnd = new Random(0)
-    for (n <- Seq(2, 7); k <- Seq(3, 11); d <- Seq(5, 13); (dist, oracle) <- kernels) {
+    // n 4 and 9 fill whole 4-row tiles and leave a row tail; k 32, 37
+    // and 69 fill 4-vector cell tiles at 4 and 8 lanes and leave cell tails
+    for (n <- Seq(2, 4, 7, 9); k <- Seq(3, 11, 32, 37, 69); d <- Seq(1, 5, 13, 64);
+         (dist, oracle) <- kernels) {
       val xs = Seq.fill(n)(Array.fill(d)(rnd.nextDouble() * 4 - 2))
       val ws = Seq.fill(k)(Array.fill(d)(rnd.nextDouble() * 4 - 2))
       check(dist, oracle, xs, ws, tol = 1e-9)
+    }
+  }
+
+  /** The scalar form of every value the cross-term kernel writes: the
+    * fma chain over the features in ascending order, from 0.0; with `wSq`,
+    * one more fma to −2·dot + wSq(j).
+    */
+  private def scalarRef(x: Array[Double], n: Int, w: Array[Double], k: Int, d: Int,
+                        wSq: Array[Double]): Array[Double] =
+    Array.tabulate(n * k) { at =>
+      val (i, j) = (at / k, at % k)
+      var s = 0.0
+      for (c <- 0 until d) s = Math.fma(x(i * d + c), w(j * d + c), s)
+      if (wSq == null) s else Math.fma(-2.0, s, wSq(j))
+    }
+
+  /** Values over twelve binary orders of magnitude, so rounding differs
+    * between operation orders.
+    */
+  private def spread(rnd: Random, len: Int): Array[Double] =
+    Array.fill(len)(rnd.nextGaussian() * math.pow(2, rnd.nextInt(12) - 6))
+
+  private val bits = (a: Array[Double]) => a.map(java.lang.Double.doubleToRawLongBits).toSeq
+
+  /** The cross term and the euclidean partial, with its own |w|² as `wSq`. */
+  private def both(x: Array[Double], n: Int, w: Array[Double], k: Int,
+                   d: Int): Seq[(String, Array[Double])] = {
+    val cross = new Array[Double](n * k)
+    Distances.crossTerm(x, n, w, k, d, cross)
+    val part = new Array[Double](n * k)
+    Distances.EuclideanPart.compute(x, n, w, k, d, null, part)
+    Seq("crossTerm" -> cross, "euclidean" -> part)
+  }
+
+  test("cross term and euclidean partial: the scalar ascending fma chain, bit for bit") {
+    val lanes = DoubleVector.SPECIES_PREFERRED.length()
+    val rnd = new Random(5)
+    for (k <- 1 to 4 * lanes + 3; d <- Seq(1, 3, 17); n <- Seq(1, 4, 9)) {
+      val x = spread(rnd, n * d)
+      val w = spread(rnd, k * d)
+      val wSq = Distances.rowSumSq(w, k, d)
+      val exp = Map("crossTerm" -> scalarRef(x, n, w, k, d, null),
+        "euclidean" -> scalarRef(x, n, w, k, d, wSq))
+      for ((name, got) <- both(x, n, w, k, d))
+        assert(bits(got) == bits(exp(name)), s"$name n=$n k=$k d=$d")
+    }
+  }
+
+  test("a row's distances are the same bits alone and at every position of any batch") {
+    val lanes = DoubleVector.SPECIES_PREFERRED.length()
+    val rnd = new Random(17)
+    val d = 16
+    for (k <- Seq(4 * lanes + 3, 8 * lanes + 1)) {
+      val w = spread(rnd, k * d)
+      val row = spread(rnd, d)
+      val alone = both(row, 1, w, k, d).map { case (name, o) => name -> bits(o) }.toMap
+      // the row at each listed position of an m-row batch of other rows
+      def check(m: Int, positions: Seq[Int]): Unit = {
+        val x = spread(rnd, m * d)
+        positions.foreach(p => System.arraycopy(row, 0, x, p * d, d))
+        for ((name, o) <- both(x, m, w, k, d); p <- positions)
+          assert(bits(o.slice(p * k, (p + 1) * k)) == alone(name),
+            s"$name k=$k: row at $p of $m")
+      }
+      for (m <- Seq(1, 4, 5); p <- 0 until m) check(m, Seq(p))
+      for (phase <- 0 until 3) check(2048, (phase until 2048 by 3))
     }
   }
 

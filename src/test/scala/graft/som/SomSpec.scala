@@ -323,6 +323,10 @@ class SomSpec extends SparkSpec {
       val q = m.quantize(df).select("id", "quantized", "q_dist").collect()
         .map(r => r.getLong(0) -> (Option(r.getSeq[Double](1)), Option(r.get(2)))).toMap
       assert(q(60L) == ((None, None)), "null features: null quantization")
+      val act = m.activate(df).select("id", "activation").collect()
+        .map(r => r.getLong(0) -> Option(r.getSeq[Double](1))).toMap
+      assert(act.size == 61 && act(60L).isEmpty, "null features: null activation")
+      assert((0 until 60).forall(i => act(i.toLong).exists(_.length == 12)))
       assert(ar.values.sum == 60 && lm.values.sum == 60 && wm.values.map(_.size).sum == 60,
         "null features are not assigned")
       val nonNull = df.where("id < 60")
@@ -331,7 +335,7 @@ class SomSpec extends SparkSpec {
       assert(qe == m.quantizationError(nonNull) && te == m.topographicError(nonNull))
       val meanQ = q.values.flatMap(_._2).map(_.asInstanceOf[Double]).sum / 60
       assert(math.abs(meanQ - qe) < 1e-12)
-      Seq(bmu, ar, lm, wm, q, qe, te)
+      Seq(bmu, ar, lm, wm, q, qe, te, act)
     }
     val all = types.map { case (t, conv) => t -> answers(frame(t, conv)) }
     all.tail.foreach { case (t, a) =>
@@ -344,7 +348,6 @@ class SomSpec extends SparkSpec {
   test("one codebook, QE and covariance over any partition layout, either form") {
     import spark.implicits._
     val sc = spark.sparkContext
-    def vec(i: Int) = Seq.tabulate(4)(j => math.sin(i * 0.7 + j * 1.3).toFloat * (j + 1))
     // 1, 3, 7 and 16 partitions: empty partitions, one partition holding
     // most rows, rows reversed inside partitions
     val layouts: Seq[Seq[Seq[Int]]] = Seq(
@@ -352,20 +355,26 @@ class SomSpec extends SparkSpec {
       Seq(Nil, (0 until 55).reverse, 55 until 60),
       Seq(0 until 3, Nil, (3 until 50).reverse, 50 until 52, Nil, 52 until 60, Nil),
       (0 until 16).map(p => (p * 4 until math.min(p * 4 + 4, 60)).reverse))
-    val c = SomConfig(3, 3, seed = 4, batchSize = 7)
     val bits = (a: Array[Double]) => a.map(java.lang.Double.doubleToLongBits).toSeq
-    val results = for (layout <- layouts) yield {
-      val df = sc.parallelize(layout, layout.length).flatMap(_.map(vec)).toDF("features")
-      val fits = Seq(c, c.copy(localFitThreshold = 0L))
-        .map(cfg => bits(new Som(cfg).fit(df, "features", numEpochs = 3).codebook.weights))
-      assert(fits.distinct.size == 1, s"${layout.length} partitions: forms differ")
-      val model = SomModel.fromWeights(c, Seq.tabulate(9)(n => Array.fill(4)(n * 0.3 - 1)))
-      var cov: Array[Array[Double]] = null
-      val (_, jobs) = graft.Probe.recordJobs(spark) { cov = new Som(c).sampleCovariance(df)._1 }
-      assert(jobs.size == 1, "sampleCovariance is one pass")
-      (fits.head, bits(Array(model.quantizationError(df))), cov.toSeq.map(bits))
+    // a 3x3 map keeps the distance kernel in its scalar cell tail; a 6x7
+    // map fills its vector tiles and leaves a cell tail at 4 and 8 lanes
+    for ((c, dim) <- Seq(SomConfig(3, 3, seed = 4, batchSize = 7) -> 4,
+                         SomConfig(6, 7, seed = 4, batchSize = 7) -> 16)) {
+      val k = c.x * c.y
+      def vec(i: Int) = Seq.tabulate(dim)(j => math.sin(i * 0.7 + j * 1.3).toFloat * (j % 4 + 1))
+      val results = for (layout <- layouts) yield {
+        val df = sc.parallelize(layout, layout.length).flatMap(_.map(vec)).toDF("features")
+        val fits = Seq(c, c.copy(localFitThreshold = 0L))
+          .map(cfg => bits(new Som(cfg).fit(df, "features", numEpochs = 3).codebook.weights))
+        assert(fits.distinct.size == 1, s"$k cells, ${layout.length} partitions: forms differ")
+        val model = SomModel.fromWeights(c, Seq.tabulate(k)(n => Array.fill(dim)(n * 0.3 - 1)))
+        var cov: Array[Array[Double]] = null
+        val (_, jobs) = graft.Probe.recordJobs(spark) { cov = new Som(c).sampleCovariance(df)._1 }
+        assert(jobs.size == 1, "sampleCovariance is one pass")
+        (fits.head, bits(Array(model.quantizationError(df))), cov.toSeq.map(bits))
+      }
+      assert(results.distinct.size == 1, s"$k cells: the partition layout changed a bit")
     }
-    assert(results.distinct.size == 1, "the partition layout changed a bit")
   }
 
   test("ExactSum: one sum over any order and grouping, exact on any scale") {
