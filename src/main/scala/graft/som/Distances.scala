@@ -46,144 +46,26 @@ object Distances {
   /** out (row-major n x k) = x (n x d) * w^T (d x k): the dot product of
     * row i and codebook row j is the `Math.fma` chain over the features
     * in ascending order, from 0.0 — the same operations, hence the same
-    * bits, wherever the row sits in any batch ([[tiled]]).
+    * bits, wherever the row sits in any batch ([[Tiled]]).
     */
   def crossTerm(x: Array[Double], n: Int, w: Array[Double], k: Int, d: Int,
                 out: Array[Double]): Unit =
     tiled(x, n, w, k, d, null, out)
 
-  /** The cross term x·wᵀ, register-tiled over `DoubleVector`s: a tile is
-    * 4 rows x 4 vectors of cells (16 accumulators), reading the d x k
-    * transpose of `w` built here (1/n of the work). Each lane holds one
-    * (row, cell) dot product as the ascending-feature fma chain from 0.0;
-    * rows left over from the 4-row tiles run one at a time, cells left
-    * over from the 4-vector tiles through scalar `Math.fma` in the same
-    * order, so neither the tile edge nor the lane width changes a bit.
-    * With `wSq`, each dot product then takes one more fma to
-    * fma(−2, dot, wSq(j)), the partial squared euclidean distance.
+  /** Whether this JVM resolved `jdk.incubator.vector`, which [[Tiled]]
+    * is written on. Checked here, in a class that does not link against
+    * it, so a JVM started without the module fails with a message that
+    * names the flag instead of a `NoClassDefFoundError`.
     */
+  private lazy val vectorApi: Boolean =
+    ModuleLayer.boot().findModule("jdk.incubator.vector").isPresent
+
   private def tiled(x: Array[Double], n: Int, w: Array[Double], k: Int, d: Int,
                     wSq: Array[Double], out: Array[Double]): Unit = {
-    val lanes = DoubleVector.SPECIES_PREFERRED.length()
-    val kBody = k - k % (4 * lanes)
-    if (kBody > 0) {
-      val wt = new Array[Double](d * k)
-      var j = 0
-      while (j < k) {
-        var c = 0
-        while (c < d) { wt(c * k + j) = w(j * d + c); c += 1 }
-        j += 1
-      }
-      var i = 0
-      while (i + 4 <= n) {
-        j = 0
-        while (j < kBody) { tile4(x, i, wt, k, d, j, wSq, out); j += 4 * lanes }
-        i += 4
-      }
-      while (i < n) {
-        j = 0
-        while (j < kBody) { tile1(x, i, wt, k, d, j, wSq, out); j += 4 * lanes }
-        i += 1
-      }
-    }
-    var i = 0
-    while (i < n) {
-      val xb = i * d
-      var j = kBody
-      while (j < k) {
-        val wb = j * d
-        var s = 0.0
-        var c = 0
-        while (c < d) { s = Math.fma(x(xb + c), w(wb + c), s); c += 1 }
-        out(i * k + j) = if (wSq == null) s else Math.fma(-2.0, s, wSq(j))
-        j += 1
-      }
-      i += 1
-    }
-  }
-
-  /** Rows i..i+3 x cells j until j + 4·lanes of [[tiled]]. */
-  private def tile4(x: Array[Double], i: Int, wt: Array[Double], k: Int, d: Int, j: Int,
-                    wSq: Array[Double], out: Array[Double]): Unit = {
-    val S = DoubleVector.SPECIES_PREFERRED
-    val L = S.length()
-    var a00 = DoubleVector.zero(S); var a01 = a00; var a02 = a00; var a03 = a00
-    var a10 = a00; var a11 = a00; var a12 = a00; var a13 = a00
-    var a20 = a00; var a21 = a00; var a22 = a00; var a23 = a00
-    var a30 = a00; var a31 = a00; var a32 = a00; var a33 = a00
-    val x0 = i * d
-    var c = 0
-    while (c < d) {
-      val o = c * k + j
-      val w0 = DoubleVector.fromArray(S, wt, o)
-      val w1 = DoubleVector.fromArray(S, wt, o + L)
-      val w2 = DoubleVector.fromArray(S, wt, o + 2 * L)
-      val w3 = DoubleVector.fromArray(S, wt, o + 3 * L)
-      var b = DoubleVector.broadcast(S, x(x0 + c))
-      a00 = b.fma(w0, a00); a01 = b.fma(w1, a01); a02 = b.fma(w2, a02); a03 = b.fma(w3, a03)
-      b = DoubleVector.broadcast(S, x(x0 + d + c))
-      a10 = b.fma(w0, a10); a11 = b.fma(w1, a11); a12 = b.fma(w2, a12); a13 = b.fma(w3, a13)
-      b = DoubleVector.broadcast(S, x(x0 + 2 * d + c))
-      a20 = b.fma(w0, a20); a21 = b.fma(w1, a21); a22 = b.fma(w2, a22); a23 = b.fma(w3, a23)
-      b = DoubleVector.broadcast(S, x(x0 + 3 * d + c))
-      a30 = b.fma(w0, a30); a31 = b.fma(w1, a31); a32 = b.fma(w2, a32); a33 = b.fma(w3, a33)
-      c += 1
-    }
-    var o = i * k + j
-    a00.intoArray(out, o); a01.intoArray(out, o + L); a02.intoArray(out, o + 2 * L); a03.intoArray(out, o + 3 * L)
-    o += k
-    a10.intoArray(out, o); a11.intoArray(out, o + L); a12.intoArray(out, o + 2 * L); a13.intoArray(out, o + 3 * L)
-    o += k
-    a20.intoArray(out, o); a21.intoArray(out, o + L); a22.intoArray(out, o + 2 * L); a23.intoArray(out, o + 3 * L)
-    o += k
-    a30.intoArray(out, o); a31.intoArray(out, o + L); a32.intoArray(out, o + 2 * L); a33.intoArray(out, o + 3 * L)
-    if (wSq != null) euclidean(wSq, j, out, i * k + j, k, 4)
-  }
-
-  /** Row i x cells j until j + 4·lanes of [[tiled]]. */
-  private def tile1(x: Array[Double], i: Int, wt: Array[Double], k: Int, d: Int, j: Int,
-                    wSq: Array[Double], out: Array[Double]): Unit = {
-    val S = DoubleVector.SPECIES_PREFERRED
-    val L = S.length()
-    var a0 = DoubleVector.zero(S); var a1 = a0; var a2 = a0; var a3 = a0
-    val x0 = i * d
-    var c = 0
-    while (c < d) {
-      val o = c * k + j
-      val b = DoubleVector.broadcast(S, x(x0 + c))
-      a0 = b.fma(DoubleVector.fromArray(S, wt, o), a0)
-      a1 = b.fma(DoubleVector.fromArray(S, wt, o + L), a1)
-      a2 = b.fma(DoubleVector.fromArray(S, wt, o + 2 * L), a2)
-      a3 = b.fma(DoubleVector.fromArray(S, wt, o + 3 * L), a3)
-      c += 1
-    }
-    val o = i * k + j
-    a0.intoArray(out, o); a1.intoArray(out, o + L); a2.intoArray(out, o + 2 * L); a3.intoArray(out, o + 3 * L)
-    if (wSq != null) euclidean(wSq, j, out, o, k, 1)
-  }
-
-  /** out = fma(−2, out, wSq(cell)) over `rows` rows (stride k) from out(o)
-    * and cells j until j + 4·lanes: a tile's
-    * dot products turned into partial squared euclidean distances while
-    * the tile is still in cache. A separate step because the JIT keeps
-    * vectors unboxed only while no call takes them as arguments.
-    */
-  private def euclidean(wSq: Array[Double], j: Int, out: Array[Double],
-                        o: Int, k: Int, rows: Int): Unit = {
-    val S = DoubleVector.SPECIES_PREFERRED
-    val width = 4 * S.length()
-    val m2 = DoubleVector.broadcast(S, -2.0)
-    var r = 0
-    while (r < rows) {
-      var v = 0
-      while (v < width) {
-        val at = o + r * k + v
-        m2.fma(DoubleVector.fromArray(S, out, at), DoubleVector.fromArray(S, wSq, j + v))
-          .intoArray(out, at)
-        v += S.length()
-      }
-      r += 1
-    }
+    if (!vectorApi)
+      throw new UnsupportedOperationException("graft's distance kernels run on the " +
+        "Vector API: start the JVM with --add-modules=jdk.incubator.vector")
+    Tiled.run(x, n, w, k, d, wSq, out)
   }
 
   /** `distances.py:11-23` — ‖x−w‖² minus the x² term (rank-invariant):
@@ -371,6 +253,121 @@ object Distances {
       }
       out(i) = best
       i += 1
+    }
+  }
+}
+
+/** The body of [[Distances.crossTerm]]: the one place that links
+  * against `jdk.incubator.vector`.
+  */
+private[som] object Tiled {
+  /** The cross term x·wᵀ, register-tiled over `DoubleVector`s: a tile is
+    * 4 rows x 4 vectors of cells (16 accumulators), reading the d x kp
+    * transpose of `w` built here (1/n of the work), its cells zero-padded
+    * to kp, a multiple of the tile's 4·lanes. Each lane holds one
+    * (row, cell) dot product as the ascending-feature fma chain from 0.0.
+    * Every row and cell runs through the one tile: the last rows of a
+    * batch that does not fill 4 run zero-padded, and a tile holding
+    * padding writes into `block`, whose real rows and cells are copied
+    * out — so neither the tile edge nor the lane width changes a bit.
+    * A map of k cells costs as much as one of kp: fewer than 4·lanes
+    * cells (16 at 4 lanes, 32 at 8) fill one tile with padding.
+    * With `wSq`, each dot product then takes one more fma to
+    * fma(−2, dot, wSq(j)), the partial squared euclidean distance.
+    */
+  def run(x: Array[Double], n: Int, w: Array[Double], k: Int, d: Int,
+          wSq: Array[Double], out: Array[Double]): Unit = {
+    val width = 4 * DoubleVector.SPECIES_PREFERRED.length()
+    val kp = (k + width - 1) / width * width
+    val wt = new Array[Double](d * kp)
+    var j = 0
+    while (j < k) {
+      var c = 0
+      while (c < d) { wt(c * kp + j) = w(j * d + c); c += 1 }
+      j += 1
+    }
+    val wSqP = if (wSq == null) null else java.util.Arrays.copyOf(wSq, kp)
+    val xRows = new Array[Double](4 * d)
+    val block = new Array[Double](4 * kp)
+    var i = 0
+    while (i < n) {
+      val rows = math.min(4, n - i)
+      if (rows < 4) System.arraycopy(x, i * d, xRows, 0, rows * d)
+      val xs = if (rows < 4) xRows else x
+      val x0 = if (rows < 4) 0 else i * d
+      val direct = rows == 4 && kp == k
+      val to = if (direct) out else block
+      val o0 = if (direct) i * k else 0
+      j = 0
+      while (j < kp) { tile4(xs, x0, wt, kp, d, j, wSqP, to, o0); j += width }
+      if (!direct) {
+        var r = 0
+        while (r < rows) { System.arraycopy(block, r * kp, out, (i + r) * k, k); r += 1 }
+      }
+      i += 4
+    }
+  }
+
+  /** The 4 rows from x(x0) x cells j until j + 4·lanes of [[run]],
+    * written from out(o0 + j) with row stride kp.
+    */
+  private def tile4(x: Array[Double], x0: Int, wt: Array[Double], kp: Int, d: Int, j: Int,
+                    wSq: Array[Double], out: Array[Double], o0: Int): Unit = {
+    val S = DoubleVector.SPECIES_PREFERRED
+    val L = S.length()
+    var a00 = DoubleVector.zero(S); var a01 = a00; var a02 = a00; var a03 = a00
+    var a10 = a00; var a11 = a00; var a12 = a00; var a13 = a00
+    var a20 = a00; var a21 = a00; var a22 = a00; var a23 = a00
+    var a30 = a00; var a31 = a00; var a32 = a00; var a33 = a00
+    var c = 0
+    while (c < d) {
+      val o = c * kp + j
+      val w0 = DoubleVector.fromArray(S, wt, o)
+      val w1 = DoubleVector.fromArray(S, wt, o + L)
+      val w2 = DoubleVector.fromArray(S, wt, o + 2 * L)
+      val w3 = DoubleVector.fromArray(S, wt, o + 3 * L)
+      var b = DoubleVector.broadcast(S, x(x0 + c))
+      a00 = b.fma(w0, a00); a01 = b.fma(w1, a01); a02 = b.fma(w2, a02); a03 = b.fma(w3, a03)
+      b = DoubleVector.broadcast(S, x(x0 + d + c))
+      a10 = b.fma(w0, a10); a11 = b.fma(w1, a11); a12 = b.fma(w2, a12); a13 = b.fma(w3, a13)
+      b = DoubleVector.broadcast(S, x(x0 + 2 * d + c))
+      a20 = b.fma(w0, a20); a21 = b.fma(w1, a21); a22 = b.fma(w2, a22); a23 = b.fma(w3, a23)
+      b = DoubleVector.broadcast(S, x(x0 + 3 * d + c))
+      a30 = b.fma(w0, a30); a31 = b.fma(w1, a31); a32 = b.fma(w2, a32); a33 = b.fma(w3, a33)
+      c += 1
+    }
+    var o = o0 + j
+    a00.intoArray(out, o); a01.intoArray(out, o + L); a02.intoArray(out, o + 2 * L); a03.intoArray(out, o + 3 * L)
+    o += kp
+    a10.intoArray(out, o); a11.intoArray(out, o + L); a12.intoArray(out, o + 2 * L); a13.intoArray(out, o + 3 * L)
+    o += kp
+    a20.intoArray(out, o); a21.intoArray(out, o + L); a22.intoArray(out, o + 2 * L); a23.intoArray(out, o + 3 * L)
+    o += kp
+    a30.intoArray(out, o); a31.intoArray(out, o + L); a32.intoArray(out, o + 2 * L); a33.intoArray(out, o + 3 * L)
+    if (wSq != null) euclidean(wSq, j, out, o0 + j, kp)
+  }
+
+  /** out = fma(−2, out, wSq(cell)) over 4 rows (stride kp) from out(o)
+    * and cells j until j + 4·lanes: a tile's
+    * dot products turned into partial squared euclidean distances while
+    * the tile is still in cache. A separate step because the JIT keeps
+    * vectors unboxed only while no call takes them as arguments.
+    */
+  private def euclidean(wSq: Array[Double], j: Int, out: Array[Double],
+                        o: Int, kp: Int): Unit = {
+    val S = DoubleVector.SPECIES_PREFERRED
+    val width = 4 * S.length()
+    val m2 = DoubleVector.broadcast(S, -2.0)
+    var r = 0
+    while (r < 4) {
+      var v = 0
+      while (v < width) {
+        val at = o + r * kp + v
+        m2.fma(DoubleVector.fromArray(S, out, at), DoubleVector.fromArray(S, wSq, j + v))
+          .intoArray(out, at)
+        v += S.length()
+      }
+      r += 1
     }
   }
 }

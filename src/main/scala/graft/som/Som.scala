@@ -88,7 +88,9 @@ final case class SomConfig(
   * each row's distances are a function of that row and the codebook
   * ([[Distances]]), so the codebook is a function of the rows and the
   * config alone, not of the partition layout (see [[epoch]]). Feature
-  * values must be finite.
+  * values must be finite. The JVM must be started with
+  * `--add-modules=jdk.incubator.vector`: the distance kernels run on the
+  * Vector API.
   */
 final class Som(val config: SomConfig) extends Serializable {
   config.validated

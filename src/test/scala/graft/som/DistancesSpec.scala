@@ -74,8 +74,8 @@ class DistancesSpec extends AnyFunSuite {
 
   test("seeded fuzz matrices (n x d vs k x d)") {
     val rnd = new Random(0)
-    // n 4 and 9 fill whole 4-row tiles and leave a row tail; k 32, 37
-    // and 69 fill 4-vector cell tiles at 4 and 8 lanes and leave cell tails
+    // n 4 and 9 fill whole 4-row tiles and leave padded rows; k 32, 37
+    // and 69 fill 4-vector cell tiles at 4 and 8 lanes and pad the last
     for (n <- Seq(2, 4, 7, 9); k <- Seq(3, 11, 32, 37, 69); d <- Seq(1, 5, 13, 64);
          (dist, oracle) <- kernels) {
       val xs = Seq.fill(n)(Array.fill(d)(rnd.nextDouble() * 4 - 2))
@@ -133,7 +133,7 @@ class DistancesSpec extends AnyFunSuite {
     val lanes = DoubleVector.SPECIES_PREFERRED.length()
     val rnd = new Random(17)
     val d = 16
-    for (k <- Seq(4 * lanes + 3, 8 * lanes + 1)) {
+    for (k <- Seq(9, 4 * lanes + 3, 8 * lanes + 1)) {
       val w = spread(rnd, k * d)
       val row = spread(rnd, d)
       val alone = both(row, 1, w, k, d).map { case (name, o) => name -> bits(o) }.toMap

@@ -356,8 +356,8 @@ class SomSpec extends SparkSpec {
       Seq(0 until 3, Nil, (3 until 50).reverse, 50 until 52, Nil, 52 until 60, Nil),
       (0 until 16).map(p => (p * 4 until math.min(p * 4 + 4, 60)).reverse))
     val bits = (a: Array[Double]) => a.map(java.lang.Double.doubleToLongBits).toSeq
-    // a 3x3 map keeps the distance kernel in its scalar cell tail; a 6x7
-    // map fills its vector tiles and leaves a cell tail at 4 and 8 lanes
+    // a 3x3 map runs the distance kernel in one tile of mostly padded
+    // cells; a 6x7 map fills whole tiles and pads the last at 4 and 8 lanes
     for ((c, dim) <- Seq(SomConfig(3, 3, seed = 4, batchSize = 7) -> 4,
                          SomConfig(6, 7, seed = 4, batchSize = 7) -> 16)) {
       val k = c.x * c.y
