@@ -210,4 +210,22 @@ class DistancesSpec extends AnyFunSuite {
     assert(!Distances("manhattan").canCache)
     assertThrows[IllegalArgumentException](Distances("nope"))
   }
+
+  test("a JVM without jdk.incubator.vector gets an error naming the flag") {
+    val java = s"${System.getProperty("java.home")}/bin/java"
+    val p = new ProcessBuilder(java, "-Xmx64m", "-cp", System.getProperty("java.class.path"),
+      "graft.som.EuclideanOnce").redirectErrorStream(true).start()
+    val output = scala.io.Source.fromInputStream(p.getInputStream).mkString
+    assert(p.waitFor() != 0)
+    assert(output.contains("UnsupportedOperationException") &&
+      output.contains("--add-modules=jdk.incubator.vector"), output)
+  }
+}
+
+/** One euclidean distance call; run by DistancesSpec in a JVM started
+  * without `--add-modules=jdk.incubator.vector`.
+  */
+object EuclideanOnce {
+  def main(args: Array[String]): Unit =
+    Distances.EuclideanPart.compute(Array(1.0, 2.0), 1, Array(0.0, 1.0), 1, 2, null, new Array[Double](1))
 }
