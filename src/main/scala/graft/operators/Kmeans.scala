@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Parts
-import graft.plans.{HashKernels, KmeansFunctions, KmeansKernel, VecScale9Kernel, VecSumCount}
+import graft.plans.{HashKernels, KmeansFunctions, KmeansKernel, KmeansScratch, VecScale9Kernel,
+  VecSumCount}
 
 /** Distributed Lloyd's k-means over an embedding column — the standard
   * coarse quantizer / corpus-clustering primitive (IVF cells, SemDeDup
@@ -757,7 +758,16 @@ object Kmeans {
     */
   def topKAssigned(assigned: DataFrame, model: Model, vecCol: String,
                    idCol: String, queries: Seq[(Long, Array[Double])],
-                   k: Int, nProbe: Int): DataFrame =
-    Similarity.cellTopK(assigned, "cid", model.flat, model.dim, vecCol,
-      idCol, queries, k, nProbe)
+                   k: Int, nProbe: Int): DataFrame = {
+    val (w, dim) = (model.flat, model.dim)
+    val cols = KmeansKernel.columns(w, dim)
+    val s = new KmeansScratch(dim, w.length / dim)
+    // a query's d² to every centroid, `kmeans_assign`'s bits: the probe
+    // ranks cells as the build assigned rows to them
+    Similarity.cellTopK(assigned, "cid", { q =>
+      require(q.length == dim, s"Received ${q.length} features, expected $dim.")
+      KmeansKernel.nearest(q, w, cols, dim, s)
+      s.acc.clone()
+    }, vecCol, idCol, queries, k, nProbe)
+  }
 }

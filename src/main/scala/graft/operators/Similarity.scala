@@ -1,9 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.som.{Som, SomConfig, SomData}
+import graft.plans.{SomBmuKernel, SomKernelScratch}
+import graft.som.{PreparedCodebook, Som, SomConfig, SomData, SomModel}
 
 /** Approximate/exact nearest-neighbor search over an embedding column.
   *
@@ -425,44 +427,44 @@ object Similarity {
                       vecCol: String, idCol: String,
                       queries: Seq[(Long, Array[Double])], k: Int,
                       nProbe: Int): DataFrame =
-    cellTopK(assigned, "bmu_id", model.codebook.weights, model.codebook.dim,
-      vecCol, idCol, queries, k, nProbe)
+    cellTopK(assigned, "bmu_id", somCells(model), vecCol, idCol, queries, k, nProbe)
 
-  /** `nProbe` nearest cells for one query vector over a flat row-major
-    * centroid table (`SomModel.codebook.weights` or `Kmeans.Model.flat`)
-    * of `dim`-wide rows: squared-euclidean distance summed in ascending
-    * i, ties to the lower cell id — the BMU and k-means argmin
-    * convention. Driver-local: the table is at most a few thousand
-    * doubles.
+  /** A query's served activation distance to every cell of `model`'s
+    * codebook: `som_bmu`'s row kernel, so it ranks the cells by the bits
+    * the IVF build assigned its rows by.
     */
-  private[operators] def nearestCells(table: Array[Double], dim: Int,
-                                      q: Array[Double], nProbe: Int): Seq[Int] = {
+  private def somCells(model: SomModel): Array[Double] => Array[Double] = {
+    val cb = new PreparedCodebook(model.codebook.weights, model.x * model.y, model.dim, null)
+    val s = new SomKernelScratch(cb)
+    q => SomBmuKernel.distances(UnsafeArrayData.fromPrimitiveArray(q), isFloat = false, cb, s,
+      model.config.distanceFn).clone()
+  }
+
+  /** The `nProbe` cells of smallest distance, `dist(c)` being cell c's
+    * distance to the query: ties to the lower cell id — the BMU and
+    * k-means argmin convention.
+    */
+  private[operators] def nearestCells(dist: Array[Double], nProbe: Int): Seq[Int] = {
     require(nProbe > 0, s"nProbe must be positive, got $nProbe")
-    require(q.length == dim, s"Received ${q.length} features, expected $dim.")
-    (0 until table.length / dim).map { n =>
-      val base = n * dim
-      var s = 0.0
-      var i = 0
-      while (i < dim) { val d = q(i) - table(base + i); s += d * d; i += 1 }
-      (n, s)
-    }.sortBy(t => (t._2, t._1)).take(nProbe).map(_._1)
+    dist.indices.sortBy(c => (dist(c), c)).take(nProbe)
   }
 
   /** The cell-probe serve body of [[somTopKAssigned]] and
     * [[Kmeans.topKAssigned]]: each query's `nProbe` nearest cells
-    * ([[nearestCells]] over `table`), then ONE cosine pass over the
-    * rows of the probed cells of `assigned`, whose cell id sits in
-    * `cellCol`. Returns (qid, rank, nid, sim), ties (sim desc, nid asc).
+    * ([[nearestCells]] over `cells(query)`, the query's distance to every
+    * cell), then ONE cosine pass over the rows of the probed cells of
+    * `assigned`, whose cell id sits in `cellCol`. Returns
+    * (qid, rank, nid, sim), ties (sim desc, nid asc).
     */
   private[operators] def cellTopK(assigned: DataFrame, cellCol: String,
-                                  table: Array[Double], dim: Int,
+                                  cells: Array[Double] => Array[Double],
                                   vecCol: String, idCol: String,
                                   queries: Seq[(Long, Array[Double])],
                                   k: Int, nProbe: Int): DataFrame = {
     require(k > 0, s"cell-probe top-k needs k > 0, got $k")
     require(queries.nonEmpty, "cell-probe top-k needs at least one query")
     val probe = queries.flatMap { case (qid, q) =>
-      nearestCells(table, dim, q, nProbe).map(c => (qid, c))
+      nearestCells(cells(q), nProbe).map(c => (qid, c))
     }
     // probe values take the cell column's type: int bmu_id, long cid
     // inline, int cid on a partitioned read-back
@@ -805,9 +807,9 @@ object Similarity {
     queries.zipWithIndex.foreach { case ((_, q), qi) =>
       System.arraycopy(pqAdcTable(q, cb, m, k), 0, tables, qi * m * k, m * k)
     }
+    val cells = somCells(model)
     val probes = queries.zipWithIndex.flatMap { case ((qid, q), qi) =>
-      nearestCells(model.codebook.weights, model.codebook.dim, q, nProbe)
-        .map(c => (qi, qid, c))
+      nearestCells(cells(q), nProbe).map(c => (qi, qid, c))
     }
     val probeDf = probes.toDF("qidx", "qid", "bmu_id")
     val allCells = probes.map(_._3).distinct
@@ -1180,9 +1182,9 @@ object Similarity {
     // two broadcasts, the cellTopK shape: the (qid, cell) probe pairs
     // and a separate (qid -> query vector) table — inlining qv onto
     // every probe row would ship each vector nProbe times
+    val cells = somCells(model)
     val probes = queries.flatMap { case (qid, q) =>
-      nearestCells(model.codebook.weights, model.codebook.dim, q, nProbe)
-        .map(c => (qid, c))
+      nearestCells(cells(q), nProbe).map(c => (qid, c))
     }
     val probeDf = probes.toDF("qid", "bmu_id")
     val qDf = queries.map { case (qid, v) => (qid, v.toSeq) }.toDF("qid", "qv")

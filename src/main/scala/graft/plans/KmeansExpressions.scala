@@ -14,11 +14,12 @@ import org.apache.spark.sql.types._
   * once per task); the argmin loop runs inside whole-stage codegen.
   *
   * Distance is squared euclidean accumulated SEQUENTIALLY over
-  * dimensions (`(x_i - w_i)^2` in ascending i) — not the
-  * `wSq - 2 dot` rearrangement the SOM BMU kernel uses — because the
-  * k-means oracle is an independent implementation that must reproduce
-  * the argmin bit-for-bit, and the plain loop is the form any
-  * from-the-paper implementation writes down. Ties go to the LOWEST
+  * dimensions (`(x_i - w_i)^2` in ascending i) — not the fma tile's
+  * `−2·dot + ‖w‖²` that the SOM's training and serving share
+  * (`graft.som.Distances`) — because the k-means oracle is an
+  * independent implementation that must reproduce the argmin
+  * bit-for-bit, and the plain loop is the form any from-the-paper
+  * implementation writes down. Ties go to the LOWEST
   * centroid id (strict `<` keeps the first minimum).
   *
   * Loop order: at k >= [[KmeansKernel.sweepMinK]] the loop runs ACROSS

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-import graft.som.Topology
+import graft.som.{Distance, Distances, PreparedCodebook, Topology}
 
 /** Per-thread scratch vector shared by the Vec and PQ expression
   * kernels: kills the per-row `Array[Double](dim)` allocation (and its
@@ -27,211 +27,103 @@ object SomScratch {
 }
 
 /** The one SOM inference kernel: every SOM query against a codebook
-  * (`k` neurons of `dim` doubles, row-major) goes through it — the BMU
-  * under the activation distance (`som_bmu`, `xpysom.py:370-417`), the
-  * quantization distance and its neuron (`som_qdist`, `som_nearest`,
-  * `xpysom.py:620-707`), and the topographic-error top-2
-  * (`som_topo_error`, `xpysom.py:709-746`).
+  * goes through it — the BMU under the activation distance (`som_bmu`,
+  * `xpysom.py:370-417`), the quantization distance and its neuron
+  * (`som_qdist`, `som_nearest`, `xpysom.py:620-707`), and the
+  * topographic-error top-2 (`som_topo_error`, `xpysom.py:709-746`).
   *
-  * Distance semantics match the SOM kernels (`graft.som.Distances`):
-  * partial euclidean by default (`-2 dot + |w|²`, rank-invariant,
-  * `distances.py:11-23`), first-index argmin ties (`xpysom.py:416`).
-  * The quantization kernels minimize `|x|² - 2 dot + |w|²` and report
-  * the square root of that minimum, clamped at 0.
+  * It keeps no arithmetic of its own. A row's distances are the
+  * training kernels' ([[graft.som.Distances]]) on a batch of that one
+  * row, which give the row the bits it gets at any place in a training
+  * batch; the BMU is their first-index argmin
+  * ([[graft.som.Distances.argmin]]). So a served `bmu_id` is the winner
+  * the training epoch gave that row and the argmin of `activate`, under
+  * every distance name. The quantization kernels read the full squared
+  * euclidean distance ([[graft.som.Distances.EuclideanSquared]]) and
+  * report `sqrt(max(d², 0))`: NaN for a row with a NaN or ±Inf feature,
+  * whose top-2 then finds no neuron (-1).
   *
-  * Loop order: the dot-product distances (euclidean, euclidean_no_opt,
-  * cosine and the quantization kernels) first fill `acc(j) = x·w_j`
-  * for every neuron, then scan `acc` in j order with a strict `<`. At
-  * k >= [[KmeansKernel.sweepMinK]] the dot runs ACROSS neurons over the
-  * column table [[KmeansKernel.columns]] (`cols(i)(j) = w(j*dim + i)`):
-  * `acc(j) = 0.0 + x0*w0` at i = 0, then four dimensions per pass over
-  * `acc`, each added in ascending i. Every neuron's dot is still the
-  * IEEE sequence `((0.0 + x0 w0) + x1 w1) + …` of the per-neuron loop
-  * (Java never contracts to FMA), so every distance, argmin and q_dist
-  * keeps its bits; but the inner loop is independent across j, which the
-  * JIT vectorizes, where the per-neuron form is one serial add chain per
-  * neuron. Below `sweepMinK` the per-neuron loop stays, for the reason
-  * the k-means kernel gives: C2 compiles a loop from its first hot
-  * profile, and a column loop first profiled at a tiny k stays
-  * unvectorized for the wide tables that follow. manhattan and norm_p
-  * are not dot products and keep the per-neuron loop at every k.
-  *
-  * The expressions build the column table once per expression and ship
-  * it (with the codebook and |w|²) as codegen references; each
-  * generated-class instance (one per task) owns its scratch.
+  * The expressions prepare the codebook once per expression and ship it
+  * as a codegen reference; each generated-class instance (one per task)
+  * owns its scratch.
   */
 object SomBmuKernel {
-  /** Distance codes, resolved from the name once per expression. */
-  final val Euclidean = 0
-  final val Cosine = 1
-  final val Manhattan = 2
-  final val NormP = 3
-
-  def code(dist: String): Int = dist match {
-    case "euclidean" | "euclidean_no_opt" => Euclidean
-    case "cosine" => Cosine
-    case "manhattan" | "manhattan_no_opt" => Manhattan
-    case "norm_p" | "norm_p_no_opt" => NormP
-    case other => throw new IllegalArgumentException(s"$other not supported by som_bmu")
-  }
-
-  /** `v` into `s.x` as doubles; returns |x|² summed in ascending i. */
-  private def load(v: ArrayData, isFloat: Boolean, dim: Int, s: SomKernelScratch): Double = {
+  /** The distance of `v` to every neuron under `dist`, into `s.acc`. */
+  def distances(v: ArrayData, isFloat: Boolean, cb: PreparedCodebook, s: SomKernelScratch,
+                dist: Distance): Array[Double] = {
+    val (x, dim) = (s.x, cb.d)
     if (v.numElements() != dim)
-      throw new IllegalArgumentException(
-        s"Received ${v.numElements()} features, expected $dim.")
-    val x = s.x
-    var xSq = 0.0
+      throw new IllegalArgumentException(s"Received ${v.numElements()} features, expected $dim.")
     var i = 0
-    while (i < dim) {
-      x(i) = if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
-      xSq += x(i) * x(i)
-      i += 1
-    }
-    xSq
+    while (i < dim) { x(i) = if (isFloat) v.getFloat(i).toDouble else v.getDouble(i); i += 1 }
+    dist.compute(x, 1, cb, s.block, s.acc)
+    s.acc
   }
 
-  /** `acc(j) = x·w_j` for every neuron (see the object doc for the order). */
-  private def dots(x: Array[Double], w: Array[Double], cols: Array[Array[Double]],
-                   dim: Int, k: Int, acc: Array[Double]): Unit =
-    if (cols == null) {
-      var j = 0
-      while (j < k) {
-        val base = j * dim
-        var dot = 0.0
-        var i = 0
-        while (i < dim) { dot += x(i) * w(base + i); i += 1 }
-        acc(j) = dot
-        j += 1
-      }
-    } else {
-      val x0 = x(0)
-      val c0 = cols(0)
-      var j = 0
-      while (j < k) { acc(j) = 0.0 + x0 * c0(j); j += 1 }
-      var i = 1
-      while (i + 3 < dim) {
-        val xa = x(i); val xb = x(i + 1); val xc = x(i + 2); val xd = x(i + 3)
-        val ca = cols(i); val cb = cols(i + 1); val cc = cols(i + 2); val cd = cols(i + 3)
-        j = 0
-        while (j < k) {
-          acc(j) = (((acc(j) + xa * ca(j)) + xb * cb(j)) + xc * cc(j)) + xd * cd(j)
-          j += 1
-        }
-        i += 4
-      }
-      while (i < dim) {
-        val xi = x(i)
-        val c = cols(i)
-        j = 0
-        while (j < k) { acc(j) += xi * c(j); j += 1 }
-        i += 1
-      }
-    }
+  /** argmin over neurons of the activation distance `dist`. */
+  def bmu(v: ArrayData, isFloat: Boolean, cb: PreparedCodebook, s: SomKernelScratch,
+          dist: Distance): Int =
+    Distances.argmin(distances(v, isFloat, cb, s, dist), 0, cb.k)
 
-  /** argmin over neurons of the activation distance `code`. */
-  def bmu(v: ArrayData, isFloat: Boolean, w: Array[Double], wSq: Array[Double],
-          cols: Array[Array[Double]], dim: Int, s: SomKernelScratch, code: Int,
-          normP: Double): Int = {
-    val k = wSq.length
-    val xSq = load(v, isFloat, dim, s)
-    val x = s.x
-    val acc = s.acc
-    if (code == Euclidean || code == Cosine) dots(x, w, cols, dim, k, acc)
-    var best = 0
-    var bestV = Double.MaxValue
-    var j = 0
-    while (j < k) {
-      var d = 0.0
-      if (code == Euclidean) d = -2.0 * acc(j) + wSq(j)
-      else if (code == Cosine) {
-        val denom = math.sqrt(xSq * wSq(j))
-        d = 1.0 - (if (denom == 0.0) 0.0 else acc(j) / denom)
-      } else {
-        val base = j * dim
-        var i = 0
-        if (code == Manhattan)
-          while (i < dim) { d += math.abs(x(i) - w(base + i)); i += 1 }
-        else
-          while (i < dim) { d += math.pow(math.abs(x(i) - w(base + i)), normP); i += 1 }
-      }
-      if (d < bestV) { bestV = d; best = j }
-      j += 1
-    }
-    best
-  }
-
-  // the columns of the last table the seven-argument bmu saw, keyed by
-  // reference to its `w`
-  @volatile private var lastCols: (Array[Double], Int, Array[Array[Double]]) = _
+  // the table the seven-argument bmu saw last on this thread, prepared,
+  // with its scratch
+  private val byName = new ThreadLocal[(PreparedCodebook, SomKernelScratch)]
 
   /** [[bmu]] by distance name, for callers that replay one table over many
-    * rows on one thread: the column transpose is cached by reference to
-    * `w`. The expressions never use this cache.
+    * rows: the prepared codebook (with the `wSq` of the call that built
+    * it) and a scratch are kept per thread, keyed by reference to `w`.
+    * The expressions never use this cache.
     */
   def bmu(v: ArrayData, isFloat: Boolean, w: Array[Double], wSq: Array[Double],
           dim: Int, dist: String, normP: Double): Int = {
-    val last = lastCols
-    val cols =
-      if (last != null && (last._1 eq w) && last._2 == dim) last._3
-      else { val c = KmeansKernel.columns(w, dim); lastCols = (w, dim, c); c }
-    bmu(v, isFloat, w, wSq, cols, dim, new SomKernelScratch(dim, wSq.length),
-      code(dist), normP)
+    val last = byName.get()
+    val (cb, s) =
+      if (last != null && (last._1.w eq w) && last._1.d == dim) last
+      else {
+        val cb = new PreparedCodebook(w, wSq.length, dim, wSq)
+        val next = (cb, new SomKernelScratch(cb))
+        byName.set(next)
+        next
+      }
+    bmu(v, isFloat, cb, s, Distances(dist, normP))
   }
 
-  /** Nearest neuron by quantization distance: `s.best` and its
-    * `s.bestV = |x|² - 2 dot + |w|²` (unclamped), strict-< scan in j order.
+  /** Nearest neuron by quantization distance: `s.best` and its squared
+    * euclidean distance `s.bestV` (unclamped).
     */
-  def nearest(v: ArrayData, isFloat: Boolean, w: Array[Double], wSq: Array[Double],
-              cols: Array[Array[Double]], dim: Int, s: SomKernelScratch): Unit = {
-    val k = wSq.length
-    val xSq = load(v, isFloat, dim, s)
-    val acc = s.acc
-    dots(s.x, w, cols, dim, k, acc)
-    var best = 0
-    var bestV = Double.MaxValue
-    var j = 0
-    while (j < k) {
-      val d = xSq - 2.0 * acc(j) + wSq(j)
-      if (d < bestV) { bestV = d; best = j }
-      j += 1
-    }
-    s.best = best; s.bestV = bestV
+  def nearest(v: ArrayData, isFloat: Boolean, cb: PreparedCodebook, s: SomKernelScratch): Unit = {
+    val d2 = distances(v, isFloat, cb, s, Distances.EuclideanSquared)
+    s.best = Distances.argmin(d2, 0, cb.k)
+    s.bestV = d2(s.best)
   }
 
   /** The quantization distance of [[nearest]]: sqrt of the minimum,
     * negative fp residue clamped to 0 (nan_to_num parity).
     */
-  def minDist(v: ArrayData, isFloat: Boolean, w: Array[Double], wSq: Array[Double],
-              cols: Array[Array[Double]], dim: Int, s: SomKernelScratch): Double = {
-    nearest(v, isFloat, w, wSq, cols, dim, s)
-    if (s.bestV > 0) math.sqrt(s.bestV) else 0.0
+  def minDist(v: ArrayData, isFloat: Boolean, cb: PreparedCodebook, s: SomKernelScratch): Double = {
+    nearest(v, isFloat, cb, s)
+    math.sqrt(math.max(s.bestV, 0.0))
   }
 
   /** `struct<bmu_id, q_dist>`: [[nearest]]'s neuron and [[minDist]]. */
-  def nearestRow(v: ArrayData, isFloat: Boolean, w: Array[Double], wSq: Array[Double],
-                 cols: Array[Array[Double]], dim: Int, s: SomKernelScratch): InternalRow = {
-    val q = minDist(v, isFloat, w, wSq, cols, dim, s)
+  def nearestRow(v: ArrayData, isFloat: Boolean, cb: PreparedCodebook,
+                 s: SomKernelScratch): InternalRow = {
+    val q = minDist(v, isFloat, cb, s)
     new GenericInternalRow(Array[Any](s.best, q))
   }
 
   /** The two nearest neurons by the clamped true distance
-    * `sqrt(max(|x|² - 2 dot + |w|², 0))` into `s.best` and `s.second`:
-    * ascending, ties to the first index (`argsort(distances)[:, :2]`,
-    * `xpysom.py:734`).
+    * `sqrt(max(d², 0))` into `s.best` and `s.second`: ascending, ties to
+    * the first index (`argsort(distances)[:, :2]`, `xpysom.py:734`); -1
+    * where no distance is below +Inf.
     */
-  def top2(v: ArrayData, isFloat: Boolean, w: Array[Double], wSq: Array[Double],
-           cols: Array[Array[Double]], dim: Int, s: SomKernelScratch): Unit = {
-    val k = wSq.length
-    val xSq = load(v, isFloat, dim, s)
-    val acc = s.acc
-    dots(s.x, w, cols, dim, k, acc)
+  def top2(v: ArrayData, isFloat: Boolean, cb: PreparedCodebook, s: SomKernelScratch): Unit = {
+    val d2 = distances(v, isFloat, cb, s, Distances.EuclideanSquared)
     var b1 = -1; var b2 = -1
     var v1 = Double.PositiveInfinity; var v2 = Double.PositiveInfinity
     var j = 0
-    while (j < k) {
-      val d2 = xSq - 2.0 * acc(j) + wSq(j)
-      val d = if (d2 > 0) math.sqrt(d2) else 0.0
+    while (j < cb.k) {
+      val d = math.sqrt(math.max(d2(j), 0.0))
       if (d < v1) { v2 = v1; b2 = b1; v1 = d; b1 = j }
       else if (d < v2) { v2 = d; b2 = j }
       j += 1
@@ -240,33 +132,36 @@ object SomBmuKernel {
   }
 
   /** 1 when the row's two best-matching units are not adjacent on `topo`
-    * (`xpysom.py:736-746`), else 0.
+    * (`xpysom.py:736-746`), else 0; -1 when [[top2]] finds fewer than two
+    * (a NaN or ±Inf feature).
     */
-  def topoError(v: ArrayData, isFloat: Boolean, w: Array[Double], wSq: Array[Double],
-                cols: Array[Array[Double]], dim: Int, s: SomKernelScratch,
+  def topoError(v: ArrayData, isFloat: Boolean, cb: PreparedCodebook, s: SomKernelScratch,
                 topo: Topology): Int = {
-    top2(v, isFloat, w, wSq, cols, dim, s)
+    top2(v, isFloat, cb, s)
     val y = topo.y
-    if (topo.adjacent(s.best / y, s.best % y, s.second / y, s.second % y)) 0 else 1
+    if (s.second < 0) -1
+    else if (topo.adjacent(s.best / y, s.best % y, s.second / y, s.second % y)) 0
+    else 1
   }
 }
 
 /** Working memory of one [[SomBmuKernel]] caller (one task, or one
-  * driver-side replay): the row as doubles, every neuron's dot product,
-  * and the scan result. Never shared between threads.
+  * driver-side replay): the row as doubles, every neuron's distance, the
+  * tile's block and the scan result. Never shared between threads.
   */
-final class SomKernelScratch(dim: Int, k: Int) {
-  val x = new Array[Double](dim)
-  val acc = new Array[Double](k)
+final class SomKernelScratch(cb: PreparedCodebook) {
+  val x = new Array[Double](cb.d)
+  val acc = new Array[Double](cb.k)
+  val block = cb.block()
   var best: Int = 0
   var bestV: Double = 0.0
   var second: Int = 0
 }
 
 /** What every SOM codebook expression shares: an array<float|double>
-  * child, the codebook with its |w|² and column table (built once per
-  * expression), and the generated-code arguments that pass them with a
-  * per-task [[SomKernelScratch]].
+  * child, the codebook prepared once per expression, and the
+  * generated-code arguments that pass it with a per-task
+  * [[SomKernelScratch]].
   */
 abstract class SomCodebookExpression extends UnaryExpression {
   def weights: Array[Double]
@@ -285,24 +180,19 @@ abstract class SomCodebookExpression extends UnaryExpression {
     case _ => false
   }
 
-  @transient protected lazy val wSq: Array[Double] =
-    graft.som.Distances.rowSumSq(weights, weights.length / dim, dim)
-  @transient protected lazy val cols: Array[Array[Double]] =
-    KmeansKernel.columns(weights, dim)
+  @transient protected lazy val cb: PreparedCodebook =
+    new PreparedCodebook(weights, weights.length / dim, dim, null)
 
-  protected def newScratch: SomKernelScratch = new SomKernelScratch(dim, weights.length / dim)
+  protected def newScratch: SomKernelScratch = new SomKernelScratch(cb)
 
-  /** `isFloat, w, wSq, cols, dim, s` as generated-code arguments, with
-    * one scratch per generated-class instance, i.e. per task.
+  /** `isFloat, cb, s` as generated-code arguments, with one scratch per
+    * generated-class instance, i.e. per task.
     */
   protected def kernelArgs(ctx: CodegenContext): String = {
-    val wRef = ctx.addReferenceObj("somWeights", weights, "double[]")
-    val wSqRef = ctx.addReferenceObj("somWSq", wSq, "double[]")
-    val cRef = ctx.addReferenceObj("somCols", cols, "double[][]")
+    val cbRef = ctx.addReferenceObj("somCodebook", cb, classOf[PreparedCodebook].getName)
     val scratch = classOf[SomKernelScratch].getName
-    val sRef = ctx.addMutableState(scratch, "somScratch",
-      v => s"$v = new $scratch($dim, ${weights.length / dim});")
-    s"$isFloat, $wRef, $wSqRef, $cRef, $dim, $sRef"
+    val sRef = ctx.addMutableState(scratch, "somScratch", v => s"$v = new $scratch($cbRef);")
+    s"$isFloat, $cbRef, $sRef"
   }
 
   // mirror-class static forwarders — Janino cannot resolve MODULE$
@@ -313,15 +203,15 @@ case class SomBmu(child: Expression, weights: Array[Double], dim: Int,
                   distance: String, normP: Double) extends SomCodebookExpression {
   override def dataType: DataType = IntegerType
 
-  private val code = SomBmuKernel.code(distance)
+  private val dist: Distance = Distances(distance, normP)
 
   override protected def nullSafeEval(input: Any): Any =
-    SomBmuKernel.bmu(input.asInstanceOf[ArrayData], isFloat, weights, wSq, cols,
-      dim, newScratch, code, normP)
+    SomBmuKernel.bmu(input.asInstanceOf[ArrayData], isFloat, cb, newScratch, dist)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val args = kernelArgs(ctx)
-    defineCodeGen(ctx, ev, c => s"$kernel.bmu($c, $args, $code, $normP)")
+    val d = ctx.addReferenceObj("somDistance", dist, classOf[Distance].getName)
+    defineCodeGen(ctx, ev, c => s"$kernel.bmu($c, $args, $d)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): SomBmu =
@@ -341,8 +231,7 @@ case class SomQDist(child: Expression, weights: Array[Double], dim: Int)
   override def dataType: DataType = DoubleType
 
   override protected def nullSafeEval(input: Any): Any =
-    SomBmuKernel.minDist(input.asInstanceOf[ArrayData], isFloat, weights, wSq,
-      cols, dim, newScratch)
+    SomBmuKernel.minDist(input.asInstanceOf[ArrayData], isFloat, cb, newScratch)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val args = kernelArgs(ctx)
@@ -366,8 +255,7 @@ case class SomNearest(child: Expression, weights: Array[Double], dim: Int)
     StructField("q_dist", DoubleType, nullable = false)))
 
   override protected def nullSafeEval(input: Any): Any =
-    SomBmuKernel.nearestRow(input.asInstanceOf[ArrayData], isFloat, weights, wSq,
-      cols, dim, newScratch)
+    SomBmuKernel.nearestRow(input.asInstanceOf[ArrayData], isFloat, cb, newScratch)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val args = kernelArgs(ctx)
@@ -381,7 +269,8 @@ case class SomNearest(child: Expression, weights: Array[Double], dim: Int)
 
 /** Per-row topographic error (`xpysom.py:709-746`): 1 when the row's two
   * best-matching units by true euclidean distance are not adjacent on
-  * `topo`, else 0; `avg` of it is the topographic error.
+  * `topo`, else 0; `avg` of it is the topographic error. -1 for a row
+  * with a NaN or ±Inf feature, which has no two.
   */
 case class SomTopoError(child: Expression, weights: Array[Double], dim: Int,
                         topo: Topology) extends SomCodebookExpression {
@@ -391,8 +280,7 @@ case class SomTopoError(child: Expression, weights: Array[Double], dim: Int,
   override def dataType: DataType = IntegerType
 
   override protected def nullSafeEval(input: Any): Any =
-    SomBmuKernel.topoError(input.asInstanceOf[ArrayData], isFloat, weights, wSq,
-      cols, dim, newScratch, topo)
+    SomBmuKernel.topoError(input.asInstanceOf[ArrayData], isFloat, cb, newScratch, topo)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val args = kernelArgs(ctx)

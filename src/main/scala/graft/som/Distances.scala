@@ -16,15 +16,64 @@ import jdk.incubator.vector.DoubleVector
   * Every value a kernel writes for a row is a fixed sequence of
   * operations on that row and the codebook alone: it does not depend
   * on the other rows of the batch, the row's place in it, the batch
-  * size, the CPU's vector width or any library — which the SOM's
-  * partition-invariant training relies on.
+  * size, the CPU's vector width or any library. The SOM's
+  * partition-invariant training relies on it, and so does serving: every
+  * SOM query runs these kernels on a one-row batch
+  * (`graft.plans.SomBmuKernel`), so a served winner is the winner the
+  * training epoch gave that row.
   */
 sealed abstract class Distance(val name: String, val canCache: Boolean) extends Serializable {
-  def compute(x: Array[Double], n: Int, w: Array[Double], k: Int, d: Int,
-              wSq: Array[Double], out: Array[Double]): Unit
+  /** The distance from each of the `n` rows of `x` (n x d, row-major) to
+    * every cell of `cb` into `out` (n x k, row-major). The tile's block
+    * is the caller's ([[PreparedCodebook.block]]), so a call allocates
+    * nothing.
+    */
+  def compute(x: Array[Double], n: Int, cb: PreparedCodebook, block: Array[Double],
+              out: Array[Double]): Unit
 
-  protected def wSqOrCompute(w: Array[Double], k: Int, d: Int, wSq: Array[Double]): Array[Double] =
-    if (wSq != null) wSq else Distances.rowSumSq(w, k, d)
+  /** [[compute]] against `w` (k x d, row-major) prepared for this call
+    * alone; `wSq` is its [[Distances.rowSumSq]] or null.
+    */
+  final def compute(x: Array[Double], n: Int, w: Array[Double], k: Int, d: Int,
+                    wSq: Array[Double], out: Array[Double]): Unit = {
+    val cb = new PreparedCodebook(w, k, d, wSq)
+    compute(x, n, cb, cb.block(), out)
+  }
+}
+
+/** A codebook ready for the distance kernels: `w` (k x d, row-major),
+  * and the d x kp transpose [[Tiled]] reads and the per-cell ‖w‖²
+  * (`wSq`, computed when `wSq0` is null), cells zero-padded to kp, a
+  * multiple of the tile's 4·lanes. Read-only once built, so any number
+  * of threads and calls share one. kp follows the lane count of the JVM
+  * that runs the tile, so the padded arrays are built there, on first
+  * use after deserialization.
+  */
+final class PreparedCodebook(val w: Array[Double], val k: Int, val d: Int,
+                             wSq0: Array[Double]) extends Serializable {
+  @transient lazy val kp: Int = {
+    val width = Distances.tileWidth
+    (k + width - 1) / width * width
+  }
+
+  @transient lazy val wt: Array[Double] = {
+    val t = new Array[Double](d * kp)
+    var j = 0
+    while (j < k) {
+      var c = 0
+      while (c < d) { t(c * kp + j) = w(j * d + c); c += 1 }
+      j += 1
+    }
+    t
+  }
+
+  @transient lazy val wSq: Array[Double] =
+    java.util.Arrays.copyOf(if (wSq0 != null) wSq0 else Distances.rowSumSq(w, k, d), kp)
+
+  /** A 4 x kp block for one caller's tiles, which write there when the
+    * cells are padded. Never shared between threads.
+    */
+  def block(): Array[Double] = new Array[Double](4 * kp)
 }
 
 object Distances {
@@ -32,15 +81,16 @@ object Distances {
   def rowSumSq(m: Array[Double], rows: Int, cols: Int): Array[Double] = {
     val out = new Array[Double](rows)
     var r = 0
-    while (r < rows) {
-      var s = 0.0
-      var c = 0
-      val base = r * cols
-      while (c < cols) { val v = m(base + c); s += v * v; c += 1 }
-      out(r) = s
-      r += 1
-    }
+    while (r < rows) { out(r) = sumSq(m, r * cols, cols); r += 1 }
     out
+  }
+
+  /** Σ m(i)² over m(from until from + len), added in ascending i. */
+  private def sumSq(m: Array[Double], from: Int, len: Int): Double = {
+    var s = 0.0
+    var c = from
+    while (c < from + len) { val v = m(c); s += v * v; c += 1 }
+    s
   }
 
   /** out (row-major n x k) = x (n x d) * w^T (d x k): the dot product of
@@ -49,8 +99,10 @@ object Distances {
     * bits, wherever the row sits in any batch ([[Tiled]]).
     */
   def crossTerm(x: Array[Double], n: Int, w: Array[Double], k: Int, d: Int,
-                out: Array[Double]): Unit =
-    tiled(x, n, w, k, d, null, out)
+                out: Array[Double]): Unit = {
+    val cb = new PreparedCodebook(w, k, d, null)
+    Tiled.run(x, n, cb, cb.block(), null, out)
+  }
 
   /** Whether this JVM resolved `jdk.incubator.vector`, which [[Tiled]]
     * is written on. Checked here, in a class that does not link against
@@ -60,34 +112,38 @@ object Distances {
   private lazy val vectorApi: Boolean =
     ModuleLayer.boot().findModule("jdk.incubator.vector").isPresent
 
-  private def tiled(x: Array[Double], n: Int, w: Array[Double], k: Int, d: Int,
-                    wSq: Array[Double], out: Array[Double]): Unit = {
+  /** Cells per tile: 4 vectors of this JVM's lanes. Every codebook reads
+    * it before its first tile, so a JVM without the vector module fails
+    * here.
+    */
+  private[som] def tileWidth: Int = {
     if (!vectorApi)
       throw new UnsupportedOperationException("graft's distance kernels run on the " +
         "Vector API: start the JVM with --add-modules=jdk.incubator.vector")
-    Tiled.run(x, n, w, k, d, wSq, out)
+    Tiled.width
   }
 
   /** `distances.py:11-23` — ‖x−w‖² minus the x² term (rank-invariant):
     * −2·x·w + ‖w‖², one fma per value on top of the cross term.
     */
   case object EuclideanPart extends Distance("euclidean", canCache = true) {
-    def compute(x: Array[Double], n: Int, w: Array[Double], k: Int, d: Int,
-                wSq: Array[Double], out: Array[Double]): Unit =
-      tiled(x, n, w, k, d, wSqOrCompute(w, k, d, wSq), out)
+    def compute(x: Array[Double], n: Int, cb: PreparedCodebook, block: Array[Double],
+                out: Array[Double]): Unit =
+      Tiled.run(x, n, cb, block, cb.wSq, out)
   }
 
-  /** `distances.py:25-31` — full squared L2. */
+  /** `distances.py:25-31` — full squared L2: the partial, then + ‖x‖². */
   case object EuclideanSquared extends Distance("euclidean_no_opt", canCache = false) {
-    def compute(x: Array[Double], n: Int, w: Array[Double], k: Int, d: Int,
-                wSq: Array[Double], out: Array[Double]): Unit = {
-      EuclideanPart.compute(x, n, w, k, d, wSq, out)
-      val xSq = rowSumSq(x, n, d)
+    def compute(x: Array[Double], n: Int, cb: PreparedCodebook, block: Array[Double],
+                out: Array[Double]): Unit = {
+      EuclideanPart.compute(x, n, cb, block, out)
+      val (k, d) = (cb.k, cb.d)
       var i = 0
       while (i < n) {
+        val xSq = sumSq(x, i * d, d)
         val base = i * k
         var j = 0
-        while (j < k) { out(base + j) += xSq(i); j += 1 }
+        while (j < k) { out(base + j) += xSq; j += 1 }
         i += 1
       }
     }
@@ -97,11 +153,11 @@ object Distances {
     * (replaces the reference's nan_to_num on sqrt of negatives).
     */
   case object EuclideanTrue extends Distance("euclidean_true", canCache = false) {
-    def compute(x: Array[Double], n: Int, w: Array[Double], k: Int, d: Int,
-                wSq: Array[Double], out: Array[Double]): Unit = {
-      EuclideanSquared.compute(x, n, w, k, d, wSq, out)
+    def compute(x: Array[Double], n: Int, cb: PreparedCodebook, block: Array[Double],
+                out: Array[Double]): Unit = {
+      EuclideanSquared.compute(x, n, cb, block, out)
       var i = 0
-      while (i < n * k) { out(i) = if (out(i) > 0) math.sqrt(out(i)) else 0.0; i += 1 }
+      while (i < n * cb.k) { out(i) = if (out(i) > 0) math.sqrt(out(i)) else 0.0; i += 1 }
     }
   }
 
@@ -109,17 +165,17 @@ object Distances {
     * (nan_to_num), hence distance 1.
     */
   case object Cosine extends Distance("cosine", canCache = true) {
-    def compute(x: Array[Double], n: Int, w: Array[Double], k: Int, d: Int,
-                wSq: Array[Double], out: Array[Double]): Unit = {
-      val wsq = wSqOrCompute(w, k, d, wSq)
-      crossTerm(x, n, w, k, d, out)
-      val xSq = rowSumSq(x, n, d)
+    def compute(x: Array[Double], n: Int, cb: PreparedCodebook, block: Array[Double],
+                out: Array[Double]): Unit = {
+      val (k, d, wsq) = (cb.k, cb.d, cb.wSq)
+      Tiled.run(x, n, cb, block, null, out)
       var i = 0
       while (i < n) {
+        val xSq = sumSq(x, i * d, d)
         val base = i * k
         var j = 0
         while (j < k) {
-          val denom = math.sqrt(xSq(i) * wsq(j))
+          val denom = math.sqrt(xSq * wsq(j))
           val sim = if (denom == 0.0) 0.0 else out(base + j) / denom
           out(base + j) = 1.0 - sim
           j += 1
@@ -140,8 +196,9 @@ object Distances {
     // element is ~70x slower on the 10k x 256 x 100 bench workload
     private val intP: Int = if (p == math.rint(p) && p >= 1 && p <= 8) p.toInt else -1
 
-    def compute(x: Array[Double], n: Int, w: Array[Double], k: Int, d: Int,
-                wSq: Array[Double], out: Array[Double]): Unit = {
+    def compute(x: Array[Double], n: Int, cb: PreparedCodebook, block: Array[Double],
+                out: Array[Double]): Unit = {
+      val (w, k, d) = (cb.w, cb.k, cb.d)
       var i = 0
       while (i < n) {
         val xb = i * d
@@ -174,8 +231,9 @@ object Distances {
     * same fused loop).
     */
   case object Manhattan extends Distance("manhattan", canCache = false) {
-    def compute(x: Array[Double], n: Int, w: Array[Double], k: Int, d: Int,
-                wSq: Array[Double], out: Array[Double]): Unit = {
+    def compute(x: Array[Double], n: Int, cb: PreparedCodebook, block: Array[Double],
+                out: Array[Double]): Unit = {
+      val (w, k, d) = (cb.w, cb.k, cb.d)
       var i = 0
       while (i < n) {
         val xb = i * d
@@ -238,73 +296,68 @@ object Distances {
           "manhattan, manhattan_no_opt, cosine, norm_p, norm_p_no_opt")
   }
 
-  /** First-index argmin per row (numpy argmin tie-break, `xpysom.py:416`). */
+  /** First-index argmin of m(base until base + k): a strict `<` scan from
+    * cell 0 (numpy argmin tie-break, `xpysom.py:416`), so a NaN at cell 0
+    * wins and a later NaN never does.
+    */
+  def argmin(m: Array[Double], base: Int, k: Int): Int = {
+    var best = 0
+    var bestV = m(base)
+    var j = 1
+    while (j < k) {
+      val v = m(base + j)
+      if (v < bestV) { bestV = v; best = j }
+      j += 1
+    }
+    best
+  }
+
+  /** [[argmin]] of each of the n rows of m (n x k, row-major) into out. */
   def argminRows(m: Array[Double], n: Int, k: Int, out: Array[Int]): Unit = {
     var i = 0
-    while (i < n) {
-      val base = i * k
-      var best = 0
-      var bestV = m(base)
-      var j = 1
-      while (j < k) {
-        val v = m(base + j)
-        if (v < bestV) { bestV = v; best = j }
-        j += 1
-      }
-      out(i) = best
-      i += 1
-    }
+    while (i < n) { out(i) = argmin(m, i * k, k); i += 1 }
   }
 }
 
-/** The body of [[Distances.crossTerm]]: the one place that links
+/** The body of the dot-product kernels: the one place that links
   * against `jdk.incubator.vector`.
   */
 private[som] object Tiled {
+  /** Cells per tile: 4 vectors of the preferred species. */
+  def width: Int = 4 * DoubleVector.SPECIES_PREFERRED.length()
+
   /** The cross term x·wᵀ, register-tiled over `DoubleVector`s: a tile is
-    * 4 rows x 4 vectors of cells (16 accumulators), reading the d x kp
-    * transpose of `w` built here (1/n of the work), its cells zero-padded
-    * to kp, a multiple of the tile's 4·lanes. Each lane holds one
+    * 4 rows x 4 vectors of cells (16 accumulators), reading the codebook's
+    * d x kp transpose ([[PreparedCodebook]]). Each lane holds one
     * (row, cell) dot product as the ascending-feature fma chain from 0.0.
-    * Every row and cell runs through the one tile: the last rows of a
-    * batch that does not fill 4 run zero-padded, and a tile holding
-    * padding writes into `block`, whose real rows and cells are copied
-    * out — so neither the tile edge nor the lane width changes a bit.
-    * A map of k cells costs as much as one of kp: fewer than 4·lanes
-    * cells (16 at 4 lanes, 32 at 8) fill one tile with padding.
-    * With `wSq`, each dot product then takes one more fma to
-    * fma(−2, dot, wSq(j)), the partial squared euclidean distance.
+    * The rows a batch leaves over after its 4-row tiles — a served row is
+    * one — run one at a time through [[tile1]], the same lanes for one
+    * row. Cells are zero-padded to kp: when kp > k a tile writes into
+    * `block`, whose real cells are copied out — so neither the tile
+    * edge nor the lane width changes a bit. A map of k cells costs as
+    * much as one of kp: fewer than 4·lanes cells (16 at 4 lanes, 32 at 8)
+    * fill one tile with padding. With `wSq` (kp long), each dot product
+    * then takes one more fma to fma(−2, dot, wSq(j)), the partial squared
+    * euclidean distance.
     */
-  def run(x: Array[Double], n: Int, w: Array[Double], k: Int, d: Int,
+  def run(x: Array[Double], n: Int, cb: PreparedCodebook, block: Array[Double],
           wSq: Array[Double], out: Array[Double]): Unit = {
-    val width = 4 * DoubleVector.SPECIES_PREFERRED.length()
-    val kp = (k + width - 1) / width * width
-    val wt = new Array[Double](d * kp)
-    var j = 0
-    while (j < k) {
-      var c = 0
-      while (c < d) { wt(c * kp + j) = w(j * d + c); c += 1 }
-      j += 1
-    }
-    val wSqP = if (wSq == null) null else java.util.Arrays.copyOf(wSq, kp)
-    val xRows = new Array[Double](4 * d)
-    val block = new Array[Double](4 * kp)
+    val (k, d, kp, wt) = (cb.k, cb.d, cb.kp, cb.wt)
+    val width = this.width
+    val direct = kp == k
+    val to = if (direct) out else block
     var i = 0
     while (i < n) {
-      val rows = math.min(4, n - i)
-      if (rows < 4) System.arraycopy(x, i * d, xRows, 0, rows * d)
-      val xs = if (rows < 4) xRows else x
-      val x0 = if (rows < 4) 0 else i * d
-      val direct = rows == 4 && kp == k
-      val to = if (direct) out else block
+      val rows = if (n - i >= 4) 4 else 1
       val o0 = if (direct) i * k else 0
-      j = 0
-      while (j < kp) { tile4(xs, x0, wt, kp, d, j, wSqP, to, o0); j += width }
+      var j = 0
+      if (rows == 4) while (j < kp) { tile4(x, i * d, wt, kp, d, j, wSq, to, o0); j += width }
+      else while (j < kp) { tile1(x, i * d, wt, kp, d, j, wSq, to, o0); j += width }
       if (!direct) {
         var r = 0
-        while (r < rows) { System.arraycopy(block, r * kp, out, (i + r) * k, k); r += 1 }
+        while (r < rows) { System.arraycopy(to, r * kp, out, (i + r) * k, k); r += 1 }
       }
-      i += 4
+      i += rows
     }
   }
 
@@ -344,22 +397,45 @@ private[som] object Tiled {
     a20.intoArray(out, o); a21.intoArray(out, o + L); a22.intoArray(out, o + 2 * L); a23.intoArray(out, o + 3 * L)
     o += kp
     a30.intoArray(out, o); a31.intoArray(out, o + L); a32.intoArray(out, o + 2 * L); a33.intoArray(out, o + 3 * L)
-    if (wSq != null) euclidean(wSq, j, out, o0 + j, kp)
+    if (wSq != null) euclidean(wSq, j, out, o0 + j, kp, 4)
   }
 
-  /** out = fma(−2, out, wSq(cell)) over 4 rows (stride kp) from out(o)
+  /** [[tile4]] for the one row at x(x0): its 4 lanes-wide accumulators
+    * run the same fma chains, so the row gets the same bits.
+    */
+  private def tile1(x: Array[Double], x0: Int, wt: Array[Double], kp: Int, d: Int, j: Int,
+                    wSq: Array[Double], out: Array[Double], o0: Int): Unit = {
+    val S = DoubleVector.SPECIES_PREFERRED
+    val L = S.length()
+    var a0 = DoubleVector.zero(S); var a1 = a0; var a2 = a0; var a3 = a0
+    var c = 0
+    while (c < d) {
+      val o = c * kp + j
+      val b = DoubleVector.broadcast(S, x(x0 + c))
+      a0 = b.fma(DoubleVector.fromArray(S, wt, o), a0)
+      a1 = b.fma(DoubleVector.fromArray(S, wt, o + L), a1)
+      a2 = b.fma(DoubleVector.fromArray(S, wt, o + 2 * L), a2)
+      a3 = b.fma(DoubleVector.fromArray(S, wt, o + 3 * L), a3)
+      c += 1
+    }
+    val o = o0 + j
+    a0.intoArray(out, o); a1.intoArray(out, o + L); a2.intoArray(out, o + 2 * L); a3.intoArray(out, o + 3 * L)
+    if (wSq != null) euclidean(wSq, j, out, o, kp, 1)
+  }
+
+  /** out = fma(−2, out, wSq(cell)) over `rows` rows (stride kp) from out(o)
     * and cells j until j + 4·lanes: a tile's
     * dot products turned into partial squared euclidean distances while
     * the tile is still in cache. A separate step because the JIT keeps
     * vectors unboxed only while no call takes them as arguments.
     */
   private def euclidean(wSq: Array[Double], j: Int, out: Array[Double],
-                        o: Int, kp: Int): Unit = {
+                        o: Int, kp: Int, rows: Int): Unit = {
     val S = DoubleVector.SPECIES_PREFERRED
     val width = 4 * S.length()
     val m2 = DoubleVector.broadcast(S, -2.0)
     var r = 0
-    while (r < 4) {
+    while (r < rows) {
       var v = 0
       while (v < width) {
         val at = o + r * kp + v

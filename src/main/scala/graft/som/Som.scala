@@ -327,8 +327,9 @@ private[som] object SomKernels extends Serializable {
     * This is the Voronoi-set form of the batch map: every row's
     * neighbourhood weights depend only on its winner, so the epoch
     * needs only per-winner sums — the neighbourhood is applied once, to
-    * the combined sums, by [[spread]]. Buffers are reused across
-    * sub-batches (`xpysom.py:516-527`).
+    * the combined sums, by [[spread]]. The codebook is prepared once per
+    * partition and the buffers are reused across sub-batches
+    * (`xpysom.py:516-527`).
     */
   def partitionUpdate(it: Iterator[Array[Float]], w: Array[Double],
                       wSq: Array[Double], cfg: SomConfig): (ExactSum, Array[Long]) = {
@@ -338,6 +339,8 @@ private[som] object SomKernels extends Serializable {
     val bs = cfg.batchSize
     val sums = new ExactSum(k * dim)
     val counts = new Array[Long](k)
+    val cb = new PreparedCodebook(w, k, dim, wSq)
+    val block = cb.block()
     val xBuf = new Array[Double](bs * dim)
     val dBuf = new Array[Double](bs * k)
     val wins = new Array[Int](bs)
@@ -353,7 +356,7 @@ private[som] object SomKernels extends Serializable {
         while (c < dim) { xBuf(base + c) = row(c); c += 1 }
         n += 1
       }
-      dist.compute(xBuf, n, w, k, dim, wSq, dBuf)
+      dist.compute(xBuf, n, cb, block, dBuf)
       Distances.argminRows(dBuf, n, k, wins)
       var s = 0
       while (s < n) {

@@ -14,7 +14,9 @@ import org.apache.spark.sql.types._
   * `xpysom.py:819-865`) stock Catalyst aggregates follow, so Spark's
   * optimizer, AQE and codegen handle that layer too. Only `activate`,
   * which returns every neuron's distance, is a narrow `mapPartitions`
-  * over the batched training distance kernels ([[Distances]]).
+  * over batches. Both run the training distance kernels
+  * ([[Distances]]), so a row's served BMU, its training winner and the
+  * argmin of its activation are one neuron.
   *
   * Feature columns may be array<float>, array<double>, any other
   * numeric array (cast to array<double>) or an ml/mllib `Vector`. Rows
@@ -88,10 +90,10 @@ final class SomModel(val config: SomConfig, val codebook: Codebook)
     val d = dim
     val distFn = config.distanceFn
     val rdd = df.rdd.mapPartitions { it =>
-      val w = bc.value
+      val cb = new PreparedCodebook(bc.value, k, d, null)
+      val block = cb.block()
       val xBuf = new Array[Double](bs * d)
       val dBuf = new Array[Double](bs * k)
-      val wSq = if (distFn.canCache) Distances.rowSumSq(w, k, d) else null
       it.grouped(bs).flatMap { batch =>
         val rows = batch.toArray
         // each row's place among the batch's non-null rows, -1 when null
@@ -109,7 +111,7 @@ final class SomModel(val config: SomConfig, val codebook: Codebook)
             n += 1
           }
         }
-        distFn.compute(xBuf, n, w, k, d, wSq, dBuf)
+        distFn.compute(xBuf, n, cb, block, dBuf)
         rows.indices.iterator.map { r =>
           val a = at(r)
           Row.fromSeq(rows(r).toSeq :+
@@ -143,7 +145,7 @@ final class SomModel(val config: SomConfig, val codebook: Codebook)
     * partition sums its distances exactly ([[ExactSum]]) and the driver
     * merges the partition sums, so the mean is the same bits over any
     * partitioning of the same rows, where an `avg` adds doubles in
-    * arrival order.
+    * arrival order. A NaN or ±Inf feature fails, as in `fit`.
     */
   def quantizationError(df: DataFrame, featuresCol: String = "features"): Double = {
     val parts = df.select(graft.plans.SomBmuFunctions.som_qdist(
@@ -152,10 +154,18 @@ final class SomModel(val config: SomConfig, val codebook: Codebook)
       .mapPartitions { rows =>
         val sum = new ExactSum(1)
         var n = 0L
-        rows.foreach { r => if (!r.isNullAt(0)) { sum.add(0, r.getDouble(0)); n += 1 } }
-        Iterator((sum, n))
+        var finite = true
+        rows.foreach { r =>
+          if (!r.isNullAt(0)) {
+            val q = r.getDouble(0)
+            if (java.lang.Double.isFinite(q)) sum.add(0, q) else finite = false
+            n += 1
+          }
+        }
+        Iterator((sum, n, finite))
       }
       .collect()
+    require(parts.forall(_._3), SomData.nonFinite(featuresCol))
     val n = parts.iterator.map(_._2).sum
     if (n == 0) Double.NaN else parts.map(_._1).reduce(_ merge _).values()(0) / n
   }
@@ -164,16 +174,19 @@ final class SomModel(val config: SomConfig, val codebook: Codebook)
     * best-matching units are not grid-adjacent — a per-row top-2
     * selection (partial, not a full sort) in the `som_topo_error`
     * expression, then a scalar aggregate. 1x1 maps are undefined (NaN),
-    * as in the reference (`xpysom.py:721-724`).
+    * as in the reference (`xpysom.py:721-724`). A NaN or ±Inf feature
+    * fails, as in `fit`.
     */
   def topographicError(df: DataFrame, featuresCol: String = "features"): Double = {
     if (x * y == 1) {
       System.err.println("The topographic error is not defined for a 1-by-1 map.")
       return Double.NaN
     }
-    val r = df.select(avg(graft.plans.SomBmuFunctions.som_topo_error(
-        features(df, featuresCol), codebook.weights, dim, topo)))
+    val r = df.select(graft.plans.SomBmuFunctions.som_topo_error(
+        features(df, featuresCol), codebook.weights, dim, topo).as("te"))
+      .agg(avg("te"), min("te"))
       .head()
+    require(r.isNullAt(1) || r.getInt(1) >= 0, SomData.nonFinite(featuresCol))
     if (r.isNullAt(0)) Double.NaN else r.getDouble(0)
   }
 

@@ -4,80 +4,54 @@ import graft.SparkSpec
 import graft.som.{Hexagonal, Rectangular, SomConfig, SomModel, Topology}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** The SOM inference kernel against a per-neuron sequential reference
-  * kept only here: the BMU under every distance name, the quantization
-  * neuron and distance, and the topographic-error top-2 must agree bit
-  * for bit on both sides of the k < 16 / k >= 16 loop-order split, for
-  * float and double rows, through the kernel entries, the codegen path
-  * and the interpreted path.
+/** The SOM inference kernel against the training kernels: the BMU under
+  * every distance name is the argmin of `Distances(name).compute` over a
+  * batch of all the rows (`argminRows`), and the quantization neuron and
+  * distance and the topographic-error top-2 read that batch's
+  * `EuclideanSquared` — bit for bit, across map sizes that fill whole
+  * tiles and pad them, for float and double rows, through the kernel
+  * entries, the codegen path and the interpreted path. `DistancesSpec`
+  * holds the kernels to the scalar fma chain.
   */
 class SomKernelSpec extends SparkSpec {
+  import graft.som.{Distances, PreparedCodebook}
 
-  private def dot(x: Array[Double], w: Array[Double], j: Int, dim: Int): Double = {
-    var d = 0.0
-    for (i <- 0 until dim) d += x(i) * w(j * dim + i)
-    d
+  /** `dist` from each row of `xs` to every neuron, as one training batch. */
+  private def trained(dist: String, xs: Seq[Array[Double]], w: Array[Double],
+                      dim: Int): Array[Double] = {
+    val k = w.length / dim
+    val out = new Array[Double](xs.length * k)
+    Distances(dist, 3.0).compute(xs.flatten.toArray, xs.length, w, k, dim, null, out)
+    out
   }
 
-  private def sumSq(a: Array[Double], off: Int, dim: Int): Double = {
-    var s = 0.0
-    for (i <- 0 until dim) s += a(off + i) * a(off + i)
-    s
+  /** The training winner of each row of `xs` under `dist`. */
+  private def refBmus(xs: Seq[Array[Double]], w: Array[Double], dim: Int,
+                      dist: String): Array[Int] = {
+    val wins = new Array[Int](xs.length)
+    Distances.argminRows(trained(dist, xs, w, dim), xs.length, w.length / dim, wins)
+    wins
   }
 
-  /** One neuron at a time, the activation distance summed in ascending
-    * i, strict-< scan.
-    */
-  private def refBmu(x: Array[Double], w: Array[Double], dim: Int,
-                     dist: String, p: Double): Int = {
-    val xSq = sumSq(x, 0, dim)
-    var best = 0
-    var bestV = Double.MaxValue
-    for (j <- 0 until w.length / dim) {
-      val wSq = sumSq(w, j * dim, dim)
-      val d = dist match {
-        case "euclidean" | "euclidean_no_opt" => -2.0 * dot(x, w, j, dim) + wSq
-        case "cosine" =>
-          val denom = math.sqrt(xSq * wSq)
-          1.0 - (if (denom == 0.0) 0.0 else dot(x, w, j, dim) / denom)
-        case "manhattan" | "manhattan_no_opt" =>
-          var s = 0.0
-          for (i <- 0 until dim) s += math.abs(x(i) - w(j * dim + i))
-          s
-        case "norm_p" | "norm_p_no_opt" =>
-          var s = 0.0
-          for (i <- 0 until dim) s += math.pow(math.abs(x(i) - w(j * dim + i)), p)
-          s
-      }
-      if (d < bestV) { bestV = d; best = j }
-    }
-    best
-  }
-
-  /** Every neuron's `|x|² - 2 dot + |w|²`. */
-  private def refD2(x: Array[Double], w: Array[Double], dim: Int): Array[Double] = {
-    val xSq = sumSq(x, 0, dim)
-    Array.tabulate(w.length / dim)(j => xSq - 2.0 * dot(x, w, j, dim) + sumSq(w, j * dim, dim))
-  }
+  /** Each row's full squared euclidean distance to every neuron. */
+  private def refD2(xs: Seq[Array[Double]], w: Array[Double], dim: Int): Seq[Array[Double]] =
+    trained("euclidean_no_opt", xs, w, dim).grouped(w.length / dim).toSeq
 
   /** (nearest neuron, its unclamped d², q_dist). */
-  private def refNearest(x: Array[Double], w: Array[Double], dim: Int): (Int, Double, Double) = {
-    val d2 = refD2(x, w, dim)
-    var best = 0
-    var bestV = Double.MaxValue
-    d2.indices.foreach(j => if (d2(j) < bestV) { bestV = d2(j); best = j })
-    (best, bestV, if (bestV > 0) math.sqrt(bestV) else 0.0)
+  private def refNearest(d2: Array[Double]): (Int, Double, Double) = {
+    val best = Distances.argmin(d2, 0, d2.length)
+    (best, d2(best), math.sqrt(math.max(d2(best), 0.0)))
   }
 
   /** Top-2 by clamped true distance, ties to the first index. */
-  private def refTop2(x: Array[Double], w: Array[Double], dim: Int): (Int, Int) = {
-    val d = refD2(x, w, dim).map(v => if (v > 0) math.sqrt(v) else 0.0)
+  private def refTop2(d2: Array[Double]): (Int, Int) = {
+    val d = d2.map(v => math.sqrt(math.max(v, 0.0)))
     var b1 = -1; var b2 = -1
     var v1 = Double.PositiveInfinity; var v2 = Double.PositiveInfinity
     d.indices.foreach { j =>
@@ -87,9 +61,8 @@ class SomKernelSpec extends SparkSpec {
     (b1, b2)
   }
 
-  private def refTopoError(x: Array[Double], w: Array[Double], dim: Int,
-                           topo: Topology): Int = {
-    val (b1, b2) = refTop2(x, w, dim)
+  private def refTopoError(d2: Array[Double], topo: Topology): Int = {
+    val (b1, b2) = refTop2(d2)
     val y = topo.y
     if (topo.adjacent(b1 / y, b1 % y, b2 / y, b2 % y)) 0 else 1
   }
@@ -119,27 +92,28 @@ class SomKernelSpec extends SparkSpec {
     }
   }
 
+  // below, at and above one tile of cells at 4 and at 8 lanes
   private val ks = Seq(1, 2, 15, 16, 17, 64, 256)
-  // 5 and 64: the sweep's four-dimension passes with and without a tail
   private val dims = Seq(1, 3, 5, 64)
   private val distances = Seq("euclidean", "euclidean_no_opt", "cosine",
     "manhattan", "manhattan_no_opt", "norm_p", "norm_p_no_opt")
 
-  test("bmu == per-neuron reference, every k, dim, element type and distance name") {
+  test("bmu == the training kernel's argmin, every k, dim, element type and distance name") {
     for (k <- ks; dim <- dims; isFloat <- Seq(true, false)) {
       val rnd = new scala.util.Random(k * 1000 + dim * 10 + (if (isFloat) 1 else 0))
       val w = values(rnd, k * dim)
-      val wSq = graft.som.Distances.rowSumSq(w, k, dim)
-      val cols = KmeansKernel.columns(w, dim)
-      val s = new SomKernelScratch(dim, k)
-      for (r <- 0 until 20; dist <- distances) {
-        val (v, x) = row(values(rnd, dim), isFloat)
-        val exp = refBmu(x, w, dim, dist, 3.0)
-        val byName = SomBmuKernel.bmu(v, isFloat, w, wSq, dim, dist, 3.0)
-        val byCode = SomBmuKernel.bmu(v, isFloat, w, wSq, cols, dim, s,
-          SomBmuKernel.code(dist), 3.0)
-        assert(byName == exp && byCode == exp,
-          s"k=$k dim=$dim float=$isFloat $dist row $r: got $byName/$byCode, expected $exp")
+      val wSq = Distances.rowSumSq(w, k, dim)
+      val cb = new PreparedCodebook(w, k, dim, null)
+      val s = new SomKernelScratch(cb)
+      val rows = Seq.fill(20)(row(values(rnd, dim), isFloat))
+      for (dist <- distances) {
+        val exp = refBmus(rows.map(_._2), w, dim, dist)
+        rows.zipWithIndex.foreach { case ((v, _), r) =>
+          val byName = SomBmuKernel.bmu(v, isFloat, w, wSq, dim, dist, 3.0)
+          val byDist = SomBmuKernel.bmu(v, isFloat, cb, s, Distances(dist, 3.0))
+          assert(byName == exp(r) && byDist == exp(r),
+            s"k=$k dim=$dim float=$isFloat $dist row $r: got $byName/$byDist, expected ${exp(r)}")
+        }
       }
     }
   }
@@ -148,20 +122,20 @@ class SomKernelSpec extends SparkSpec {
     for (k <- ks; dim <- dims; isFloat <- Seq(true, false)) {
       val rnd = new scala.util.Random(k * 31 + dim * 7 + (if (isFloat) 1 else 0))
       val w = values(rnd, k * dim)
-      val wSq = graft.som.Distances.rowSumSq(w, k, dim)
-      val cols = KmeansKernel.columns(w, dim)
-      val s = new SomKernelScratch(dim, k)
-      for (r <- 0 until 40) {
-        val (v, x) = row(values(rnd, dim), isFloat)
+      val cb = new PreparedCodebook(w, k, dim, null)
+      val s = new SomKernelScratch(cb)
+      val rows = Seq.fill(40)(row(values(rnd, dim), isFloat))
+      val d2s = refD2(rows.map(_._2), w, dim)
+      rows.zip(d2s).zipWithIndex.foreach { case (((v, _), d2), r) =>
         val what = s"k=$k dim=$dim float=$isFloat row $r"
-        val (eBest, eD2, eQ) = refNearest(x, w, dim)
-        val q = SomBmuKernel.minDist(v, isFloat, w, wSq, cols, dim, s)
+        val (eBest, eD2, eQ) = refNearest(d2)
+        val q = SomBmuKernel.minDist(v, isFloat, cb, s)
         assert(s.best == eBest && bits(s.bestV) == bits(eD2) && bits(q) == bits(eQ),
           s"$what: got (${s.best}, ${s.bestV}, $q), expected ($eBest, $eD2, $eQ)")
-        val nr = SomBmuKernel.nearestRow(v, isFloat, w, wSq, cols, dim, s)
+        val nr = SomBmuKernel.nearestRow(v, isFloat, cb, s)
         assert(nr.getInt(0) == eBest && bits(nr.getDouble(1)) == bits(eQ), what)
-        SomBmuKernel.top2(v, isFloat, w, wSq, cols, dim, s)
-        assert((s.best, s.second) == refTop2(x, w, dim), what)
+        SomBmuKernel.top2(v, isFloat, cb, s)
+        assert((s.best, s.second) == refTop2(d2), what)
       }
     }
   }
@@ -176,26 +150,27 @@ class SomKernelSpec extends SparkSpec {
       val near = x.map(_ + 0.25)
       Seq(lo, hi).foreach(j => System.arraycopy(near, 0, w, j * dim, dim))
       val v = UnsafeArrayData.fromPrimitiveArray(x)
-      val wSq = graft.som.Distances.rowSumSq(w, k, dim)
-      val cols = KmeansKernel.columns(w, dim)
-      val s = new SomKernelScratch(dim, k)
+      val wSq = Distances.rowSumSq(w, k, dim)
+      val cb = new PreparedCodebook(w, k, dim, null)
+      val s = new SomKernelScratch(cb)
       for (dist <- distances) {
         val got = SomBmuKernel.bmu(v, false, w, wSq, dim, dist, 3.0)
-        assert(got == refBmu(x, w, dim, dist, 3.0), s"k=$k dim=$dim $dist: $got")
+        assert(got == refBmus(Seq(x), w, dim, dist)(0), s"k=$k dim=$dim $dist: $got")
         // by angle the far neurons may be as close as the copies
         if (dist != "cosine") assert(got == lo, s"k=$k dim=$dim $dist: tie went to $got")
       }
-      SomBmuKernel.nearest(v, false, w, wSq, cols, dim, s)
+      SomBmuKernel.nearest(v, false, cb, s)
       assert(s.best == lo, s"k=$k dim=$dim nearest")
-      SomBmuKernel.top2(v, false, w, wSq, cols, dim, s)
+      SomBmuKernel.top2(v, false, cb, s)
       assert((s.best, s.second) == ((lo, hi)), s"k=$k dim=$dim top2")
       // an all-identical table: neuron 0, then neuron 1
       val same = Array.tabulate(k * dim)(i => near(i % dim))
-      val sameSq = graft.som.Distances.rowSumSq(same, k, dim)
-      val sameCols = KmeansKernel.columns(same, dim)
-      SomBmuKernel.top2(v, false, same, sameSq, sameCols, dim, s)
-      assert((s.best, s.second) == ((0, 1)), s"k=$k dim=$dim identical")
-      assert(SomBmuKernel.bmu(v, false, same, sameSq, dim, "euclidean", 2.0) == 0)
+      val sameCb = new PreparedCodebook(same, k, dim, null)
+      val sameS = new SomKernelScratch(sameCb)
+      SomBmuKernel.top2(v, false, sameCb, sameS)
+      assert((sameS.best, sameS.second) == ((0, 1)), s"k=$k dim=$dim identical")
+      assert(SomBmuKernel.bmu(v, false, same, Distances.rowSumSq(same, k, dim), dim,
+        "euclidean", 2.0) == 0)
     }
   }
 
@@ -203,20 +178,21 @@ class SomKernelSpec extends SparkSpec {
     for (k <- Seq(1, 16)) {
       val w = new Array[Double](k * 3)
       val wSq = new Array[Double](k)
-      val cols = KmeansKernel.columns(w, 3)
-      val s = new SomKernelScratch(3, k)
+      val cb = new PreparedCodebook(w, k, 3, null)
+      val s = new SomKernelScratch(cb)
       val v = UnsafeArrayData.fromPrimitiveArray(Array(1.0f, 2.0f))
       val calls: Seq[() => Any] = Seq(
         () => SomBmuKernel.bmu(v, true, w, wSq, 3, "euclidean", 2.0),
-        () => SomBmuKernel.bmu(v, true, w, wSq, cols, 3, s, SomBmuKernel.Manhattan, 2.0),
-        () => SomBmuKernel.minDist(v, true, w, wSq, cols, 3, s),
-        () => SomBmuKernel.top2(v, true, w, wSq, cols, 3, s))
+        () => SomBmuKernel.bmu(v, true, cb, s, Distances.Manhattan),
+        () => SomBmuKernel.minDist(v, true, cb, s),
+        () => SomBmuKernel.top2(v, true, cb, s))
       calls.foreach { call =>
         val e = intercept[IllegalArgumentException](call())
         assert(e.getMessage == "Received 2 features, expected 3.")
       }
     }
-    intercept[IllegalArgumentException](SomBmuKernel.code("chebyshev"))
+    intercept[IllegalArgumentException](
+      SomBmu(Literal(null, ArrayType(DoubleType)), new Array[Double](3), 3, "chebyshev", 2.0))
   }
 
   test("som_bmu, som_qdist, som_nearest, som_topo_error, som_codebook_row: codegen == interpreted == reference") {
@@ -247,14 +223,15 @@ class SomKernelSpec extends SparkSpec {
         val in = BoundReference(0, vType, nullable = false)
         val exprs = (SomBmu(in, w, dim, "cosine", 2.0), SomQDist(in, w, dim),
           SomNearest(in, w, dim), SomTopoError(in, w, dim, topo))
+        val bmus = refBmus(data.toSeq, w, dim, "cosine")
+        val d2s = refD2(data.toSeq, w, dim)
         data.indices.foreach { i =>
           val arr = InternalRow(
             if (elem == FloatType) UnsafeArrayData.fromPrimitiveArray(data(i).map(_.toFloat))
             else UnsafeArrayData.fromPrimitiveArray(data(i)))
-          val x = data(i)
-          val (eBest, _, eQ) = refNearest(x, w, dim)
-          val eBmu = refBmu(x, w, dim, "cosine", 2.0)
-          val eTe = refTopoError(x, w, dim, topo)
+          val (eBest, _, eQ) = refNearest(d2s(i))
+          val eBmu = bmus(i)
+          val eTe = refTopoError(d2s(i), topo)
           val what = s"k=$k dim=$dim $elem row $i"
           val g = gen(i)
           assert(g.getInt(1) == eBmu && exprs._1.eval(arr) == eBmu, s"bmu $what")
@@ -283,7 +260,8 @@ class SomKernelSpec extends SparkSpec {
       val data = Seq.fill(200)(values(rnd, dim).map(_.toFloat))
       val df = data.zipWithIndex.map { case (v, i) => (i.toLong, v.toSeq) }
         .toDF("id", "features").repartition(3)
-      val exp = data.map(v => refTopoError(v.map(_.toDouble), w, dim, cfg.topo)).sum / 200.0
+      val exp = refD2(data.map(_.map(_.toDouble)), w, dim)
+        .map(refTopoError(_, cfg.topo)).sum / 200.0
       assert(m.topographicError(df) == exp, s"$topology ${mx}x$my")
     }
     val one = SomModel.fromWeights(SomConfig(1, 1), Seq(Array(0.0, 1.0)))

@@ -74,7 +74,7 @@ class DistancesSpec extends AnyFunSuite {
 
   test("seeded fuzz matrices (n x d vs k x d)") {
     val rnd = new Random(0)
-    // n 4 and 9 fill whole 4-row tiles and leave padded rows; k 32, 37
+    // n 4 and 9 fill whole 4-row tiles and leave one-row tiles; k 32, 37
     // and 69 fill 4-vector cell tiles at 4 and 8 lanes and pad the last
     for (n <- Seq(2, 4, 7, 9); k <- Seq(3, 11, 32, 37, 69); d <- Seq(1, 5, 13, 64);
          (dist, oracle) <- kernels) {

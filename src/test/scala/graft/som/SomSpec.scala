@@ -449,6 +449,13 @@ class SomSpec extends SparkSpec {
       intercept[IllegalArgumentException] {
         new Som(c).fitMatrix(rows.map(_.toArray).toArray, numEpochs = 2)
       }
+      // the queries whose answer sums a distance per row
+      val m = SomModel.fromWeights(c, Seq.tabulate(4)(j => Array(j.toDouble, 1.0)))
+      for (query <- Seq[() => Double](() => m.quantizationError(df, "emb"),
+                                      () => m.topographicError(df, "emb"))) {
+        val ex = intercept[IllegalArgumentException](query())
+        assert(ex.getMessage.contains("emb"), ex.getMessage)
+      }
     }
     // a row of another length fails with fit's message
     val ragged = spark.sparkContext.parallelize(Seq(Seq(1.0, 2.0), Seq(3.0, 4.0), Seq(5.0)), 1)
